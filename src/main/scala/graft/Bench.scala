@@ -2,7 +2,14 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
+  /** A failed warmup, entry or setup step keeps its +Inf/-1 marker AND
+    * names its cause on stderr; fatal JVM errors propagate.
+    */
+  private def reportFailure(name: String, e: Throwable): Unit =
+    System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -146,7 +153,7 @@ object Bench {
       // that family's JIT debt back to its first timed query
       require(SparkEntry.queries.contains(w), s"warmup query '$w' no longer exists")
       try SparkEntry.queries(w)(spark, sfDir).count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) => reportFailure(w, e) }
     }
     // Each query is timed twice and the MIN reported: the first pass pays
     // JIT compilation, codegen-class loading, and GC debt accumulated by
@@ -155,10 +162,10 @@ object Bench {
     // A failed run times as +Inf so the min reports the SUCCESSFUL run
     // (a fast crash must not masquerade as a speedup); a query failing
     // both runs emits -1 as an explicit failure marker.
-    def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => Double.PositiveInfinity }
+      catch { case NonFatal(e) => reportFailure(name, e); Double.PositiveInfinity }
     }
     // Named setup steps, timed once each (they are memoized/persisted —
     // a second run would measure the cache):
@@ -197,12 +204,24 @@ object Bench {
         gcMs() - gc0, taskRunMs.get)
       sec
     }
+    // rebuilt-vs-current flags (r16 verdict ask #6): which stamped lake
+    // artifacts THIS run rebuilt (cold lake / stamp bump / fixture
+    // regen). The journal is drained after every setup step and every
+    // entry and each row tagged `#<step>` with the step that paid it:
+    // the unconditional build entries (`*_index_build` overwrite by
+    // contract, twice under min-of-two timing) then read as intentional
+    // at a glance, while a cold stamp-bump rebuild names the CONSUMER
+    // that paid it. bench_diff strips the suffix before its multiset
+    // comparison. Rows from before the first setup step stay untagged.
+    val rebuiltSetupRows = scala.collection.mutable.ArrayBuffer(
+      queries.LakeArtifact.drainJournal(): _*)
+    def drainTagged(name: String): Seq[String] =
+      queries.LakeArtifact.drainJournal().map(r => s"$r#$name")
     def setupStep(name: String)(f: => Unit): (String, Double) =
       name -> recorded(name) {
-        queries.IndexOps.rebuildContext = name
         val t0 = System.nanoTime()
-        val ok = try { f; true } catch { case _: Throwable => false }
-        queries.IndexOps.rebuildContext = ""
+        val ok = try { f; true } catch { case NonFatal(e) => reportFailure(name, e); false }
+        rebuiltSetupRows ++= drainTagged(name)
         // same failure convention as timed(): -1, never elapsed-until-crash
         if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       }
@@ -233,12 +252,10 @@ object Bench {
       queries.IndexOps.warmSteps.map { case (name, f) =>
         setupStep(name) { f(spark, sfDir) }
       }
-    // rebuilt-vs-current flags (r16 verdict ask #6): which stamped lake
-    // artifacts THIS run rebuilt (cold lake / stamp bump / fixture
-    // regen) — drained here so the list covers exactly the setup phase;
-    // a mid-run rebuild (an entry touching a family no setup owns)
-    // drains separately at the end as rebuilt_midrun.
-    val rebuiltSetup = queries.IndexOps.drainRebuilds()
+    // the setup phase's rebuilds; a mid-run rebuild (an entry touching
+    // a family no setup owns) lands in rebuilt_midrun instead
+    val rebuiltSetup = rebuiltSetupRows.toSeq
+    val rebuiltMidRows = scala.collection.mutable.ArrayBuffer.empty[String]
     val cacheStart = cacheCensus()
     // Mid-run floor series (r13 verdict ask #8): the start/end floors
     // bracket the run but cannot LOCALIZE a contended episode — the r13
@@ -255,12 +272,11 @@ object Bench {
     // window to <25 entries for ~10 extra trivial jobs per run
     val results = SparkEntry.queries.toSeq.zipWithIndex.map { case ((name, fn), i) =>
       if (i > 0 && i % 25 == 0) midFloors += ((i, name, noiseFloor()))
-      queries.IndexOps.rebuildContext = name
       // records come from the SECOND run (steady-state; plan-identical to
       // the first, so the snapshot is run-order independent)
-      val t1 = timed(fn)
-      val t2 = recorded(name)(timed(fn))
-      queries.IndexOps.rebuildContext = ""
+      val t1 = timed(name, fn)
+      val t2 = recorded(name)(timed(name, fn))
+      rebuiltMidRows ++= drainTagged(name)
       val m = math.min(t1, t2)
       name -> (if (m.isInfinity) -1.0 else m)
     } ++ setups
@@ -307,7 +323,7 @@ object Bench {
     val cacheStable = cacheStart.forall { case (id, n) =>
       cacheEnd.get(id).forall(_ >= n) }
     val cacheDropped = cacheStart.count { case (id, _) => !cacheEnd.contains(id) }
-    val rebuiltMid = queries.IndexOps.drainRebuilds()
+    val rebuiltMid = rebuiltMidRows.toSeq
     def jarr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     // cpus + heap: THE r16 false-mover mechanism (confirmed by
     // exact-record reproduction + a thread sweep, SCALE.md round 17)
@@ -342,16 +358,16 @@ object Bench {
       s""""noise_floor_start":$floorStart,"noise_floor_end":$floorEnd,"noise_floor_mid":$mids"""
     val fullLine =
       s"""{"metric":"total","value":$total,"unit":"sec",$floors,$recTotals,$stability,"queries":$qs,"records":$recs,"sf":"$sfDir"}"""
-    println(fullLine)
     // Truncation-proof per-query seconds (r17 verdict ask #7): the r16
     // round-over-round comparison was LOST because the single giant
-    // line above got tail-truncated in the driver's log capture, taking
+    // full line got tail-truncated in the driver's log capture, taking
     // the seconds map with it. The map is re-emitted here as SMALL
-    // SELF-CONTAINED chunk lines, each valid JSON on its own, ascending
-    // by time across chunks so the LAST chunk (the one nearest
-    // total_tail, i.e. the last to be cut) carries the most expensive —
-    // most informative — entries. A 2000-char tail keeps total_tail
-    // plus at least the final chunk intact; larger captures keep more.
+    // SELF-CONTAINED chunk lines, each valid JSON on its own (a capture
+    // that truncates the giant full line leaves every chunk parseable),
+    // ascending by time across chunks so the last chunk carries the
+    // most expensive — most informative — entries. The chunks print
+    // BEFORE the full line: the log ends with the full line, then
+    // total_tail.
     locally {
       val parts = scala.collection.mutable.ArrayBuffer.empty[Seq[(String, Double)]]
       var cur = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
@@ -370,6 +386,7 @@ object Bench {
         println(s"""{"metric":"queries_tail","part":${i + 1},"of":$n,"queries":$body,"sf":"$sfDir"}""")
       }
     }
+    println(fullLine)
     // Persist the full line to a repo artifact (r15 verdict ask #6):
     // the driver's log capture keeps only a 2000-char TAIL, which eats
     // the per-entry records map — the claim of record for plan-level

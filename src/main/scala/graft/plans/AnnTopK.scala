@@ -147,7 +147,7 @@ case class AnnTopKRule(spark: SparkSession)
           if validProjection(projList, idA, score)
           residuals <- validChild(child, embA, normA)
           dir <- embeddingsDir(child)
-          if ivfCurrent(dir)
+          if IvfIndex.ivfIndex.current(spark, dir)
           // the query norm the matcher lifted must be a usable divisor:
           // a zero/NaN/Inf qn literal means the exact plan is scoring
           // NaN — there is no "equivalent" probe for that, keep it
@@ -157,7 +157,7 @@ case class AnnTopKRule(spark: SparkSession)
 
   /** The rule's contract is "anything unrecognized keeps the exact
     * plan" — that must include failures of the rewrite itself.
-    * ivfCurrent is a file-existence check, and a concurrent compaction
+    * The IVF currency check only reads files, and a concurrent compaction
     * stage-and-swap can remove an index table between that check and
     * the spark.read at plan time; an exception here would otherwise
     * fail the whole query when a correct (exact) plan is in hand.
@@ -336,10 +336,6 @@ case class AnnTopKRule(spark: SparkSession)
       }
       case _ => None
     }
-
-  private def ivfCurrent(dir: String): Boolean =
-    IndexOps.indexCurrent(IndexOps.indexDir(dir),
-      Seq("ivf_centroids", "ivf_cells"), "ivf", IvfIndex.ivfStamp(dir))
 
   /** Build the probe plan with the DataFrame API, analyze it (never
     * execute — rules are side-effect free), and splice it in with the

@@ -355,61 +355,44 @@ object EmbedOps {
   private[graft] val embDedupVersion =
     "embdedup-v1:ws-tokens;md5-hash64;cos0.95;cc-minlabel;lin1"
 
-  private[graft] def embDedupStamp(dir: String): String =
-    IndexOps.stampFor(embDedupVersion, dir, Seq("documents"))
-
-  /** Ensure the (doc_id, cluster) cosine-dedup labels artifact — same
-    * stamped build-once-serve-many lifecycle as the MinHash labels
-    * (TextOps.clusterLabels): clear the stamp first, stage-and-swap the
-    * table, stamp the pre-read fingerprint after the commit.
+  /** The (doc_id, cluster) cosine-dedup labels artifact — same
+    * build-once-serve-many lifecycle as the MinHash labels
+    * (TextOps.labels). Lineage is DECLARED: the label-propagation loop
+    * localCheckpoints each round, truncating the builder plan at a
+    * LogicalRDD, so the swap's auto-computed sidecar dead-ends —
+    * clusters are formed by cosine edges over the md5-hashed token
+    * vectors, i.e. from the corpus ids and text.
     */
-  private[graft] def ensureEmbDedup(s: SparkSession, dir: String): String = {
-    val path = IndexOps.indexDir(dir)
-    val stamp = embDedupStamp(dir)
-    if (!IndexOps.indexCurrent(path, Seq("emblabels"), "emblabels", stamp)) {
-      IndexOps.clearStamp(path, "emblabels")
-      graft.sources.Ingest.stageAndSwap(computeEmbLabels(s, dir), path, "emblabels")
-      // declared lineage map (r13 verdict ask #3): the label-propagation
-      // loop localCheckpoints each round, truncating the builder plan at
-      // a LogicalRDD, so the swap's auto-computed sidecar dead-ends —
-      // overwrite it with the truthful closure: clusters are formed by
-      // cosine edges over the md5-hashed token vectors, i.e. from the
-      // corpus ids and text (the same declaration TextOps.clusterLabels
-      // records for the MinHash labels artifact)
-      graft.plans.Lineage.writeSidecar(s"$path/emblabels.parquet", Map(
+  private[graft] val embDedup: LakeArtifact = LakeArtifact("emblabels", Seq("emblabels"),
+      embDedupVersion, Seq("documents"), IndexOps.indexDir(_, _),
+      lineage = Map(
         "doc_id"  -> Set("documents.doc_id"),
-        "cluster" -> Set("documents.doc_id", "documents.text")))
-      IndexOps.writeStamp(path, "emblabels", stamp)
-    }
-    path
+        "cluster" -> Set("documents.doc_id", "documents.text"))) { (s, dir, path) =>
+    graft.sources.Ingest.stageAndSwap(computeEmbLabels(s, dir), path, "emblabels")
   }
+
+  private[graft] def ensureEmbDedup(s: SparkSession, dir: String): String =
+    embDedup.ensure(s, dir)._1
 
   // ---- Persisted frozen-encoder artifact (incremental serving) -------
 
   private[graft] val embedModelVersion =
     "embedmodel-v1:ws-tokens;win2-sym;ppmi6dp;md5-hash64;base-excl-mod10-7;lin1"
 
-  private[graft] def embedModelStamp(dir: String): String =
-    IndexOps.stampFor(embedModelVersion, dir, Seq("documents"))
-
-  /** Ensure the persisted word-vector model trained on the corpus
-    * MINUS the standard batch slice — the frozen encoder an ingest
-    * pipeline embeds each new batch with. Stamp discipline as every
-    * lake artifact: clear first, stamp the pre-read fingerprint after
-    * the table commits.
+  /** The persisted word-vector model trained on the corpus MINUS the
+    * standard batch slice — the frozen encoder an ingest pipeline
+    * embeds each new batch with.
     */
-  private[graft] def ensureEmbedModel(s: SparkSession, dir: String): String = {
-    val path = PipelineOps.mixStateDir(dir)
-    val stamp = embedModelStamp(dir)
-    if (!IndexOps.indexCurrent(path, Seq("embed_model"), "embed_model", stamp)) {
-      IndexOps.clearStamp(path, "embed_model")
-      val base = trainWordVectors(
-        TextOps.docTokens(s, dir).filter(pmod(col("doc_id"), lit(10)) =!= 7))
-      graft.sources.Ingest.stageAndSwap(base, path, "embed_model")
-      IndexOps.writeStamp(path, "embed_model", stamp)
-    }
-    path
+  private[graft] val embedModel: LakeArtifact = LakeArtifact("embed_model",
+      Seq("embed_model"), embedModelVersion, Seq("documents"),
+      PipelineOps.mixStateDir(_, _)) { (s, dir, path) =>
+    val base = trainWordVectors(
+      TextOps.docTokens(s, dir).filter(pmod(col("doc_id"), lit(10)) =!= 7))
+    graft.sources.Ingest.stageAndSwap(base, path, "embed_model")
   }
+
+  private[graft] def ensureEmbedModel(s: SparkSession, dir: String): String =
+    embedModel.ensure(s, dir)._1
 
   val entries: Seq[Entry] = Seq(
 

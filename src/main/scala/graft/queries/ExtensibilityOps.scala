@@ -455,18 +455,29 @@ object ExtensibilityOps {
     */
   private val mmFpVersion = "mmfp-v6:dhash256;afp256;vtm256;murmur4x2-fallback;assets120;pdf-imagestreams-42x2-noise16-logo7;video42x4-intro5-dup7;lin1(was:v5-jpegonly-pdf-surface)"
 
-  /** Ensure the stamped (asset_id, h, decoded) fingerprint table for a
+  /** The stamped (asset_id, h, decoded) fingerprint table for a
     * modality — the codec stage of mm_*_dedup as a build-once lake
-    * artifact (IndexOps lifecycle: clear stamp, stage-and-swap, stamp).
-    * Persisting the fingerprints is what lets the relational dedup
-    * stage be oracle-replayed by an engine that cannot run the codecs.
+    * artifact with a VERSION-ONLY stamp (the synthetic asset corpus is
+    * generated, not read from the source dir). Persisting the
+    * fingerprints is what lets the relational dedup stage be
+    * oracle-replayed by an engine that cannot run the codecs.
+    *
+    * Lineage is DECLARED: the codec kernels run as typed
+    * mapPartitions, whose fresh output attributes the plan walk cannot
+    * tie to inputs — every fingerprint column is a pure function of
+    * the asset bytes (in production `assets` is the lake's media
+    * table; here the deterministic synthetic generator stands in).
     */
-  private def ensureMmFingerprints(s: org.apache.spark.sql.SparkSession,
-                                   dir: String, kind: String): String = {
-    val path = IndexOps.indexDir(dir)
+  private[graft] def mmFingerprints(kind: String): LakeArtifact = {
     val table = s"mmfp_$kind"
-    if (!IndexOps.indexCurrent(path, Seq(table), table, mmFpVersion)) {
-      IndexOps.clearStamp(path, table)
+    val (idSrc, src) = kind match {
+      case "pdf"   => ("pdfs.pdf_id", "pdfs.data")
+      case "video" => ("videos.video_id", "videos.data")
+      case _       => ("assets.asset_id", "assets.bytes")
+    }
+    LakeArtifact(table, Seq(table), mmFpVersion, Nil, IndexOps.indexDir(_, _),
+      lineage = Map("asset_id" -> Set(idSrc)) ++
+        Seq("h0", "h1", "h2", "h3", "decoded").map(_ -> Set(src))) { (s, _, path) =>
       val df = kind match {
         case "pdf" =>
           // pdf corpus → extracted image streams → the image hash
@@ -514,32 +525,13 @@ object ExtensibilityOps {
               col("h3"), col("decoded"))
       }
       graft.sources.Ingest.stageAndSwap(df, path, table)
-      // declared lineage map (r13 verdict ask #3): the codec kernels run
-      // as typed mapPartitions, whose fresh output attributes the plan
-      // walk cannot tie to inputs — declare the truthful map instead:
-      // every fingerprint column is a pure function of the asset bytes
-      // (in production `assets` is the lake's media table; here the
-      // deterministic synthetic generator stands in for it)
-      val src = kind match {
-        case "pdf"   => "pdfs.data"
-        case "video" => "videos.data"
-        case _       => "assets.bytes"
-      }
-      val idSrc = kind match {
-        case "pdf"   => "pdfs.pdf_id"
-        case "video" => "videos.video_id"
-        case _       => "assets.asset_id"
-      }
-      graft.plans.Lineage.writeSidecar(s"$path/$table.parquet", Map(
-        "asset_id" -> Set(idSrc),
-        "h0"       -> Set(src),
-        "h1"       -> Set(src),
-        "h2"       -> Set(src),
-        "h3"       -> Set(src),
-        "decoded"  -> Set(src)))
-      IndexOps.writeStamp(path, table, mmFpVersion)
     }
-    s"$path/$table.parquet"
+  }
+
+  private def ensureMmFingerprints(s: org.apache.spark.sql.SparkSession,
+                                   dir: String, kind: String): String = {
+    val path = mmFingerprints(kind).ensure(s, dir)._1
+    s"$path/mmfp_$kind.parquet"
   }
 
   /** The relational stage shared by all three modalities, at the v3

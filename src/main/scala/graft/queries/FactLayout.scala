@@ -35,7 +35,7 @@ import graft.Core._
   *  - the write is a NAMED, TIMED bench line (`setup_fact_layout` in
   *    IndexOps.warmSteps) on the build-once/serve-many contract of the
   *    index families: stamped with the code version + source-data
-  *    fingerprint + bucket count, journaled through IndexOps.writeStamp
+  *    fingerprint + bucket count, journaled by the LakeArtifact combinator
   *    (rebuilds show up in the bench's rebuilt_setup/rebuilt_midrun
   *    lists), rebuilt whenever the source bytes change;
   *  - declared outputs are unchanged: the DuckDB oracles keep reading
@@ -91,60 +91,56 @@ object FactLayout {
       math.max(16, math.min(4096, (bytes / (256L << 20)).toInt + 1))
     }
 
-  private def stampValue(s: SparkSession, dir: String, nb: Int): String =
-    IndexOps.stampFor(factLayoutVersion, dir, Seq("lineitem")) + s";buckets=$nb"
-
   private[graft] def enabled(s: SparkSession): Boolean =
     s.conf.get("spark.graft.lake.factLayout.enabled", "true").toBoolean
 
-  /** Serialized like the other family builders (ensure is called from
-    * concurrent warm futures and from entry plan-construction).
-    */
-  private val ensureLock = new Object
+  private def location(dir: String): String =
+    new java.io.File(layoutDir(dir)).getAbsoluteFile.toURI.toString
 
-  private[graft] def ensure(s: SparkSession, dir: String): Unit = ensureLock.synchronized {
-    val path = layoutDir(dir)
+  /** The three bucketed projections as one artifact; the bucket count
+    * is the stamp's dial (`;buckets=N`), so changing it rebuilds.
+    */
+  private[graft] val artifact: LakeArtifact = LakeArtifact("factlayout", specs.map(_.table),
+      factLayoutVersion, Seq("lineitem"), (dir, _) => layoutDir(dir),
+      dial = (s, dir) => s";buckets=${buckets(s, dir)}") { (s, dir, _) =>
     val nb = buckets(s, dir)
-    // stamp captured BEFORE the build reads the source (family
-    // convention): a mid-build source change reads non-current next time
-    val v = stampValue(s, dir, nb)
-    val loc = new java.io.File(path).getAbsoluteFile.toURI.toString
-    if (!IndexOps.indexCurrent(path, specs.map(_.table), "factlayout", v)) {
-      val src = load(s, dir, "lineitem")
-      for (sp <- specs) {
-        val tn = tableName(dir, sp.table)
-        s.sql(s"DROP TABLE IF EXISTS $tn")
-        src.select(sp.cols.map(col): _*)
-          // one shuffle so each write task holds exactly one bucket —
-          // one file per bucket (repartition and bucketBy share the
-          // Murmur3 hash family, and even on a mismatch each task
-          // would just write per-bucket files; correctness unaffected)
-          .repartition(nb, col(sp.bucketKey))
-          .write.format("parquet")
-          .bucketBy(nb, sp.bucketKey)
-          .sortBy(sp.bucketKey)
-          .option("path", s"$loc/${sp.table}.parquet")
-          .mode(SaveMode.Overwrite)
-          .saveAsTable(tn)
-      }
-      IndexOps.writeStamp(path, "factlayout", v)
-    } else {
+    val src = load(s, dir, "lineitem")
+    for (sp <- specs) {
+      val tn = tableName(dir, sp.table)
+      s.sql(s"DROP TABLE IF EXISTS $tn")
+      src.select(sp.cols.map(col): _*)
+        // one shuffle so each write task holds exactly one bucket —
+        // one file per bucket (repartition and bucketBy share the
+        // Murmur3 hash family, and even on a mismatch each task
+        // would just write per-bucket files; correctness unaffected)
+        .repartition(nb, col(sp.bucketKey))
+        .write.format("parquet")
+        .bucketBy(nb, sp.bucketKey)
+        .sortBy(sp.bucketKey)
+        .option("path", s"${location(dir)}/${sp.table}.parquet")
+        .mode(SaveMode.Overwrite)
+        .saveAsTable(tn)
+    }
+  }
+
+  private[graft] def ensure(s: SparkSession, dir: String): Unit =
+    if (!artifact.ensure(s, dir)._2) {
       // current on disk — make sure THIS session's catalog knows the
       // bucket spec (metadata-only; no data touched, nothing journaled)
+      lazy val nb = buckets(s, dir)
       for (sp <- specs) {
         val tn = tableName(dir, sp.table)
         if (!s.catalog.tableExists(tn)) {
           val ddl = load(s, dir, "lineitem")
             .select(sp.cols.map(col): _*).schema.toDDL
           s.sql(
-            s"""CREATE TABLE $tn ($ddl) USING parquet
+            s"""CREATE TABLE IF NOT EXISTS $tn ($ddl) USING parquet
                |CLUSTERED BY (${sp.bucketKey}) SORTED BY (${sp.bucketKey})
                |INTO $nb BUCKETS
-               |LOCATION '$loc/${sp.table}.parquet'""".stripMargin)
+               |LOCATION '${location(dir)}/${sp.table}.parquet'""".stripMargin)
         }
       }
     }
-  }
 
   private def served(s: SparkSession, dir: String, table: String,
                      fallbackCols: Seq[String]): DataFrame =

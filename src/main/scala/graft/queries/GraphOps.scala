@@ -121,7 +121,7 @@ object GraphOps {
         // list would go stale the moment a different caller memoized a
         // frame built from other sources)
         case Some((k, tables)) =>
-          val stamped = (k, graft.queries.IndexOps.dataStamp(k, tables))
+          val stamped = (k, LakeArtifact.dataStamp(k, tables))
           if (basketStatsCache.size > 64) basketStatsCache.clear()
           basketStatsCache.getOrElseUpdate(stamped, basketStats(e))
         case None    => basketStats(e)

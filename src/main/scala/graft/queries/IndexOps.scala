@@ -75,207 +75,12 @@ object IndexOps {
   private[graft] val simIndexVersion = "sim-v2:xxhash64-tokens;minhash64;bands16x4;lin1"
   private[graft] val vecIndexVersion = "vec-v3:dotp-norm;hyperplane4xW;w-dial-h3c3;probe-h3;lin1"
 
-  /** Cheap SOURCE-DATA identity fingerprint folded into every family's
-    * stamp: (file name, length, mtime) of each file under the listed
-    * source tables, hashed. Metadata-only — listing a table's files
-    * costs milliseconds locally and is a snapshot-id lookup under a
-    * real table format; no data scan. Rationale: the round-9 testdata
-    * regeneration proved the lake's version-only stamps blind to DATA
-    * drift — a regenerated corpus under an unchanged code version would
-    * have silently served labels/indexes built from the OLD corpus.
-    * With the fingerprint in the stamp, changed source bytes (or even a
-    * touch) read as non-current and rebuild through the normal ensure
-    * path; unchanged data keeps serving warm.
+  /** The MinHash/LSH index family: `sets` and the probe-serving
+    * `bands` layout, both derived from the session-memoized signature
+    * frame.
     */
-  private[graft] def dataStamp(dir: String, tables: Seq[String]): String = {
-    // Resolved through the Hadoop FileSystem API, NOT java.io.File: a
-    // non-local lake URI (hdfs://, s3a://) has no local files, so a
-    // java.io walk would silently fingerprint every table as empty and
-    // degrade the stamp to version-only — the exact data-drift
-    // blindness this fingerprint exists to prevent. A missing table
-    // path is shouted (and folded in as "missing", which still differs
-    // from any real listing) instead of passing silently.
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val conf = org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    for (t <- tables.sorted) {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) {
-        System.err.println(
-          s"[graft] dataStamp: source table path $p is missing — " +
-            "the index fingerprint records it as absent; probes against " +
-            "an index of previously-present data will rebuild")
-        md.update(s"$t:missing\n".getBytes("UTF-8"))
-      } else {
-        val it = fs.listFiles(p, true)
-        val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (it.hasNext) {
-          val f = it.next()
-          entries += s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}"
-        }
-        entries.sorted.foreach(e => md.update((e + "\n").getBytes("UTF-8")))
-      }
-    }
-    new java.math.BigInteger(1, md.digest()).toString(36).take(12)
-  }
-
-  /** A family's full stamp: code-semantics version + source-data
-    * fingerprint. Every indexCurrent/writeStamp pair goes through a
-    * per-family `xxxStamp(dir)` built on this.
-    */
-  private[graft] def stampFor(codeVersion: String, dir: String, tables: Seq[String]): String =
-    codeVersion + "@" + dataStamp(dir, tables)
-
-  private[graft] def simStamp(dir: String): String =
-    stampFor(simIndexVersion, dir, Seq("documents"))
-  private[graft] def vecStamp(dir: String): String =
-    stampFor(vecIndexVersion, dir, Seq("embeddings"))
-
-  private def stampFile(path: String, table: String) =
-    new java.io.File(s"$path/$table.version")
-
-  private[queries] def writeStamp(path: String, table: String, v: String): Unit = {
-    val f = stampFile(path, table)
-    f.getParentFile.mkdirs()
-    java.nio.file.Files.write(f.toPath, v.getBytes("UTF-8"))
-    val ctx = rebuildContext
-    // bounded: only the bench ever drains, so a long-lived non-bench
-    // JVM (soak tests, REPL, streaming gates) would otherwise grow the
-    // journal forever. 4096 >> any real run's rebuild count; overflow
-    // drops oldest-first, which a draining bench never reaches
-    while (rebuiltTables.size >= 4096) rebuiltTables.poll()
-    rebuiltTables.add(s"$table@$path" + (if (ctx.isEmpty) "" else s"#$ctx"))
-  }
-
-  /** The bench entry/setup currently executing, stamped onto every
-    * journal row as a `#entry` suffix: the unconditional build entries
-    * (`*_index_build` overwrites by contract, twice under min-of-two
-    * timing) then read as intentional at a glance, while a cold
-    * stamp-bump rebuild names the CONSUMER that paid it. bench_diff
-    * strips the suffix before its multiset comparison, so tagged and
-    * pre-tag artifacts stay comparable.
-    */
-  @volatile private[graft] var rebuildContext: String = ""
-
-  /** Rebuild journal (r16 verdict ask #6): every stamped-artifact
-    * rebuild ends in [[writeStamp]], so this queue records exactly
-    * which lake artifacts the current JVM rebuilt. The bench drains it
-    * after its setup steps to emit a per-run `rebuilt` list — a fleet
-    * run that paid cold rebuilds (stamp bump, fixture regen) is then
-    * attributable at a glance, and bench_diff refuses to read its
-    * inflated setup/consumer records as plan movers.
-    */
-  private val rebuiltTables = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  private[graft] def drainRebuilds(): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var t = rebuiltTables.poll()
-    while (t != null) { out += t; t = rebuiltTables.poll() }
-    out.toSeq
-  }
-
-  /** Invalidate a family's stamp — the FIRST step of every rebuild
-    * path. A rebuild can be triggered while the stamp is still current
-    * (e.g. a crashed compaction swap deleted a table's _SUCCESS): if
-    * the rebuild then crashes mid-recovery, a stamp left in place would
-    * make the half-recovered index read as servable and silently drop
-    * admission history. Deleting the stamp up front means the index is
-    * non-current from the moment a rebuild starts until tables +
-    * recovery + writeStamp all complete.
-    */
-  private[graft] def clearStamp(path: String, table: String): Unit = {
-    stampFile(path, table).delete(); ()
-  }
-
-  /** Current stamp content for a family, "" when absent — memo keys
-    * that must invalidate on rebuild compare this, never cache it.
-    */
-  private[graft] def readStamp(path: String, table: String): String = {
-    val f = stampFile(path, table)
-    if (f.isFile) new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-    else ""
-  }
-
-  /** Session-memoized SERVED small index tables (IVF centroids, PQ
-    * codebook): every probe consumes the same few-hundred-row frame,
-    * and re-opening the parquet per query (listing + footer + fresh
-    * codegen) costs more than the data — a real ANN server pins these
-    * next to the index handle. Keyed by the family's VERSION STAMP
-    * CONTENT, so a rebuild (stamp cleared, then rewritten) can never
-    * serve stale geometry from the memo: a mismatched stamp drops and
-    * re-reads. Released via [[evictServedTables]] (chained from the
-    * session-wide TextOps.evictCaches hook).
-    */
-  private val servedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), (String, DataFrame)]
-  private val servedLock = new Object
-
-  private[queries] def servedTable(s: SparkSession, path: String,
-                                   table: String, family: String): DataFrame =
-    servedLock.synchronized {
-      val stamp = readStamp(path, family)
-      servedCache.get((s, path, table)) match {
-        case Some((st, df)) if st == stamp => df
-        case prev =>
-          prev.foreach(_._2.unpersist())
-          val df = s.read.parquet(s"$path/$table.parquet").persist()
-          servedCache.put((s, path, table), (stamp, df))
-          df
-      }
-    }
-
-  private[queries] def evictServedTables(s: SparkSession): Unit =
-    servedLock.synchronized {
-      servedCache.keys.filter(_._1 eq s).foreach { k =>
-        servedCache.remove(k).foreach(_._2.unpersist())
-      }
-    }
-
-  /** An index table is servable iff its parquet commit marker exists
-    * (a crashed build leaves no _SUCCESS) AND its version stamp matches
-    * the running code's signature semantics.
-    */
-  private[graft] def indexCurrent(path: String, tables: Seq[String], stamp: String,
-                                  version: String): Boolean = {
-    val committed = tables.forall(t =>
-      new java.io.File(s"$path/$t.parquet/_SUCCESS").exists())
-    val f = stampFile(path, stamp)
-    committed && f.exists() &&
-      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8") == version
-  }
-
-  /** Build (overwrite) the persisted index for `dir`; returns its path.
-    *
-    * The data fingerprint is captured BEFORE the build reads the
-    * source (every family follows this): if the source changes
-    * mid-build, the stamp still describes the data the index was built
-    * FROM, so the next currency check reads non-current and rebuilds.
-    * Re-computing the stamp after the tables commit would fingerprint
-    * the NEW data over an index of the OLD data — exactly the
-    * staleness the stamp exists to prevent.
-    */
-  private[queries] def buildIndex(s: SparkSession, dir: String, ns: String = ""): String = {
-    val stamp = simStamp(dir)
-    val path = buildIndexUnstamped(s, dir, ns)
-    // stamp AFTER both tables commit: a build that dies mid-way leaves a
-    // missing stamp and the next ensureIndex rebuilds
-    writeStamp(path, "sim", stamp)
-    path
-  }
-
-  /** [[buildIndex]] WITHOUT the final stamp — the rebuild-with-recovery
-    * path: the stamp is INVALIDATED first (see [[clearStamp]] — a
-    * rebuild can start while an old stamp is still current), tables
-    * land, the caller's recovery (re-appending a gate's admitted
-    * history) runs, and only then does [[ensureIndexStatus]] stamp. A
-    * crash anywhere before the stamp leaves the index non-current, so
-    * the next use rebuilds AND re-recovers instead of serving a
-    * corpus-only index that silently forgot its admissions.
-    */
-  private def buildIndexUnstamped(s: SparkSession, dir: String, ns: String): String = {
-    val path = indexDir(dir, ns)
-    clearStamp(path, "sim")
+  private[graft] val simIndex: LakeArtifact = LakeArtifact("sim", Seq("sets", "bands"),
+      simIndexVersion, Seq("documents"), indexDir(_, _)) { (s, dir, path) =>
     // the session-memoized signature frame: both written tables derive
     // from it, and it is SHARED with the in-plan dedup family — one
     // signature pipeline per session regardless of which consumer runs
@@ -300,47 +105,28 @@ object IndexOps {
       .write.mode(SaveMode.Overwrite)
       .parquet(s"$path/bands.parquet")
     graft.plans.Lineage.writeSidecar(bands, s"$path/bands.parquet")
-    path
   }
 
   /** Probe-side guard: build on first use so entry order never matters
     * (the driver iterates `queries` in map order); rebuild when the
     * persisted index predates the running signature logic.
-    *
-    * A REBUILD re-signs the BASE CORPUS only — it cannot know about docs
-    * a streaming gate appended (they live in the gate's lake table, not
-    * the corpus). Callers that grow an index (Streams.dedupIngest) must
-    * therefore use [[ensureIndexStatus]] with a `recover` hook that
-    * re-appends their admitted lake table, or the gate's "no two
-    * admitted docs are ≥0.9-similar" invariant silently breaks for docs
-    * admitted before the rebuild.
     */
   private def ensureIndex(s: SparkSession, dir: String, ns: String = ""): String =
     ensureIndexStatus(s, dir, ns)._1
 
   /** [[ensureIndex]] + whether it had to rebuild (version bump, crashed
-    * append, first use). On rebuild, `recover(path)` runs AFTER the base
-    * tables commit and BEFORE the version stamp is written: a crash
-    * inside recovery leaves the index non-current, so the next use
-    * rebuilds and retries the recovery instead of treating a
-    * half-recovered index as servable (recovery must therefore be
-    * idempotent — the gates' history re-append is: duplicate rows are
-    * read-time-distincted and compacted at rest).
+    * append, first use). A REBUILD re-signs the BASE CORPUS only — it
+    * cannot know about docs a streaming gate appended — so callers that
+    * grow an index (Streams.dedupIngest) pass a `recover` hook that
+    * re-appends their admitted lake table (LakeArtifact runs it before
+    * the stamp); without it the gate's "no two admitted docs are
+    * ≥0.9-similar" invariant silently breaks for docs admitted before
+    * the rebuild.
     */
   private[graft] def ensureIndexStatus(s: SparkSession, dir: String,
                                        ns: String = "",
-                                       recover: String => Unit = _ => ()): (String, Boolean) = {
-    val path = indexDir(dir, ns)
-    // one captured stamp for check AND write (see buildIndex: the
-    // fingerprint must predate the source read)
-    val stamp = simStamp(dir)
-    if (!indexCurrent(path, Seq("sets", "bands"), "sim", stamp)) {
-      buildIndexUnstamped(s, dir, ns)
-      recover(path)
-      writeStamp(path, "sim", stamp)
-      (path, true)
-    } else (path, false)
-  }
+                                       recover: String => Unit = _ => ()): (String, Boolean) =
+    simIndex.ensure(s, dir, ns, recover)
 
   /** Compact an index namespace in place: streaming appends add one
     * small file set per micro-batch (and a replayed append adds
@@ -364,20 +150,14 @@ object IndexOps {
   private[graft] def compactIndex(s: SparkSession, dir: String, ns: String = "",
                                   nFiles: Int = 4): Unit = {
     val path = indexDir(dir, ns)
-    val flat = Seq(
-      "sim"    -> Seq("sets", "bands"),
-      "vec"    -> Seq("vecs", "vec_bands"),
-      "labels" -> Seq("labels"))
-    val version = Map("sim" -> simStamp(dir), "vec" -> vecStamp(dir),
-      "labels" -> TextOps.labelsStamp(dir))
     // the band tables carry the probe-serving layout ((band, bucket)-
     // sorted row groups) — their rewrite must preserve it, like the
     // IVF cells rewrite below; the flat tables round-robin to nFiles
     val sortKey = Map("bands" -> "bh", "vec_bands" -> "bk")
     for {
-      (stamp, tables) <- flat
-      if indexCurrent(path, tables, stamp, version(stamp))
-      t <- tables
+      a <- Seq(simIndex, vecIndex, TextOps.labels)
+      if a.current(s, dir, ns)
+      t <- a.tables
     } graft.sources.Ingest.stageAndSwap(
         sortKey.get(t) match {
           case Some(k) =>
@@ -392,8 +172,7 @@ object IndexOps {
     // same small-file growth, but compaction must preserve the layout:
     // repartition ON the cell key and rewrite partitionBy(c_id), back
     // to one file per cell. Centroids are overwrite-only (never grown).
-    if (indexCurrent(path, Seq("ivf_centroids", "ivf_cells"), "ivf",
-        IvfIndex.ivfStamp(dir)))
+    if (IvfIndex.ivfIndex.current(s, dir, ns))
       graft.sources.Ingest.stageAndSwap(
         s.read.parquet(s"$path/ivf_cells.parquet").distinct()
           .repartition(col("c_id")),
@@ -401,30 +180,26 @@ object IndexOps {
     // the PQ code tables grow by append like the cells: flat codes
     // round-robin to nFiles; the composed table preserves its cell
     // partitioning. Codebook/centroids are overwrite-only (never grown).
-    if (indexCurrent(path, Seq("pq_codebook", "pq_codes"), "pq",
-        PqIndex.pqStamp(dir)))
+    if (PqIndex.pqIndex.current(s, dir, ns))
       graft.sources.Ingest.stageAndSwap(
         s.read.parquet(s"$path/pq_codes.parquet").distinct().repartition(nFiles),
         path, "pq_codes")
-    if (indexCurrent(path, Seq("ivfpq_codes"), "ivfpq", PqIndex.ivfPqStamp(dir)))
+    if (PqIndex.ivfPqIndex.current(s, dir, ns))
       graft.sources.Ingest.stageAndSwap(
         s.read.parquet(s"$path/ivfpq_codes.parquet").distinct()
           .repartition(col("c_id")),
         path, "ivfpq_codes", partitionBy = Seq("c_id"))
   }
 
-  /** Ensure every persisted index family for `dir` is built and
-    * current — the bench's third named setup step. A cold lake (fresh
-    * checkout, first run after a version bump) pays its index builds
-    * HERE, attributed to one named line, instead of inside whichever
-    * probe entry happens to run first — probe timings are then always
-    * the warm serving marginal they claim to be.
-    */
-  /** Each index/state family as its own named warm step so the bench can
-    * attribute (and fail) them independently — in round 9 one broken
-    * ensure (HLL, via the events encoding change) zeroed the whole
-    * chain's attribution as a single -1.0 line, hiding that the other
-    * six had succeeded.
+  /** Each persisted index/state family as its own named warm step — the
+    * bench's setup lines. A cold lake (fresh checkout, first run after a
+    * version bump) pays its builds HERE, attributed to one named line
+    * per artifact, instead of inside whichever probe entry happens to
+    * run first — probe timings are then always the warm serving
+    * marginal they claim to be — and one broken family cannot hide
+    * that the others succeeded (in round 9 one broken ensure, HLL via
+    * the events encoding change, zeroed the whole chain's attribution
+    * as a single -1.0 line).
     */
   private[graft] val warmSteps: Seq[(String, (SparkSession, String) => Unit)] =
     Seq[(String, (SparkSession, String) => Unit)](
@@ -483,7 +258,7 @@ object IndexOps {
          |FROM bands, sets GROUP BY band, n_sets, n_docs ORDER BY band""".stripMargin
     ) { (s, dir) =>
       import s.implicits._
-      val path = buildIndex(s, dir)
+      val path = simIndex.rebuild(s, dir)
       // Declared output = deterministic stats OF THE PERSISTED TABLES
       // (read back, not recomputed): proves the index landed on disk.
       val bands = s.read.parquet(s"$path/bands.parquet")
@@ -634,7 +409,7 @@ object IndexOps {
       // PERSISTED tables is replayed by DuckDB recomputing every
       // signature from the literal ±1 plane matrix, so a signing or
       // layout drift in the stored index hash-mismatches.
-      val path = buildVecIndex(s, dir)
+      val path = vecIndex.rebuild(s, dir)
       val bands = s.read.parquet(s"$path/vec_bands.parquet")
       val vecs  = s.read.parquet(s"$path/vecs.parquet")
       bands.groupBy($"band")
@@ -1016,23 +791,11 @@ object IndexOps {
       .write.mode(SaveMode.Append).parquet(s"$path/bands.parquet")
   }
 
-  /** Build (overwrite) the persisted vector index for `dir` (stamp
-    * captured pre-read — see [[buildIndex]]).
+  /** The LSH vector index family: `vecs` plus the probe-serving
+    * `vec_bands` layout, signed at the artifact's frozen band width.
     */
-  private[graft] def buildVecIndex(s: SparkSession, dir: String, ns: String = ""): String = {
-    val stamp = vecStamp(dir)
-    val path = buildVecIndexUnstamped(s, dir, ns)
-    writeStamp(path, "vec", stamp)
-    path
-  }
-
-  /** Tables-only build — see [[buildIndexUnstamped]] for why the stamp
-    * is invalidated first and withheld on the rebuild-with-recovery
-    * path.
-    */
-  private def buildVecIndexUnstamped(s: SparkSession, dir: String, ns: String): String = {
-    val path = indexDir(dir, ns)
-    clearStamp(path, "vec")
+  private[graft] val vecIndex: LakeArtifact = LakeArtifact("vec", Seq("vecs", "vec_bands"),
+      vecIndexVersion, Seq("embeddings"), indexDir(_, _)) { (s, dir, path) =>
     val vecs = VecOps.emb(s, dir).select(col("vec_id"), col("emb"), col("norm"))
     vecs.write.mode(SaveMode.Overwrite).parquet(s"$path/vecs.parquet")
     // lineage sidecar (r13 verdict ask #3): both frames are
@@ -1062,7 +825,6 @@ object IndexOps {
     bands.write.mode(SaveMode.Overwrite)
       .parquet(s"$path/vec_bands.parquet")
     graft.plans.Lineage.writeSidecar(bands, s"$path/vec_bands.parquet")
-    path
   }
 
   /** The artifact's frozen band width — written at build time beside
@@ -1213,18 +975,10 @@ object IndexOps {
     ensureVecIndexStatus(s, dir, ns)._1
 
   /** Vec twin of [[ensureIndexStatus]] — same rebuild-with-recovery
-    * stamping order (tables → recover → stamp).
+    * contract.
     */
   private[graft] def ensureVecIndexStatus(s: SparkSession, dir: String,
                                           ns: String = "",
-                                          recover: String => Unit = _ => ()): (String, Boolean) = {
-    val path = indexDir(dir, ns)
-    val stamp = vecStamp(dir) // captured pre-read, written verbatim
-    if (!indexCurrent(path, Seq("vecs", "vec_bands"), "vec", stamp)) {
-      buildVecIndexUnstamped(s, dir, ns)
-      recover(path)
-      writeStamp(path, "vec", stamp)
-      (path, true)
-    } else (path, false)
-  }
+                                          recover: String => Unit = _ => ()): (String, Boolean) =
+    vecIndex.ensure(s, dir, ns, recover)
 }

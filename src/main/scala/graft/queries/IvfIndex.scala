@@ -43,9 +43,6 @@ object IvfIndex {
     */
   private[graft] val ivfIndexVersion = "ivf-v3:kmeans64-lloyd2;cos6-argmin;cells-by-cid+meta;meta-stats;lin1"
 
-  /** Code version + source-data fingerprint (IndexOps.dataStamp). */
-  private[graft] def ivfStamp(dir: String): String =
-    IndexOps.stampFor(ivfIndexVersion, dir, Seq("embeddings"))
 
   /** Per-value row counts of every metadata column the cells store —
     * the selectivity estimate the FILTERED AnnTopKRule rewrite scales
@@ -136,28 +133,21 @@ object IvfIndex {
     } catch { case _: Exception => None }
   }
 
-  /** Session-memoized served quantizer — see IndexOps.servedTable (the
+  /** Session-memoized served quantizer — see LakeArtifact.served (the
     * shared stamp-keyed memo; a rebuild can never serve stale geometry).
     */
   private[graft] def centroids(s: SparkSession, path: String): DataFrame =
-    IndexOps.servedTable(s, path, "ivf_centroids", "ivf")
+    ivfIndex.served(s, path, "ivf_centroids")
 
   private[graft] def evictCaches(s: SparkSession): Unit =
-    IndexOps.evictServedTables(s)
+    LakeArtifact.evictServed(s)
 
-  private[graft] def buildIvfIndex(s: SparkSession, dir: String): String = {
-    val path = IndexOps.indexDir(dir)
-    // data fingerprint captured BEFORE the source read (see
-    // IndexOps.buildIndex): a mid-build source change must read as
-    // non-current afterwards, never get the new fingerprint stamped
-    // over an index of the old data
-    val stamp = ivfStamp(dir)
-    // invalidate FIRST (IndexOps.clearStamp): a rebuild can start while
-    // an old stamp is still current (e.g. crashed compaction swap); a
-    // crash between the cells overwrite and the re-stamp must leave the
-    // index non-current, not serving a rebuilt-base that silently
-    // dropped appended vectors
-    IndexOps.clearStamp(path, "ivf")
+  /** The IVF family: k-means `ivf_centroids` plus the cell-partitioned
+    * `ivf_cells`.
+    */
+  private[graft] val ivfIndex: LakeArtifact = LakeArtifact("ivf",
+      Seq("ivf_centroids", "ivf_cells"), ivfIndexVersion, Seq("embeddings"),
+      IndexOps.indexDir(_, _)) { (s, dir, path) =>
     val (cents, assigned) = VecOps.kmeansCells(s, dir)
     cents.write.mode(SaveMode.Overwrite).parquet(s"$path/ivf_centroids.parquet")
     // one parquet partition per cell: nprobe-cell probes become
@@ -181,21 +171,13 @@ object IvfIndex {
     // embeddings.embedding instead of dead-ending at the artifact
     graft.plans.Lineage.writeSidecar(cents, s"$path/ivf_centroids.parquet")
     graft.plans.Lineage.writeSidecar(assigned, s"$path/ivf_cells.parquet")
-    // stamp AFTER both tables commit (crashed build → rebuild)
-    IndexOps.writeStamp(path, "ivf", stamp)
-    path
   }
 
   /** Build on first use so entry order never matters; rebuild when the
     * persisted cells predate the running quantizer logic.
     */
-  private[graft] def ensureIvfIndex(s: SparkSession, dir: String): String = {
-    val path = IndexOps.indexDir(dir)
-    if (!IndexOps.indexCurrent(path, Seq("ivf_centroids", "ivf_cells"),
-        "ivf", ivfStamp(dir)))
-      buildIvfIndex(s, dir)
-    else path
-  }
+  private[graft] def ensureIvfIndex(s: SparkSession, dir: String): String =
+    ivfIndex.ensure(s, dir)._1
 
   /** Grow the persisted IVF index with a new vector batch WITHOUT
     * re-clustering — the daily-ingest shape for an ANN store: assign
@@ -287,7 +269,7 @@ object IvfIndex {
     ) { (s, dir) =>
       import s.implicits._
       VectorExprs.register(s)
-      val path = buildIvfIndex(s, dir)
+      val path = ivfIndex.rebuild(s, dir)
       // Declared output = deterministic stats OF THE PERSISTED TABLES
       // (read back, not recomputed): proves the index landed on disk.
       val cells = s.read.parquet(s"$path/ivf_cells.parquet")

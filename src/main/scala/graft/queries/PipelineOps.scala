@@ -1605,37 +1605,30 @@ object PipelineOps {
       .orderBy($"doc_id")
   }
 
-  /** Code version + source-data fingerprint for the LM model artifact. */
+  /** Code version of the LM model artifact. */
   private[graft] val lmStateVersion = "lmstate-v1:bigram-counts;base-excl-mod10-7;lin1"
 
-  private[graft] def lmStateStamp(dir: String): String =
-    IndexOps.stampFor(lmStateVersion, dir, Seq("documents"))
-
-  /** Ensure the persisted bigram-count model over the corpus minus the
-    * standard batch slice — stamp discipline as every lake artifact
-    * (clear first, stamp the pre-read fingerprint after the commit).
+  /** The persisted bigram-count model over the corpus minus the
+    * standard batch slice (same lake dir as the mix state, separate
+    * table + stamp). Lineage is DECLARED: c12 is count(*) — an
+    * aggregate with no column references, so the swap's auto map
+    * records it empty and consumers would dead-end; the count of a
+    * text-derived bigram group derives from the text.
     */
-  private[graft] def ensureLmState(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    import s.implicits._
-    val path = mixStateDir(dir) // same lake dir, separate table + stamp
-    val stamp = lmStateStamp(dir)
-    if (!IndexOps.indexCurrent(path, Seq("lm_state"), "lm_state", stamp)) {
-      IndexOps.clearStamp(path, "lm_state")
-      val base = bigramStream(
-        TextOps.docTokens(s, dir).filter(pmod($"doc_id", lit(10)) =!= 7))
-        .groupBy($"bg").agg(count(lit(1)).as("c12"))
-      graft.sources.Ingest.stageAndSwap(base, path, "lm_state")
-      // declared lineage map (r13 verdict ask #3): c12 is count(*) —
-      // an aggregate with no column references, so the swap's auto
-      // map records it empty and consumers would dead-end. The count
-      // of a text-derived bigram group derives from the text.
-      graft.plans.Lineage.writeSidecar(s"$path/lm_state.parquet", Map(
+  private[graft] val lmState: LakeArtifact = LakeArtifact("lm_state", Seq("lm_state"),
+      lmStateVersion, Seq("documents"), mixStateDir(_, _),
+      lineage = Map(
         "bg"  -> Set("documents.text"),
-        "c12" -> Set("documents.text")))
-      IndexOps.writeStamp(path, "lm_state", stamp)
-    }
-    path
+        "c12" -> Set("documents.text"))) { (s, dir, path) =>
+    import s.implicits._
+    val base = bigramStream(
+      TextOps.docTokens(s, dir).filter(pmod($"doc_id", lit(10)) =!= 7))
+      .groupBy($"bg").agg(count(lit(1)).as("c12"))
+    graft.sources.Ingest.stageAndSwap(base, path, "lm_state")
   }
+
+  private[graft] def ensureLmState(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    lmState.ensure(s, dir)._1
 
   // ---- Incremental aggregate state (the mixing family's MV) ----------
 
@@ -1644,10 +1637,6 @@ object PipelineOps {
     * of "already ingested") must rebuild, never merge.
     */
   private[graft] val mixStateVersion = "mixstate-v2:ws-tokens;per-source-docs-tokens;base-excl-mod10-7;upto-col;lin1"
-
-  /** Code version + source-data fingerprint (IndexOps.dataStamp). */
-  private[graft] def mixStateStamp(dir: String): String =
-    IndexOps.stampFor(mixStateVersion, dir, Seq("documents"))
 
   /** Lake location of the aggregate state for a source dir — same
     * out-of-target/, namespace-suffixed discipline as
@@ -1658,63 +1647,48 @@ object PipelineOps {
     "lake/aggstate/" +
       (dir + (if (ns.isEmpty) "" else "@" + ns)).replaceAll("[^A-Za-z0-9.]+", "_")
 
-  /** Ensure the base state exists and is current: per-source
-    * (n_docs, n_tokens) over the corpus EXCLUDING the standard batch
-    * slice, so the oracled incremental entry genuinely has something
-    * to merge. `merged_upto` is the streaming high-water mark — the
-    * id of the last partial batch a compaction absorbed (−1 = none);
-    * it lives as a constant column INSIDE the state table so the
-    * stage-and-swap that absorbs partials is also the commit point
-    * that retires them (two files can't swap atomically; one can).
-    * Stamp discipline as everywhere: clear first, stamp after the
-    * table commits (a crashed build reads as non-current).
+  /** The base state: per-source (n_docs, n_tokens) over the corpus
+    * EXCLUDING the standard batch slice, so the oracled incremental
+    * entry genuinely has something to merge. `merged_upto` is the
+    * streaming high-water mark — the id of the last partial batch a
+    * compaction absorbed (−1 = none); it lives as a constant column
+    * INSIDE the state table so the stage-and-swap that absorbs
+    * partials is also the commit point that retires them (two files
+    * can't swap atomically; one can). Lineage is DECLARED: n_docs is
+    * count(*) (no column references → the auto map is empty for it);
+    * merged_upto is a literal high-water mark — deliberately absent.
     */
-  private[graft] def ensureMixState(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    import s.implicits._
-    val path = mixStateDir(dir)
-    // captured once, pre-read — checked and written as the same value
-    // (see IndexOps.buildIndex for the mid-build-drift rationale)
-    val stamp = mixStateStamp(dir)
-    if (!IndexOps.indexCurrent(path, Seq("mix_state"), "mix_state", stamp)) {
-      IndexOps.clearStamp(path, "mix_state")
-      val base = TextOps.docTokens(s, dir)
-        .filter(pmod($"doc_id", lit(10)) =!= 7)
-        .groupBy($"source")
-        .agg(count(lit(1)).as("n_docs"), sum(size($"toks")).as("n_tokens"))
-        .withColumn("merged_upto", lit(-1L))
-      graft.sources.Ingest.stageAndSwap(base, path, "mix_state")
-      // declared lineage map (r13 verdict ask #3): n_docs is count(*)
-      // (no column references → the auto map is empty for it); declare
-      // the truthful derivation instead. merged_upto is a literal
-      // high-water mark — deliberately absent (no corpus source).
-      graft.plans.Lineage.writeSidecar(s"$path/mix_state.parquet", Map(
+  private[graft] val mixState: LakeArtifact = LakeArtifact("mix_state", Seq("mix_state"),
+      mixStateVersion, Seq("documents"), mixStateDir(_, _),
+      lineage = Map(
         "source"   -> Set("documents.source"),
         "n_docs"   -> Set("documents.doc_id"),
-        "n_tokens" -> Set("documents.text")))
-      IndexOps.writeStamp(path, "mix_state", stamp)
-    }
-    path
+        "n_tokens" -> Set("documents.text"))) { (s, dir, path) =>
+    import s.implicits._
+    val base = TextOps.docTokens(s, dir)
+      .filter(pmod($"doc_id", lit(10)) =!= 7)
+      .groupBy($"source")
+      .agg(count(lit(1)).as("n_docs"), sum(size($"toks")).as("n_tokens"))
+      .withColumn("merged_upto", lit(-1L))
+    graft.sources.Ingest.stageAndSwap(base, path, "mix_state")
   }
 
-  /** Seed a namespace's state from the base artifact on first use —
+  private[graft] def ensureMixState(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    mixState.ensure(s, dir)._1
+
+  /** A namespace's state, seeded from the base artifact on first use —
     * the copy-on-first-use discipline the gates use for their index
     * namespaces (independently-maintained states never interleave).
     */
+  private[graft] val nsMixState: LakeArtifact =
+    mixState.copy(lineage = Map.empty)((s, dir, path) =>
+      graft.sources.Ingest.stageAndSwap(
+        s.read.parquet(s"${ensureMixState(s, dir)}/mix_state.parquet"), path, "mix_state"))
+
   private def ensureNsMixState(s: org.apache.spark.sql.SparkSession, dir: String,
                                ns: String): String = {
     val basePath = ensureMixState(s, dir)
-    if (ns.isEmpty) basePath
-    else {
-      val path = mixStateDir(dir, ns)
-      val stamp = mixStateStamp(dir) // captured once (see ensureMixState)
-      if (!IndexOps.indexCurrent(path, Seq("mix_state"), "mix_state", stamp)) {
-        IndexOps.clearStamp(path, "mix_state")
-        graft.sources.Ingest.stageAndSwap(
-          s.read.parquet(s"$basePath/mix_state.parquet"), path, "mix_state")
-        IndexOps.writeStamp(path, "mix_state", stamp)
-      }
-      path
-    }
+    if (ns.isEmpty) basePath else nsMixState.ensure(s, dir, ns)._1
   }
 
   /** Per-source partial aggregates of one document batch — the only
@@ -1789,24 +1763,18 @@ object PipelineOps {
     */
   private[graft] val hllStateVersion = "hllstate-v1:hll-users-by-type;base-excl-mod10-7;lin1"
 
-  private[graft] def hllStateStamp(dir: String): String =
-    IndexOps.stampFor(hllStateVersion, dir, Seq("events"))
-
-  private[graft] def ensureHllState(s: org.apache.spark.sql.SparkSession, dir: String): String = {
+  private[graft] val hllState: LakeArtifact = LakeArtifact("hll_state", Seq("hll_state"),
+      hllStateVersion, Seq("events"), mixStateDir(_, _)) { (s, dir, path) =>
     import s.implicits._
-    val path = mixStateDir(dir) // same lake dir, separate table + stamp
-    val stamp = hllStateStamp(dir) // captured once (see ensureMixState)
-    if (!IndexOps.indexCurrent(path, Seq("hll_state"), "hll_state", stamp)) {
-      IndexOps.clearStamp(path, "hll_state")
-      val base = loadEvents(s, dir)
-        .filter(pmod($"event_id", lit(10)) =!= 7)
-        .groupBy($"event_type")
-        .agg(hll_sketch_agg($"user_id").as("sketch"))
-      graft.sources.Ingest.stageAndSwap(base, path, "hll_state")
-      IndexOps.writeStamp(path, "hll_state", stamp)
-    }
-    path
+    val base = loadEvents(s, dir)
+      .filter(pmod($"event_id", lit(10)) =!= 7)
+      .groupBy($"event_type")
+      .agg(hll_sketch_agg($"user_id").as("sketch"))
+    graft.sources.Ingest.stageAndSwap(base, path, "hll_state")
   }
+
+  private[graft] def ensureHllState(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    hllState.ensure(s, dir)._1
 
   /** Absorb all live partial batches into the base state. The
     * stage-and-swap of the merged table (which carries the new

@@ -54,10 +54,6 @@ object PqIndex {
     */
   private[graft] val pqIndexVersion = "pq-v1:m16d4k16;l2-lloyd2;adc-ip;code-packed-long;lin1"
 
-  /** Code version + source-data fingerprint (IndexOps.dataStamp). */
-  private[graft] def pqStamp(dir: String): String =
-    IndexOps.stampFor(pqIndexVersion, dir, Seq("embeddings"))
-
   private val M = 16 // subspaces
   private val D = 4  // dims per subspace (M * D = 64)
   private val K = 16 // codes per subspace (4 bits)
@@ -118,15 +114,14 @@ object PqIndex {
     book
   }
 
-  private[graft] def buildPqIndex(s: SparkSession, dir: String): String = {
+  /** The flat PQ family: the trained `pq_codebook` plus the packed
+    * per-vector `pq_codes`.
+    */
+  private[graft] val pqIndex: LakeArtifact = LakeArtifact("pq",
+      Seq("pq_codebook", "pq_codes"), pqIndexVersion, Seq("embeddings"),
+      IndexOps.indexDir(_, _)) { (s, dir, path) =>
     VectorExprs.register(s)
     import s.implicits._
-    val path = IndexOps.indexDir(dir)
-    // data fingerprint captured pre-read (see IndexOps.buildIndex)
-    val stamp = pqStamp(dir)
-    // stamp-invalidate FIRST (the crash-durability discipline every
-    // index family follows — see buildIvfIndex)
-    IndexOps.clearStamp(path, "pq")
     // zero-norm vectors have no cosine; excluded like every vector path
     val e = VecOps.emb(s, dir).filter($"norm" > 0)
     val subs = subVectors(e).persist() // 3 consumers during the build
@@ -149,21 +144,14 @@ object PqIndex {
         .parquet(s"$path/pq_codes.parquet")
       graft.plans.Lineage.writeSidecar(codes, s"$path/pq_codes.parquet")
     } finally subs.unpersist()
-    IndexOps.writeStamp(path, "pq", stamp)
-    path
   }
 
-  private[graft] def ensurePqIndex(s: SparkSession, dir: String): String = {
-    val path = IndexOps.indexDir(dir)
-    if (!IndexOps.indexCurrent(path, Seq("pq_codebook", "pq_codes"),
-        "pq", pqStamp(dir)))
-      buildPqIndex(s, dir)
-    else path
-  }
+  private[graft] def ensurePqIndex(s: SparkSession, dir: String): String =
+    pqIndex.ensure(s, dir)._1
 
-  /** The served codebook — stamp-keyed session memo (IndexOps.servedTable). */
+  /** The served codebook — stamp-keyed session memo (LakeArtifact.served). */
   private[graft] def codebook(s: SparkSession, path: String): DataFrame =
-    IndexOps.servedTable(s, path, "pq_codebook", "pq")
+    pqIndex.served(s, path, "pq_codebook")
 
   /** The query's ADC lookup table, built IN-PLAN — THE one definition
     * every ADC consumer shares (flat probe, IVF-PQ probe, specs):
@@ -208,15 +196,10 @@ object PqIndex {
   private[graft] val ivfPqIndexVersion =
     s"ivfpq-v1($pqIndexVersion;${IvfIndex.ivfIndexVersion})"
 
-  private[graft] def ivfPqStamp(dir: String): String =
-    IndexOps.stampFor(ivfPqIndexVersion, dir, Seq("embeddings"))
-
-  private[graft] def buildIvfPqIndex(s: SparkSession, dir: String): String = {
+  private[graft] val ivfPqIndex: LakeArtifact = LakeArtifact("ivfpq",
+      Seq("ivfpq_codes"), ivfPqIndexVersion, Seq("embeddings"),
+      IndexOps.indexDir(_, _)) { (s, dir, path) =>
     import s.implicits._
-    val path = IndexOps.indexDir(dir)
-    // captured pre-read (see IndexOps.buildIndex)
-    val stamp = ivfPqStamp(dir)
-    IndexOps.clearStamp(path, "ivfpq")
     IvfIndex.ensureIvfIndex(s, dir)
     ensurePqIndex(s, dir)
     val cells = s.read.parquet(s"$path/ivf_cells.parquet")
@@ -231,16 +214,10 @@ object PqIndex {
     // already resolves through both to embeddings.* — the nested-splice
     // case, same as the pq_codes-through-codebook chain
     graft.plans.Lineage.writeSidecar(codes, s"$path/ivfpq_codes.parquet")
-    IndexOps.writeStamp(path, "ivfpq", stamp)
-    path
   }
 
-  private[graft] def ensureIvfPqIndex(s: SparkSession, dir: String): String = {
-    val path = IndexOps.indexDir(dir)
-    if (!IndexOps.indexCurrent(path, Seq("ivfpq_codes"), "ivfpq", ivfPqStamp(dir)))
-      buildIvfPqIndex(s, dir)
-    else path
-  }
+  private[graft] def ensureIvfPqIndex(s: SparkSession, dir: String): String =
+    ivfPqIndex.ensure(s, dir)._1
 
   /** Grow the persisted PQ code table with a new vector batch WITHOUT
     * retraining — the daily-ingest shape, mirroring appendToIvfIndex:
@@ -356,7 +333,7 @@ object PqIndex {
     ) { (s, dir) =>
       import s.implicits._
       VectorExprs.register(s)
-      val path = buildPqIndex(s, dir)
+      val path = pqIndex.rebuild(s, dir)
       // Declared output = deterministic stats OF THE PERSISTED TABLES
       // (read back): corpus coverage, codebook shape, and the logical
       // bytes-per-vector the compression claim rests on.

@@ -237,7 +237,7 @@ object TextOps {
 
   /** Memoized persisted [[signatureTable]] — shared by the in-plan dedup
     * family (via [[verifiedSets]]) AND the persisted-index build
-    * (IndexOps.buildIndex), so one session computes the signature
+    * (IndexOps.simIndex), so one session computes the signature
     * pipeline once no matter which consumer runs first or how often the
     * bench re-times the build. Released via [[evictCaches]].
     */
@@ -628,39 +628,50 @@ object TextOps {
     */
   private[graft] val labelsVersion = IndexOps.simIndexVersion + ";jac0.9;cc-minlabel-v1;lin1"
 
-  /** Code version + source-data fingerprint (IndexOps.dataStamp). */
-  private[graft] def labelsStamp(dir: String): String =
-    IndexOps.stampFor(labelsVersion, dir, Seq("documents"))
+  /** The (doc_id, label) artifact beside the sim index's sets/bands.
+    * Lineage is DECLARED: the propagation loop's localCheckpoints
+    * truncate the builder plan — label values are component-min
+    * doc_ids selected by text-similarity edges, so both columns trace
+    * to the corpus and consumers of labels.parquet see documents.*,
+    * not a lineage dead-end at the artifact.
+    */
+  private[graft] val labels: LakeArtifact = LakeArtifact("labels", Seq("labels"),
+      labelsVersion, Seq("documents"), IndexOps.indexDir(_, _),
+      lineage = Map(
+        "doc_id" -> Set("documents.doc_id"),
+        "label"  -> Set("documents.doc_id", "documents.text"))) { (s, dir, path) =>
+    computeLabels(s, dir)
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$path/labels.parquet")
+  }
 
   private val labelsCache =
     scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String, String), org.apache.spark.sql.DataFrame]
 
-  private[queries] def clusterLabels(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    cacheLock.synchronized { labelsCache.getOrElseUpdate(
-      (s, dir, s.conf.get("spark.sql.shuffle.partitions", "")), {
-        val path = IndexOps.indexDir(dir)
-        // captured once, pre-read: checked and written as the same
-        // value (see IndexOps.buildIndex for the mid-build-drift why)
-        val stamp = labelsStamp(dir)
-        if (!IndexOps.indexCurrent(path, Seq("labels"), "labels", stamp)) {
-          computeLabels(s, dir)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$path/labels.parquet")
-          // lineage sidecar (r12 verdict ask #9): the propagation loop's
-          // localCheckpoints truncate the builder plan, so the map is
-          // DECLARED — label values are component-min doc_ids selected
-          // by text-similarity edges, so both columns trace to the
-          // corpus; consumers of labels.parquet now see documents.*,
-          // not a lineage dead-end at the artifact
-          graft.plans.Lineage.writeSidecar(s"$path/labels.parquet", Map(
-            "doc_id" -> Set("documents.doc_id"),
-            "label"  -> Set("documents.doc_id", "documents.text")))
-          // stamp AFTER the table commits (crashed build → rebuild)
-          IndexOps.writeStamp(path, "labels", stamp)
-        }
-        s.read.parquet(s"$path/labels.parquet")
-      })
+  /** Served labels, memoized per (session, dir, partitions). The ensure
+    * runs OUTSIDE cacheLock: the build takes cacheLock itself (the
+    * signature memos) under the ensure lock, so holding cacheLock here
+    * while waiting for the ensure lock would invert that order.
+    */
+  private[queries] def clusterLabels(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
+    val key = (s, dir, s.conf.get("spark.sql.shuffle.partitions", ""))
+    cacheLock.synchronized(labelsCache.get(key)).getOrElse {
+      val path = labels.ensure(s, dir)._1
+      cacheLock.synchronized {
+        labelsCache.getOrElseUpdate(key, s.read.parquet(s"$path/labels.parquet"))
+      }
     }
+  }
+
+  /** A gate namespace's labels: same stamp as [[labels]], reseeded by
+    * copying the base-corpus labels (no declared sidecar — the gate
+    * copy is a private serving table, never a lineage source).
+    */
+  private[graft] val gateLabelsArtifact: LakeArtifact =
+    labels.copy(lineage = Map.empty)((s, dir, path) =>
+      clusterLabels(s, dir)
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$path/labels.parquet"))
 
   /** Incremental cluster maintenance for a streaming admission gate:
     * keep the gate namespace's labels artifact in step with its grown
@@ -681,33 +692,17 @@ object TextOps {
   private[graft] def maintainGateLabels(s: org.apache.spark.sql.SparkSession, dir: String,
                                         ns: String, batchAdmitted: org.apache.spark.sql.DataFrame,
                                         lakeTablePath: String): Unit = {
-    val path = IndexOps.indexDir(dir, ns)
     val singles = (d: org.apache.spark.sql.DataFrame) =>
       d.select(col("doc_id"), col("doc_id").as("label"))
-    // captured once, pre-read — checked and written as the same value
-    val stamp = labelsStamp(dir)
-    if (!IndexOps.indexCurrent(path, Seq("labels"), "labels", stamp)) {
-      // invalidate FIRST (IndexOps.clearStamp): the reseed can be
-      // triggered while an old stamp is still current (crashed
-      // compaction swap); a crash between the base overwrite and the
-      // lake recovery must leave the artifact non-current
-      IndexOps.clearStamp(path, "labels")
-      clusterLabels(s, dir)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/labels.parquet")
-      // the lake already holds THIS batch (committed before the label
-      // update), so recovering the whole table covers it — no separate
-      // batch append on the reseed path, which would double-write
+    // on a reseed the lake already holds THIS batch (committed before
+    // the label update), so recovering the whole table covers it — no
+    // separate batch append on that path, which would double-write
+    val (path, reseeded) = gateLabelsArtifact.ensure(s, dir, ns, recover = p =>
       if (new java.io.File(lakeTablePath).exists())
         singles(s.read.parquet(lakeTablePath))
           .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(s"$path/labels.parquet")
-      // stamp only after BOTH the base overwrite and the lake recovery
-      // commit: a crash in between leaves the artifact non-current, so
-      // the next batch redoes the (idempotent) reseed instead of
-      // trusting a base-only labels table that forgot earlier batches
-      IndexOps.writeStamp(path, "labels", stamp)
-    } else
+          .parquet(s"$p/labels.parquet"))
+    if (!reseeded)
       singles(batchAdmitted)
         .write.mode(org.apache.spark.sql.SaveMode.Append)
         .parquet(s"$path/labels.parquet")

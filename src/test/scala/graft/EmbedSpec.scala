@@ -92,8 +92,7 @@ class EmbedSpec extends SparkSpecBase {
   test("frozen-encoder artifact equals a fresh base-corpus training run, and is stamp-served") {
     // force a rebuild so the artifact genuinely reflects this code
     val path = queries.PipelineOps.mixStateDir(sf("sf0.001"))
-    queries.IndexOps.clearStamp(path, "embed_model")
-    queries.EmbedOps.ensureEmbedModel(spark, sf("sf0.001"))
+    queries.EmbedOps.embedModel.rebuild(spark, sf("sf0.001"))
     val served = spark.read.parquet(s"$path/embed_model.parquet")
       .as[(String, Long, java.math.BigDecimal)].collect().toSet
     val baseToks = Core.load(spark, sf("sf0.001"), "documents")

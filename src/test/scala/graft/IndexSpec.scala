@@ -60,22 +60,20 @@ class IndexSpec extends SparkSpecBase {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     docs.write.parquet(s"$tmp/documents.parquet")
     SparkEntry.queries("sim_index_build")(spark, tmp).collect()
-    val path = graft.queries.IndexOps.indexDir(tmp)
-    val stampBefore = graft.queries.IndexOps.readStamp(path, "sim")
-    assert(stampBefore == graft.queries.IndexOps.simStamp(tmp))
-    assert(graft.queries.IndexOps.indexCurrent(
-      path, Seq("sets", "bands"), "sim", graft.queries.IndexOps.simStamp(tmp)))
+    val sim = graft.queries.IndexOps.simIndex
+    val stampBefore = sim.storedStamp(tmp)
+    assert(stampBefore == sim.stamp(spark, tmp))
+    assert(sim.current(spark, tmp))
     // "regenerate" the corpus: rewrite the same rows (fresh files/mtimes)
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    assert(!graft.queries.IndexOps.indexCurrent(
-      path, Seq("sets", "bands"), "sim", graft.queries.IndexOps.simStamp(tmp)),
+    assert(!sim.current(spark, tmp),
       "rewritten source data must invalidate the persisted index")
     // the ensure path rebuilds and restamps against the NEW data identity
     graft.queries.TextOps.evictCaches(spark)
     SparkEntry.queries("sim_index_probe")(spark, tmp).collect()
-    assert(graft.queries.IndexOps.readStamp(path, "sim")
-      == graft.queries.IndexOps.simStamp(tmp), "rebuild must restamp with the new fingerprint")
-    assert(graft.queries.IndexOps.readStamp(path, "sim") != stampBefore,
+    assert(sim.storedStamp(tmp) == sim.stamp(spark, tmp),
+      "rebuild must restamp with the new fingerprint")
+    assert(sim.storedStamp(tmp) != stampBefore,
       "new data identity must produce a new stamp")
   }
 
@@ -90,7 +88,7 @@ class IndexSpec extends SparkSpecBase {
     java.nio.file.Files.write(stamp.toPath, "sim-v0:obsolete".getBytes("UTF-8"))
     SparkEntry.queries("sim_index_probe")(spark, dir).collect()
     val restamped = new String(java.nio.file.Files.readAllBytes(stamp.toPath), "UTF-8")
-    assert(restamped == graft.queries.IndexOps.simStamp(dir),
+    assert(restamped == graft.queries.IndexOps.simIndex.stamp(spark, dir),
       s"probe served an index stamped '$restamped' without rebuilding")
 
     // a crashed build (no parquet _SUCCESS commit marker) must also
@@ -293,7 +291,7 @@ class IndexSpec extends SparkSpecBase {
       .as[(Long, Long, Boolean)].collect().sorted.toSeq
     assert(after == before, "rebuild after stale stamp must reproduce identical labels")
     val restamped = new String(java.nio.file.Files.readAllBytes(stamp.toPath), "UTF-8")
-    assert(restamped == graft.queries.TextOps.labelsStamp(dir),
+    assert(restamped == graft.queries.TextOps.labels.stamp(spark, dir),
       s"stale labels stamp not refreshed: '$restamped'")
     // warm serve: a fresh session-equivalent (evicted memo) must read
     // the artifact, not re-run propagation — asserted by plan shape
@@ -323,14 +321,14 @@ class IndexSpec extends SparkSpecBase {
     val stamp = new java.io.File(s"$path/sim.version")
     assert(!stamp.exists() ||
       new String(java.nio.file.Files.readAllBytes(stamp.toPath), "UTF-8")
-        != graft.queries.IndexOps.simStamp(dir),
+        != graft.queries.IndexOps.simIndex.stamp(spark, dir),
       "a crashed recovery must not leave the index stamped current")
     // next ensure: rebuilds again AND the recovery hook runs to completion
     val (_, rebuilt) = graft.queries.IndexOps.ensureIndexStatus(spark, dir, ns,
       recover = p => graft.queries.IndexOps.appendToIndexAt(spark, p, admitted))
     assert(rebuilt, "post-crash ensure must rebuild (index was never stamped)")
     assert(new String(java.nio.file.Files.readAllBytes(stamp.toPath), "UTF-8")
-      == graft.queries.IndexOps.simStamp(dir))
+      == graft.queries.IndexOps.simIndex.stamp(spark, dir))
     val recovered = spark.read.parquet(s"$path/sets.parquet")
       .filter($"sid" === 900901L).count()
     assert(recovered == 1, "recovery append must be visible in the rebuilt index")
@@ -380,13 +378,13 @@ class IndexSpec extends SparkSpecBase {
     }
     assert(!stamp.exists() ||
       new String(java.nio.file.Files.readAllBytes(stamp.toPath), "UTF-8")
-        != graft.queries.IndexOps.simStamp(dir),
+        != graft.queries.IndexOps.simIndex.stamp(spark, dir),
       "crashed recovery after a _SUCCESS-triggered rebuild left a CURRENT stamp")
     // and the next ensure rebuilds + recovers to a servable state
     val (_, rebuilt) = graft.queries.IndexOps.ensureIndexStatus(spark, dir, ns)
     assert(rebuilt, "post-crash ensure must rebuild")
     assert(new String(java.nio.file.Files.readAllBytes(stamp.toPath), "UTF-8")
-      == graft.queries.IndexOps.simStamp(dir))
+      == graft.queries.IndexOps.simIndex.stamp(spark, dir))
   }
 
   test("append paths own a compaction cadence: repeated appends keep the file count bounded") {

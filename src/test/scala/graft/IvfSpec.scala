@@ -188,7 +188,7 @@ class IvfSpec extends SparkSpecBase {
     // the append must NOT invalidate the stamp (no rebuild on next use)
     val stamp = new java.io.File(s"$base/ivf.version")
     assert(new String(java.nio.file.Files.readAllBytes(stamp.toPath), "UTF-8")
-      == graft.queries.IvfIndex.ivfStamp(dir))
+      == graft.queries.IvfIndex.ivfIndex.stamp(spark, dir))
     // each appended vector landed in its brute-force nearest cell (max
     // cosine, ties on smallest c_id) — the same cell a rebuild's
     // assignment pass would pick
@@ -230,7 +230,7 @@ class IvfSpec extends SparkSpecBase {
       .as[(Long, Long)].collect().sorted.toSeq
     assert(rowsAfter == rowsBefore, "compaction must preserve every (vec_id, c_id) row")
     // restore the pristine corpus-only index for any later consumer
-    graft.queries.IvfIndex.buildIvfIndex(spark, dir)
+    graft.queries.IvfIndex.ivfIndex.rebuild(spark, dir)
   }
 
   test("stale or uncommitted persisted quantizer is rebuilt, not served") {
@@ -240,7 +240,7 @@ class IvfSpec extends SparkSpecBase {
     java.nio.file.Files.write(stamp.toPath, "ivf-v0:obsolete".getBytes("UTF-8"))
     SparkEntry.queries("ivf_index_probe")(spark, dir).collect()
     val restamped = new String(java.nio.file.Files.readAllBytes(stamp.toPath), "UTF-8")
-    assert(restamped == graft.queries.IvfIndex.ivfStamp(dir),
+    assert(restamped == graft.queries.IvfIndex.ivfIndex.stamp(spark, dir),
       s"probe served a quantizer stamped '$restamped' without rebuilding")
     val success = new java.io.File(
       graft.queries.IndexOps.indexDir(dir) + "/ivf_cells.parquet/_SUCCESS")

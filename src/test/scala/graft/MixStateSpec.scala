@@ -80,7 +80,7 @@ class MixStateSpec extends SparkSpecBase {
     val full = SparkEntry.queries("mix_weights")(spark, dir).collect().toSeq
     assert(inc == full)
     assert(new String(java.nio.file.Files.readAllBytes(stamp.toPath), "UTF-8")
-      == graft.queries.PipelineOps.mixStateStamp(dir), "rebuild must restamp")
+      == graft.queries.PipelineOps.mixState.stamp(spark, dir), "rebuild must restamp")
   }
 
   test("vacuumStaging removes only orphaned staging dirs, one namespace level deep") {

@@ -188,17 +188,17 @@ class PqSpec extends SparkSpecBase {
       assert(spark.read.parquet(s"$path/ivfpq_codes.parquet").count() == nComposed + 1)
       assert(spark.read.parquet(s"$path/ivf_cells.parquet").count() == nCells + 1)
       // appends never invalidate the stamps (no rebuild on next use)
-      assert(graft.queries.IndexOps.readStamp(path, "ivfpq")
-        == graft.queries.PqIndex.ivfPqStamp(dir))
+      assert(graft.queries.PqIndex.ivfPqIndex.storedStamp(dir)
+        == graft.queries.PqIndex.ivfPqIndex.stamp(spark, dir))
       val got = SparkEntry.queries("ivfpq_index_probe")(spark, dir)
         .select($"vec_id").as[Long].collect().toSeq
       assert(got.contains(900001L),
         s"appended clone of the query vector missing from the composed probe top-5: $got")
     } finally {
       // restore the pristine corpus-only tables for any later consumer
-      graft.queries.PqIndex.buildPqIndex(spark, dir)
-      graft.queries.IvfIndex.buildIvfIndex(spark, dir)
-      graft.queries.PqIndex.buildIvfPqIndex(spark, dir)
+      graft.queries.PqIndex.pqIndex.rebuild(spark, dir)
+      graft.queries.IvfIndex.ivfIndex.rebuild(spark, dir)
+      graft.queries.PqIndex.ivfPqIndex.rebuild(spark, dir)
     }
   }
 
