@@ -311,9 +311,9 @@ object Bench {
     val cacheEnd = cacheCensus()
     // judged on RDDs present in BOTH censuses: a SHRUNK id was evicted
     // mid-run and its consumers recomputed upstream. An id MISSING at
-    // the end is ambiguous — deliberate unpersist is routine (the
-    // served-index cache unpersists the superseded frame on every
-    // build-entry rebuild, IndexOps.servedCache; dial-change evictions)
+    // the end is ambiguous — deliberate unpersist is routine (a
+    // Frames entry unpersists its superseded frame on a stamp or dial
+    // change, e.g. a served index table re-read after a rebuild)
     // and indistinguishable here from a total memory eviction — so it
     // does NOT flip cacheStable; it is counted separately as
     // cache_dropped_n, which is deterministic for a fixed entry set
@@ -348,7 +348,7 @@ object Bench {
         s""""cache_stable":$cacheStable,""" +
         s""""cache_dropped_n":$cacheDropped,""" +
         s""""rebuilt_setup":${jarr(rebuiltSetup)},"rebuilt_midrun":${jarr(rebuiltMid)}"""
-    queries.TextOps.evictCaches(spark)
+    queries.Frames.release(spark)
     // end-of-run floor: contention can start mid-run; both ends must be
     // quiet for the run's absolute numbers to be comparable
     val floorEnd = noiseFloor()

@@ -42,12 +42,6 @@ import graft.Core._
   */
 object EmbedOps {
 
-  private val cacheLock = new Object
-  private val wvCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-  private val deCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
   /** Directed skip-gram pair stream (w, c) of a tokenized frame:
     * offsets 1 and 2, BOTH directions — identical multiset to the
     * oracle's |pos_a − pos_b| ∈ {1,2} position self-join, built
@@ -101,9 +95,8 @@ object EmbedOps {
 
   /** Memoized full-corpus model over the shared tokenized frame. */
   private[queries] def wordVectors(s: SparkSession, dir: String): DataFrame =
-    cacheLock.synchronized { wvCache.getOrElseUpdate(
-      (s, dir, s.conf.get("spark.sql.shuffle.partitions", "")),
-      trainWordVectors(TextOps.docTokens(s, dir)).persist())
+    Frames.memo(s, dir, "wordVectors", Seq("documents")) {
+      trainWordVectors(TextOps.docTokens(s, dir)).persist()
     }
 
   /** Memoized full-corpus (doc_id, dim, val) embedding frame — the
@@ -112,64 +105,41 @@ object EmbedOps {
     * persist each reference re-runs the whole train+embed chain).
     */
   private[queries] def docEmbeddings(s: SparkSession, dir: String): DataFrame =
-    cacheLock.synchronized { deCache.getOrElseUpdate(
-      (s, dir, s.conf.get("spark.sql.shuffle.partitions", "")),
-      docEmbed(TextOps.termFreq(s, dir), wordVectors(s, dir)).persist())
-    }
-
-  private[graft] def evictCaches(s: SparkSession): Unit =
-    cacheLock.synchronized {
-      wvCache.keys.filter(_._1 eq s).foreach { k =>
-        wvCache.remove(k).foreach(_.unpersist())
-      }
-      deCache.keys.filter(_._1 eq s).foreach { k =>
-        deCache.remove(k).foreach(_.unpersist())
-      }
-      hvCache.keys.filter(_._1 eq s).foreach { k =>
-        hvCache.remove(k).foreach(_.unpersist())
-      }
-      annCellCache.keys.filter(_._1 eq s).foreach { k =>
-        annCellCache.remove(k).foreach(_.unpersist())
-      }
+    Frames.memo(s, dir, "docEmbeddings", Seq("documents")) {
+      docEmbed(TextOps.termFreq(s, dir), wordVectors(s, dir)).persist()
     }
 
   /** Memoized trained-quantizer cell map (doc_id, ck) for the ANN
     * dedup key — the kmeansCells lifecycle: one corpus-sized quantizer
     * (K = ⌈√(4n)⌉, one Lloyd round, top-2 multi-probe assignment) per
-    * (session, dir, partitions), released via [[evictCaches]]. The
-    * count() sizing action is bounded (one long over the memoized
-    * vector frame).
+    * session ([[Frames]]). The count() sizing action is bounded (one
+    * long over the memoized vector frame).
     */
-  private val annCellCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
   private[graft] def annCells(s: SparkSession, dir: String): DataFrame =
-    cacheLock.synchronized { annCellCache.getOrElseUpdate(
-      (s, dir, s.conf.get("spark.sql.shuffle.partitions", "")), {
-        val vecs = hashDocVectors(s, dir).filter(col("norm") > 0)
-          .select(col("doc_id").as("vec_id"), col("v").as("emb"), col("norm"))
-        val n = vecs.count()
-        val k = math.max(16, math.ceil(math.sqrt(4.0 * n)).toInt)
-        // localCheckpoint the K-row centroid frame: each Lloyd round
-        // nests the previous one's shuffles, and the assignment
-        // references it twice — without the cut the whole training DAG
-        // re-executes per reference (measured 22 s → 4.7 s at sf0.1)
-        val cents = graft.queries.VecOps.lloydTrain(vecs, k, 64, rounds = 1).localCheckpoint()
-        val first = graft.queries.VecOps.assignCellIds(vecs, cents).localCheckpoint()
-        val second = graft.queries.VecOps.assignSecondCellIds(vecs, cents, first)
-        // r18: each probe row CARRIES the doc's full top-2 cell pair
-        // (c1, c2) beside the probed cell ck — the verify join can then
-        // test row-locally whether ck is the SMALLEST cell the two
-        // sides' probe sets share and score each candidate pair exactly
-        // once (the 4-way (cell, probe) collision dedup that used to
-        // need a post-scoring distinct). c1 ≠ c2 by construction
-        // (assignSecondCellIds argmins over the other K−1).
-        first.select(col("vec_id"), col("c_id").as("c1"))
-          .join(second.select(col("vec_id"), col("c_id").as("c2")), Seq("vec_id"))
-          .select(col("vec_id").as("doc_id"),
-            explode(array(col("c1"), col("c2"))).as("ck"), col("c1"), col("c2"))
-          .persist()
-      })
+    Frames.memo(s, dir, "annCells", Seq("documents")) {
+      val vecs = hashDocVectors(s, dir).filter(col("norm") > 0)
+        .select(col("doc_id").as("vec_id"), col("v").as("emb"), col("norm"))
+      val n = vecs.count()
+      val k = math.max(16, math.ceil(math.sqrt(4.0 * n)).toInt)
+      // localCheckpoint the K-row centroid frame: each Lloyd round
+      // nests the previous one's shuffles, and the assignment
+      // references it twice — without the cut the whole training DAG
+      // re-executes per reference (measured 22 s → 4.7 s at sf0.1)
+      val cents = graft.queries.VecOps.lloydTrain(vecs, k, 64, rounds = 1).localCheckpoint()
+      val first = graft.queries.VecOps.assignCellIds(vecs, cents).localCheckpoint()
+      val second = graft.queries.VecOps.assignSecondCellIds(vecs, cents, first)
+      // r18: each probe row CARRIES the doc's full top-2 cell pair
+      // (c1, c2) beside the probed cell ck — the verify join can then
+      // test row-locally whether ck is the SMALLEST cell the two
+      // sides' probe sets share and score each candidate pair exactly
+      // once (the 4-way (cell, probe) collision dedup that used to
+      // need a post-scoring distinct). c1 ≠ c2 by construction
+      // (assignSecondCellIds argmins over the other K−1).
+      first.select(col("vec_id"), col("c_id").as("c1"))
+        .join(second.select(col("vec_id"), col("c_id").as("c2")), Seq("vec_id"))
+        .select(col("vec_id").as("doc_id"),
+          explode(array(col("c1"), col("c2"))).as("ck"), col("c1"), col("c2"))
+        .persist()
     }
 
   /** Embed a (doc_id, term, tf) stream against a model: (doc_id, dim,
@@ -234,28 +204,23 @@ object EmbedOps {
     * sparse any-order integer sum are equal BIT-FOR-BIT, and the rounded
     * cosine threshold can never straddle an accumulation-order gap.
     */
-  private val hvCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
   private[graft] def hashDocVectors(s: SparkSession, dir: String): DataFrame =
-    cacheLock.synchronized { hvCache.getOrElseUpdate(
-      (s, dir, s.conf.get("spark.sql.shuffle.partitions", "")), {
-        graft.functions.VectorExprs.register(s)
-        // MEMOIZED + persisted: the ANN dedup entry references this
-        // frame three times in one plan (cell assignment + both verify
-        // sides) and the exact build twice — without the persist each
-        // reference re-runs the tokenize→hash→densify chain
-        TextOps.termFreq(s, dir)
-          .groupBy(col("doc_id"), hDim(col("term")).as("dim"))
-          .agg(sum(col("tf") * hSign(col("term"))).as("val"))
-          .groupBy(col("doc_id"))
-          .agg(map_from_entries(collect_list(struct(col("dim"), col("val")))).as("m"))
-          .select(col("doc_id"),
-            transform(sequence(lit(0), lit(63)),
-              d => coalesce(element_at(col("m"), d.cast("long")), lit(0L)).cast("double")).as("v"))
-          .withColumn("norm", sqrt(call_function("dotp", col("v"), col("v"))))
-          .persist()
-      })
+    Frames.memo(s, dir, "hashDocVectors", Seq("documents")) {
+      graft.functions.VectorExprs.register(s)
+      // MEMOIZED + persisted: the ANN dedup entry references this
+      // frame three times in one plan (cell assignment + both verify
+      // sides) and the exact build twice — without the persist each
+      // reference re-runs the tokenize→hash→densify chain
+      TextOps.termFreq(s, dir)
+        .groupBy(col("doc_id"), hDim(col("term")).as("dim"))
+        .agg(sum(col("tf") * hSign(col("term"))).as("val"))
+        .groupBy(col("doc_id"))
+        .agg(map_from_entries(collect_list(struct(col("dim"), col("val")))).as("m"))
+        .select(col("doc_id"),
+          transform(sequence(lit(0), lit(63)),
+            d => coalesce(element_at(col("m"), d.cast("long")), lit(0L)).cast("double")).as("v"))
+        .withColumn("norm", sqrt(call_function("dotp", col("v"), col("v"))))
+        .persist()
     }
 
   /** Connected components over the cosine-≥0.95 pair graph, as a

@@ -91,17 +91,6 @@ object GraphOps {
     else (r.getLong(0), r.getLong(1), r.getLong(2))
   }
 
-  /** Memo key is (dir, data fingerprint) — NOT the session: the stats
-    * are a property of the data alone, a regenerated/grown fixture
-    * misses naturally on its new stamp (a session-keyed memo would
-    * serve stale Σ basket² and wave through the exact fanout the
-    * tripwire exists to refuse), and no SparkSession object is pinned
-    * by the map. Cleared wholesale past a small bound — stamps churn
-    * with every regen and the tuples are worthless across them.
-    */
-  private val basketStatsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), (Long, Long, Long)]
-
   /** The tripwire itself, factored over any (user_id, item) frame so
     * BasketCapSpec drives the trip on a planted fat-basket fixture
     * against exactly the shipped path. Uncapped + over-bound ⇒ refuse
@@ -121,9 +110,11 @@ object GraphOps {
         // list would go stale the moment a different caller memoized a
         // frame built from other sources)
         case Some((k, tables)) =>
-          val stamped = (k, LakeArtifact.dataStamp(k, tables))
-          if (basketStatsCache.size > 64) basketStatsCache.clear()
-          basketStatsCache.getOrElseUpdate(stamped, basketStats(e))
+          // a Frames entry stamped by the tables' data fingerprint: a
+          // regenerated/grown fixture rebuilds instead of serving a
+          // stale Σ basket² that would wave through the exact fanout
+          // the tripwire exists to refuse
+          Frames.memo(s, k, "basketStats/" + tables.mkString(","), tables)(basketStats(e))
         case None    => basketStats(e)
       }
       require(sumSq <= bound,

@@ -84,8 +84,7 @@ object IndexOps {
     // the session-memoized signature frame: both written tables derive
     // from it, and it is SHARED with the in-plan dedup family — one
     // signature pipeline per session regardless of which consumer runs
-    // first or how often the build is re-timed (lifecycle owned by
-    // TextOps.evictCaches)
+    // first or how often the build is re-timed (a Frames entry)
     val sig = TextOps.signatureTableCached(s, dir)
     val sets = sig.select(col("sid"), col("ids"), col("tids"))
     sets.write.mode(SaveMode.Overwrite).parquet(s"$path/sets.parquet")

@@ -139,9 +139,6 @@ object IvfIndex {
   private[graft] def centroids(s: SparkSession, path: String): DataFrame =
     ivfIndex.served(s, path, "ivf_centroids")
 
-  private[graft] def evictCaches(s: SparkSession): Unit =
-    LakeArtifact.evictServed(s)
-
   /** The IVF family: k-means `ivf_centroids` plus the cell-partitioned
     * `ivf_cells`.
     */

@@ -33,10 +33,6 @@ import graft.Core._
   */
 object PipelineOps {
 
-  private val cacheLock = new Object
-  private val cleanCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String, String), org.apache.spark.sql.DataFrame]
-
   /** The decontaminated, dedup-kept corpus membership frame
     * (doc_id, source, n_tokens) — the shared spine of the curation
     * compositions. `curate_corpus_e2e` references it twice (mixture
@@ -50,40 +46,32 @@ object PipelineOps {
     * three scalar columns (~16 bytes/doc, no text), the frame a real
     * pipeline persists as a lake table on its curation cadence and
     * every downstream stage joins against. MEMOIZED + persisted per
-    * (session, dir, partitions); released via [[evictCaches]] (chained
-    * from TextOps.evictCaches); warmed as the bench's
-    * `setup_clean_corpus` step so both composition entries time warm
-    * marginals.
+    * session ([[Frames]]); warmed as the bench's `setup_clean_corpus`
+    * step so both composition entries time warm marginals.
     */
-  private[queries] def cleanCorpus(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    cacheLock.synchronized { cleanCache.getOrElseUpdate(
-      (s, dir, s.conf.get("spark.sql.shuffle.partitions", "")), {
-        import s.implicits._
-        val docs = TextOps.docTokens(s, dir)
-        val keepers = TextOps.clusterLabels(s, dir)
-          .filter($"doc_id" === $"label").select($"doc_id")
-        val grams = TextOps.wordGrams(s, dir)
-        val bench = grams.filter($"doc_id" % 97 === 3).select($"gram").distinct()
-        val bad = grams.filter($"doc_id" % 97 =!= 3)
-          .join(broadcast(bench), "gram").select($"doc_id").distinct()
-        docs.filter($"doc_id" % 97 =!= 3)
-          .join(keepers, Seq("doc_id"), "left_semi")
-          .join(bad, Seq("doc_id"), "left_anti")
-          .select($"doc_id", $"source", size($"toks").cast("long").as("n_tokens"))
-          .persist()
-      })
+  private[queries] def cleanCorpus(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
+    // the served labels read ensures its artifact, so it runs BEFORE
+    // the memo lookup (the Frames lock-order rule)
+    val labels = TextOps.clusterLabels(s, dir)
+    Frames.memo(s, dir, "cleanCorpus", Seq("documents")) {
+      import s.implicits._
+      val docs = TextOps.docTokens(s, dir)
+      val keepers = labels.filter($"doc_id" === $"label").select($"doc_id")
+      val grams = TextOps.wordGrams(s, dir)
+      val bench = grams.filter($"doc_id" % 97 === 3).select($"gram").distinct()
+      val bad = grams.filter($"doc_id" % 97 =!= 3)
+        .join(broadcast(bench), "gram").select($"doc_id").distinct()
+      docs.filter($"doc_id" % 97 =!= 3)
+        .join(keepers, Seq("doc_id"), "left_semi")
+        .join(bad, Seq("doc_id"), "left_anti")
+        .select($"doc_id", $"source", size($"toks").cast("long").as("n_tokens"))
+        .persist()
     }
+  }
 
   private[graft] def warmCleanCorpus(s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     cleanCorpus(s, dir).count(); ()
   }
-
-  private[graft] def evictCaches(s: org.apache.spark.sql.SparkSession): Unit =
-    cacheLock.synchronized {
-      cleanCache.keys.filter(_._1 eq s).foreach { k =>
-        cleanCache.remove(k).foreach(_.unpersist())
-      }
-    }
 
   val entries: Seq[Entry] = Seq(
 

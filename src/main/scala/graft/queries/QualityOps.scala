@@ -54,15 +54,6 @@ object QualityOps {
   // momentum 0.95 and learning rate 0.5 as integer ratios: v' =
   // (95·v)/100 + g/n, w' = w − v'/2 — every division truncating.
 
-  private val cacheLock = new Object
-  private val featCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), Array[Long]]
-
-  private def cacheKey(s: SparkSession, dir: String) =
-    (s, dir, s.conf.get("spark.sql.shuffle.partitions", ""))
-
   /** md5-derived hash dimension of a token — first 16 bits of the md5
     * hex mod 64, the same cross-engine-exact device as EmbedOps.hDim
     * (xxhash64 has no DuckDB replay). Shared with the streaming scorer
@@ -78,7 +69,7 @@ object QualityOps {
     * training iteration and the apply pass reread cached blocks.
     */
   private[graft] def features(s: SparkSession, dir: String): DataFrame =
-    cacheLock.synchronized { featCache.getOrElseUpdate(cacheKey(s, dir), {
+    Frames.memo(s, dir, "qualityFeatures", Seq("documents")) {
       import s.implicits._
       val tf = TextOps.termFreq(s, dir)
       val lab = tf.groupBy($"doc_id")
@@ -89,7 +80,6 @@ object QualityOps {
         .groupBy($"doc_id", $"dim").agg(sum($"tf").as("x"))
       val bias = lab.select($"doc_id", lit(BIAS.toLong).as("dim"), lit(1L).as("x"))
       hashed.unionByName(bias).join(lab, "doc_id").persist()
-    })
     }
 
   /** Momentum-GD logistic weights in integer MICRO-UNITS,
@@ -110,7 +100,7 @@ object QualityOps {
     * chain — the promotion device.
     */
   private[graft] def trainedWeights(s: SparkSession, dir: String): Array[Long] =
-    cacheLock.synchronized { modelCache.getOrElseUpdate(cacheKey(s, dir), {
+    Frames.memo(s, dir, "qualityWeights", Seq("documents")) {
       import s.implicits._
       val maxSeed = s.conf.get("spark.graft.classifier.maxSeedDocs", "200000").toLong
       val rows = features(s, dir).filter(pmod($"doc_id", lit(4)) === 0)
@@ -154,16 +144,6 @@ object QualityOps {
         }
       }
       w
-    })
-    }
-
-  private[graft] def evictCaches(s: SparkSession): Unit =
-    cacheLock.synchronized {
-      featCache.filterInPlace { case ((sess, _, _), df) =>
-        if (sess eq s) { df.unpersist(); false } else true
-      }
-      modelCache.filterInPlace { case ((sess, _, _), _) => !(sess eq s) }
-      ()
     }
 
   /** The unrolled-training CTE chain shared by both oracles (the BPE

@@ -32,18 +32,23 @@ object TextOps {
   /** Shared (doc_id, term, tf) postings frame — the inverted index.
     * `text_index_build` IS this frame (plus an order), and tfidf/bm25
     * derive every statistic from it (df = rows per term, dl = Σtf per
-    * doc). MEMOIZED + persisted per (session, dir, partitions): Spark's
+    * doc). MEMOIZED + persisted ([[Frames]]): Spark's
     * exchange-reuse can't unify the consumers' copies (each branch
     * prunes different columns, so the subtrees stop being canonically
     * equal — verified empirically), so the frame is materialized once
     * and every ranking entry reads the cached blocks. The in-plan
     * analogue of "build the index once, rank against it" — which is
     * also the 100 TB shape: tf is a disk-backed materialization
-    * (MEMORY_AND_DISK), not a recompute per statistic. Released via
-    * [[evictCaches]].
+    * (MEMORY_AND_DISK), not a recompute per statistic.
     */
-  private val tfCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String, String), org.apache.spark.sql.DataFrame]
+  private[queries] def termFreq(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    Frames.memo(s, dir, "termFreq", Seq("documents")) {
+      import s.implicits._
+      docTokens(s, dir)
+        .select($"doc_id", explode($"toks").as("term"))
+        .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
+        .persist()
+    }
 
   /** Tokenized corpus (doc_id, source, lang, toks) — the ONE pass over
     * the raw text that every shared frame below derives from (postings,
@@ -56,10 +61,33 @@ object TextOps {
     * search's result join) are map-only projections of this cache
     * instead of a second documents scan + join — the columnar cache
     * prunes them for consumers that only want toks. Memoized + persisted
-    * per (session, dir, partitions); released via [[evictCaches]].
+    * per session ([[Frames]]).
     */
-  private val tokCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String, String), org.apache.spark.sql.DataFrame]
+  private[queries] def docTokens(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    Frames.memo(s, dir, "docTokens", Seq("documents")) {
+      import s.implicits._
+      val base = load(s, dir, "documents")
+      // metadata columns are carried ONLY when the table has them:
+      // streaming-gate corpora are (doc_id, text) lake tables, and
+      // demanding source/lang there would fail every gate's
+      // signature pipeline (the metadata-keyed consumers all run on
+      // full corpora, where both columns exist)
+      val meta = Seq("source", "lang").map(c =>
+        if (base.columns.contains(c)) col(c)
+        else lit(null).cast("string").as(c))
+      // spread the tokenize across the session's parallelism BEFORE
+      // computing toks: the driver fixtures are single-row-group
+      // parquet files, so without this the whole corpus tokenizes in
+      // ONE task (measured 6.2s of the cold shared-frames build at
+      // sf0.1 — ~32x the parallel cost). The shuffle moves only the
+      // raw text (KBs..MBs locally); at lake scale the source is
+      // many-filed and the repartition coalesces into the same
+      // bounded-task shape instead of widening it.
+      val parts = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      base.repartition(parts)
+        .select((col("doc_id") +: meta :+ tokens(lower($"text")).as("toks")): _*)
+        .persist()
+    }
 
   /** Guard for metadata-KEYED consumers of [[docTokens]]: the shared
     * frame synthesizes null `source`/`lang` columns when the backing
@@ -81,45 +109,6 @@ object TextOps {
         "would silently misattribute every row")
   }
 
-  private[queries] def docTokens(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    cacheLock.synchronized { tokCache.getOrElseUpdate(
-      (s, dir, s.conf.get("spark.sql.shuffle.partitions", "")), {
-        import s.implicits._
-        val base = load(s, dir, "documents")
-        // metadata columns are carried ONLY when the table has them:
-        // streaming-gate corpora are (doc_id, text) lake tables, and
-        // demanding source/lang there would fail every gate's
-        // signature pipeline (the metadata-keyed consumers all run on
-        // full corpora, where both columns exist)
-        val meta = Seq("source", "lang").map(c =>
-          if (base.columns.contains(c)) col(c)
-          else lit(null).cast("string").as(c))
-        // spread the tokenize across the session's parallelism BEFORE
-        // computing toks: the driver fixtures are single-row-group
-        // parquet files, so without this the whole corpus tokenizes in
-        // ONE task (measured 6.2s of the cold shared-frames build at
-        // sf0.1 — ~32x the parallel cost). The shuffle moves only the
-        // raw text (KBs..MBs locally); at lake scale the source is
-        // many-filed and the repartition coalesces into the same
-        // bounded-task shape instead of widening it.
-        val parts = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-        base.repartition(parts)
-          .select((col("doc_id") +: meta :+ tokens(lower($"text")).as("toks")): _*)
-          .persist()
-      })
-    }
-
-  private[queries] def termFreq(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    cacheLock.synchronized { tfCache.getOrElseUpdate(
-      (s, dir, s.conf.get("spark.sql.shuffle.partitions", "")), {
-        import s.implicits._
-        docTokens(s, dir)
-          .select($"doc_id", explode($"toks").as("term"))
-          .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-          .persist()
-      })
-    }
-
   /** Shared (doc_id, gram) word-3-gram frame — the contamination
     * family's analogue of [[termFreq]]: text_contamination and
     * text_decontaminate both derive their benchmark-gram set AND their
@@ -127,26 +116,21 @@ object TextOps {
     * plan previously tokenized+exploded the corpus three times in one
     * run, and contamination rebuilt the identical frame again — the same
     * repeated-subtree shape the postings cache fixed for tfidf/bm25).
-    * MEMOIZED + persisted per (session, dir, partitions); released via
-    * [[evictCaches]]. Short docs (<3 tokens) contribute no grams.
+    * MEMOIZED + persisted per session ([[Frames]]). Short docs (<3
+    * tokens) contribute no grams.
     */
-  private val gramsCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String, String), org.apache.spark.sql.DataFrame]
-
   private[queries] def wordGrams(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    cacheLock.synchronized { gramsCache.getOrElseUpdate(
-      (s, dir, s.conf.get("spark.sql.shuffle.partitions", "")), {
-        import s.implicits._
-        docTokens(s, dir)
-          .select($"doc_id",
-            // sequence(1, n) DESCENDS when n < 1 — guard short docs to
-            // an empty gram list (the oracle's range(len-2) is empty)
-            explode(when(size($"toks") >= 3,
-                transform(sequence(lit(1), size($"toks") - 2),
-                  i => concat_ws(" ", slice($"toks", i, lit(3)))))
-              .otherwise(array().cast("array<string>"))).as("gram"))
-          .persist()
-      })
+    Frames.memo(s, dir, "wordGrams", Seq("documents")) {
+      import s.implicits._
+      docTokens(s, dir)
+        .select($"doc_id",
+          // sequence(1, n) DESCENDS when n < 1 — guard short docs to
+          // an empty gram list (the oracle's range(len-2) is empty)
+          explode(when(size($"toks") >= 3,
+              transform(sequence(lit(1), size($"toks") - 2),
+                i => concat_ws(" ", slice($"toks", i, lit(3)))))
+            .otherwise(array().cast("array<string>"))).as("gram"))
+        .persist()
     }
 
   /** Expand verified distinct-set pairs (s1, s2, <score>) plus intra-set
@@ -220,49 +204,15 @@ object TextOps {
       .withColumn("bands", bandHashes(call_function("minhash64", col("tids"))))
   }
 
-  /** Verified MinHash/LSH set-level near-dup structure, MEMOIZED
-    * (persisted) per (session, dir, shuffle.partitions): `verified` =
-    * (s1, s2, jaccard) sid pairs with exact Jaccard ≥ 0.9, `sets` = the
-    * signature table. Candidate pairs only within a band bucket (no
-    * all-pairs product anywhere). Three declared entries consume this
-    * (near, cluster, keep) — whichever runs first materializes it, the
-    * rest reuse the cached blocks. The SET-level structure is what's
-    * cached, not the expanded doc-pair list: near-dup cliques blow the
-    * doc-pair expansion up quadratically (~950k pairs at sf0.1 from
-    * ~3k duplicated docs), so expansion stays lazy and clustering never
-    * touches it at all.
-    */
-  private val vsCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String, String), (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]
-
   /** Memoized persisted [[signatureTable]] — shared by the in-plan dedup
     * family (via [[verifiedSets]]) AND the persisted-index build
     * (IndexOps.simIndex), so one session computes the signature
     * pipeline once no matter which consumer runs first or how often the
-    * bench re-times the build. Released via [[evictCaches]].
+    * bench re-times the build.
     */
-  private val sigCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String, String), org.apache.spark.sql.DataFrame]
-
   private[queries] def signatureTableCached(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    cacheLock.synchronized { sigCache.getOrElseUpdate(
-      (s, dir, s.conf.get("spark.sql.shuffle.partitions", "")),
-      signatureTable(s, dir).persist())
-    }
+    Frames.memo(s, dir, "signatureTable", Seq("documents"))(signatureTable(s, dir).persist())
 
-  /** Guards both memo maps: TrieMap.getOrElseUpdate may evaluate a racing
-    * builder twice and discard one — here the discarded value would be a
-    * LEAKED persisted DataFrame, so builds are serialized instead (they
-    * are rare and expensive; the lock is uncontended after first use).
-    */
-  private val cacheLock = new Object
-
-  /** Release every memoized block owned by `s` — the explicit lifecycle
-    * for long-lived sessions (the bench calls this before stop; a
-    * serving deployment would call it on source-data rollover). Dropping
-    * the map refs also frees the labels' localCheckpoint RDDs via the
-    * ContextCleaner once unreferenced.
-    */
   /** Positional 8-token span stream (doc_id, nt, start, ghash) — shared
     * by the span-dedup audit and cut entries. ghash = xxhash64 of the
     * span text: 8-byte shuffle keys instead of ~50-byte strings (at
@@ -385,56 +335,18 @@ object TextOps {
 
   /** Sorted distinct source names — the bounded dictionary action the
     * mask-encoded cross-source aggregate keys bit positions on.
-    * Memoized per (session, dir): one tiny job over the cached
+    * Memoized per session ([[Frames]]): one tiny job over the cached
     * docTokens frame, the same plan-construction-action precedent as
     * the probe dials and broadcast guards. Nulls excluded (collect_set
     * dropped them in the set form; gate corpora carry null sources).
     */
-  private val srcDictCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), Seq[String]]
-
   private[graft] def sourceDict(s: org.apache.spark.sql.SparkSession, dir: String): Seq[String] =
-    cacheLock.synchronized { srcDictCache.getOrElseUpdate((s, dir), {
+    Frames.memo(s, dir, "sourceDict", Seq("documents")) {
       import s.implicits._
       docTokens(s, dir).filter($"source".isNotNull)
         .select($"source").distinct()
         .collect().map(_.getString(0)).sorted.toSeq
-    })
-  }
-
-  private[graft] def evictCaches(s: org.apache.spark.sql.SparkSession): Unit = {
-    cacheLock.synchronized {
-      vsCache.keys.filter(_._1 eq s).foreach { k =>
-        // the sets frame is owned (and unpersisted) by sigCache below
-        vsCache.remove(k).foreach { case (v, _) => v.unpersist() }
-      }
-      labelsCache.keys.filter(_._1 eq s).foreach(labelsCache.remove)
-      srcDictCache.keys.filter(_._1 eq s).foreach(srcDictCache.remove)
-      tfCache.keys.filter(_._1 eq s).foreach { k =>
-        tfCache.remove(k).foreach(_.unpersist())
-      }
-      gramsCache.keys.filter(_._1 eq s).foreach { k =>
-        gramsCache.remove(k).foreach(_.unpersist())
-      }
-      tokCache.keys.filter(_._1 eq s).foreach { k =>
-        tokCache.remove(k).foreach(_.unpersist())
-      }
-      sigCache.keys.filter(_._1 eq s).foreach { k =>
-        sigCache.remove(k).foreach(_.unpersist())
-      }
     }
-    // The other families' evictions run OUTSIDE cacheLock: their
-    // builders (e.g. TokenizerOps.trainBpe, PipelineOps.cleanCorpus)
-    // hold their own module lock while calling back into
-    // TextOps.docTokens/termFreq (which takes cacheLock) — chaining
-    // them while still holding cacheLock is the textbook AB-BA
-    // deadlock against a concurrent builder.
-    VecOps.evictCaches(s)
-    PipelineOps.evictCaches(s)
-    EmbedOps.evictCaches(s)
-    TokenizerOps.evictCaches(s)
-    QualityOps.evictCaches(s)
-  }
 
   /** Materialize the cluster labels eagerly — the bench's named setup
     * step, so the one-time propagation cost is attributed to itself
@@ -476,8 +388,8 @@ object TextOps {
     // frame — every text-side frame derives from it — then the derived
     // text builds CONCURRENTLY: they are independent Spark jobs and
     // sequential counts left the scheduler idle at each job's tail
-    // (plan construction stays serialized under each family's cache
-    // lock; only materialization overlaps). verifiedSets rides the
+    // (each Frames entry builds under its own lock, so distinct
+    // frames plan and materialize in parallel). verifiedSets rides the
     // signature future (it derives from the signature table) so the
     // near-dup pair-graph build is attributed here, not silently inside
     // text_dedup_near's first timed run.
@@ -495,101 +407,85 @@ object TextOps {
     ()
   }
 
+  /** Verified MinHash/LSH set-level near-dup structure: `verified` =
+    * (s1, s2, jaccard) sid pairs with exact Jaccard ≥ 0.9, `sets` = the
+    * signature table. Candidate pairs only within a band bucket (no
+    * all-pairs product anywhere). Three declared entries consume this
+    * (near, cluster, keep) — whichever runs first materializes it, the
+    * rest reuse the cached blocks. The SET-level structure is what's
+    * cached, not the expanded doc-pair list: near-dup cliques blow the
+    * doc-pair expansion up quadratically (~950k pairs at sf0.1 from
+    * ~3k duplicated docs), so expansion stays lazy and clustering never
+    * touches it at all. Only `verified` is this entry's own: `sets` is
+    * the signature entry's frame.
+    */
   private def verifiedSets(s: org.apache.spark.sql.SparkSession, dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    // the broadcast dials join the key so a session that moves one
-    // (PlanAuditSpec's shuffle-shape pin) rebuilds the plan instead
-    // of replaying the memoized one — and superseded same-(s, dir)
-    // entries UNPERSIST first, so re-dialing never pins more than one
-    // verified frame per corpus (the dial-keyed leak the r16 review
-    // flagged)
-    val key = (s, dir, s.conf.get("spark.sql.shuffle.partitions", "") + ":" +
-      s.conf.get("spark.graft.broadcast.maxRows", "") + ":" +
-      s.conf.get("spark.graft.guard.maxBroadcastBytes", ""))
-    vsCache.get(key) match {
-      case Some(v) => v
-      case None =>
-        // the size-guard stats are a Spark ACTION — run it OUTSIDE
-        // cacheLock (holding the lock through a job would serialize
-        // every other TextOps cache user and defeat warmSharedFrames'
-        // documented materialization overlap). A racing thread may
-        // duplicate the aggregate (idempotent, one pass over the
-        // persisted signature table); the lock below still serializes
-        // the plan build + persist registration, so no frame leaks.
-        val setsOuter = signatureTableCached(s, dir)
-        val dictStatsOuter = graft.Core.setDictStats(setsOuter, "tids")
-        cacheLock.synchronized {
-      if (!vsCache.contains(key))
-        // Eviction is LOGGED (r16 ADVICE): a thread still holding the
-        // superseded (verified, sets) tuple mid-job keeps CORRECT
-        // results — Spark recomputes the unpersisted frame — but the
-        // recompute cost (and a possibly duplicated setDictStats
-        // action under the documented race) is otherwise silent, and
-        // a surprise recompute in a bench line must be attributable.
-        vsCache.keys.filter(k => (k._1 eq s) && k._2 == dir && k._3 != key._3)
-          .foreach { k =>
-            System.err.println(
-              s"[graft] verifiedSets: dial change evicts the verified " +
-                s"frame for $dir (old dials ${k._3}, new ${key._3}) — " +
-                "any consumer mid-job on the old frame recomputes it")
-            vsCache.remove(k).foreach { case (v, _) => v.unpersist() }
-          }
-      vsCache.getOrElseUpdate(key, {
-        import s.implicits._
-        val sets = setsOuter
-        // Candidate generation stays LSH-banded (bucketed band
-        // self-join, never all-pairs — the 100 TB shape). Two measured
-        // rewrites of the downstream plumbing (VsDiag at sf0.1, where
-        // 16-band buckets on a shared-vocabulary corpus emit 18.7M raw
-        // pair rows for only 28.9k true pairs):
-        //  1. the size-compatibility bound (19·min ≥ 9·(n1+n2), a
-        //     NECESSARY condition for J ≥ 0.9) moves INTO the band join
-        //     as a codegen'd per-pair predicate, so hopeless pairs die
-        //     in the join loop instead of riding a shuffle;
-        //  2. the pair DISTINCT moves AFTER the verify filter: raw
-        //     band duplicates (≤16 copies, one per agreeing band) each
-        //     pay only a ~20-slot intersect, and the dedup then runs on
-        //     the ~29k surviving rows instead of millions of candidates
-        //     — the 3 s candidate-distinct shuffle was the single
-        //     largest line of the shared-frames setup.
-        val banded = sets.select($"sid", size($"tids").as("nt"),
-          posexplode($"bands").as(Seq("band", "bh")))
-        val cand = banded.as("x").join(banded.as("y"),
-            $"x.band" === $"y.band" && $"x.bh" === $"y.bh" && $"x.sid" < $"y.sid" &&
-            lit(19) * least($"x.nt", $"y.nt") >= lit(9) * ($"x.nt" + $"y.nt"))
-          .select($"x.sid".as("s1"), $"y.sid".as("s2"))
-        val sA = sets.select($"sid".as("s1"), $"tids".as("t1"))
-        val sB = sets.select($"sid".as("s2"), $"tids".as("t2"))
-        // single-evaluation exact threshold: jac ≥ 0.9 ⟺ 19·inter ≥
-        // 9·(|A|+|B|) in integers (the double-division form evaluated
-        // the O(|A|+|B|) intersect 2× in the filter and 2× more in the
-        // projection)
-        val a1 = size($"t1"); val a2 = size($"t2")
-        val inter = call_function("sorted_long_intersect_size", $"t1", $"t2")
-        val jac   = inter.cast("double") / (a1 + a2 - inter)
-        // BROADCAST the set dictionary on both sides (one row per
-        // DISTINCT set): the candidate pair stream meets its tids
-        // arrays through two broadcast hash joins + the intersect
-        // filter with no shuffle at all. At lake scale the dictionary
-        // outgrows a broadcast, so the hint is SIZE-GUARDED
-        // (Core.guardedBroadcast — an unconditional hint would override
-        // autoBroadcastJoinThreshold and fail at the 8 GB ceiling):
-        // past either the row dial or the BYTE dial (rows alone are
-        // blind to the tids payload width) the hint drops and Catalyst
-        // plans shuffle joins — the banded candidate generation is
-        // unchanged either way. Rows and bytes come from ONE aggregate
-        // over the already-persisted signature table
-        // (Core.setDictStats — computed above, OUTSIDE the lock).
-        val verified = cand
-          .join(graft.Core.guardedBroadcast(s, sA)(dictStatsOuter), "s1")
-          .join(graft.Core.guardedBroadcast(s, sB)(dictStatsOuter), "s2")
-          .filter(lit(19) * inter >= lit(9) * (a1 + a2))
-          .select($"s1", $"s2", round(jac, 4).as("jaccard"))
-          .distinct()
-          .persist()
-        (verified, sets)
-      })
-        }
+    val sets = signatureTableCached(s, dir)
+    // the broadcast dials are the entry's dials: a session that moves
+    // one (PlanAuditSpec's shuffle-shape pin) supersedes the memoized
+    // plan instead of replaying it, and the superseded frame is
+    // unpersisted — re-dialing never pins more than one verified frame
+    // per corpus
+    val dials = s.conf.get("spark.graft.broadcast.maxRows", "") + ":" +
+      s.conf.get("spark.graft.guard.maxBroadcastBytes", "")
+    val verified = Frames.memo(s, dir, "verifiedSets", Seq("documents"), dials) {
+      import s.implicits._
+      // the size-guard stats are a Spark ACTION (one aggregate over
+      // the persisted signature table) — inside this entry's build,
+      // which holds only its own lock
+      val dictStats = graft.Core.setDictStats(sets, "tids")
+      // Candidate generation stays LSH-banded (bucketed band
+      // self-join, never all-pairs — the 100 TB shape). Two measured
+      // rewrites of the downstream plumbing (VsDiag at sf0.1, where
+      // 16-band buckets on a shared-vocabulary corpus emit 18.7M raw
+      // pair rows for only 28.9k true pairs):
+      //  1. the size-compatibility bound (19·min ≥ 9·(n1+n2), a
+      //     NECESSARY condition for J ≥ 0.9) moves INTO the band join
+      //     as a codegen'd per-pair predicate, so hopeless pairs die
+      //     in the join loop instead of riding a shuffle;
+      //  2. the pair DISTINCT moves AFTER the verify filter: raw
+      //     band duplicates (≤16 copies, one per agreeing band) each
+      //     pay only a ~20-slot intersect, and the dedup then runs on
+      //     the ~29k surviving rows instead of millions of candidates
+      //     — the 3 s candidate-distinct shuffle was the single
+      //     largest line of the shared-frames setup.
+      val banded = sets.select($"sid", size($"tids").as("nt"),
+        posexplode($"bands").as(Seq("band", "bh")))
+      val cand = banded.as("x").join(banded.as("y"),
+          $"x.band" === $"y.band" && $"x.bh" === $"y.bh" && $"x.sid" < $"y.sid" &&
+          lit(19) * least($"x.nt", $"y.nt") >= lit(9) * ($"x.nt" + $"y.nt"))
+        .select($"x.sid".as("s1"), $"y.sid".as("s2"))
+      val sA = sets.select($"sid".as("s1"), $"tids".as("t1"))
+      val sB = sets.select($"sid".as("s2"), $"tids".as("t2"))
+      // single-evaluation exact threshold: jac ≥ 0.9 ⟺ 19·inter ≥
+      // 9·(|A|+|B|) in integers (the double-division form evaluated
+      // the O(|A|+|B|) intersect 2× in the filter and 2× more in the
+      // projection)
+      val a1 = size($"t1"); val a2 = size($"t2")
+      val inter = call_function("sorted_long_intersect_size", $"t1", $"t2")
+      val jac   = inter.cast("double") / (a1 + a2 - inter)
+      // BROADCAST the set dictionary on both sides (one row per
+      // DISTINCT set): the candidate pair stream meets its tids
+      // arrays through two broadcast hash joins + the intersect
+      // filter with no shuffle at all. At lake scale the dictionary
+      // outgrows a broadcast, so the hint is SIZE-GUARDED
+      // (Core.guardedBroadcast — an unconditional hint would override
+      // autoBroadcastJoinThreshold and fail at the 8 GB ceiling):
+      // past either the row dial or the BYTE dial (rows alone are
+      // blind to the tids payload width) the hint drops and Catalyst
+      // plans shuffle joins — the banded candidate generation is
+      // unchanged either way. Rows and bytes come from ONE aggregate
+      // over the already-persisted signature table
+      // (Core.setDictStats, above).
+      cand
+        .join(graft.Core.guardedBroadcast(s, sA)(dictStats), "s1")
+        .join(graft.Core.guardedBroadcast(s, sB)(dictStats), "s2")
+        .filter(lit(19) * inter >= lit(9) * (a1 + a2))
+        .select($"s1", $"s2", round(jac, 4).as("jaccard"))
+        .distinct()
+        .persist()
     }
+    (verified, sets)
   }
 
   /** Doc-level near-dup pairs: the lazily expanded view of
@@ -645,21 +541,15 @@ object TextOps {
       .parquet(s"$path/labels.parquet")
   }
 
-  private val labelsCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String, String), org.apache.spark.sql.DataFrame]
-
-  /** Served labels, memoized per (session, dir, partitions). The ensure
-    * runs OUTSIDE cacheLock: the build takes cacheLock itself (the
-    * signature memos) under the ensure lock, so holding cacheLock here
-    * while waiting for the ensure lock would invert that order.
+  /** Served labels, memoized per session and dialed by the stored
+    * stamp, so a rebuilt artifact is re-read. The ensure runs BEFORE
+    * the memo lookup (the Frames lock-order rule): the build looks up
+    * the signature frames under the ensure lock.
     */
   private[queries] def clusterLabels(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val key = (s, dir, s.conf.get("spark.sql.shuffle.partitions", ""))
-    cacheLock.synchronized(labelsCache.get(key)).getOrElse {
-      val path = labels.ensure(s, dir)._1
-      cacheLock.synchronized {
-        labelsCache.getOrElseUpdate(key, s.read.parquet(s"$path/labels.parquet"))
-      }
+    val path = labels.ensure(s, dir)._1
+    Frames.memo(s, dir, "clusterLabels", Nil, labels.storedStamp(dir)) {
+      s.read.parquet(s"$path/labels.parquet")
     }
   }
 

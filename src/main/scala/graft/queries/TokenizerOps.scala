@@ -98,74 +98,57 @@ object TokenizerOps {
   private[graft] final case class Merge(rank: Int, left: String, right: String,
                                         merged: String, pair_freq: Long)
 
-  private val cacheLock = new Object
-  private val bpeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String),
-      (Seq[Merge], DataFrame)]
-
   /** Train the merge table and return it with the final vocab-sized
-    * (term, freq, seg) segmentation frame. Memoized per (session, dir,
-    * partitions) like the other shared frames — train and apply are
-    * two consumers of one model. Each round's argmax tie-breaks on
+    * (term, freq, seg) segmentation frame. Memoized per session like
+    * the other shared frames ([[Frames]]) — train and apply are two
+    * consumers of one model. Each round's argmax tie-breaks on
     * (count desc, left, right) so the table is deterministic across
     * partitionings (counts are exact integer sums).
     */
   private[graft] def trainBpe(s: SparkSession, dir: String): (Seq[Merge], DataFrame) =
-    cacheLock.synchronized {
-      bpeCache.getOrElseUpdate(
-        (s, dir, s.conf.get("spark.sql.shuffle.partitions", "")), {
-          import s.implicits._
-          val wf = TextOps.termFreq(s, dir)
-            .groupBy($"term").agg(sum($"tf").as("freq"))
-          // localCheckpoint (eager), NOT persist/unpersist chaining:
-          // unpersisting round r's frame while round r+1's cache plan
-          // still references it makes CacheManager re-compile (and
-          // drop) the dependent cache — every round then recomputes
-          // the whole fold chain from the corpus scan, turning the
-          // loop quadratic (measured 127 s at sf0.1; 9 s after this),
-          // and the FINAL frame comes back cacheless, so every apply
-          // re-trains. Checkpointing truncates lineage each round, so
-          // the frames are independent and the final segmentation is a
-          // materialized vocab-sized table. Executor-loss caveat of
-          // localCheckpoint is acceptable: the frame is vocab-sized
-          // model state, rebuilt by rerunning training.
-          var seg = wf.select($"term", $"freq", initSeg.as("seg")).localCheckpoint()
-          val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
-          var done = false
-          var r = 1
-          while (r <= nMerges && !done) {
-            // 1-row argmax — the only driver-side data per round
-            val best = seg.select($"freq", explode(pairsOf).as("p"))
-              .groupBy($"p.a".as("a"), $"p.b".as("b"))
-              .agg(sum($"freq").as("cnt"))
-              .orderBy($"cnt".desc, $"a", $"b")
-              .limit(1).collect()
-            if (best.isEmpty) done = true
-            else {
-              val (a, b, cnt) =
-                (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-              merges += Merge(r, a, b, a + b, cnt)
-              val next = seg.withColumn("seg", mergeFold(a, b)).localCheckpoint()
-              // no explicit unpersist: Dataset.unpersist is a no-op for
-              // localCheckpoint blocks (they are RDD-persisted, not
-              // CacheManager entries) — dropping the reference frees
-              // them via the ContextCleaner, the same lifecycle as the
-              // label-propagation loop's rounds
-              seg = next
-              r += 1
-            }
-          }
-          (merges.toSeq, seg)
-        })
-    }
-
-  private[graft] def evictCaches(s: SparkSession): Unit =
-    cacheLock.synchronized {
-      // dropping the map reference is the release: the segmentation
-      // frame is localCheckpoint-backed, so its blocks free via the
-      // ContextCleaner once unreferenced (Dataset.unpersist would be a
-      // no-op on checkpoint blocks)
-      bpeCache.keys.filter(_._1 eq s).foreach(bpeCache.remove)
+    Frames.memo(s, dir, "bpe", Seq("documents")) {
+      import s.implicits._
+      val wf = TextOps.termFreq(s, dir)
+        .groupBy($"term").agg(sum($"tf").as("freq"))
+      // localCheckpoint (eager), NOT persist/unpersist chaining:
+      // unpersisting round r's frame while round r+1's cache plan
+      // still references it makes CacheManager re-compile (and
+      // drop) the dependent cache — every round then recomputes
+      // the whole fold chain from the corpus scan, turning the
+      // loop quadratic (measured 127 s at sf0.1; 9 s after this),
+      // and the FINAL frame comes back cacheless, so every apply
+      // re-trains. Checkpointing truncates lineage each round, so
+      // the frames are independent and the final segmentation is a
+      // materialized vocab-sized table. Executor-loss caveat of
+      // localCheckpoint is acceptable: the frame is vocab-sized
+      // model state, rebuilt by rerunning training.
+      var seg = wf.select($"term", $"freq", initSeg.as("seg")).localCheckpoint()
+      val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
+      var done = false
+      var r = 1
+      while (r <= nMerges && !done) {
+        // 1-row argmax — the only driver-side data per round
+        val best = seg.select($"freq", explode(pairsOf).as("p"))
+          .groupBy($"p.a".as("a"), $"p.b".as("b"))
+          .agg(sum($"freq").as("cnt"))
+          .orderBy($"cnt".desc, $"a", $"b")
+          .limit(1).collect()
+        if (best.isEmpty) done = true
+        else {
+          val (a, b, cnt) =
+            (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+          merges += Merge(r, a, b, a + b, cnt)
+          val next = seg.withColumn("seg", mergeFold(a, b)).localCheckpoint()
+          // no explicit unpersist: Dataset.unpersist is a no-op for
+          // localCheckpoint blocks (they are RDD-persisted, not
+          // CacheManager entries) — dropping the reference frees
+          // them via the ContextCleaner, the same lifecycle as the
+          // label-propagation loop's rounds
+          seg = next
+          r += 1
+        }
+      }
+      (merges.toSeq, seg)
     }
 
   /** The unrolled-training CTE chain shared by both oracles (see the

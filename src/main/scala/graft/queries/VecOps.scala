@@ -280,28 +280,21 @@ object VecOps {
     * termFreq pattern for the vector side: the LSH self-join references
     * this frame on BOTH sides (probe-expanded and stored), and the
     * persisted-index build writes the same rows, so one session signs
-    * the corpus once instead of once per subtree reference. Keyed by
-    * (session, dir, partitions); released via [[evictCaches]] (invoked
-    * from TextOps.evictCaches, the session-wide lifecycle hook).
+    * the corpus once instead of once per subtree reference. A
+    * [[Frames]] entry per width.
     */
-  private val sigCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String, Int), DataFrame]
-  private val cacheLock = new Object
-
   private[graft] def bandedSigsW(s: SparkSession, dir: String, w: Int): DataFrame =
-    cacheLock.synchronized { sigCache.getOrElseUpdate(
-      (s, dir, s.conf.get("spark.sql.shuffle.partitions", ""), w), {
-        import s.implicits._
-        // repartition BEFORE signing: the fixture is a single-row-group
-        // file, so the per-vector 4w-plane signing would otherwise run
-        // in one task (same fix as TextOps.docTokens). emb() itself
-        // stays shuffle-free — plan-audited consumers (knn top-k)
-        // depend on that.
-        emb(s, dir)
-          .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-          .select($"vec_id", posexplode(lshBandKeysW($"emb", w)).as(Seq("band", "bk")))
-          .persist()
-      })
+    Frames.memo(s, dir, s"bandedSigs/w=$w", Seq("embeddings")) {
+      import s.implicits._
+      // repartition BEFORE signing: the fixture is a single-row-group
+      // file, so the per-vector 4w-plane signing would otherwise run
+      // in one task (same fix as TextOps.docTokens). emb() itself
+      // stays shuffle-free — plan-audited consumers (knn top-k)
+      // depend on that.
+      emb(s, dir)
+        .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+        .select($"vec_id", posexplode(lshBandKeysW($"emb", w)).as(Seq("band", "bk")))
+        .persist()
     }
 
   /** Corpus signatures at the PERSISTED-INDEX width — the warm-frame
@@ -311,18 +304,6 @@ object VecOps {
     */
   private[graft] def bandedSigsIndex(s: SparkSession, dir: String): DataFrame =
     bandedSigsW(s, dir, vecIndexBandBits(vecCorpusN(s, dir)))
-
-  private[graft] def evictCaches(s: SparkSession): Unit =
-    cacheLock.synchronized {
-      sigCache.keys.filter(_._1 eq s).foreach { k =>
-        sigCache.remove(k).foreach(_.unpersist())
-      }
-      kmCache.keys.filter(_._1 eq s).foreach { k =>
-        kmCache.remove(k).foreach { case (c, a) => c.unpersist(); a.unpersist() }
-      }
-      // the served IVF quantizer memo rides the same lifecycle hook
-      IvfIndex.evictCaches(s)
-    }
 
   /** Deterministic K=64 k-means over the corpus embeddings — ONE
     * definition of the IVF coarse quantizer, shared by the in-plan
@@ -343,18 +324,12 @@ object VecOps {
     * subtree from BOTH the probe side and the assignment side, and the
     * persisted build writes centroids and cells as two actions; without
     * memoization each reference re-ran the whole k-means. One quantizer
-    * per session, warmed by the bench's setup step, released via
-    * [[evictCaches]].
+    * per session ([[Frames]]), warmed by the bench's setup step.
     */
-  private val kmCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), (DataFrame, DataFrame)]
-
   private[graft] def kmeansCells(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    cacheLock.synchronized { kmCache.getOrElseUpdate(
-      (s, dir, s.conf.get("spark.sql.shuffle.partitions", "")), {
-        val (cents, assigned) = kmeansCellsUncached(s, dir)
-        (cents.persist(), assigned.persist())
-      })
+    Frames.memo(s, dir, "kmeansCells", Seq("embeddings")) {
+      val (cents, assigned) = kmeansCellsUncached(s, dir)
+      (cents.persist(), assigned.persist())
     }
 
   /** Nearest-cell assignment of (vec_id, emb, norm) rows to broadcast

@@ -167,13 +167,13 @@ class CurationOpsSpec extends SparkSpecBase {
     // exact-decimal-gradient claim
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     try {
-      queries.TextOps.evictCaches(spark)
+      queries.Frames.release(spark)
       spark.conf.set("spark.sql.shuffle.partitions", "7")
       val w2 = queries.QualityOps.trainedWeights(spark, dir).toSeq
       assert(w1 == w2, "retrained weights differ under repartitioning")
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
-      queries.TextOps.evictCaches(spark)
+      queries.Frames.release(spark)
     }
   }
 }

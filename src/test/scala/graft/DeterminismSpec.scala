@@ -39,7 +39,7 @@ class DeterminismSpec extends SparkSpecBase {
       // be vacuously equal (round-6 review finding). Forcing a rebuild
       // per parallelism makes the propagation itself face the 4-vs-32
       // split.
-      queries.TextOps.evictCaches(spark)
+      queries.Frames.release(spark)
       new java.io.File(
         s"${queries.IndexOps.indexDir(sf("sf0.001"))}/labels.version").delete()
       spark.conf.set("spark.sql.shuffle.partitions", parts)
@@ -65,14 +65,14 @@ class DeterminismSpec extends SparkSpecBase {
     // grouping, so no accumulation order can move a doc across the cut
     import spark.implicits._
     def run(parts: Int): Seq[(Long, String, Double, Long, Long)] = {
-      queries.TextOps.evictCaches(spark)
+      queries.Frames.release(spark)
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       try SparkEntry.queries("curate_token_budget")(spark, sf("sf0.01"))
         .as[(Long, String, Double, Long, Long)].collect().toSeq
       finally spark.conf.set("spark.sql.shuffle.partitions", 4)
     }
     val a = run(4); val b = run(32)
-    queries.TextOps.evictCaches(spark)
+    queries.Frames.release(spark)
     assert(a.nonEmpty && a == b, "budget prefix must be partition-order independent")
   }
 

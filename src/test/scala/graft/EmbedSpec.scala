@@ -158,7 +158,7 @@ class EmbedSpec extends SparkSpecBase {
     assert(out.filter(_._1 <= 2L).forall(_._2 == 0L), s"near-identical docs must share cluster 0: $out")
     assert(out.filter(_._1 >= 3L).forall(r => r._2 == r._1), s"distinct docs must stay singletons: $out")
     assert(out.map(_._3) == Seq(true, false, false, true, true), s"keep = cluster min only: $out")
-    queries.TextOps.evictCaches(spark)
+    queries.Frames.release(spark)
   }
 
   test("text_dedup_embed: artifact is stamp-served and keep is exactly cluster-min") {
@@ -198,14 +198,14 @@ class EmbedSpec extends SparkSpecBase {
 
   test("embedding output byte-identical at partitions 4 vs 32") {
     def run(parts: Int): Seq[(Long, Long, Double)] = {
-      queries.TextOps.evictCaches(spark)
+      queries.Frames.release(spark)
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       try SparkEntry.queries("text_embed_learned")(spark, sf("sf0.001"))
         .as[(Long, Long, Double)].collect().toSeq
       finally spark.conf.set("spark.sql.shuffle.partitions", 4)
     }
     val a = run(4); val b = run(32)
-    queries.TextOps.evictCaches(spark)
+    queries.Frames.release(spark)
     assert(a == b, "decimal-sum training must be partition-order independent")
   }
 }

@@ -69,7 +69,7 @@ class IndexSpec extends SparkSpecBase {
     assert(!sim.current(spark, tmp),
       "rewritten source data must invalidate the persisted index")
     // the ensure path rebuilds and restamps against the NEW data identity
-    graft.queries.TextOps.evictCaches(spark)
+    graft.queries.Frames.release(spark)
     SparkEntry.queries("sim_index_probe")(spark, tmp).collect()
     assert(sim.storedStamp(tmp) == sim.stamp(spark, tmp),
       "rebuild must restamp with the new fingerprint")
@@ -286,7 +286,7 @@ class IndexSpec extends SparkSpecBase {
     assert(stamp.exists(), "cluster run must leave a stamped lake artifact")
     java.nio.file.Files.write(stamp.toPath, "cc-v0:obsolete".getBytes("UTF-8"))
     // memoized frames would mask the staleness — evict, as a new session would start
-    graft.queries.TextOps.evictCaches(spark)
+    graft.queries.Frames.release(spark)
     val after = SparkEntry.queries("text_dedup_cluster")(spark, dir)
       .as[(Long, Long, Boolean)].collect().sorted.toSeq
     assert(after == before, "rebuild after stale stamp must reproduce identical labels")
@@ -295,7 +295,7 @@ class IndexSpec extends SparkSpecBase {
       s"stale labels stamp not refreshed: '$restamped'")
     // warm serve: a fresh session-equivalent (evicted memo) must read
     // the artifact, not re-run propagation — asserted by plan shape
-    graft.queries.TextOps.evictCaches(spark)
+    graft.queries.Frames.release(spark)
     val plan = SparkEntry.queries("text_dedup_cluster")(spark, dir)
       .queryExecution.executedPlan.toString
     assert(plan.contains("labels.parquet"), "warm path must serve labels from the lake")

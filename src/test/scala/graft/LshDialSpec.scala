@@ -78,7 +78,7 @@ class LshDialSpec extends SparkSpecBase {
       assert(candidates <= 25 * n,
         s"candidate mass $candidates exceeds ~linear bound ${25 * n} at dialed width 19")
     } finally {
-      queries.TextOps.evictCaches(spark)
+      queries.Frames.release(spark)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
