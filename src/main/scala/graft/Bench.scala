@@ -348,6 +348,10 @@ object Bench {
         s""""cache_stable":$cacheStable,""" +
         s""""cache_dropped_n":$cacheDropped,""" +
         s""""rebuilt_setup":${jarr(rebuiltSetup)},"rebuilt_midrun":${jarr(rebuiltMid)}"""
+    // the session registry's census, one line, before the release drops it
+    System.err.println("[graft] frames: census (hits/builds/supersedes) " +
+      queries.Frames.census(spark).toSeq.sortBy(_._1)
+        .map { case (f, c) => s"$f=${c.hits}/${c.builds}/${c.supersedes}" }.mkString(" "))
     queries.Frames.release(spark)
     // end-of-run floor: contention can start mid-run; both ends must be
     // quiet for the run's absolute numbers to be comparable

@@ -41,12 +41,44 @@ object Core {
     Entry(name, fn, Some(oracle))
   def entryNoOracle(name: String)(fn: QFn): Entry = Entry(name, fn, None)
 
-  /** Lake loader — `spark.read.parquet` keeps the scan declarative so
-    * Catalyst pushes filters/projections into the parquet reader
-    * (PushedFilters / ReadSchema; SURVEY.md §4.2).
+  /** Lake loader — a declarative parquet scan, so Catalyst pushes
+    * filters/projections into the parquet reader (PushedFilters /
+    * ReadSchema; SURVEY.md §4.2).
+    *
+    * The schema is pinned: a bare `spark.read.parquet` runs a Spark job
+    * to read a footer and infer it on every read, even of a table that
+    * has not changed. Here it is inferred once per session through
+    * `Frames.memo(spark, dir, "schema/<name>", Seq(name), dials)` and
+    * every read, the first included, passes it as the user schema, so
+    * every plan over a table carries the same relation. The entry is
+    * keyed by the table's data stamp (file names, lengths, mtimes: a
+    * table rewritten in place re-infers on its next load) and dialed by
+    * the confs that change what inference returns ([[schemaConfs]];
+    * `loadEvents` flips `nanosAsLong` at runtime).
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    load(spark, dir, name, Seq(name), "")
+
+  /** [[load]] with the schema entry keyed by `inputs`' data stamp and
+    * `dial` — lake artifacts pass no inputs and their stored stamp
+    * (`LakeArtifact.read`).
+    */
+  private[graft] def load(spark: SparkSession, dir: String, name: String,
+                          inputs: Seq[String], dial: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val schema = graft.queries.Frames.memo(spark, dir, s"schema/$name", inputs,
+        dial + ";" + schemaConfs(spark)) {
+      spark.read.parquet(path).schema
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** The session confs parquet schema inference reads. */
+  private def schemaConfs(spark: SparkSession): String =
+    Seq("spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+      "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
+      "spark.sql.parquet.mergeSchema", "spark.sql.caseSensitive")
+      .map(k => spark.conf.getOption(k).getOrElse("")).mkString(",")
 
   /** `events.parquet`'s `ts` encoding has varied across testdata
     * generations — INT64 TIMESTAMP(NANOS) originally, plain

@@ -340,12 +340,16 @@ case class AnnTopKRule(spark: SparkSession)
   /** Build the probe plan with the DataFrame API, analyze it (never
     * execute — rules are side-effect free), and splice it in with the
     * original output attribute ids so parent references stay bound.
+    * The cells are read with the artifact's pinned schema: a bare
+    * parquet read would launch a footer-inference job inside the
+    * optimizer on every query the rule fires on; pinned, only the first
+    * rewrite after a rebuild infers it.
     */
   private def rewrite(gl: GlobalLimit, dir: String, q: Seq[Double], qn: Double,
                       k: Int, residuals: Seq[(String, Option[Literal])]): LogicalPlan = {
     VectorExprs.register(spark)
     val path = IndexOps.indexDir(dir)
-    val cellsRaw = spark.read.parquet(s"$path/ivf_cells.parquet")
+    val cellsRaw = IvfIndex.ivfIndex.read(spark, path, "ivf_cells")
     // every residual column must be stored in the index (an index built
     // before the corpus gained the column cannot evaluate it) — else
     // the exact plan stands

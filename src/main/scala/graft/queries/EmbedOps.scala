@@ -390,7 +390,7 @@ object EmbedOps {
       // embeds the same batch — byte-equality proves the persisted
       // artifact is exactly the model the training run would produce.
       val path = ensureEmbedModel(s, dir)
-      val model = s.read.parquet(s"$path/embed_model.parquet")
+      val model = embedModel.read(s, path, "embed_model")
       val batchTf = TextOps.docTokens(s, dir)
         .filter(pmod(col("doc_id"), lit(10)) === 7)
         .select(col("doc_id"), explode(col("toks")).as("term"))
@@ -414,7 +414,7 @@ object EmbedOps {
       // only on a cold/stale corpus (see computeEmbLabels for the
       // SemDeDup-shaped 100 TB path).
       val path = ensureEmbDedup(s, dir)
-      s.read.parquet(s"$path/emblabels.parquet")
+      embDedup.read(s, path, "emblabels")
         .select(col("doc_id"), col("cluster"),
           (col("doc_id") === col("cluster")).as("keep"))
         .orderBy(col("doc_id"))

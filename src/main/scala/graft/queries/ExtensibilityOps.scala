@@ -344,7 +344,7 @@ object ExtensibilityOps {
       // MultimodalSpec gates the codec math — and the RELATIONAL stage
       // (band join → Hamming verify → fallback rule) is replayed by
       // DuckDB over the same artifact via read_parquet.
-      mmDedupPairs(s.read.parquet(ensureMmFingerprints(s, dir, "image")))
+      mmDedupPairs(mmFingerprintTable(s, dir, "image"))
     },
 
     entry(
@@ -362,7 +362,7 @@ object ExtensibilityOps {
       // not audio similarity — and `perceptual` marks which rule fired.
       // Hard-oracled through the persisted fingerprint artifact exactly
       // like mm_image_dedup above.
-      mmDedupPairs(s.read.parquet(ensureMmFingerprints(s, dir, "audio")))
+      mmDedupPairs(mmFingerprintTable(s, dir, "audio"))
     },
 
     entry(
@@ -387,7 +387,7 @@ object ExtensibilityOps {
       // asset_id = pdf_id·100 + stream index, so a pair decodes
       // directly to (which two PDFs, which image slot). Relational
       // stage + oracle are shared verbatim with mm_image_dedup.
-      mmDedupPairs(s.read.parquet(ensureMmFingerprints(s, dir, "pdf")))
+      mmDedupPairs(mmFingerprintTable(s, dir, "pdf"))
     },
 
     entry(
@@ -411,7 +411,7 @@ object ExtensibilityOps {
       // stamped mmfp_video lake artifact, so the codec stage is
       // spec-gated and the relational stage DuckDB-replayed like its
       // siblings.
-      mmDedupPairs(s.read.parquet(ensureMmFingerprints(s, dir, "video")))
+      mmDedupPairs(mmFingerprintTable(s, dir, "video"))
     },
 
     entry(
@@ -432,7 +432,7 @@ object ExtensibilityOps {
       // the fallback exact rule are shared verbatim with
       // mm_image_dedup, so the two surfaces can never disagree about
       // what counts as a duplicate.
-      mmDedupIncremental(s.read.parquet(ensureMmFingerprints(s, dir, "image")))
+      mmDedupIncremental(mmFingerprintTable(s, dir, "image"))
     }
   )
 
@@ -528,10 +528,10 @@ object ExtensibilityOps {
     }
   }
 
-  private def ensureMmFingerprints(s: org.apache.spark.sql.SparkSession,
-                                   dir: String, kind: String): String = {
-    val path = mmFingerprints(kind).ensure(s, dir)._1
-    s"$path/mmfp_$kind.parquet"
+  private def mmFingerprintTable(s: org.apache.spark.sql.SparkSession,
+                                 dir: String, kind: String): org.apache.spark.sql.DataFrame = {
+    val fp = mmFingerprints(kind)
+    fp.read(s, fp.ensure(s, dir)._1, s"mmfp_$kind")
   }
 
   /** The relational stage shared by all three modalities, at the v3

@@ -4,9 +4,10 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** The session frame registry: every session-scoped shared frame and
   * driver-side model (postings, signatures, quantizers, the BPE merge
-  * table, classifier weights, served lake tables) is built once per
-  * session through [[memo]] and reused — the reference's build-once /
-  * serve-many index (engine.py:72-98) applied inside a session.
+  * table, classifier weights, served lake tables, the pinned parquet
+  * schema of every lake read) is built once per session through [[memo]]
+  * and reused — the reference's build-once / serve-many index
+  * (engine.py:72-98) applied inside a session.
   *
   * Key: (session, dir, name); `name` carries any call arguments
   * (`bandedSigs/w=8`). Validity: an entry is served while its stamp
@@ -30,6 +31,12 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * calls it before stop, and a REPL or diagnostic calls it to force a
   * cold rebuild.
   *
+  * Census: every lookup counts as a hit (served the held value), a
+  * build (no value held: the first lookup, or one after a failed build)
+  * or a supersede (rebuild over a mismatched stamp), per entry FAMILY — the name up to
+  * its first `/` (`schema/documents` counts under `schema`). Read with
+  * [[census]]; a session's counts go with its [[release]].
+  *
   * Locking: each entry has its own build lock, so a racing caller waits
   * for the winner and reuses its value — nothing is built or persisted
   * twice — while builds of different entries never serialize each
@@ -52,6 +59,19 @@ private[graft] object Frames {
   private val entries =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), Entry]
 
+  /** Lookups of one entry family in one session. */
+  final case class Census(hits: Long, builds: Long, supersedes: Long)
+
+  private final class Counts {
+    val hits, builds, supersedes = new java.util.concurrent.atomic.AtomicLong
+  }
+
+  private val counts =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Counts]
+
+  private def countsOf(s: SparkSession, name: String): Counts =
+    counts.getOrElseUpdate((s, name.takeWhile(_ != '/')), new Counts)
+
   def memo[A](s: SparkSession, dir: String, name: String, inputs: Seq[String],
               dials: String = "")(build: => A): A = {
     val stamp = (if (inputs.isEmpty) "" else LakeArtifact.dataStamp(s, dir, inputs)) +
@@ -65,8 +85,12 @@ private[graft] object Frames {
         // fresh entry, so no value is ever built into an orphan
         if (e.released) None
         else {
-          if (e.stamp != stamp) {
-            if (e.stamp != null) {
+          val c = countsOf(s, name)
+          if (e.stamp == stamp) c.hits.incrementAndGet()
+          else {
+            if (e.stamp == null) c.builds.incrementAndGet()
+            else {
+              c.supersedes.incrementAndGet()
               System.err.println(
                 s"[graft] frames: $name for $dir superseded (stamp ${e.stamp} -> $stamp) " +
                   "- any consumer mid-job on the old value recomputes it")
@@ -85,8 +109,10 @@ private[graft] object Frames {
     out.get
   }
 
-  /** Release every entry owned by `s`, waiting out any in-flight build. */
-  def release(s: SparkSession): Unit =
+  /** Release every entry owned by `s`, waiting out any in-flight build,
+    * and drop its census.
+    */
+  def release(s: SparkSession): Unit = {
     entries.keys.filter(_._1 eq s).foreach { k =>
       entries.remove(k).foreach { e =>
         e.synchronized {
@@ -96,6 +122,14 @@ private[graft] object Frames {
         }
       }
     }
+    counts.keys.filter(_._1 eq s).foreach(counts.remove)
+  }
+
+  /** Hits, builds and supersedes of `s`'s lookups per entry family. */
+  def census(s: SparkSession): Map[String, Census] =
+    counts.collect { case ((o, family), c) if o eq s =>
+      family -> Census(c.hits.get, c.builds.get, c.supersedes.get)
+    }.toMap
 
   private def unpersistAll(v: Any): Unit = v match {
     case d: Dataset[_] => d.unpersist(); ()

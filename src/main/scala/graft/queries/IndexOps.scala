@@ -160,11 +160,11 @@ object IndexOps {
     } graft.sources.Ingest.stageAndSwap(
         sortKey.get(t) match {
           case Some(k) =>
-            s.read.parquet(s"$path/$t.parquet").distinct()
+            a.read(s, path, t).distinct()
               .repartitionByRange(nFiles, col("band"), col(k))
               .sortWithinPartitions(col("band"), col(k))
           case None =>
-            s.read.parquet(s"$path/$t.parquet").distinct().repartition(nFiles)
+            a.read(s, path, t).distinct().repartition(nFiles)
         }, path, t)
     // the IVF cells table is CELL-PARTITIONED (one dir per c_id) and
     // appendToIvfIndex adds one file per touched cell per batch — the
@@ -173,7 +173,7 @@ object IndexOps {
     // to one file per cell. Centroids are overwrite-only (never grown).
     if (IvfIndex.ivfIndex.current(s, dir, ns))
       graft.sources.Ingest.stageAndSwap(
-        s.read.parquet(s"$path/ivf_cells.parquet").distinct()
+        IvfIndex.ivfIndex.read(s, path, "ivf_cells").distinct()
           .repartition(col("c_id")),
         path, "ivf_cells", partitionBy = Seq("c_id"))
     // the PQ code tables grow by append like the cells: flat codes
@@ -181,11 +181,11 @@ object IndexOps {
     // partitioning. Codebook/centroids are overwrite-only (never grown).
     if (PqIndex.pqIndex.current(s, dir, ns))
       graft.sources.Ingest.stageAndSwap(
-        s.read.parquet(s"$path/pq_codes.parquet").distinct().repartition(nFiles),
+        PqIndex.pqIndex.read(s, path, "pq_codes").distinct().repartition(nFiles),
         path, "pq_codes")
     if (PqIndex.ivfPqIndex.current(s, dir, ns))
       graft.sources.Ingest.stageAndSwap(
-        s.read.parquet(s"$path/ivfpq_codes.parquet").distinct()
+        PqIndex.ivfPqIndex.read(s, path, "ivfpq_codes").distinct()
           .repartition(col("c_id")),
         path, "ivfpq_codes", partitionBy = Seq("c_id"))
   }
@@ -260,8 +260,8 @@ object IndexOps {
       val path = simIndex.rebuild(s, dir)
       // Declared output = deterministic stats OF THE PERSISTED TABLES
       // (read back, not recomputed): proves the index landed on disk.
-      val bands = s.read.parquet(s"$path/bands.parquet")
-      val sets  = s.read.parquet(s"$path/sets.parquet")
+      val bands = simIndex.read(s, path, "bands")
+      val sets  = simIndex.read(s, path, "sets")
       bands.groupBy($"band")
         .agg(count(lit(1)).as("n_sigs"), countDistinct($"bh").as("n_buckets"))
         .crossJoin(broadcast(sets.agg(
@@ -330,12 +330,12 @@ object IndexOps {
         val probePred = qbands.zipWithIndex
           .map { case (h, b) => $"band" === b && $"bh" === h }
           .reduce(_ || _)
-        val cand = s.read.parquet(s"$path/bands.parquet")
+        val cand = simIndex.read(s, path, "bands")
           .filter(probePred)
           // skinny distinct: sid only — replay-duplicated band rows and
           // multi-band collisions collapse before the sets join
           .select($"sid").distinct()
-        val sets = s.read.parquet(s"$path/sets.parquet")
+        val sets = simIndex.read(s, path, "sets")
         val qt = typedlit(qtids)
         val inter = call_function("sorted_long_intersect_size", $"tids", qt).cast("double")
         val jac   = inter / (size($"tids") + lit(qtids.length) - inter)
@@ -409,8 +409,8 @@ object IndexOps {
       // signature from the literal ±1 plane matrix, so a signing or
       // layout drift in the stored index hash-mismatches.
       val path = vecIndex.rebuild(s, dir)
-      val bands = s.read.parquet(s"$path/vec_bands.parquet")
-      val vecs  = s.read.parquet(s"$path/vecs.parquet")
+      val bands = vecIndex.read(s, path, "vec_bands")
+      val vecs  = vecIndex.read(s, path, "vecs")
       bands.groupBy($"band")
         .agg(count(lit(1)).as("n_sigs"), countDistinct($"bk").as("n_buckets"))
         .crossJoin(broadcast(vecs.agg(count(lit(1)).as("n_vecs"))))
@@ -492,12 +492,12 @@ object IndexOps {
           $"band" === b &&
             $"bk".isInCollection(VecOps.probeMasksWideW(w).map(_ ^ k))
         }.reduce(_ || _)
-        val cand = s.read.parquet(s"$path/vec_bands.parquet")
+        val cand = vecIndex.read(s, path, "vec_bands")
           .filter(probePred)
           .filter($"vec_id" =!= 0)
           .select($"vec_id").distinct()
         val qe = typedlit(qemb)
-        cand.join(s.read.parquet(s"$path/vecs.parquet"), "vec_id")
+        cand.join(vecIndex.read(s, path, "vecs"), "vec_id")
           .select($"vec_id",
             round(call_function("dotp", $"emb", qe) / ($"norm" * qnorm), 6).as("score"))
           .orderBy($"score".desc, $"vec_id")
@@ -569,7 +569,7 @@ object IndexOps {
       // candidate distinct, on the |candidates|-sized stream.
       val qb = batch.select($"b_id", posexplode($"bands").as(Seq("band", "bk")))
         .select($"b_id", $"band", explode(VecOps.probeKeysWideW($"bk", w)).as("bk"))
-      val cand = s.read.parquet(s"$path/vec_bands.parquet")
+      val cand = vecIndex.read(s, path, "vec_bands")
         .join(qb, Seq("band", "bk"))
         .filter($"vec_id" =!= $"b_id")
         .select($"b_id", $"vec_id").distinct()
@@ -605,7 +605,7 @@ object IndexOps {
       val bSel = batch.select($"b_id", $"b_emb", $"b_n")
       val candStats = graft.Core.broadcastStats(cand)
       val batchStats = graft.Core.broadcastStats(bSel)
-      s.read.parquet(s"$path/vecs.parquet")
+      vecIndex.read(s, path, "vecs")
         .join(graft.Core.guardedBroadcast(s, cand)(candStats), "vec_id")
         .join(graft.Core.guardedBroadcast(s, bSel)(batchStats), "b_id")
         .select($"b_id", $"vec_id",
@@ -646,10 +646,10 @@ object IndexOps {
     // row still carrying its ~100-long btids signature array (measured
     // 1.4M fat rows ≈ 1 GB shuffled at sf0.1, 3× the whole query's
     // runtime). Verify-then-dedup shuffles only the matched skinny rows.
-    val cand = s.read.parquet(s"$path/bands.parquet")
+    val cand = simIndex.read(s, path, "bands")
       .join(qb, Seq("band", "bh"))
       .select(col("b_doc"), col("btids"), col("sid"))
-    val sets = s.read.parquet(s"$path/sets.parquet")
+    val sets = simIndex.read(s, path, "sets")
     // The ≥0.9 test runs per CANDIDATE (millions of band-collision rows;
     // the intersect walks two ~100-long arrays), so it is written to
     // evaluate the intersect expression ONCE and only when it can
@@ -905,7 +905,7 @@ object IndexOps {
     // cluster scales candidates with |batch|×|cluster|), so both hints
     // are size-guarded: counts are cheap (localCheckpointed frames),
     // and above the dial the fetch degrades to a shuffle join.
-    val candVsIndex = s.read.parquet(s"$path/vec_bands.parquet")
+    val candVsIndex = vecIndex.read(s, path, "vec_bands")
       .join(qprobe, Seq("band", "bk"))
       .filter(col("vec_id") =!= col("b_id")) // self-guard: replayed vectors
       .select(col("b_id"), col("vec_id")).distinct()
@@ -915,7 +915,7 @@ object IndexOps {
     // identical row shape, so its stats are reused, not re-measured)
     val candVsStats = graft.Core.broadcastStats(candVsIndex)
     val bEmbStats = graft.Core.broadcastStats(bEmb)
-    val dupVsIndex = s.read.parquet(s"$path/vecs.parquet")
+    val dupVsIndex = vecIndex.read(s, path, "vecs")
       .join(graft.Core.guardedBroadcast(s, candVsIndex)(candVsStats), "vec_id")
       .join(graft.Core.guardedBroadcast(s, bEmb)(bEmbStats), "b_id")
       .filter(cos >= minCos)

@@ -82,7 +82,7 @@ object IvfIndex {
     */
   private[graft] def writeMetaStats(s: SparkSession, path: String,
                                     stats: Option[org.apache.spark.sql.DataFrame] = None): Unit = {
-    val cells = s.read.parquet(s"$path/ivf_cells.parquet")
+    val cells = ivfIndex.read(s, path, "ivf_cells")
     val statsSrc = stats.getOrElse(cells)
     val metaCols = statsSrc.columns.filterNot(Set("vec_id", "emb", "norm", "c_id"))
     val total = cells.count()  // parquet footer count — no data scan
@@ -204,7 +204,7 @@ object IvfIndex {
     // differ from the stored cells would land rows a filtered probe
     // silently never returns (missing column reads as null), or make
     // the stored schema depend on which file's footer a read samples
-    val stored = s.read.parquet(s"$path/ivf_cells.parquet").columns.toSet - "c_id"
+    val stored = ivfIndex.read(s, path, "ivf_cells").columns.toSet - "c_id"
     val appended = Set("vec_id", "emb", "norm") ++ metaCols
     require(appended == stored,
       s"appendToIvfIndex: batch columns ${appended.toSeq.sorted.mkString(",")} != " +
@@ -269,7 +269,7 @@ object IvfIndex {
       val path = ivfIndex.rebuild(s, dir)
       // Declared output = deterministic stats OF THE PERSISTED TABLES
       // (read back, not recomputed): proves the index landed on disk.
-      val cells = s.read.parquet(s"$path/ivf_cells.parquet")
+      val cells = ivfIndex.read(s, path, "ivf_cells")
       val cents = centroids(s, path)
       cells.groupBy($"c_id").agg(count(lit(1)).as("n_vecs"))
         .crossJoin(broadcast(cents.agg(count(lit(1)).as("n_cells"))))
@@ -313,7 +313,7 @@ object IvfIndex {
       // prunes the cells scan to those partitions (IvfSpec pins the
       // pruning in the plan); identical selection to vec_ann_ivf, whose
       // answer this must equal byte-for-byte.
-      val cells = s.read.parquet(s"$path/ivf_cells.parquet")
+      val cells = ivfIndex.read(s, path, "ivf_cells")
       VecOps.ivfRerank(cells, probed, 5, excludeId = lit(0))
     },
 
@@ -376,7 +376,7 @@ object IvfIndex {
         // VecOps.batchNprobeConf for the measured recall gain)
         .filter($"pr" <= VecOps.batchNprobeConf(s))
         .select($"b_id", $"b_emb", $"b_n", $"c_id")
-      val cells = s.read.parquet(s"$path/ivf_cells.parquet")
+      val cells = ivfIndex.read(s, path, "ivf_cells")
       val score = round(
         call_function("dotp", $"emb", $"b_emb") / ($"norm" * $"b_n"), 6)
       val w = Window.partitionBy($"b_id").orderBy($"score".desc, $"vec_id")

@@ -103,17 +103,31 @@ private[graft] final case class LakeArtifact(
     writeStamp(p, st)
   }
 
+  /** One of this artifact's tables at `path`, its schema pinned as in
+    * [[graft.Core.load]] but dialed by the STORED STAMP instead of a
+    * data stamp: a gate append (same schema, new files) keeps the
+    * inferred schema, a rebuild (stamp cleared, then rewritten)
+    * re-infers. A read inside a build, before the stamp lands, has
+    * nothing to pin by and infers. Appending a different schema into a
+    * table is unsupported, as it was under single-footer inference.
+    */
+  def read(s: SparkSession, path: String, table: String): DataFrame = {
+    val st = readStamp(path)
+    if (st.isEmpty) s.read.parquet(s"$path/$table.parquet")
+    else graft.Core.load(s, path, table, Nil, st)
+  }
+
   /** Session-memoized SERVED small table (IVF centroids, PQ codebook):
     * every probe consumes the same few-hundred-row frame, and
-    * re-opening the parquet per query (listing + footer + fresh
-    * codegen) costs more than the data — a real ANN server pins these
-    * next to the index handle. A [[Frames]] entry dialed by the STORED
-    * STAMP, so a rebuild (stamp cleared, then rewritten) can never
-    * serve stale geometry: a mismatched stamp drops and re-reads.
+    * re-opening the parquet per query (listing + fresh codegen) costs
+    * more than the data — a real ANN server pins these next to the
+    * index handle. A [[Frames]] entry dialed by the STORED STAMP, so a
+    * rebuild can never serve stale geometry: a mismatched stamp drops
+    * and re-reads.
     */
   def served(s: SparkSession, path: String, table: String): DataFrame =
     Frames.memo(s, path, s"served/$table", Nil, dials = readStamp(path)) {
-      s.read.parquet(s"$path/$table.parquet").persist()
+      read(s, path, table).persist()
     }
 
   private def stampFile(path: String) = new java.io.File(s"$path/$name.version")

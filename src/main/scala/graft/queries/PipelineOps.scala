@@ -1146,7 +1146,7 @@ object PipelineOps {
       // counting takes at 100 TB: the state is a few KB per group
       // regardless of user cardinality.
       val path = ensureHllState(s, dir)
-      val state = s.read.parquet(s"$path/hll_state.parquet")
+      val state = hllState.read(s, path, "hll_state")
       val batch = loadEvents(s, dir)
         .filter(pmod($"event_id", lit(10)) === 7)
         .groupBy($"event_type")
@@ -1314,7 +1314,7 @@ object PipelineOps {
       // aggregate (c1 = Σ c12 over bigrams sharing the history), so
       // the state is ONE table, not two that could drift.
       val path = ensureLmState(s, dir)
-      val state = s.read.parquet(s"$path/lm_state.parquet")
+      val state = lmState.read(s, path, "lm_state")
       val batchBg = bigramStream(
         TextOps.docTokens(s, dir).filter(pmod($"doc_id", lit(10)) === 7))
       val c12 = state
@@ -1671,7 +1671,7 @@ object PipelineOps {
   private[graft] val nsMixState: LakeArtifact =
     mixState.copy(lineage = Map.empty)((s, dir, path) =>
       graft.sources.Ingest.stageAndSwap(
-        s.read.parquet(s"${ensureMixState(s, dir)}/mix_state.parquet"), path, "mix_state"))
+        mixState.read(s, ensureMixState(s, dir), "mix_state"), path, "mix_state"))
 
   private def ensureNsMixState(s: org.apache.spark.sql.SparkSession, dir: String,
                                ns: String): String = {
@@ -1705,7 +1705,7 @@ object PipelineOps {
                                   ns: String = ""): org.apache.spark.sql.DataFrame = {
     import s.implicits._
     val path = ensureNsMixState(s, dir, ns)
-    val base = s.read.parquet(s"$path/mix_state.parquet")
+    val base = mixState.read(s, path, "mix_state")
     val pdir = new java.io.File(s"$path/mix_partials.parquet")
     val hasPartials = Option(pdir.listFiles())
       .exists(_.exists(_.getName.startsWith("batch=")))
@@ -1784,7 +1784,7 @@ object PipelineOps {
       // their max verbatim would lower merged_upto and re-admit the
       // next replay of anything in between
       val dirMax = batchDirs.map(_.getName.stripPrefix("batch=").toLong).max
-      val newUpto = s.read.parquet(s"$path/mix_state.parquet")
+      val newUpto = mixState.read(s, path, "mix_state")
         .agg(greatest(max($"merged_upto"), lit(dirMax)).as("merged_upto"))
       val merged = readMixState(s, dir, ns).crossJoin(broadcast(newUpto))
       graft.sources.Ingest.stageAndSwap(merged, path, "mix_state")
@@ -1815,7 +1815,7 @@ object PipelineOps {
                                        ns: String): String = {
     import s.implicits._
     val path = ensureNsMixState(s, dir, ns)
-    val cur = s.read.parquet(s"$path/mix_state.parquet")
+    val cur = mixState.read(s, path, "mix_state")
     val upto = cur.agg(max($"merged_upto").as("merged_upto"))
     val merged = cur.drop("merged_upto")
       .unionByName(batchPartials(batch))

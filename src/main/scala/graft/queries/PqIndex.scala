@@ -133,7 +133,7 @@ object PqIndex {
       // the codes frame's own sidecar then splices THROUGH the codebook
       // scan to embeddings.* (the nested-artifact case, r12 ask #9)
       graft.plans.Lineage.writeSidecar(book, s"$path/pq_codebook.parquet")
-      val served = s.read.parquet(s"$path/pq_codebook.parquet")
+      val served = pqIndex.read(s, path, "pq_codebook")
       // pack the 16 assigned nibbles into one long: codes are disjoint
       // 4-bit fields, so sum ≡ bitwise OR — exact integer arithmetic
       val codes = assignCodes(subs, served)
@@ -202,9 +202,9 @@ object PqIndex {
     import s.implicits._
     IvfIndex.ensureIvfIndex(s, dir)
     ensurePqIndex(s, dir)
-    val cells = s.read.parquet(s"$path/ivf_cells.parquet")
+    val cells = IvfIndex.ivfIndex.read(s, path, "ivf_cells")
       .select($"vec_id", $"c_id")
-    val codes = s.read.parquet(s"$path/pq_codes.parquet")
+    val codes = pqIndex.read(s, path, "pq_codes")
       .join(cells, "vec_id")
       .repartition($"c_id")
     codes.write.partitionBy("c_id").mode(SaveMode.Overwrite)
@@ -235,7 +235,7 @@ object PqIndex {
     import s.implicits._
     val path = ensurePqIndex(s, dir)
     val metaCols = batch.columns.filterNot(c => c == "vec_id" || c == "embedding")
-    val stored = s.read.parquet(s"$path/pq_codes.parquet").columns.toSet
+    val stored = pqIndex.read(s, path, "pq_codes").columns.toSet
     val appended = Set("vec_id", "code", "norm") ++ metaCols
     require(appended == stored,
       s"appendToPqIndex: batch columns ${appended.toSeq.sorted.mkString(",")} != " +
@@ -337,8 +337,8 @@ object PqIndex {
       // Declared output = deterministic stats OF THE PERSISTED TABLES
       // (read back): corpus coverage, codebook shape, and the logical
       // bytes-per-vector the compression claim rests on.
-      val codes = s.read.parquet(s"$path/pq_codes.parquet")
-      val book = s.read.parquet(s"$path/pq_codebook.parquet")
+      val codes = pqIndex.read(s, path, "pq_codes")
+      val book = pqIndex.read(s, path, "pq_codebook")
       codes.agg(count(lit(1)).as("n_codes"))
         .crossJoin(broadcast(book.agg(count(lit(1)).as("n_book_rows"))))
         .select($"n_codes", $"n_book_rows",
@@ -370,7 +370,7 @@ object PqIndex {
       val tbl = adcTable(codebook(s, path), q)
       // the scan: one packed long + one stored norm per corpus vector,
       // scored entirely inside whole-stage codegen; TakeOrdered keeps 5
-      s.read.parquet(s"$path/pq_codes.parquet")
+      pqIndex.read(s, path, "pq_codes")
         .crossJoin(broadcast(tbl))
         .filter($"vec_id" =!= 0)
         .select($"vec_id",
@@ -412,7 +412,7 @@ object PqIndex {
       val probed = VecOps.ivfProbe(
         IvfIndex.centroids(s, path).crossJoin(broadcast(q)), $"qemb", $"qnorm")
       val tbl = adcTable(codebook(s, path), q)
-      s.read.parquet(s"$path/ivfpq_codes.parquet")
+      ivfPqIndex.read(s, path, "ivfpq_codes")
         .join(broadcast(probed.select($"c_id")), "c_id")
         .crossJoin(broadcast(tbl))
         .filter($"vec_id" =!= 0)

@@ -518,8 +518,8 @@ object TextOps {
     * propagation over a static corpus (it was 21% of the whole bench).
     * clusterLabels serves from the lake when the stamp is current,
     * rebuilds + persists on mismatch (version bump, crashed write), and
-    * memoizes the lake read per (session, dir, partitions) so the three
-    * consuming entries share one scan. Build-once-serve-many, the same
+    * reads it with the schema pinned per stored stamp, so the three
+    * consuming entries never re-infer it. Build-once-serve-many, the same
     * lifecycle the reference's index follows (engine.py:72-98).
     */
   private[graft] val labelsVersion = IndexOps.simIndexVersion + ";jac0.9;cc-minlabel-v1;lin1"
@@ -541,17 +541,13 @@ object TextOps {
       .parquet(s"$path/labels.parquet")
   }
 
-  /** Served labels, memoized per session and dialed by the stored
+  /** Served labels: the artifact's read pins the schema by the stored
     * stamp, so a rebuilt artifact is re-read. The ensure runs BEFORE
-    * the memo lookup (the Frames lock-order rule): the build looks up
-    * the signature frames under the ensure lock.
+    * that lookup (the Frames lock-order rule): the build looks up the
+    * signature frames under the ensure lock.
     */
-  private[queries] def clusterLabels(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val path = labels.ensure(s, dir)._1
-    Frames.memo(s, dir, "clusterLabels", Nil, labels.storedStamp(dir)) {
-      s.read.parquet(s"$path/labels.parquet")
-    }
-  }
+  private[queries] def clusterLabels(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    labels.read(s, labels.ensure(s, dir)._1, "labels")
 
   /** A gate namespace's labels: same stamp as [[labels]], reseeded by
     * copying the base-corpus labels (no declared sidecar — the gate
@@ -581,15 +577,15 @@ object TextOps {
     */
   private[graft] def maintainGateLabels(s: org.apache.spark.sql.SparkSession, dir: String,
                                         ns: String, batchAdmitted: org.apache.spark.sql.DataFrame,
-                                        lakeTablePath: String): Unit = {
+                                        lakeDir: String, table: String): Unit = {
     val singles = (d: org.apache.spark.sql.DataFrame) =>
       d.select(col("doc_id"), col("doc_id").as("label"))
     // on a reseed the lake already holds THIS batch (committed before
     // the label update), so recovering the whole table covers it — no
     // separate batch append on that path, which would double-write
     val (path, reseeded) = gateLabelsArtifact.ensure(s, dir, ns, recover = p =>
-      if (new java.io.File(lakeTablePath).exists())
-        singles(s.read.parquet(lakeTablePath))
+      if (new java.io.File(s"$lakeDir/$table.parquet").exists())
+        singles(graft.Core.load(s, lakeDir, table))
           .write.mode(org.apache.spark.sql.SaveMode.Append)
           .parquet(s"$p/labels.parquet"))
     if (!reseeded)
@@ -603,7 +599,7 @@ object TextOps {
     */
   private[graft] def gateLabels(s: org.apache.spark.sql.SparkSession, dir: String,
                                 ns: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(IndexOps.indexDir(dir, ns) + "/labels.parquet").distinct()
+    labels.read(s, IndexOps.indexDir(dir, ns), "labels").distinct()
 
   /** The label propagation itself — runs only when the lake artifact is
     * missing or stale (see [[clusterLabels]]).

@@ -354,18 +354,19 @@ object Streams {
         val tablePath = s"$lakeDir/$name.parquet"
         graft.queries.IndexOps.ensureIndexStatus(s, corpusDir, ns, recover = p =>
           if (new java.io.File(tablePath).exists())
-            graft.queries.IndexOps.appendToIndexAt(s, p, s.read.parquet(tablePath)))
+            graft.queries.IndexOps.appendToIndexAt(s, p, graft.Core.load(s, lakeDir, name)))
         val batchDir = s"$tablePath/batch=$batchId"
-        graft.queries.IndexOps.novelDocs(s, corpusDir, batch, ns)
-          .write.mode("overwrite").parquet(batchDir)
+        val novel = graft.queries.IndexOps.novelDocs(s, corpusDir, batch, ns)
+        novel.write.mode("overwrite").parquet(batchDir)
         // index growth reads BACK the committed admission (no lineage
-        // recompute, and exactly what replay would overwrite)
-        val admitted = s.read.parquet(batchDir)
+        // recompute, and exactly what replay would overwrite), with the
+        // schema of the frame just written: no footer inference job
+        val admitted = s.read.schema(novel.schema).parquet(batchDir)
         graft.queries.IndexOps.appendToIndex(s, corpusDir, admitted, ns)
         // incremental cluster maintenance: admitted docs are singleton
         // components by the gate invariant, so the labels artifact
         // stays exactly equal to a from-scratch rebuild (spec'd)
-        graft.queries.TextOps.maintainGateLabels(s, corpusDir, ns, admitted, tablePath)
+        graft.queries.TextOps.maintainGateLabels(s, corpusDir, ns, admitted, lakeDir, name)
         if (batchId % compactEvery == compactEvery - 1)
           graft.queries.IndexOps.compactIndex(s, corpusDir, ns)
         ()
@@ -390,11 +391,12 @@ object Streams {
         val tablePath = s"$lakeDir/$name.parquet"
         graft.queries.IndexOps.ensureVecIndexStatus(s, corpusDir, ns, recover = p =>
           if (new java.io.File(tablePath).exists())
-            graft.queries.IndexOps.appendToVecIndexAt(s, p, s.read.parquet(tablePath)))
+            graft.queries.IndexOps.appendToVecIndexAt(s, p, graft.Core.load(s, lakeDir, name)))
         val batchDir = s"$tablePath/batch=$batchId"
-        graft.queries.IndexOps.novelVectors(s, corpusDir, batch, minCos, ns)
-          .write.mode("overwrite").parquet(batchDir)
-        graft.queries.IndexOps.appendToVecIndex(s, corpusDir, s.read.parquet(batchDir), ns)
+        val novel = graft.queries.IndexOps.novelVectors(s, corpusDir, batch, minCos, ns)
+        novel.write.mode("overwrite").parquet(batchDir)
+        graft.queries.IndexOps.appendToVecIndex(s, corpusDir,
+          s.read.schema(novel.schema).parquet(batchDir), ns)
         if (batchId % compactEvery == compactEvery - 1)
           graft.queries.IndexOps.compactIndex(s, corpusDir, ns)
         ()
@@ -461,7 +463,7 @@ object Streams {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val s = batch.sparkSession
         val path = graft.queries.EmbedOps.ensureEmbedModel(s, corpusDir)
-        val model = s.read.parquet(s"$path/embed_model.parquet")
+        val model = graft.queries.EmbedOps.embedModel.read(s, path, "embed_model")
         val tf = batch
           .select(col("doc_id"), explode(graft.Core.tokens(lower(col("text")))).as("term"))
           .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))

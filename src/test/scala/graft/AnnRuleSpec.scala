@@ -66,6 +66,26 @@ class AnnRuleSpec extends SparkSpecBase {
     } finally spark.conf.set("spark.graft.ann.rewrite", "false")
   }
 
+  test("the rewrite launches no footer job from the optimizer once the cells schema is warm") {
+    graft.plans.AnnTopKRule.install(spark)
+    val path = graft.queries.IvfIndex.ensureIvfIndex(spark, dir)
+    val q = q0
+    spark.conf.set("spark.graft.ann.rewrite", "true")
+    try {
+      graft.plans.AnnTopK.cosineTopK(spark, dir, q, 5).queryExecution.optimizedPlan
+      // what any read of the cells costs: 0 jobs, unless the table has
+      // more cell dirs than Spark lists on the driver
+      // (spark.sql.sources.parallelPartitionDiscovery.threshold, 32) —
+      // then one listing job per read, inside the optimizer too
+      val listing = jobsDuring(graft.queries.IvfIndex.ivfIndex.read(spark, path, "ivf_cells"))
+      val df = graft.plans.AnnTopK.cosineTopK(spark, dir, q, 5)
+      assert(jobsDuring(df.queryExecution.optimizedPlan) == listing,
+        "the rewrite must add no job to the cells read (the read pins its schema)")
+      assert(df.queryExecution.executedPlan.toString.contains("ivf_cells"),
+        "the rule must have fired for the assertion to mean anything")
+    } finally spark.conf.set("spark.graft.ann.rewrite", "false")
+  }
+
   test("rule refuses near-miss shapes: extra predicate or different round scale keeps the exact plan") {
     // The matcher's contract is "this IS the declared form" — a
     // superset match would let the rewrite silently drop a user

@@ -12,30 +12,17 @@ import graft.SparkEntry
   *    exactly as on a fresh directory holding the rewritten data;
   *  - a dial move supersedes: it leaves one persisted verified frame;
   *  - racing callers share one build;
+  *  - the census counts a warm lookup as a hit and a stamp change as a
+  *    supersede;
   *  - the listStatus-walk data stamp is byte-identical to the
   *    listFiles-based fingerprint it replaced.
   */
 class FramesSpec extends graft.SparkSpecBase {
   import spark.implicits._
 
-  private def copyOf(from: String, prefix: String): String = {
-    val tmp = Files.createTempDirectory(prefix)
-    val src = new File(from).toPath
-    Files.walk(src).forEach { p =>
-      val to = tmp.resolve(src.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
-    }
-    tmp.toString
-  }
-
   private lazy val live: String = copyOf(sf("sf0.001"), "graft-frames-live")
   private lazy val fresh: String = copyOf(sf("sf0.001"), "graft-frames-fresh")
   private lazy val stampDir: String = Files.createTempDirectory("graft-frames-stamp").toString
-
-  private def rm(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(rm)
-    f.delete(); ()
-  }
 
   override def afterAll(): Unit = {
     Frames.release(spark)
@@ -117,6 +104,21 @@ class FramesSpec extends graft.SparkSpecBase {
     got(0).count()
     assert(spark.sparkContext.getPersistentRDDs.size == n + 1,
       "one build, one persisted frame")
+  }
+
+  test("census: a warm load counts one schema hit, an in-session rewrite one supersede") {
+    val dir = copyOf(sf("sf0.001"), "graft-frames-census")
+    def schema = Frames.census(spark).getOrElse("schema", Frames.Census(0, 0, 0))
+    try {
+      graft.Core.load(spark, dir, "customer")
+      val warm = schema
+      graft.Core.load(spark, dir, "customer")
+      assert(schema == warm.copy(hits = warm.hits + 1))
+      spark.read.parquet(s"${sf("sf0.001")}/customer.parquet").limit(10)
+        .write.mode("overwrite").parquet(s"$dir/customer.parquet")
+      graft.Core.load(spark, dir, "customer")
+      assert(schema == warm.copy(hits = warm.hits + 1, supersedes = warm.supersedes + 1))
+    } finally rm(new File(dir))
   }
 
   test("dataStamp's listStatus walk matches the listFiles fingerprint byte for byte") {
