@@ -1,35 +1,51 @@
 package graft
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
-import scala.util.control.NonFatal
+import graft.obs.Profiler
 object Bench {
   /** A failed warmup, entry or setup step keeps its +Inf/-1 marker AND
     * names its cause on stderr; fatal JVM errors propagate.
     */
-  private def reportFailure(name: String, e: Throwable): Unit =
-    System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+  private def reportFailure(name: String, cause: String): Unit =
+    System.err.println(s"[bench] $name failed: $cause")
+
+  /** The named setup steps, in run order. Each is memoized or persisted,
+    * so it is timed once: with min-of-two timing the first consumer run
+    * would otherwise absorb each build and attribute it nowhere.
+    *  - setup_shared_frames: the session-memoized shared materializations
+    *    (postings, word 3-grams, token-set signatures, vector band
+    *    signatures). FIRST: it builds the signature table and the
+    *    verified pair graph that a cold clusterLabels would otherwise
+    *    trigger, so setup_dedup_clusters pays ONLY the label propagation
+    *    + persist (cold-profile at sf0.1: tokenize 6.2s + sign 2.2s +
+    *    verify 3.9s attributed to shared_frames; propagation 8.1s to
+    *    dedup_clusters);
+    *  - setup_dedup_clusters: the (doc_id, label) lake artifact — serves
+    *    from labels.parquet when the version stamp is current, runs the
+    *    propagation only on a cold/stale lake;
+    *  - setup_clean_corpus: the curation compositions' shared
+    *    clean-corpus spine — after clusters (it consumes the labels
+    *    artifact) so each step pays only its own marginal;
+    *  - setup_bpe_model: the BPE merge-table training loop (memoized per
+    *    session/dir), else absorbed into text_bpe_train's first run;
+    *  - `IndexOps.warmSteps`: each persisted index/state family ensured
+    *    current as ITS OWN named line — a COLD lake (fresh checkout,
+    *    version bump) pays its builds here, named per artifact, instead
+    *    of inside whichever probe entry runs first, and one broken
+    *    family can't -1.0 the others' attribution (r9: the HLL crash
+    *    zeroed the whole chain).
+    */
+  val setupSteps: Seq[(String, (SparkSession, String) => Unit)] =
+    Seq[(String, (SparkSession, String) => Unit)](
+      "setup_shared_frames" -> (queries.TextOps.warmSharedFrames _),
+      "setup_dedup_clusters" -> (queries.TextOps.warmDedupClusters _),
+      "setup_clean_corpus" -> (queries.PipelineOps.warmCleanCorpus _),
+      "setup_bpe_model" -> ((s, d) => { queries.TokenizerOps.trainBpe(s, d); () })) ++
+      queries.IndexOps.warmSteps
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // serving conf: the index probes push multi-probe rings as
-      // In(bucket, keys) — below this threshold Spark expands the In
-      // into an OR-chain of eq's for parquet (real row-group skipping);
-      // above it, a [min,max] range check. 1024 is a CEILING, not a
-      // stale default: parquet-mr evaluates the OR-chain recursively,
-      // and a dialed w=26 ring (2,952 keys) overflows the executor
-      // stack (measured at the 25× fixture) — so wide-ring probes
-      // deliberately take the range fallback (see vec_index_probe).
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Core.localSession(cpus, "graft-bench")
     // Noise-floor calibration (r11 verdict ask #4): a FIXED trivial plan
     // — 1M-row range summed across 32 tasks, no IO, no shuffle — timed
     // at run start and run end. On a quiet box this is ~0.05-0.15 s; a
@@ -51,80 +67,6 @@ object Bench {
       Seq.fill(3)(once()).min
     }
     val floorStart = noiseFloor()
-    // Per-entry shuffle records/bytes (r14 verdict ask #2): wall clock on
-    // this box swings 5-10× with neighbour load, but shuffle records are
-    // a property of the PLAN — the round-over-round regression signal of
-    // record. The listener accumulates stage-level shuffle-write metrics;
-    // counters are reset before each entry's SECOND timed run (the warm,
-    // steady-state one — records are plan-deterministic, so either run
-    // reads the same) and snapshotted after a short event-bus drain.
-    val shufRecs = new AtomicLong(0)
-    val shufBytes = new AtomicLong(0)
-    // Environment-stability counters (r16 verdict ask #2): the r16
-    // artifacts showed shared-frame consumers reading 3-4× more records
-    // in the driver's fleet run than in tree-identical quiet runs —
-    // records were sold as a property of the PLAN, but RE-EXECUTION is
-    // invisible in shuffle-write totals: a task that fails (GC stall,
-    // fetch timeout under contention) is re-run and its shuffle rows
-    // are WRITTEN AGAIN into the same counter, and a stage retry
-    // re-writes the whole stage. So the listener now counts failed
-    // tasks and retried stage attempts per entry; bench_diff treats a
-    // run (or an entry) with re-execution as non-comparable instead of
-    // reporting its inflated records as plan movers.
-    val failedTasks = new AtomicLong(0)
-    val stageRetries = new AtomicLong(0)
-    // THE confirmed false-mover channel (r16 forensics, see SCALE.md):
-    // a map-side hash aggregate that exhausts its execution-memory
-    // grant SPILLS and emits partially-unaggregated rows — the SAME
-    // plan writes MORE shuffle records under memory pressure. Spill
-    // bytes are the direct witness.
-    val spillBytes = new AtomicLong(0)
-    // Environment-episode witnesses (r17 verdict ask #1): the r17
-    // driver artifact carried an 11-entry window (exec positions
-    // 226-236) where EVERY entry read 3-11x its quiet wall — the
-    // "anti-scaling class" — while records stayed bit-identical and
-    // the 50-entry floor probes (at 200; next would have been 250 >
-    // n_entries) bracketed it invisibly. Two per-entry counters make
-    // such a window self-describing in the artifact: task run time
-    // (sum of executorRunTime — a contended/paused entry's WALL
-    // inflates while its task work doesn't) and JVM GC time delta (a
-    // GC storm shows directly). Consumers read wall >> taskRun at
-    // records parity as environment, not plan.
-    val taskRunMs = new AtomicLong(0)
-    def gcMs(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-    }
-    val lastEvent = new AtomicLong(System.nanoTime())
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) {
-          shufRecs.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-          shufBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          spillBytes.addAndGet(m.memoryBytesSpilled)
-          taskRunMs.addAndGet(m.executorRunTime)
-        }
-        if (sc.stageInfo.attemptNumber() > 0) stageRetries.incrementAndGet()
-        lastEvent.set(System.nanoTime())
-      }
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        // count only GENUINE failures (the re-execution channel that
-        // re-writes shuffle rows) — a TaskKilled end (job cancelled
-        // after an entry's -1 crash convention, speculative kill)
-        // involves no re-execution and must not brand the run
-        // non-comparable
-        te.reason match {
-          case org.apache.spark.Success =>
-          case _: org.apache.spark.TaskKilled =>
-          case _ if te.taskInfo != null && !te.taskInfo.successful =>
-            failedTasks.incrementAndGet()
-          case _ =>
-        }
-        lastEvent.set(System.nanoTime())
-      }
-    })
     // Shared-cache stability probe (the OTHER re-execution channel):
     // a persisted/localCheckpointed block evicted past its disk copy
     // forces consumers to recompute upstream stages, attributing the
@@ -136,13 +78,6 @@ object Bench {
     def cacheCensus(): Map[Int, Int] =
       spark.sparkContext.getRDDStorageInfo
         .map(i => i.id -> i.numCachedPartitions).toMap
-    // listener events are async — wait for 150ms of bus silence (short:
-    // ~250 entries pay this once each; events land within single-digit ms
-    // on an idle bus, and a missed straggler only shifts a few records
-    // between adjacent entries, never the seconds)
-    def drain(): Unit =
-      while ((System.nanoTime() - lastEvent.get()) < 150L * 1000 * 1000)
-        Thread.sleep(25)
     // Untimed warmup: JIT + codegen + parquet footer caches, so the first
     // timed query doesn't absorb ~5s of JVM warmup. One cheap query per
     // module family — relational, text (tokenize/explode paths), vector
@@ -152,8 +87,47 @@ object Bench {
       // a stale name must fail loudly — a silently-skipped warmup hands
       // that family's JIT debt back to its first timed query
       require(SparkEntry.queries.contains(w), s"warmup query '$w' no longer exists")
-      try SparkEntry.queries(w)(spark, sfDir).count()
-      catch { case NonFatal(e) => reportFailure(w, e) }
+      Profiler.measure(spark)(SparkEntry.queries(w)(spark, sfDir).count())
+        .failure.foreach(reportFailure(w, _))
+    }
+    // Per-entry records, each a Profiler record's 7 slots: [shuffle
+    // records, shuffle bytes, failed tasks, stage retries, spill bytes,
+    // GC ms, task run ms].
+    //  - Shuffle records (r14 verdict ask #2): wall clock on this box
+    //    swings 5-10× with neighbour load, but shuffle records are a
+    //    property of the PLAN — the round-over-round regression signal
+    //    of record. They come from an entry's SECOND timed run (the
+    //    warm, steady-state one; plan-identical to the first).
+    //  - Failed tasks and stage retries (r16 verdict ask #2):
+    //    RE-EXECUTION is invisible in shuffle-write totals — a task that
+    //    fails (GC stall, fetch timeout under contention) is re-run and
+    //    its shuffle rows are WRITTEN AGAIN, and a stage retry re-writes
+    //    the whole stage; bench_diff treats a run (or an entry) with
+    //    re-execution as non-comparable instead of reporting its
+    //    inflated records as plan movers. A recorded run that ABORTED
+    //    driver-side (+Inf/-1 by the failure conventions) leaves
+    //    partially-accumulated records whose in-flight tasks end as
+    //    TaskKilled (not re-execution), so its failed slot is poisoned
+    //    with +1: without it the truncated snapshot would diff as a clean
+    //    plan mover (e.g. a false "records dropped 40%").
+    //  - Spill bytes: THE confirmed false-mover channel (r16 forensics,
+    //    see SCALE.md) — a map-side hash aggregate that exhausts its
+    //    execution-memory grant SPILLS and emits partially-unaggregated
+    //    rows, so the SAME plan writes MORE shuffle records.
+    //  - GC ms and task run ms (r17 verdict ask #1): the environment
+    //    witnesses — a contended/paused entry's WALL inflates while its
+    //    task work doesn't, and a GC storm shows directly. Consumers read
+    //    wall >> taskRun at records parity as environment, not plan.
+    val recMap = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Long]]
+    def slotSum(i: Int): Long = recMap.values.map(_(i)).sum
+    // the recorded run's failure cause per entry or setup step
+    val failures = scala.collection.mutable.Map.empty[String, String]
+    def record(name: String, r: Profiler.Record): Unit = {
+      val c = r.counters
+      recMap(name) = Vector(c.shuffleRecords, c.shuffleBytes,
+        c.failedTasks + (if (r.failed) 1 else 0), c.stageRetries, c.spillBytes,
+        r.gcMs, c.taskRunMs)
+      r.failure.foreach(failures(name) = _)
     }
     // Each query is timed twice and the MIN reported: the first pass pays
     // JIT compilation, codegen-class loading, and GC debt accumulated by
@@ -162,47 +136,9 @@ object Bench {
     // A failed run times as +Inf so the min reports the SUCCESSFUL run
     // (a fast crash must not masquerade as a speedup); a query failing
     // both runs emits -1 as an explicit failure marker.
-    def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-      catch { case NonFatal(e) => reportFailure(name, e); Double.PositiveInfinity }
-    }
-    // Named setup steps, timed once each (they are memoized/persisted —
-    // a second run would measure the cache):
-    //  - setup_dedup_clusters: the (doc_id, label) lake artifact — serves
-    //    from labels.parquet when the version stamp is current, runs the
-    //    propagation only on a cold/stale lake;
-    //  - setup_shared_frames: the session-memoized shared materializations
-    //    (postings, word 3-grams, token-set signatures, vector band
-    //    signatures). With min-of-two timing the first consumer run would
-    //    silently absorb each cache build and the build cost would be
-    //    attributed NOWHERE; these lines own the one-time costs so every
-    //    per-query number below is an explicit warm marginal cost.
-    // per-entry (records, bytes, failed tasks, stage retries, spill
-    // bytes) snapshots, keyed like the seconds map — the last three
-    // mark an entry whose records embed re-execution or spill-inflated
-    // partial aggregation (non-comparable as plan evidence)
-    // slots 6/7 are the environment witnesses: GC-time delta (ms) and
-    // summed executorRunTime (ms) across the recorded run's stages
-    val recMap = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long, Long, Long, Long, Long, Long)]
-    def recorded(name: String)(run: => Double): Double = {
-      drain(); shufRecs.set(0); shufBytes.set(0)
-      failedTasks.set(0); stageRetries.set(0); spillBytes.set(0)
-      taskRunMs.set(0)
-      val gc0 = gcMs()
-      val sec = run
-      // a recorded run that ABORTED driver-side (+Inf/-1 by the failure
-      // conventions) leaves partially-accumulated records — its
-      // in-flight tasks end as TaskKilled, which the listener rightly
-      // no longer counts as re-execution, so without this poison the
-      // truncated snapshot would diff as a clean plan mover (e.g. a
-      // false "records dropped 40%"). Marking the failed slot makes
-      // bench_diff annotate the entry [RE-EXEC - not a plan mover].
-      val aborted = if (sec.isInfinity || sec < 0) 1L else 0L
-      drain(); recMap(name) = (shufRecs.get, shufBytes.get,
-        failedTasks.get + aborted, stageRetries.get, spillBytes.get,
-        gcMs() - gc0, taskRunMs.get)
-      sec
+    def timed(name: String, r: Profiler.Record): Double = r.failure match {
+      case Some(cause) => reportFailure(name, cause); Double.PositiveInfinity
+      case None => r.wallS
     }
     // rebuilt-vs-current flags (r16 verdict ask #6): which stamped lake
     // artifacts THIS run rebuilt (cold lake / stamp bump / fixture
@@ -217,41 +153,14 @@ object Bench {
       queries.LakeArtifact.drainJournal(): _*)
     def drainTagged(name: String): Seq[String] =
       queries.LakeArtifact.drainJournal().map(r => s"$r#$name")
-    def setupStep(name: String)(f: => Unit): (String, Double) =
-      name -> recorded(name) {
-        val t0 = System.nanoTime()
-        val ok = try { f; true } catch { case NonFatal(e) => reportFailure(name, e); false }
-        rebuiltSetupRows ++= drainTagged(name)
-        // same failure convention as timed(): -1, never elapsed-until-crash
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      }
-    //  - setup_{sim,vec,ivf,pq,ivfpq}_index / setup_{mix,hll}_state: each
-    //    persisted index/state family ensured current as ITS OWN named
-    //    line — a COLD lake (fresh checkout, version bump) pays its
-    //    builds here, named per artifact, instead of inside whichever
-    //    probe entry runs first (probe timings stay warm serving
-    //    marginals), and one broken family can't -1.0 the others'
-    //    attribution (r9: the HLL crash zeroed the whole chain).
-    // shared frames FIRST: warmSharedFrames builds the signature table
-    // and the verified pair graph that a cold clusterLabels would
-    // otherwise trigger, so this order leaves setup_dedup_clusters
-    // paying ONLY the label propagation + persist (cold-profile at
-    // sf0.1: tokenize 6.2s + sign 2.2s + verify 3.9s attributed to
-    // shared_frames; propagation 8.1s to dedup_clusters)
-    val setups = Seq(
-      setupStep("setup_shared_frames") { queries.TextOps.warmSharedFrames(spark, sfDir) },
-      setupStep("setup_dedup_clusters") { queries.TextOps.warmDedupClusters(spark, sfDir) },
-      // the curation compositions' shared clean-corpus spine — after
-      // clusters (it consumes the labels artifact) so each step pays
-      // only its own marginal
-      setupStep("setup_clean_corpus") { queries.PipelineOps.warmCleanCorpus(spark, sfDir) },
-      // the BPE merge-table training loop (memoized per session/dir) —
-      // without this line min-of-two timing would absorb the training
-      // into text_bpe_train's first run and attribute it nowhere
-      setupStep("setup_bpe_model") { queries.TokenizerOps.trainBpe(spark, sfDir); () }) ++
-      queries.IndexOps.warmSteps.map { case (name, f) =>
-        setupStep(name) { f(spark, sfDir) }
-      }
+    val setups = setupSteps.map { case (name, f) =>
+      val r = Profiler.measure(spark)(f(spark, sfDir))
+      rebuiltSetupRows ++= drainTagged(name)
+      record(name, r)
+      r.failure.foreach(reportFailure(name, _))
+      // same failure convention as the entries: -1, never elapsed-until-crash
+      name -> (if (r.failed) -1.0 else r.wallS)
+    }
     // the setup phase's rebuilds; a mid-run rebuild (an entry touching
     // a family no setup owns) lands in rebuilt_midrun instead
     val rebuiltSetup = rebuiltSetupRows.toSeq
@@ -274,8 +183,11 @@ object Bench {
       if (i > 0 && i % 25 == 0) midFloors += ((i, name, noiseFloor()))
       // records come from the SECOND run (steady-state; plan-identical to
       // the first, so the snapshot is run-order independent)
-      val t1 = timed(name, fn)
-      val t2 = recorded(name)(timed(name, fn))
+      def run() = Profiler.measure(spark)(fn(spark, sfDir).count())
+      val t1 = timed(name, run())
+      val r = run()
+      record(name, r)
+      val t2 = timed(name, r)
       rebuiltMidRows ++= drainTagged(name)
       val m = math.min(t1, t2)
       name -> (if (m.isInfinity) -1.0 else m)
@@ -290,19 +202,21 @@ object Bench {
     val qs = sorted
       .map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // per-entry [shuffle records, shuffle bytes, failed tasks, stage
-    // retries, spill bytes], same ascending-by-time order as the
-    // seconds so the expensive entries' records survive a
-    // head-truncated log capture too (bench_diff reads both this
-    // 5-element form and the legacy 2-element one)
+    // per-entry records (the 7 slots above), same ascending-by-time
+    // order as the seconds so the expensive entries' records survive a
+    // head-truncated log capture too (bench_diff also reads the legacy
+    // 5- and 2-element forms)
     val recs = sorted
+      .flatMap { case (k, _) => recMap.get(k).map(r => s"\"$k\":" + r.mkString("[", ",", "]")) }
+      .mkString("{", ",", "}")
+    // each failed recorded run's cause, same order, so a -1 names why
+    val fails = sorted
       .flatMap { case (k, _) =>
-        recMap.get(k).map(r =>
-          s"\"$k\":[${r._1},${r._2},${r._3},${r._4},${r._5},${r._6},${r._7}]") }
+        failures.get(k).map(c => s"\"$k\":" + Core.jsonString(c.take(200))) }
       .mkString("{", ",", "}")
     val recTotals =
-      s""""shuf_recs_total":${recMap.values.map(_._1).sum},""" +
-        s""""shuf_mb_total":${recMap.values.map(_._2).sum / 1e6}"""
+      s""""shuf_recs_total":${slotSum(0)},""" +
+        s""""shuf_mb_total":${slotSum(1) / 1e6}"""
     // failures are excluded from the headline sum: a query regressing
     // into a crash must not LOWER the total and read as a speedup
     val total = results.map(_._2).filter(_ >= 0).sum
@@ -340,9 +254,9 @@ object Bench {
     val stability =
       s""""heap_mb":${Runtime.getRuntime.maxMemory() / (1L << 20)},""" +
         s""""cpus":$cpus,""" +
-        s""""task_failures_total":${recMap.values.map(_._3).sum},""" +
-        s""""stage_retries_total":${recMap.values.map(_._4).sum},""" +
-        s""""spill_mb_total":${recMap.values.map(_._5).sum / 1e6},""" +
+        s""""task_failures_total":${slotSum(2)},""" +
+        s""""stage_retries_total":${slotSum(3)},""" +
+        s""""spill_mb_total":${slotSum(4) / 1e6},""" +
         s""""cached_parts_start":${cacheStart.values.sum},""" +
         s""""cached_parts_end":${cacheEnd.values.sum},""" +
         s""""cache_stable":$cacheStable,""" +
@@ -361,7 +275,7 @@ object Bench {
     val floors =
       s""""noise_floor_start":$floorStart,"noise_floor_end":$floorEnd,"noise_floor_mid":$mids"""
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec",$floors,$recTotals,$stability,"queries":$qs,"records":$recs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec",$floors,$recTotals,$stability,"queries":$qs,"records":$recs,"failures":$fails,"sf":"$sfDir"}"""
     // Truncation-proof per-query seconds (r17 verdict ask #7): the r16
     // round-over-round comparison was LOST because the single giant
     // full line got tail-truncated in the driver's log capture, taking
@@ -450,9 +364,9 @@ object Bench {
     val stabilityTail =
       s""""heap_mb":${Runtime.getRuntime.maxMemory() / (1L << 20)},""" +
         s""""cpus":$cpus,""" +
-        s""""task_failures_total":${recMap.values.map(_._3).sum},""" +
-        s""""stage_retries_total":${recMap.values.map(_._4).sum},""" +
-        s""""spill_mb_total":${recMap.values.map(_._5).sum / 1e6},""" +
+        s""""task_failures_total":${slotSum(2)},""" +
+        s""""stage_retries_total":${slotSum(3)},""" +
+        s""""spill_mb_total":${slotSum(4) / 1e6},""" +
         s""""cache_stable":$cacheStable,""" +
         s""""cache_dropped_n":$cacheDropped,""" +
         s""""rebuilt_setup_n":${rebuiltSetup.size},"rebuilt_midrun_n":${rebuiltMid.size}"""

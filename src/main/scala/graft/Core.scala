@@ -41,6 +41,49 @@ object Core {
     Entry(name, fn, Some(oracle))
   def entryNoOracle(name: String)(fn: QFn): Entry = Entry(name, fn, None)
 
+  /** The local session Bench, Verify, Profile and the suite run on: `cpus`
+    * threads and as many shuffle partitions (records are a property of
+    * the plan AND this parallelism), UTC, nanosecond timestamps read as
+    * longs, no UI, plus `conf` (static confs included) on top.
+    *
+    * The In-pushdown threshold is a serving conf: the index probes push
+    * multi-probe rings as In(bucket, keys) — below the threshold Spark
+    * expands the In into an OR-chain of eq's for parquet (real row-group
+    * skipping); above it, a [min,max] range check. 1024 is a CEILING,
+    * not a stale default: parquet-mr evaluates the OR-chain recursively,
+    * and a dialed w=26 ring (2,952 keys) overflows the executor stack
+    * (measured at the 25× fixture) — so wide-ring probes deliberately
+    * take the range fallback (see vec_index_probe).
+    */
+  def localSession(cpus: Int, app: String, conf: Map[String, String] = Map.empty): SparkSession = {
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName(app)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
+      .config("spark.ui.enabled", "false")
+    conf.foreach { case (k, v) => b.config(k, v) }
+    val s = b.getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** `s` as a JSON string literal. Escapes backslash, quote and ALL
+    * control chars (<0x20): a tab or CR left raw makes a consumer's
+    * json.load fail on the whole line.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** Lake loader — a declarative parquet scan, so Catalyst pushes
     * filters/projections into the parquet reader (PushedFilters /
     * ReadSchema; SURVEY.md §4.2).

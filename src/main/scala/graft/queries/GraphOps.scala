@@ -472,10 +472,10 @@ object GraphOps {
       // r18: LAZY checkpoints through the loop — the convergence probe
       // (a full aggregate) materializes each round's frame in the SAME
       // job that reads it, so every round costs one driver round-trip
-      // instead of two (ScaleDiag measured this entry at 77 jobs with
-      // 2.2 s of inter-job gap on 1.5 s of job wall — the loop is
-      // driver-latency-bound, the per-job-constant class the r17
-      // verdict flagged). Lineage truncation and block persistence are
+      // instead of two (measured at 77 jobs with 2.2 s of inter-job gap
+      // on 1.5 s of job wall — the loop is driver-latency-bound, the
+      // per-job-constant class the r17 verdict flagged; reproduce with
+      // `Test/runMain graft.Profile <sfDir> graph_components --jobs`). Lineage truncation and block persistence are
       // unchanged; only the eager count() per checkpoint is gone.
       val edges = e0.unionByName(e0.select($"b".as("a"), $"a".as("b")))
         .select($"a".as("src"), $"b".as("dst")).localCheckpoint(false)

@@ -224,9 +224,6 @@ object IndexOps {
       // line, never inside a consumer's timing
       "setup_fact_layout" -> ((s, d) => { FactLayout.ensure(s, d); () }))
 
-  private[graft] def warmPersistedIndexes(s: SparkSession, dir: String): Unit =
-    warmSteps.foreach { case (_, f) => f(s, dir) }
-
   /** Absolute lake-artifact base for the fixture being verified — the
     * persisted-artifact oracle device (mm_image_dedup, round 12):
     * index-family oracles resolve their read_parquet paths against THIS
@@ -586,8 +583,9 @@ object IndexOps {
       // left side carried a 64-double b_emb per candidate row into the
       // corpus join). cand is bounded by |batch| × the width dial's
       // ring budget (~3 random collisions per band × 4 bands + true
-      // neighbors — VecWidthDiag measured ~18-25/vector at every
-      // fixture), and the batch is admission-bounded by contract, so
+      // neighbors — a since-retired candidate-mass count measured
+      // ~18-25/vector at every fixture; the recorded result stands), and
+      // the batch is admission-bounded by contract, so
       // both broadcasts are id/score-slim. That bound only covers
       // RANDOM collisions, though — a duplicate-heavy batch against a
       // dense corpus cluster makes candidates scale with

@@ -357,10 +357,9 @@ object TextOps {
   }
 
   /** The cold-lake dedup-clusters build broken into its dependency
-    * phases, for graft.ColdProfile — each phase's count() warms the
-    * session memo the next phase consumes, so the printed increments
-    * attribute the cold cost (tokenize vs sign vs verify vs propagate)
-    * without widening any real API.
+    * phases — each phase's count() warms the session memo the next phase
+    * consumes, so a caller can drive one phase (FramesSpec drives
+    * verifiedPairs) without widening any real API.
     */
   private[graft] def coldPhases(s: org.apache.spark.sql.SparkSession, dir: String): Seq[(String, () => Unit)] = Seq(
     "docTokens"      -> (() => { docTokens(s, dir).count(); () }),
@@ -384,7 +383,8 @@ object TextOps {
     // branches' critical paths are ~3 s each at sf0.1, and starting the
     // vector side after docTokens serialized them for no reason
     // (sequential profile: docTokens 3.0 s, kmeansCells 3.1 s,
-    // bandedSigs 0.6 s — WarmFramesProfile). Then the base tokenized
+    // bandedSigs 0.6 s — per-frame timings by a since-retired profiler
+    // main; the recorded result stands). Then the base tokenized
     // frame — every text-side frame derives from it — then the derived
     // text builds CONCURRENTLY: they are independent Spark jobs and
     // sequential counts left the scheduler idle at each job's tail
@@ -1183,7 +1183,8 @@ object TextOps {
       // Exact token-set Jaccard ≥ 0.8 over DISTINCT hashed sets, via a
       // SIZE-BANDED verify-everything join — chosen over the classic
       // AllPairs/PPJoin prefix filter BY MEASUREMENT on this corpus
-      // shape (JaccardDiag at sf0.1): sets are tiny (~20 tokens from a
+      // shape (a since-retired stage replica at sf0.1; the recorded
+      // result stands): sets are tiny (~20 tokens from a
       // shared vocabulary) and ~18% of all set pairs are true matches,
       // so the rarity-prefix filter kept 3.48M of the 3.88M
       // size-compatible pairs — i.e. it filtered almost nothing — while

@@ -17,15 +17,9 @@ package graft
 object AnnInjectedMain {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .appName("ann-injected-check")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.graft.ann.rewrite", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val s = Core.localSession(4, "ann-injected-check", Map(
+      "spark.sql.extensions" -> "graft.GraftExtensions",
+      "spark.graft.ann.rewrite" -> "true"))
     try {
       import s.implicits._
       // the index is built OUTSIDE the optimizer (the rule never

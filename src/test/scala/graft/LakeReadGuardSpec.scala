@@ -10,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * stamp covers, keyed `<file>.<enclosing def>`, one reason each.
   */
 class LakeReadGuardSpec extends AnyFunSuite {
+  import LakeReadGuardSpec.sources
 
   private val allowed: Map[String, String] = Map(
     "Core.load" -> "the pinned-schema read itself",
@@ -27,11 +28,6 @@ class LakeReadGuardSpec extends AnyFunSuite {
   private val parquetRead =
     """\bread\s*(\.schema\([^)]*\))?\s*\.parquet\(|\bread\s*\.format\("parquet"\)|\bread\s*\.load\(""".r
   private val defLine = """^\s*(?:(?:private|protected)(?:\[\w+\])?\s+|override\s+|final\s+)*def\s+(\w+)""".r
-
-  private def sources(d: File): Seq[File] =
-    Option(d.listFiles()).getOrElse(Array.empty[File]).toSeq.flatMap { f =>
-      if (f.isDirectory) sources(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    }
 
   /** `<file>.<enclosing def>` -> `path:line` of every parquet read. */
   private lazy val reads: Seq[(String, String)] =
@@ -60,4 +56,12 @@ class LakeReadGuardSpec extends AnyFunSuite {
     val stale = allowed.keySet -- reads.map(_._1)
     assert(stale.isEmpty, s"allowlist entries with no read left: ${stale.mkString(", ")}")
   }
+}
+
+object LakeReadGuardSpec {
+  /** Every `.scala` file under `d`. */
+  def sources(d: File): Seq[File] =
+    Option(d.listFiles()).getOrElse(Array.empty[File]).toSeq.flatMap { f =>
+      if (f.isDirectory) sources(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    }
 }
