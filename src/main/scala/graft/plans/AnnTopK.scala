@@ -369,7 +369,7 @@ case class AnnTopKRule(spark: SparkSession)
     // run inside the optimizer.
     val nprobe =
       if (residuals.isEmpty) VecOps.nprobeConf(spark)
-      else IvfIndex.readMetaStats(path) match {
+      else IvfIndex.readMetaStats(spark, path) match {
         case None => math.min(64, VecOps.nprobeConf(spark) * 2) // stats unreadable: legacy dial
         case Some(st) =>
           if (st.total <= 0) return gl

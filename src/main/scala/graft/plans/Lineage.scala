@@ -1,6 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import graft.queries.LakeFs
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeMap, Generator}
 import org.apache.spark.sql.catalyst.plans.logical.{Expand, Generate, LeafNode, LogicalPlan, Union}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -62,63 +63,46 @@ object Lineage {
     * (Overwrite deletes the dir) and BEFORE the stamp.
     */
   def writeSidecar(df: DataFrame, path: String): Unit =
-    writeSidecar(path, columnLineage(df))
+    writeSidecar(df.sparkSession, path, columnLineage(df))
 
   /** Explicit-map overload for builders whose plan lineage is truncated
     * by iteration checkpoints (localCheckpoint leaves a LogicalRDD).
     *
-    * Writes through the SAME Hadoop FileSystem API the reader resolves
-    * with, so a non-local lake (s3a/hdfs) gets its sidecar too — a
-    * java.io write here would throw after the parquet commit but before
-    * the stamp on exactly the deployments the read path supports. And
-    * like the reader, failure DEGRADES: the sidecar is metadata, so a
-    * write error must not abort a committed artifact build — lineage
-    * then truthfully dead-ends at the artifact.
+    * Written through [[LakeFs]] like every lake file. Like the reader,
+    * failure DEGRADES: the sidecar is metadata, so a write error must
+    * not abort a committed artifact build — lineage then truthfully
+    * dead-ends at the artifact.
     */
-  def writeSidecar(path: String, lin: Map[String, Set[String]]): Unit = {
+  def writeSidecar(s: SparkSession, path: String, lin: Map[String, Set[String]]): Unit = {
     val sb = new StringBuilder
     lin.toSeq.sortBy(_._1).foreach { case (c, srcs) =>
       sb.append(enc(c)).append('\t')
         .append(srcs.toSeq.sorted.map(enc).mkString(",")).append('\n')
     }
-    try {
-      val conf = org.apache.spark.sql.SparkSession.getActiveSession
-        .map(_.sessionState.newHadoopConf())
-        .getOrElse(new org.apache.hadoop.conf.Configuration())
-      val p = new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(path), sidecarName)
-      val fs = p.getFileSystem(conf)
-      val out = fs.create(p, true)
-      try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
-    } catch {
+    try LakeFs.writeText(LakeFs(s, path), s"$path/$sidecarName", sb.toString)
+    catch {
       case e: Exception =>
         System.err.println(
           s"[lineage] sidecar write failed for $path (lineage will dead-end at the artifact): ${e.getMessage}")
     }
   }
 
-  /** Parse (and mtime-cache) an artifact scan's sidecar, resolved
-    * through the Hadoop FileSystem API so a non-local lake works; any
-    * failure degrades to None (lineage then truthfully names the
-    * artifact — never throws from inside an analysis walk).
+  /** Parse (and mtime-cache) an artifact scan's sidecar, read through
+    * [[LakeFs]]; any failure (a missing sidecar included) degrades to
+    * None (lineage then truthfully names the artifact — never throws
+    * from inside an analysis walk).
     */
   private def sidecar(h: HadoopFsRelation): Option[Map[String, Set[String]]] =
     try {
       val rp = h.location.rootPaths.headOption.getOrElse(return None)
-      val fs = rp.getFileSystem(h.sparkSession.sessionState.newHadoopConf())
+      val fs = LakeFs(h.sparkSession, rp.toString)
       val p = new org.apache.hadoop.fs.Path(rp, sidecarName)
-      if (!fs.exists(p)) return None
       val st = fs.getFileStatus(p)
       val stamp = (st.getModificationTime, st.getLen)
       sidecarCache.get(p.toString) match {
         case Some((s, v)) if s == stamp => v
         case _ =>
-          val in = fs.open(p)
-          val bytes = try {
-            val buf = new java.io.ByteArrayOutputStream()
-            in.transferTo(buf); buf.toByteArray
-          } finally in.close()
-          val parsed = Some(new String(bytes, "UTF-8").split("\n").toSeq
+          val parsed = LakeFs.readText(fs, p.toString).map(_.split("\n").toSeq
             .map(_.split("\t")).collect {
               case Array(c, srcs) =>
                 dec(c) -> srcs.split(",").filter(_.nonEmpty).map(dec).toSet

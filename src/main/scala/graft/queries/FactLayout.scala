@@ -86,7 +86,7 @@ object FactLayout {
   private[graft] def buckets(s: SparkSession, dir: String): Int =
     s.conf.getOption("spark.graft.lake.fact.buckets").map(_.toInt).getOrElse {
       val p = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
-      val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+      val fs = LakeFs(s, dir)
       val bytes = if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
       math.max(16, math.min(4096, (bytes / (256L << 20)).toInt + 1))
     }
@@ -94,8 +94,8 @@ object FactLayout {
   private[graft] def enabled(s: SparkSession): Boolean =
     s.conf.get("spark.graft.lake.factLayout.enabled", "true").toBoolean
 
-  private def location(dir: String): String =
-    new java.io.File(layoutDir(dir)).getAbsoluteFile.toURI.toString
+  private def location(s: SparkSession, dir: String): String =
+    LakeFs(s, layoutDir(dir)).makeQualified(new org.apache.hadoop.fs.Path(layoutDir(dir))).toString
 
   /** The three bucketed projections as one artifact; the bucket count
     * is the stamp's dial (`;buckets=N`), so changing it rebuilds.
@@ -117,7 +117,7 @@ object FactLayout {
         .write.format("parquet")
         .bucketBy(nb, sp.bucketKey)
         .sortBy(sp.bucketKey)
-        .option("path", s"${location(dir)}/${sp.table}.parquet")
+        .option("path", s"${location(s, dir)}/${sp.table}.parquet")
         .mode(SaveMode.Overwrite)
         .saveAsTable(tn)
     }
@@ -137,7 +137,7 @@ object FactLayout {
             s"""CREATE TABLE IF NOT EXISTS $tn ($ddl) USING parquet
                |CLUSTERED BY (${sp.bucketKey}) SORTED BY (${sp.bucketKey})
                |INTO $nb BUCKETS
-               |LOCATION '${location(dir)}/${sp.table}.parquet'""".stripMargin)
+               |LOCATION '${location(s, dir)}/${sp.table}.parquet'""".stripMargin)
         }
       }
     }

@@ -435,7 +435,7 @@ object IndexOps {
       // the artifact's FROZEN width — probes must sign exactly like the
       // build did (r14 verdict ask #1), so w comes from the vec_w file,
       // never re-derived from the (possibly grown) corpus
-      val w = readVecW(path)
+      val w = readVecW(s, path)
       // Sign the 1-row query CLIENT-SIDE (bounded 1-row collect — the
       // sim_index_probe pattern): the Hamming-≤3 multi-probe ring is
       // expanded driver-side into 4 × (1+w+C(w,2)+C(w,3)) literal
@@ -534,7 +534,7 @@ object IndexOps {
       // a frozen w=16 pulled ~17% of a 50k corpus into each batch
       // vector's Hamming-≤3 ring: the BUILD now widens w with corpus
       // size, and this path follows the stored width
-      val w = readVecW(path)
+      val w = readVecW(s, path)
       // Incremental ANN lookup for a NEW embedding batch (vec_id % 10
       // == 7 stands in for today's ingest): sign only the batch, band-
       // join the persisted index, exact-cosine top-3 per batch vector.
@@ -751,23 +751,20 @@ object IndexOps {
     * amortized: one rewrite per ~threshold appends). The *At variants
     * stay raw by design: they are the recovery-hook form, and
     * compaction during recovery would see a cleared stamp and no-op
-    * anyway. Local-FS listing here mirrors the stamp machinery; a
-    * cluster deployment swaps both seams to Hadoop FileSystem calls.
+    * anyway. The count walks the table through [[LakeFs]], like the
+    * stamps.
     */
   private[queries] def maybeCompact(s: SparkSession, dir: String, ns: String,
                                     table: String, baseline: Int = 4): Unit = {
     val threshold = s.conf.get("spark.graft.index.compactFiles", "64").trim.toIntOption
       .filter(_ > 0).getOrElse(64)
-    if (tableFileCount(indexDir(dir, ns), table) > baseline + threshold)
+    if (tableFileCount(s, indexDir(dir, ns), table) > baseline + threshold)
       compactIndex(s, dir, ns)
   }
 
-  private[graft] def tableFileCount(path: String, table: String): Int = {
-    def walk(f: java.io.File): Int =
-      if (f.isDirectory) Option(f.listFiles()).map(_.iterator.map(walk).sum).getOrElse(0)
-      else if (f.getName.startsWith("part-")) 1 else 0
-    walk(new java.io.File(s"$path/$table.parquet"))
-  }
+  private[graft] def tableFileCount(s: SparkSession, path: String, table: String): Int =
+    LakeFs.files(LakeFs(s, path), new org.apache.hadoop.fs.Path(s"$path/$table.parquet"))
+      .count(_.getPath.getName.startsWith("part-"))
 
   /** Append to an index at a KNOWN path, no ensure — the form a rebuild
     * recovery hook must use ([[ensureIndexStatus]] invokes the hook
@@ -809,7 +806,7 @@ object IndexOps {
     // (dataStamp fingerprints the table bytes) and the rebuild
     // re-derives w — size-class staleness is subsumed by the data stamp.
     val w = VecOps.vecIndexBandBits(VecOps.vecCorpusN(s, dir))
-    writeVecW(path, w)
+    LakeFs.writeText(LakeFs(s, path), vecWFile(path), w.toString)
     // band rows come from the session-memoized signature frame — shared
     // with the index-width warm frame, so signatures are computed once
     // per session no matter which consumer runs first (and can never
@@ -825,29 +822,22 @@ object IndexOps {
   }
 
   /** The artifact's frozen band width — written at build time beside
-    * the tables, read by every probe/append signer. Same java.io
-    * handling as the version stamps (the lake root is local in this
-    * harness; both would move to the Hadoop FS API together).
+    * the tables, read by every probe/append signer. A small file
+    * through [[LakeFs]], like the version stamps.
     */
-  private def vecWFile(path: String) = new java.io.File(s"$path/vec_w")
+  private def vecWFile(path: String) = s"$path/vec_w"
 
-  private def writeVecW(path: String, w: Int): Unit = {
-    val f = vecWFile(path)
-    f.getParentFile.mkdirs()
-    java.nio.file.Files.write(f.toPath, w.toString.getBytes("UTF-8"))
-  }
-
-  private[graft] def readVecW(path: String): Int = {
-    val f = vecWFile(path)
+  private[graft] def readVecW(s: SparkSession, path: String): Int = {
+    val w = LakeFs.readText(LakeFs(s, path), vecWFile(path))
     // loud, never a silent 16: signing a probe at a width other than
     // the build's returns WRONG (empty-ish) candidates with no error —
     // exactly the drift class the version stamps exist to prevent. A
     // missing file means the artifact predates the w-dial; the v3
     // version bump restamps those through the normal rebuild path.
-    require(f.exists,
+    require(w.isDefined,
       s"[graft] vec index at $path has no vec_w width file — stale " +
         "pre-dial artifact; ensureVecIndex should have rebuilt it")
-    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim.toInt
+    w.get.trim.toInt
   }
 
   /** Vector-side novelty filter against the persisted ANN index: the
@@ -872,7 +862,7 @@ object IndexOps {
                                   ns: String = ""): DataFrame = {
     VectorExprs.register(s)
     val path = ensureVecIndex(s, dir, ns)
-    val w = readVecW(path) // sign at the artifact's frozen width
+    val w = readVecW(s, path) // sign at the artifact's frozen width
     // localCheckpoint: signed feeds the probe explosion, two embedding
     // broadcasts and the within-batch side — the ingest batch is the
     // bounded side by contract (same device as vec_index_incremental)
@@ -956,7 +946,7 @@ object IndexOps {
   private[graft] def appendToVecIndexAt(s: SparkSession, path: String,
                                         admitted: DataFrame): Unit = {
     VectorExprs.register(s)
-    val w = readVecW(path)
+    val w = readVecW(s, path)
     val signed = admitted.select(col("vec_id"),
         col("embedding").cast("array<double>").as("emb"))
       .withColumn("norm", sqrt(call_function("dotp", col("emb"), col("emb"))))

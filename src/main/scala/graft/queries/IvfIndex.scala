@@ -64,8 +64,7 @@ object IvfIndex {
     */
   private[graft] val metaStatsCap = 1024
 
-  private def metaStatsFile(path: String): java.io.File =
-    new java.io.File(s"$path/ivf_meta_stats.tsv")
+  private def metaStatsFile(path: String): String = s"$path/ivf_meta_stats.tsv"
 
   private[graft] def encodeMetaValue(v: Any): String =
     if (v == null) "~null~"
@@ -102,8 +101,7 @@ object IvfIndex {
       sb.append(s"col\t$c\t${if (rows.size > metaStatsCap) "truncated" else "complete"}\n")
       kept.foreach { case (v, n) => sb.append(s"v\t$c\t$v\t$n\n") }
     }
-    java.nio.file.Files.write(metaStatsFile(path).toPath,
-      sb.toString.getBytes("UTF-8"))
+    LakeFs.writeText(LakeFs(s, path), metaStatsFile(path), sb.toString)
   }
 
   /** Parsed [[writeMetaStats]] artifact: None when the file is missing
@@ -114,16 +112,12 @@ object IvfIndex {
                                       complete: Map[String, Boolean],
                                       counts: Map[(String, String), Long])
 
-  private[graft] def readMetaStats(path: String): Option[MetaStats] = {
-    val f = metaStatsFile(path)
-    if (!f.isFile) return None
-    try {
-      val lines = new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").split("\n")
+  private[graft] def readMetaStats(s: SparkSession, path: String): Option[MetaStats] =
+    try LakeFs.readText(LakeFs(s, path), metaStatsFile(path)).flatMap { text =>
       var total = -1L
       val complete = Map.newBuilder[String, Boolean]
       val counts = Map.newBuilder[(String, String), Long]
-      lines.foreach(_.split("\t") match {
+      text.split("\n").foreach(_.split("\t") match {
         case Array("total", n) => total = n.toLong
         case Array("col", c, flag) => complete += (c -> (flag == "complete"))
         case Array("v", c, v, n) => counts += ((c, v) -> n.toLong)
@@ -131,7 +125,6 @@ object IvfIndex {
       })
       if (total < 0) None else Some(MetaStats(total, complete.result(), counts.result()))
     } catch { case _: Exception => None }
-  }
 
   /** Session-memoized served quantizer — see LakeArtifact.served (the
     * shared stamp-keyed memo; a rebuild can never serve stale geometry).

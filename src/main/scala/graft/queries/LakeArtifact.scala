@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One persisted lake-artifact family on the build-once/serve-many
@@ -65,10 +66,13 @@ private[graft] final case class LakeArtifact(
   /** Stored stamp content, "" when absent — memo keys that must
     * invalidate on rebuild compare this, never cache it.
     */
-  def storedStamp(dir: String, ns: String = ""): String = readStamp(path(dir, ns))
+  def storedStamp(s: SparkSession, dir: String, ns: String = ""): String = {
+    val p = path(dir, ns)
+    readStamp(LakeFs(s, p), p)
+  }
 
   def current(s: SparkSession, dir: String, ns: String = ""): Boolean =
-    isCurrent(path(dir, ns), stamp(s, dir))
+    isCurrent(s, path(dir, ns), stamp(s, dir))
 
   /** Build on first use, rebuild when non-current; returns the path and
     * whether it rebuilt. One stamp computation (a metadata listing of
@@ -79,7 +83,7 @@ private[graft] final case class LakeArtifact(
     lock.synchronized {
       val p = path(dir, ns)
       val st = stamp(s, dir)
-      if (isCurrent(p, st)) (p, false)
+      if (isCurrent(s, p, st)) (p, false)
       else { rebuildAt(s, dir, p, st, recover); (p, true) }
     }
 
@@ -96,11 +100,18 @@ private[graft] final case class LakeArtifact(
 
   private def rebuildAt(s: SparkSession, dir: String, p: String, st: String,
                         recover: String => Unit): Unit = {
-    clearStamp(p)
+    val fs = LakeFs(s, p)
+    fs.delete(new Path(stampFile(p)), false)
     build(s, dir, p)
-    if (lineage.nonEmpty) graft.plans.Lineage.writeSidecar(s"$p/${tables.head}.parquet", lineage)
+    if (lineage.nonEmpty) graft.plans.Lineage.writeSidecar(s, s"$p/${tables.head}.parquet", lineage)
     recover(p)
-    writeStamp(p, st)
+    LakeFs.writeText(fs, stampFile(p), st)
+    // bounded: only the bench drains, so a long-lived non-bench JVM
+    // (soak tests, REPL, streaming gates) would otherwise grow the
+    // journal forever. 4096 >> any real run's rebuild count; overflow
+    // drops oldest-first, which a draining bench never reaches
+    while (journal.size >= 4096) journal.poll()
+    journal.add(s"$name@$p")
   }
 
   /** One of this artifact's tables at `path`, its schema pinned as in
@@ -112,7 +123,7 @@ private[graft] final case class LakeArtifact(
     * table is unsupported, as it was under single-footer inference.
     */
   def read(s: SparkSession, path: String, table: String): DataFrame = {
-    val st = readStamp(path)
+    val st = readStamp(LakeFs(s, path), path)
     if (st.isEmpty) s.read.parquet(s"$path/$table.parquet")
     else graft.Core.load(s, path, table, Nil, st)
   }
@@ -126,33 +137,19 @@ private[graft] final case class LakeArtifact(
     * and re-reads.
     */
   def served(s: SparkSession, path: String, table: String): DataFrame =
-    Frames.memo(s, path, s"served/$table", Nil, dials = readStamp(path)) {
+    Frames.memo(s, path, s"served/$table", Nil, dials = readStamp(LakeFs(s, path), path)) {
       read(s, path, table).persist()
     }
 
-  private def stampFile(path: String) = new java.io.File(s"$path/$name.version")
+  private def stampFile(path: String) = s"$path/$name.version"
 
-  private def readStamp(path: String): String = {
-    val f = stampFile(path)
-    if (f.isFile) new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8") else ""
-  }
+  private def readStamp(fs: FileSystem, path: String): String =
+    LakeFs.readText(fs, stampFile(path)).getOrElse("")
 
-  private def isCurrent(path: String, st: String): Boolean =
-    tables.forall(t => new java.io.File(s"$path/$t.parquet/_SUCCESS").exists()) &&
-      readStamp(path) == st
-
-  private def clearStamp(path: String): Unit = { stampFile(path).delete(); () }
-
-  private def writeStamp(path: String, st: String): Unit = {
-    val f = stampFile(path)
-    f.getParentFile.mkdirs()
-    java.nio.file.Files.write(f.toPath, st.getBytes("UTF-8"))
-    // bounded: only the bench drains, so a long-lived non-bench JVM
-    // (soak tests, REPL, streaming gates) would otherwise grow the
-    // journal forever. 4096 >> any real run's rebuild count; overflow
-    // drops oldest-first, which a draining bench never reaches
-    while (journal.size >= 4096) journal.poll()
-    journal.add(s"$name@$path")
+  private def isCurrent(s: SparkSession, path: String, st: String): Boolean = {
+    val fs = LakeFs(s, path)
+    tables.forall(t => fs.exists(new Path(s"$path/$t.parquet/_SUCCESS"))) &&
+      readStamp(fs, path) == st
   }
 }
 
@@ -179,17 +176,13 @@ private[graft] object LakeArtifact {
     * computed once per memo lookup and must stay cheap.
     */
   private[queries] def dataStamp(s: SparkSession, dir: String, tables: Seq[String]): String = {
-    // Resolved through the Hadoop FileSystem API, NOT java.io.File: a
-    // non-local lake URI (hdfs://, s3a://) has no local files, so a
-    // java.io walk would silently fingerprint every table as empty and
-    // degrade the stamp to version-only. A missing table path is
-    // shouted (and folded in as "missing", which still differs from
-    // any real listing) instead of passing silently.
+    // A missing table path is shouted (and folded in as "missing",
+    // which still differs from any real listing) instead of passing
+    // silently.
     val md = java.security.MessageDigest.getInstance("MD5")
-    val conf = s.sessionState.newHadoopConf()
+    val fs = LakeFs(s, dir)
     for (t <- tables.sorted) {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
-      val fs = p.getFileSystem(conf)
+      val p = new Path(s"$dir/$t.parquet")
       if (!fs.exists(p)) {
         System.err.println(
           s"[graft] dataStamp: source table path $p is missing — " +
@@ -197,18 +190,9 @@ private[graft] object LakeArtifact {
             "an index of previously-present data will rebuild")
         md.update(s"$t:missing\n".getBytes("UTF-8"))
       } else {
-        // a listStatus walk, not listFiles(p, true): the local
-        // filesystem's LocatedFileStatus loads each file's permissions
-        // (a forked process per file without Hadoop native code) —
-        // ~3 ms per stamp against ~15 µs for the same (name, length,
-        // mtime) triples read off plain FileStatus
-        val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-        def walk(q: org.apache.hadoop.fs.Path): Unit = fs.listStatus(q).foreach { f =>
-          if (f.isDirectory) walk(f.getPath)
-          else entries += s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}"
-        }
-        walk(p)
-        entries.sorted.foreach(e => md.update((e + "\n").getBytes("UTF-8")))
+        LakeFs.files(fs, p)
+          .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
+          .sorted.foreach(e => md.update((e + "\n").getBytes("UTF-8")))
       }
     }
     new java.math.BigInteger(1, md.digest()).toString(36).take(12)

@@ -1706,9 +1706,10 @@ object PipelineOps {
     import s.implicits._
     val path = ensureNsMixState(s, dir, ns)
     val base = mixState.read(s, path, "mix_state")
-    val pdir = new java.io.File(s"$path/mix_partials.parquet")
-    val hasPartials = Option(pdir.listFiles())
-      .exists(_.exists(_.getName.startsWith("batch=")))
+    val pdir = new org.apache.hadoop.fs.Path(s"$path/mix_partials.parquet")
+    val fs = LakeFs(s, path)
+    val hasPartials =
+      fs.exists(pdir) && fs.listStatus(pdir).exists(_.getPath.getName.startsWith("batch="))
     val rows =
       if (!hasPartials) base.drop("merged_upto")
       else {
@@ -1774,28 +1775,24 @@ object PipelineOps {
   private[graft] def compactMixState(s: org.apache.spark.sql.SparkSession, dir: String,
                                      ns: String): Unit = {
     val path = ensureNsMixState(s, dir, ns)
-    val pdir = new java.io.File(s"$path/mix_partials.parquet")
-    val batchDirs = Option(pdir.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("batch="))
+    val pdir = new org.apache.hadoop.fs.Path(s"$path/mix_partials.parquet")
+    val fs = LakeFs(s, path)
+    val batchDirs = (if (fs.exists(pdir)) fs.listStatus(pdir).toSeq else Nil)
+      .filter(f => f.isDirectory && f.getPath.getName.startsWith("batch="))
     if (batchDirs.nonEmpty) {
       import s.implicits._
       // the new mark never REGRESSES: if every live dir is a stale
       // replay of an absorbed batch (ids ≤ the current mark), taking
       // their max verbatim would lower merged_upto and re-admit the
       // next replay of anything in between
-      val dirMax = batchDirs.map(_.getName.stripPrefix("batch=").toLong).max
+      val dirMax = batchDirs.map(_.getPath.getName.stripPrefix("batch=").toLong).max
       val newUpto = mixState.read(s, path, "mix_state")
         .agg(greatest(max($"merged_upto"), lit(dirMax)).as("merged_upto"))
       val merged = readMixState(s, dir, ns).crossJoin(broadcast(newUpto))
       graft.sources.Ingest.stageAndSwap(merged, path, "mix_state")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
-        f.delete(); ()
-      }
       // every enumerated dir is ≤ the new mark by construction; a dir
       // racing in AFTER the listing stays live for the next pass
-      batchDirs.foreach(rm)
+      batchDirs.foreach(d => fs.delete(d.getPath, true))
       ()
     }
   }

@@ -584,7 +584,7 @@ object TextOps {
     // the label update), so recovering the whole table covers it — no
     // separate batch append on that path, which would double-write
     val (path, reseeded) = gateLabelsArtifact.ensure(s, dir, ns, recover = p =>
-      if (new java.io.File(s"$lakeDir/$table.parquet").exists())
+      if (LakeFs(s, lakeDir).exists(new org.apache.hadoop.fs.Path(s"$lakeDir/$table.parquet")))
         singles(graft.Core.load(s, lakeDir, table))
           .write.mode(org.apache.spark.sql.SaveMode.Append)
           .parquet(s"$p/labels.parquet"))

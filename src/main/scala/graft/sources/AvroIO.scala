@@ -157,7 +157,7 @@ object AvroIO {
     val st = df.schema
     val schemaJson = toAvroSchema(st, "row").toString
     val n = st.size
-    val driverConf = df.sparkSession.sparkContext.hadoopConfiguration
+    val driverConf = graft.queries.LakeFs.conf(df.sparkSession)
     val target = new org.apache.hadoop.fs.Path(path)
     val tfs = target.getFileSystem(driverConf)
     if (tfs.exists(target)) tfs.delete(target, true)
@@ -191,8 +191,6 @@ object AvroIO {
       }
     }.count()
     // driver-side completion marker, same convention as hadoop sinks
-    val p = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    fs.create(p, true).close()
+    tfs.create(new org.apache.hadoop.fs.Path(target, "_SUCCESS"), true).close()
   }
 }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import graft.queries.LakeFs
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,7 +67,6 @@ object Ingest {
                    key: String): Unit = {
     val spark = batch.sparkSession
     val path = s"$lakeDir/$name.parquet"
-    val target = new java.io.File(path)
     // persist: the batch lineage is evaluated three times below (dup-key
     // guard, anti-join key side, union side) — without this, a batch
     // that is itself a pipeline recomputes per evaluation
@@ -82,7 +83,7 @@ object Ingest {
         .filter(col("count") > 1).limit(1).count()
       require(dupKeys == 0,
         s"upsertBronze: batch has multiple rows for some '$key' — resolve versions upstream")
-      if (!target.exists()) {
+      if (!LakeFs(spark, path).exists(new Path(path))) {
         b.write.parquet(path)
       } else {
         val existing = spark.read.parquet(path)
@@ -187,16 +188,9 @@ object Ingest {
     // declared map after the swap. writeSidecar degrades to a warning
     // on failure — a committed table must never abort over metadata.
     graft.plans.Lineage.writeSidecar(df, tmpPath)
-    def rmTree(f: java.io.File): Unit = {
-      // listFiles is null if the dir vanished under us (concurrent
-      // cleanup) — treat as already-deleted, not an NPE
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rmTree)
-      f.delete(); ()
-    }
-    rmTree(new java.io.File(path))
-    require(new java.io.File(tmpPath).renameTo(new java.io.File(path)),
-      s"staging swap failed for $path")
+    val fs = LakeFs(df.sparkSession, path)
+    fs.delete(new Path(path), true)
+    require(fs.rename(new Path(tmpPath), new Path(path)), s"staging swap failed for $path")
   }
 
   /** Delete orphaned `*.parquet.__staging__` dirs under a lake dir — a
@@ -206,22 +200,20 @@ object Ingest {
     * never read, only renamed, so removing an orphan can't affect a
     * reader. Recurses one level into nested namespace dirs (the
     * index/state lakes are `lake/<family>/<corpus>` shaped). Returns
-    * the deleted paths so operators can log them.
+    * the deleted paths, in the caller's form (`<lakeDir>/...`), so
+    * operators can log them.
     */
-  def vacuumStaging(lakeDir: String): Seq[String] = {
-    def rmTree(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rmTree)
-      f.delete(); ()
+  def vacuumStaging(spark: SparkSession, lakeDir: String): Seq[String] = {
+    val fs = LakeFs(spark, lakeDir)
+    def sweep(d: String, depth: Int): Seq[String] = {
+      val kids = if (fs.exists(new Path(d))) fs.listStatus(new Path(d)).toSeq else Nil
+      val (orphans, rest) = kids.partition(_.getPath.getName.endsWith(".__staging__"))
+      orphans.foreach(o => fs.delete(o.getPath, true))
+      orphans.map(o => s"$d/${o.getPath.getName}") ++
+        (if (depth > 0) rest.filter(_.isDirectory).flatMap(k => sweep(s"$d/${k.getPath.getName}", depth - 1))
+         else Nil)
     }
-    def sweep(d: java.io.File, depth: Int): Seq[String] = {
-      val kids = Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
-      val (orphans, rest) = kids.partition(_.getName.endsWith(".__staging__"))
-      orphans.foreach(rmTree)
-      orphans.map(_.getPath).toSeq ++
-        (if (depth > 0) rest.filter(_.isDirectory).flatMap(sweep(_, depth - 1)) else Nil)
-    }
-    sweep(new java.io.File(lakeDir), 1)
+    sweep(lakeDir, 1)
   }
 
   /** CSV export with header (app.py:247-248). */

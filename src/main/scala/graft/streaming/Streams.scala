@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.queries.LakeFs
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -301,14 +303,9 @@ object Streams {
     * unless its owner drops it. Idempotent; never touches the shared
     * corpus index or other gates (128-bit namespace keying).
     */
-  def dropGate(corpusDir: String, lakeDir: String, name: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(
-      graft.queries.IndexOps.indexDir(corpusDir, gateNamespace(lakeDir, name))))
+  def dropGate(s: SparkSession, corpusDir: String, lakeDir: String, name: String): Unit = {
+    val p = graft.queries.IndexOps.indexDir(corpusDir, gateNamespace(lakeDir, name))
+    LakeFs(s, p).delete(new Path(p), true); ()
   }
 
   /** Compaction cadence: every Nth micro-batch the gate rewrites its
@@ -353,7 +350,7 @@ object Streams {
         val s = batch.sparkSession
         val tablePath = s"$lakeDir/$name.parquet"
         graft.queries.IndexOps.ensureIndexStatus(s, corpusDir, ns, recover = p =>
-          if (new java.io.File(tablePath).exists())
+          if (LakeFs(s, tablePath).exists(new Path(tablePath)))
             graft.queries.IndexOps.appendToIndexAt(s, p, graft.Core.load(s, lakeDir, name)))
         val batchDir = s"$tablePath/batch=$batchId"
         val novel = graft.queries.IndexOps.novelDocs(s, corpusDir, batch, ns)
@@ -390,7 +387,7 @@ object Streams {
         val s = batch.sparkSession
         val tablePath = s"$lakeDir/$name.parquet"
         graft.queries.IndexOps.ensureVecIndexStatus(s, corpusDir, ns, recover = p =>
-          if (new java.io.File(tablePath).exists())
+          if (LakeFs(s, tablePath).exists(new Path(tablePath)))
             graft.queries.IndexOps.appendToVecIndexAt(s, p, graft.Core.load(s, lakeDir, name)))
         val batchDir = s"$tablePath/batch=$batchId"
         val novel = graft.queries.IndexOps.novelVectors(s, corpusDir, batch, minCos, ns)

@@ -198,7 +198,7 @@ class AnnRuleSpec extends SparkSpecBase {
         .write.parquet(s"$tmp/embeddings.parquet")
       graft.plans.AnnTopKRule.install(spark)
       graft.queries.IvfIndex.ensureIvfIndex(spark, tmp)
-      val st = graft.queries.IvfIndex.readMetaStats(
+      val st = graft.queries.IvfIndex.readMetaStats(spark,
         graft.queries.IndexOps.indexDir(tmp)).get
       assert(st.complete("label") && st.counts(("label", "0")) == 250L,
         s"build-time stats must record the label histogram: $st")
@@ -233,9 +233,6 @@ class AnnRuleSpec extends SparkSpecBase {
       assert(unseen.count() == 0)
     } finally {
       spark.conf.set("spark.graft.ann.rewrite", "false")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm); f.delete()
-      }
       rm(new java.io.File(tmp))
     }
   }

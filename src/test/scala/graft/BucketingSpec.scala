@@ -96,11 +96,6 @@ class BucketingSpec extends SparkSpecBase {
       assert(za < 0.5 && zb < 0.55,
         f"z-ordered layout must skip on BOTH dimensions, read a=$za%.2f b=$zb%.2f of the table")
     } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
-        f.delete(); ()
-      }
       rm(new java.io.File(dir))
     }
   }

@@ -61,7 +61,7 @@ class IndexSpec extends SparkSpecBase {
     docs.write.parquet(s"$tmp/documents.parquet")
     SparkEntry.queries("sim_index_build")(spark, tmp).collect()
     val sim = graft.queries.IndexOps.simIndex
-    val stampBefore = sim.storedStamp(tmp)
+    val stampBefore = sim.storedStamp(spark, tmp)
     assert(stampBefore == sim.stamp(spark, tmp))
     assert(sim.current(spark, tmp))
     // "regenerate" the corpus: rewrite the same rows (fresh files/mtimes)
@@ -71,9 +71,9 @@ class IndexSpec extends SparkSpecBase {
     // the ensure path rebuilds and restamps against the NEW data identity
     graft.queries.Frames.release(spark)
     SparkEntry.queries("sim_index_probe")(spark, tmp).collect()
-    assert(sim.storedStamp(tmp) == sim.stamp(spark, tmp),
+    assert(sim.storedStamp(spark, tmp) == sim.stamp(spark, tmp),
       "rebuild must restamp with the new fingerprint")
-    assert(sim.storedStamp(tmp) != stampBefore,
+    assert(sim.storedStamp(spark, tmp) != stampBefore,
       "new data identity must produce a new stamp")
   }
 
@@ -215,7 +215,7 @@ class IndexSpec extends SparkSpecBase {
     assert(graft.queries.VecOps.vecIndexBandBits(50000) == 26) // the r14 cliff's class
     // artifact round-trip at the real fixture
     SparkEntry.queries("vec_index_build")(spark, dir).collect()
-    val stored = graft.queries.IndexOps.readVecW(graft.queries.IndexOps.indexDir(dir))
+    val stored = graft.queries.IndexOps.readVecW(spark, graft.queries.IndexOps.indexDir(dir))
     val n = spark.read.parquet(s"$dir/embeddings.parquet").count()
     assert(stored == graft.queries.VecOps.vecIndexBandBits(n),
       s"stored w=$stored != dial(${n})")
@@ -240,17 +240,12 @@ class IndexSpec extends SparkSpecBase {
     // after the test (unique temp names would otherwise accrete one
     // orphaned 5k index per run; same ownership rule as dropGate)
     def rmLake(): Unit = {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
-        f.delete(); ()
-      }
       rm(new java.io.File(graft.queries.IndexOps.indexDir(tmp)))
       rm(new java.io.File(graft.queries.IndexOps.indexDir(tmp, "widetest")))
     }
     try {
     val path = graft.queries.IndexOps.ensureVecIndexStatus(spark, tmp)._1
-    assert(graft.queries.IndexOps.readVecW(path) == 22,
+    assert(graft.queries.IndexOps.readVecW(spark, path) == 22,
       "5k corpus must land in the w=22 size class")
     val planted = corpus.take(40).map { case (id, v, _) =>
       (900000L + id,
@@ -403,11 +398,6 @@ class IndexSpec extends SparkSpecBase {
       // and replaying byte-identical appends would let compaction's
       // distinct() legitimately shrink the row count below the
       // fresh-run expectation asserted at the bottom
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
-        f.delete(); ()
-      }
       rm(new java.io.File(path))
       graft.queries.IndexOps.ensureIndexStatus(spark, dir, ns)
       val docs = spark.read.parquet(s"$dir/documents.parquet")
@@ -419,7 +409,7 @@ class IndexSpec extends SparkSpecBase {
           .withColumn("doc_id", $"doc_id" + lit(1000000L * (i + 1)))
         appended += batch.filter(size(graft.Core.tokens(lower($"text"))) > 0).count()
         graft.queries.IndexOps.appendToIndex(spark, dir, batch, ns)
-        val n = graft.queries.IndexOps.tableFileCount(path, "bands")
+        val n = graft.queries.IndexOps.tableFileCount(spark, path, "bands")
         // invariant: count never exceeds compacted-baseline (4) +
         // threshold — the backstop counts APPEND growth over the
         // compacted layout, so a fresh compact never re-triggers

@@ -119,36 +119,41 @@ class IngestSpec extends SparkSpecBase {
     assert(graft.plans.PlanGuard.audit(back).isEmpty)
   }
 
-  test("sink_upsert: batch keys replace, new keys append, others survive") {
-    val t0 = Seq((1L, "a", 1), (2L, "b", 1), (3L, "c", 1)).toDF("k", "v", "ver")
-    Ingest.upsertBronze(t0, tmp, "upsert_t", "k")
-    // batch: updates k=2, inserts k=4
-    val batch = Seq((2L, "B", 2), (4L, "d", 2)).toDF("k", "v", "ver")
-    Ingest.upsertBronze(batch, tmp, "upsert_t", "k")
-    val back = spark.read.parquet(s"$tmp/upsert_t.parquet")
-      .as[(Long, String, Int)].collect().sortBy(_._1).toSeq
-    assert(back == Seq((1L, "a", 1), (2L, "B", 2), (3L, "c", 1), (4L, "d", 2)))
-    assert(!new java.io.File(s"$tmp/upsert_t.parquet.__staging__").exists(),
-      "staging dir must be swapped away")
-    // a batch with two versions of one key has no well-defined winner —
-    // must fail loudly, not land both rows
-    val dupBatch = Seq((5L, "x", 1), (5L, "y", 2)).toDF("k", "v", "ver")
-    intercept[IllegalArgumentException] {
-      Ingest.upsertBronze(dupBatch, tmp, "upsert_t", "k")
-    }
-  }
+  for ((form, lakeOf) <- lakeDirForms) {
+    lazy val local = Files.createTempDirectory("graft-sink").toString
+    lazy val lake = lakeOf(local)
 
-  test("sink_compact: many small files become nFiles, data unchanged") {
-    val src = spark.range(1000).toDF("k").repartition(32)
-    Ingest.writeBronze(src, tmp, "compact_t")
-    def parts(p: String) = new java.io.File(p).listFiles()
-      .count(f => f.getName.startsWith("part-"))
-    assert(parts(s"$tmp/compact_t.parquet") == 32)
-    Ingest.compactBronze(spark, tmp, "compact_t", 2)
-    assert(parts(s"$tmp/compact_t.parquet") == 2)
-    val back = spark.read.parquet(s"$tmp/compact_t.parquet")
-    assert(back.count() == 1000)
-    assert(back.agg(sum($"k")).as[Long].head() == 499500L)
+    test(s"sink_upsert: batch keys replace, new keys append, others survive$form") {
+      val t0 = Seq((1L, "a", 1), (2L, "b", 1), (3L, "c", 1)).toDF("k", "v", "ver")
+      Ingest.upsertBronze(t0, lake, "upsert_t", "k")
+      // batch: updates k=2, inserts k=4
+      val batch = Seq((2L, "B", 2), (4L, "d", 2)).toDF("k", "v", "ver")
+      Ingest.upsertBronze(batch, lake, "upsert_t", "k")
+      val back = spark.read.parquet(s"$local/upsert_t.parquet")
+        .as[(Long, String, Int)].collect().sortBy(_._1).toSeq
+      assert(back == Seq((1L, "a", 1), (2L, "B", 2), (3L, "c", 1), (4L, "d", 2)))
+      assert(!new java.io.File(s"$local/upsert_t.parquet.__staging__").exists(),
+        "staging dir must be swapped away")
+      // a batch with two versions of one key has no well-defined winner —
+      // must fail loudly, not land both rows
+      val dupBatch = Seq((5L, "x", 1), (5L, "y", 2)).toDF("k", "v", "ver")
+      intercept[IllegalArgumentException] {
+        Ingest.upsertBronze(dupBatch, lake, "upsert_t", "k")
+      }
+    }
+
+    test(s"sink_compact: many small files become nFiles, data unchanged$form") {
+      val src = spark.range(1000).toDF("k").repartition(32)
+      Ingest.writeBronze(src, lake, "compact_t")
+      def parts(p: String) = new java.io.File(p).listFiles()
+        .count(f => f.getName.startsWith("part-"))
+      assert(parts(s"$local/compact_t.parquet") == 32)
+      Ingest.compactBronze(spark, lake, "compact_t", 2)
+      assert(parts(s"$local/compact_t.parquet") == 2)
+      val back = spark.read.parquet(s"$local/compact_t.parquet")
+      assert(back.count() == 1000)
+      assert(back.agg(sum($"k")).as[Long].head() == 499500L)
+    }
   }
 
   test("sink_csv_export: header preserved") {

@@ -210,13 +210,8 @@ class IvfSpec extends SparkSpecBase {
     // compaction: appends add one file per touched cell per batch —
     // compactIndex must restore ~one file per cell while PRESERVING
     // the cell-partitioned layout and every row (incl. the appends)
-    def dataFiles() = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq.flatMap(walk)
-        else Seq(f)
-      walk(new java.io.File(s"$base/ivf_cells.parquet"))
-        .count(_.getName.endsWith(".parquet"))
-    }
+    def dataFiles() = filesUnder(new java.io.File(s"$base/ivf_cells.parquet"))
+      .count(_.getName.endsWith(".parquet"))
     val rowsBefore = cells.select($"vec_id", $"c_id".cast("long"))
       .as[(Long, Long)].collect().sorted.toSeq
     val filesGrown = dataFiles()

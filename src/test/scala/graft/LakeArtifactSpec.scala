@@ -19,15 +19,7 @@ import graft.queries._
 class LakeArtifactSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private lazy val src: String = {
-    val tmp = Files.createTempDirectory("graft-lakeartifact")
-    val from = new File(sf("sf0.001")).toPath
-    Files.walk(from).forEach { p =>
-      val to = tmp.resolve(from.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
-    }
-    tmp.toString
-  }
+  private lazy val src: String = copyOf(sf("sf0.001"), "graft-lakeartifact")
 
   private val ns = "faultspec"
   private val sentinel = 900901L
@@ -78,7 +70,7 @@ class LakeArtifactSpec extends SparkSpecBase {
     assert(a.ensure(spark, src, c.ns) == ((p, false)))
     assert(rows().isEmpty, "a warm ensure must journal nothing")
     // stamp format: `version@fingerprint` (+ dial), version-only without inputs
-    val stored = a.storedStamp(src, c.ns)
+    val stored = a.storedStamp(spark, src, c.ns)
     assert(stored == a.stamp(spark, src))
     if (a.inputs.isEmpty) assert(stored == a.codeVersion)
     else assert(stored.matches(java.util.regex.Pattern.quote(a.codeVersion) + "@[0-9a-z]{1,12}.*"))
@@ -110,11 +102,20 @@ class LakeArtifactSpec extends SparkSpecBase {
       "the next ensure must rebuild to a servable state")
   }
 
+  test("small lake files carry no .crc; a rewrite drops the one a checksummed write left") {
+    val fs = LakeFs(spark, src)
+    val p = s"$src/_probe.tsv"
+    val crc = new File(s"$src/._probe.tsv.crc")
+    // a checksummed create, as lineage sidecars were once written
+    val out = fs.create(new org.apache.hadoop.fs.Path(p), true)
+    try out.write("old".getBytes("UTF-8")) finally out.close()
+    assert(crc.exists())
+    LakeFs.writeText(fs, p, "new")
+    assert(!crc.exists(), "a stale checksum would fail the next checked read")
+    assert(LakeFs.readText(fs, p).contains("new"))
+  }
+
   override def afterAll(): Unit = {
-    def rm(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(rm)
-      f.delete(); ()
-    }
     for (c <- cases) rm(new File(c.artifact.path(src, c.ns)))
     // the fact layout registers its bucketed tables in the session catalog
     spark.catalog.listTables().collect().map(_.name).filter(_.contains("lakeartifact"))

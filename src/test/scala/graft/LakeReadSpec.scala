@@ -30,7 +30,7 @@ class LakeReadSpec extends SparkSpecBase {
 
   override def afterAll(): Unit = {
     Frames.release(spark)
-    Streams.dropGate(pristine, gateLake, gate)
+    Streams.dropGate(spark, pristine, gateLake, gate)
     for (d <- Seq(pristine, live, fresh)) { rm(new File(IndexOps.indexDir(d))); rm(new File(d)) }
     rm(new File(gateLake))
     super.afterAll()

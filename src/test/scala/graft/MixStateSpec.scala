@@ -29,10 +29,6 @@ class MixStateSpec extends SparkSpecBase {
   test("mergeIntoMixState folds a batch into a namespace state that equals a recompute") {
     val ns = "spec-merge"
     val nsDir = new java.io.File(PipelineOps.mixStateDir(dir, ns))
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
-      f.delete(); ()
-    }
     rm(nsDir)
     try {
       // batch = the standard slice, straight from the raw documents table
@@ -83,19 +79,21 @@ class MixStateSpec extends SparkSpecBase {
       == graft.queries.PipelineOps.mixState.stamp(spark, dir), "rebuild must restamp")
   }
 
-  test("vacuumStaging removes only orphaned staging dirs, one namespace level deep") {
-    val lake = java.nio.file.Files.createTempDirectory("graft-vacuum").toString
-    new java.io.File(s"$lake/t.parquet").mkdirs()
-    new java.io.File(s"$lake/t.parquet.__staging__").mkdirs()
-    new java.io.File(s"$lake/ns1/u.parquet").mkdirs()
-    new java.io.File(s"$lake/ns1/u.parquet.__staging__/part").mkdirs()
-    val deleted = sources.Ingest.vacuumStaging(lake)
-    assert(deleted.map(p => p.stripPrefix(lake + "/")).toSet ==
-      Set("t.parquet.__staging__", "ns1/u.parquet.__staging__"), deleted.toString)
-    assert(new java.io.File(s"$lake/t.parquet").isDirectory)
-    assert(new java.io.File(s"$lake/ns1/u.parquet").isDirectory)
-    assert(!new java.io.File(s"$lake/t.parquet.__staging__").exists())
-    assert(!new java.io.File(s"$lake/ns1/u.parquet.__staging__").exists())
+  for ((form, lakeOf) <- lakeDirForms) {
+    test(s"vacuumStaging removes only orphaned staging dirs, one namespace level deep$form") {
+      val lake = java.nio.file.Files.createTempDirectory("graft-vacuum").toString
+      new java.io.File(s"$lake/t.parquet").mkdirs()
+      new java.io.File(s"$lake/t.parquet.__staging__").mkdirs()
+      new java.io.File(s"$lake/ns1/u.parquet").mkdirs()
+      new java.io.File(s"$lake/ns1/u.parquet.__staging__/part").mkdirs()
+      val deleted = sources.Ingest.vacuumStaging(spark, lakeOf(lake))
+      assert(deleted.map(p => p.stripPrefix(lakeOf(lake) + "/")).toSet ==
+        Set("t.parquet.__staging__", "ns1/u.parquet.__staging__"), deleted.toString)
+      assert(new java.io.File(s"$lake/t.parquet").isDirectory)
+      assert(new java.io.File(s"$lake/ns1/u.parquet").isDirectory)
+      assert(!new java.io.File(s"$lake/t.parquet.__staging__").exists())
+      assert(!new java.io.File(s"$lake/ns1/u.parquet.__staging__").exists())
+    }
   }
 
   test("a batch without the source column is refused loudly") {

@@ -522,9 +522,6 @@ class OperatorSpec extends SparkSpecBase {
       // and a toks-only consumer still works on the same bare corpus
       assert(SparkEntry.queries("pack_sequences")(spark, dir).count() > 0)
     } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm); f.delete()
-      }
       rm(new java.io.File(dir))
     }
   }

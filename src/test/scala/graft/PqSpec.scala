@@ -188,7 +188,7 @@ class PqSpec extends SparkSpecBase {
       assert(spark.read.parquet(s"$path/ivfpq_codes.parquet").count() == nComposed + 1)
       assert(spark.read.parquet(s"$path/ivf_cells.parquet").count() == nCells + 1)
       // appends never invalidate the stamps (no rebuild on next use)
-      assert(graft.queries.PqIndex.ivfPqIndex.storedStamp(dir)
+      assert(graft.queries.PqIndex.ivfPqIndex.storedStamp(spark, dir)
         == graft.queries.PqIndex.ivfPqIndex.stamp(spark, dir))
       val got = SparkEntry.queries("ivfpq_index_probe")(spark, dir)
         .select($"vec_id").as[Long].collect().toSeq

@@ -44,11 +44,7 @@ class RocksDbStreamingSpec extends SparkSpecBase with StreamRestartCases {
       // as .zip/.changelog snapshot files, never the HDFS provider's
       // .delta files
       val stateRoot = new java.io.File(s"$ckpt/state")
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq.flatMap(walk)
-        else Seq(f)
-      val names = walk(stateRoot).map(_.getName)
+      val names = filesUnder(stateRoot).map(_.getName)
       assert(names.exists(n => n.endsWith(".zip") || n.endsWith(".changelog")),
         s"no RocksDB snapshot files under $stateRoot: $names")
       assert(!names.exists(_.endsWith(".delta")),
@@ -88,11 +84,7 @@ class RocksDbStreamingSpec extends SparkSpecBase with StreamRestartCases {
     try withRocksDb {
       val ckpt = heavyHittersRestartCase()
       val stateRoot = new java.io.File(s"$ckpt/state")
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq.flatMap(walk)
-        else Seq(f)
-      val names = walk(stateRoot).map(_.getName)
+      val names = filesUnder(stateRoot).map(_.getName)
       assert(names.exists(_.endsWith(".changelog")),
         s"changelog checkpointing did not engage under $stateRoot: $names")
     } finally prev match {

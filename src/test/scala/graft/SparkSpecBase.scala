@@ -25,6 +25,18 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     tmp.toString
   }
 
+  /** (test-name suffix, spelling) of the forms of a local lake dir that
+    * every lake API accepts: the plain path and its `file:` URI.
+    */
+  val lakeDirForms: Seq[(String, String => String)] = Seq(
+    "" -> ((p: String) => p),
+    " (file: URI lake dir)" -> ((p: String) => s"file://$p"))
+
+  /** Every file under `f`; `f` itself when it is not a directory. */
+  def filesUnder(f: java.io.File): Seq[java.io.File] =
+    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq.flatMap(filesUnder)
+    else Seq(f)
+
   /** Delete a file or a directory tree. */
   def rm(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)

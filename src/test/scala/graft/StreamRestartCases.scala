@@ -169,10 +169,6 @@ trait StreamRestartCases { self: SparkSpecBase =>
     implicit val sc = spark.sqlContext
     val corpusDir = sf("sf0.001")
     val tmp = java.nio.file.Files.createTempDirectory(s"graft-mix-restart-$providerSuffix").toString
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
-      f.delete(); ()
-    }
     val b1 = Seq((910001L, "aa bb cc", "web"), (910002L, "dd ee", "books"))
     val b2 = Seq((910003L, "ff gg hh ii", "web"))
     def run(name: String, interrupt: Boolean): Map[String, (Long, Long)] = {

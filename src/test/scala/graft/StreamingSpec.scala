@@ -263,32 +263,34 @@ class StreamingSpec extends SparkSpecBase with StreamRestartCases {
       s"gate growth leaked into the shared corpus index: $sharedSets -> $sharedAfter")
   }
 
-  test("stream_sim_dedup: index rebuild restores admission history from the lake") {
-    implicit val sc = spark.sqlContext
-    val corpusDir = sf("sf0.001")
-    val lake = java.nio.file.Files.createTempDirectory("graft-srebuild").toString
-    val name = "admitted"
-    val ns = Streams.gateNamespace(lake, name)
-    val textA = "zzqx wvut ponm lkji hgfe dcba"
-    val textB = "qqzz aabb ccdd eeff gghh iijj"
-    val in = MemoryStream[(Long, String)]
-    val q = Streams.dedupIngest(in.toDF().toDF("doc_id", "text"), corpusDir, lake, name)
-    in.addData((30000L, textA))
-    q.processAllAvailable()
-    // simulate an index left by OLDER signature logic: the gate must
-    // rebuild from the corpus AND re-sign its admitted lake docs before
-    // gating the next batch — otherwise 30001 (a copy of admitted
-    // 30000) would be re-admitted and the gate invariant broken
-    val stamp = new java.io.File(
-      graft.queries.IndexOps.indexDir(corpusDir, ns) + "/sim.version")
-    java.nio.file.Files.write(stamp.toPath, "sim-v0:obsolete".getBytes("UTF-8"))
-    in.addData((30001L, textA), (30002L, textB))
-    q.processAllAvailable()
-    q.stop()
-    val admitted = spark.read.parquet(s"$lake/$name.parquet")
-      .select($"doc_id").as[Long].collect().toSet
-    assert(admitted == Set(30000L, 30002L),
-      s"rebuild must not reset admission history: $admitted")
+  for ((form, lakeOf) <- lakeDirForms) {
+    test(s"stream_sim_dedup: index rebuild restores admission history from the lake$form") {
+      implicit val sc = spark.sqlContext
+      val corpusDir = sf("sf0.001")
+      val lake = lakeOf(java.nio.file.Files.createTempDirectory("graft-srebuild").toString)
+      val name = "admitted"
+      val ns = Streams.gateNamespace(lake, name)
+      val textA = "zzqx wvut ponm lkji hgfe dcba"
+      val textB = "qqzz aabb ccdd eeff gghh iijj"
+      val in = MemoryStream[(Long, String)]
+      val q = Streams.dedupIngest(in.toDF().toDF("doc_id", "text"), corpusDir, lake, name)
+      in.addData((30000L, textA))
+      q.processAllAvailable()
+      // simulate an index left by OLDER signature logic: the gate must
+      // rebuild from the corpus AND re-sign its admitted lake docs before
+      // gating the next batch — otherwise 30001 (a copy of admitted
+      // 30000) would be re-admitted and the gate invariant broken
+      val stamp = new java.io.File(
+        graft.queries.IndexOps.indexDir(corpusDir, ns) + "/sim.version")
+      java.nio.file.Files.write(stamp.toPath, "sim-v0:obsolete".getBytes("UTF-8"))
+      in.addData((30001L, textA), (30002L, textB))
+      q.processAllAvailable()
+      q.stop()
+      val admitted = spark.read.parquet(s"$lake/$name.parquet")
+        .select($"doc_id").as[Long].collect().toSet
+      assert(admitted == Set(30000L, 30002L),
+        s"rebuild must not reset admission history: $admitted")
+    }
   }
 
   test("incremental cluster maintenance: gate labels equal a from-scratch rebuild over the grown corpus") {
@@ -419,11 +421,6 @@ class StreamingSpec extends SparkSpecBase with StreamRestartCases {
     // corpus-seeded index copies under lake/simindex forever (37 MB of
     // them had accumulated before the sweep existed). Only this suite
     // creates gate namespaces, so deleting every *_gate* dir is safe.
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
-      f.delete(); ()
-    }
     Option(new java.io.File("lake/simindex").listFiles())
       .getOrElse(Array.empty[java.io.File])
       // _gate*: gate namespaces; _tmp_graft*: the grown-corpus label
@@ -440,10 +437,6 @@ class StreamingSpec extends SparkSpecBase with StreamRestartCases {
     val lake = java.nio.file.Files.createTempDirectory("graft-mixmv").toString
     val name = "mvdocs"
     val ns = Streams.gateNamespace(lake, name)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
-      f.delete(); ()
-    }
     val nsDir = new java.io.File(graft.queries.PipelineOps.mixStateDir(corpusDir, ns))
     rm(nsDir)
     def state(): Map[String, (Long, Long)] =
