@@ -217,12 +217,15 @@ object Core {
     * one definition, so the families can't drift.
     */
   def fitsBroadcast(spark: SparkSession)(stats: => (Long, Long)): Boolean = {
-    val maxRows = spark.conf.get("spark.graft.broadcast.maxRows", "4000000").toLong
-    val maxBytes = spark.conf.get("spark.graft.guard.maxBroadcastBytes",
-      (1L << 30).toString).toLong
+    val (maxRows, maxBytes) = broadcastDials(spark)
     val (rows, bytes) = stats
     rows <= maxRows && bytes <= maxBytes
   }
+
+  /** The two dials of [[fitsBroadcast]]: (max rows, max estimated bytes). */
+  def broadcastDials(spark: SparkSession): (Long, Long) =
+    (spark.conf.get("spark.graft.broadcast.maxRows", "4000000").toLong,
+      spark.conf.get("spark.graft.guard.maxBroadcastBytes", (1L << 30).toString).toLong)
 
   /** (rows, estimatedBytes) of a long-array set dictionary for
     * [[guardedBroadcast]] — one aggregate over `df` (~16 B/row of fixed

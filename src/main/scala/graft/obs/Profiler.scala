@@ -11,6 +11,8 @@ import scala.util.control.NonFatal
 import org.apache.spark.{SparkContext, Success, TaskKilled}
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
 /** The runtime view of a run: one listener per `SparkContext` that keeps
   * monotonic work totals and the rows of the jobs started since the
@@ -24,6 +26,13 @@ import org.apache.spark.sql.SparkSession
   * delivers in order, so the snapshot taken at the sentinel's start
   * holds everything the body's jobs did and nothing after them. The
   * sentinel's own stage and task events are left out of the totals.
+  *
+  * A job row is named by the engine code that ran it: the first `graft.`
+  * frame of its SQL execution's call site, which the execution's start
+  * event carries and every job of the execution (AQE query stages
+  * included) points back to through its execution-id property. A job
+  * outside any SQL execution, or one with no `graft.` frame, falls back
+  * to its description, then to its result stage's call site.
   */
 final class Profiler private (sc: SparkContext) extends SparkListener {
   import Profiler._
@@ -35,6 +44,8 @@ final class Profiler private (sc: SparkContext) extends SparkListener {
   private val jobStages = mutable.Map.empty[Int, Seq[Int]]
   private val stageJob = mutable.Map.empty[Int, Int]
   private val sentinelStages = mutable.Set.empty[Int]
+  // the graft frame of each running SQL execution, dropped at its end
+  private val executionSites = mutable.Map.empty[Long, String]
   private val barriers = new ConcurrentHashMap[String, CompletableFuture[Mark]]()
 
   override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -52,8 +63,10 @@ final class Profiler private (sc: SparkContext) extends SparkListener {
         // the rows are bounded: a session that never calls a barrier
         // keeps counting but stops keeping rows
         if (jobs.size < MaxJobRows) {
-          // a job with no description is named by its result stage's call site
-          val site = props.flatMap(p => Option(p.getProperty("spark.job.description")))
+          val site = props
+            .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+            .flatMap(id => executionSites.get(id.toLong))
+            .orElse(props.flatMap(p => Option(p.getProperty("spark.job.description"))))
             .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name)).getOrElse("")
           jobs(e.jobId) = Job(e.jobId, e.time, -1L, Vector.empty, 0L, 0L, 0L, site)
         }
@@ -102,6 +115,15 @@ final class Profiler private (sc: SparkContext) extends SparkListener {
       stageJob --= ids
     }
     jobs.get(e.jobId).foreach(j => jobs(e.jobId) = j.copy(endMs = e.time))
+  }
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case x: SparkListenerSQLExecutionStart =>
+      x.details.linesIterator.map(_.trim).find(_.startsWith("graft."))
+        .foreach(executionSites(x.executionId) = _)
+    case x: SparkListenerSQLExecutionEnd =>
+      executionSites.remove(x.executionId); ()
+    case _ =>
   }
 
   override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {

@@ -217,8 +217,53 @@ object PlanGuard {
   /** Gate form: throw with every violation listed (the preflight call
     * a scheduled pipeline puts between plan construction and execute).
     */
-  def require(df: DataFrame, allow: Set[String] = Set.empty): DataFrame = {
-    val v = audit(df, allow)
+  def require(df: DataFrame, allow: Set[String] = Set.empty): DataFrame =
+    raise(df, audit(df, allow))
+
+  /** The per-request bound (a streaming admission gate screening one
+    * micro-batch against a lake-sized index): a `whole-scan-exchange`
+    * violation for every exchange — shuffle or broadcast — in `df`'s
+    * physical plan whose input holds an UNFILTERED scan (no partition
+    * filter, no data filter beyond inferred null checks) of one of
+    * `tables` (matched by table directory, `<table>.parquet`). Such a
+    * plan moves the whole table per request, however small the request:
+    * a broadcast collects it to the driver, a shuffle (a join or a
+    * distinct) writes every row of it. A bounded plan reads a table
+    * through a pushed filter on the request's own keys, or streams it
+    * past a broadcast of the request's rows. The walk covers the
+    * adaptive plan's current physical plan and its query stages.
+    */
+  def batchBoundViolations(df: DataFrame, tables: Set[String]): Seq[Violation] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    def nodes(p: SparkPlan): Iterator[SparkPlan] = Iterator.single(p) ++ (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec        => nodes(q.plan)
+      case r: ReusedExchangeExec    => nodes(r.child)
+      case other                    => (other.children ++ other.subqueries).iterator.flatMap(nodes)
+    })
+    // the null checks the optimizer infers from join keys bound nothing
+    def wholeScans(p: SparkPlan): Iterator[String] = nodes(p).flatMap {
+      case f: FileSourceScanExec if f.partitionFilters.isEmpty &&
+          f.dataFilters.forall(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.IsNotNull]) =>
+        f.relation.location.rootPaths.map(_.getName.stripSuffix(".parquet")).filter(tables)
+      case _ => Nil
+    }
+    nodes(df.queryExecution.executedPlan).flatMap {
+      case e: Exchange => wholeScans(e.child).map(t => Violation("whole-scan-exchange",
+        s"${e.nodeName} over an unfiltered scan of $t — the plan moves the whole table " +
+          "for one request; filter the scan by the request's keys, or broadcast the " +
+          "request's rows and stream the table past them"))
+      case _ => Nil
+    }.toSeq.distinct
+  }
+
+  /** Gate form of [[batchBoundViolations]]. */
+  def requireBatchBounded(df: DataFrame, tables: Set[String]): DataFrame =
+    raise(df, batchBoundViolations(df, tables))
+
+  private def raise(df: DataFrame, v: Seq[Violation]): DataFrame = {
     if (v.nonEmpty)
       throw new IllegalStateException(
         s"PlanGuard: ${v.size} scale-unsafe plan shape(s):\n  " + v.mkString("\n  "))

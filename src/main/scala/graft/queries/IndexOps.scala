@@ -1,7 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 import graft.Core._
 import graft.functions.VectorExprs
 
@@ -37,9 +39,12 @@ import graft.functions.VectorExprs
   * splits the mixed (band, bh) predicate so neither half reaches the
   * scan. On a cluster, registering this same sorted layout with a
   * table format adds file-level min/max skipping on top — the layout
-  * already supports it. Batch probes (the incremental entries, the
-  * admission gates) keep the equi-join form: their probe side covers
-  * many buckets, so a bounded shuffle join is the right shape. Index
+  * already supports it. The batch entries (sim_index_incremental,
+  * vec_index_incremental) keep the equi-join form: their probe side
+  * covers many buckets, so a bounded shuffle join is the right shape.
+  * The streaming admission gates probe like the single query, by the
+  * micro-batch's own keys ([[screenDocs]], [[screenVectors]]): a gate
+  * batch is a handful of rows against a lake-sized index. Index
   * location is keyed by the source dir, so sf0.01 and sf0.1 never
   * share an index.
   */
@@ -376,9 +381,9 @@ object IndexOps {
       // production the batch is its own table, for which the split
       // stands in), probe the persisted index, emit (batch doc → indexed
       // near-dup) pairs. Corpus signatures are never recomputed; cost
-      // scales with the batch, not the lake. Shares signDocs/probeMatches
-      // with the streaming admission gate so the two can never disagree
-      // about what counts as a duplicate.
+      // scales with the batch, not the lake. Shares the signature and
+      // the ≥0.9 test (nearDupSets) with the streaming admission gate so
+      // the two can never disagree about what counts as a duplicate.
       val path = ensureIndex(s, dir)
       val signed = signDocs(s,
         load(s, dir, "documents").filter(pmod($"doc_id", lit(10)) === 7))
@@ -615,23 +620,49 @@ object IndexOps {
     }
   )
 
-  /** Sign a (doc_id, text, …) frame with the shared token-set signature:
-    * (b_doc, btids, bands). Token-less docs drop out (no signature — and
-    * downstream they pass any novelty gate as trivially novel).
+  /** Adds the shared token-set signature to a (text, …) frame: `btids`,
+    * the sorted xxhash64 ids of its distinct tokens (the form `sets.tids`
+    * stores), and `bands`, their 16 LSH band hashes — null for a
+    * token-less doc, which has no signature.
     */
-  private def signDocs(s: SparkSession, docs: DataFrame): DataFrame = {
+  private def withDocSig(s: SparkSession, docs: DataFrame): DataFrame = {
     VectorExprs.register(s)
-    docs.select(col("doc_id").as("b_doc"),
-        array_sort(transform(array_distinct(graft.Core.tokens(lower(col("text")))),
-          t => xxhash64(t))).as("btids"))
-      .filter(size(col("btids")) > 0)
-      .withColumn("bands", TextOps.bandHashes(call_function("minhash64", col("btids"))))
+    docs.withColumn("btids",
+        array_sort(transform(array_distinct(graft.Core.tokens(lower(col("text")))), t => xxhash64(t))))
+      .withColumn("bands", when(size(col("btids")) > 0,
+        TextOps.bandHashes(call_function("minhash64", col("btids")))))
+  }
+
+  /** Sign a (doc_id, text, …) frame: (b_doc, btids, bands). Token-less
+    * docs drop out (no signature — and downstream they pass any novelty
+    * gate as trivially novel).
+    */
+  private def signDocs(s: SparkSession, docs: DataFrame): DataFrame =
+    withDocSig(s, docs.select(col("doc_id").as("b_doc"), col("text")))
+      .filter(col("bands").isNotNull)
+      .select(col("b_doc"), col("btids"), col("bands"))
+
+  /** Jaccard(a, b) ≥ 0.9 for two sorted token-id sets, written to
+    * evaluate the intersect expression ONCE and only when it can matter
+    * (it runs per candidate and walks two ~100-long arrays):
+    *  - size guard first: jac ≥ 0.9 needs 19·min(|A|,|B|) ≥ 9·(|A|+|B|)
+    *    (best case inter = min); O(1), short-circuits the array walk
+    *    for size-incompatible pairs;
+    *  - integer form of the threshold: inter/(|A|+|B|−inter) ≥ 0.9 ⟺
+    *    19·inter ≥ 9·(|A|+|B|) — a single intersect reference, where
+    *    the double-division form cost 2 evaluations per test.
+    * The one definition of "near-duplicate" for the batch entry and
+    * both halves of the admission gate.
+    */
+  private def nearDupSets(a: Column, b: Column): Column = {
+    val na = size(a); val nb = size(b)
+    lit(19) * least(na, nb) >= lit(9) * (na + nb) &&
+      lit(19) * call_function("sorted_long_intersect_size", a, b) >= lit(9) * (na + nb)
   }
 
   /** Probe the persisted index with a signed batch: verified matches
-    * (b_doc, sid, ids, jaccard) at ≥ 0.9 — ONE definition of "duplicate
-    * of the indexed corpus", shared by the batch entry and the streaming
-    * admission gate so the two can never drift.
+    * (b_doc, sid, ids, jaccard) at ≥ 0.9 — the batch entry's join form,
+    * for a probe side that covers many buckets.
     */
   private def probeMatches(s: SparkSession, path: String, signed: DataFrame): DataFrame = {
     val qb = signed.select(col("b_doc"), col("btids"),
@@ -648,22 +679,9 @@ object IndexOps {
       .join(qb, Seq("band", "bh"))
       .select(col("b_doc"), col("btids"), col("sid"))
     val sets = simIndex.read(s, path, "sets")
-    // The ≥0.9 test runs per CANDIDATE (millions of band-collision rows;
-    // the intersect walks two ~100-long arrays), so it is written to
-    // evaluate the intersect expression ONCE and only when it can
-    // matter:
-    //  - size guard first: jac ≥ 0.9 needs 19·min(|A|,|B|) ≥ 9·(|A|+|B|)
-    //    (best case inter = min); O(1), short-circuits the array walk
-    //    for size-incompatible pairs;
-    //  - integer form of the threshold: inter/(|A|+|B|−inter) ≥ 0.9 ⟺
-    //    19·inter ≥ 9·(|A|+|B|) — a single intersect reference, where
-    //    the double-division form cost 2 evaluations in the join
-    //    condition plus 2 more in the jaccard projection;
-    //  - the reported jaccard is then computed for SURVIVORS only.
+    // the reported jaccard is computed for SURVIVORS of the test only
     val a = size(col("tids")); val b = size(col("btids"))
     val inter = call_function("sorted_long_intersect_size", col("tids"), col("btids"))
-    val sizeOk  = lit(19) * least(a, b) >= lit(9) * (a + b)
-    val interOk = lit(19) * inter >= lit(9) * (a + b)
     val jac = inter.cast("double") / (a + b - inter)
     // dedup on the three SKINNY columns only — the `ids` family array
     // (hundreds of doc ids for a big duplicate family) must not ride
@@ -674,17 +692,75 @@ object IndexOps {
     // the window before it runs); the .distinct() on the ids projection
     // keeps replayed duplicates from re-multiplying at the re-attach.
     val verified = cand.join(sets.select(col("sid"), col("tids")), "sid")
-      .filter(sizeOk && interOk)
+      .filter(nearDupSets(col("tids"), col("btids")))
       .select(col("b_doc"), col("sid"), round(jac, 4).as("jaccard"))
       .distinct()
     verified.join(sets.select(col("sid"), col("ids")).distinct(), "sid")
       .select(col("b_doc"), col("sid"), col("ids"), col("jaccard"))
   }
 
-  /** Batch-mode novelty filter against the persisted index AND within
-    * the batch itself: the subset of `batch` (doc_id, text, …) that a
-    * streaming ingest should ADMIT (Streams.dedupIngest drives this per
-    * micro-batch, then grows the index with what it admitted):
+  /** One screened admission micro-batch: the `admitted` rows in the
+    * batch's own schema, the same rows `signed` in the form the index
+    * appends write ([[appendSignedDocs]], [[appendSignedVectors]]), and
+    * their `ids`. Both frames are driver-local relations on one
+    * partition, so each write of them is one task and one part file.
+    */
+  private[graft] final case class Screened(admitted: DataFrame, signed: DataFrame, ids: Seq[Long])
+
+  /** The index tables a per-batch gate plan may read only through a
+    * filtered scan or as the streamed side of a join against batch rows
+    * — never shuffled or broadcast whole (PlanGuard.requireBatchBounded).
+    */
+  private val gateIndexTables = Set("sets", "bands", "vecs", "vec_bands")
+
+  /** Collect one per-micro-batch frame to the driver: its plan must pass
+    * the batch-bounded plan guard, and what it returns must fit the two
+    * broadcast dials — the same bounds as any driver-built broadcast side.
+    */
+  private def collectBounded(s: SparkSession, what: String, df: DataFrame): Array[Row] = {
+    graft.plans.PlanGuard.requireBatchBounded(df, gateIndexTables)
+    val rows = df.collect()
+    requireFits(s, what, rows.length.toLong, rows.iterator.map(approxBytes).sum)
+    rows
+  }
+
+  /** Refuse a micro-batch whose driver-side work is past the broadcast
+    * dials, naming them and the source-side bound that keeps a batch
+    * under them.
+    */
+  private def requireFits(s: SparkSession, what: String, rows: Long, bytes: Long): Unit = {
+    val (maxRows, maxBytes) = graft.Core.broadcastDials(s)
+    require(graft.Core.fitsBroadcast(s)((rows, bytes)),
+      s"admission gate bound: the micro-batch's $what is $rows rows / $bytes bytes, " +
+        s"past spark.graft.broadcast.maxRows=$maxRows or spark.graft.guard." +
+        s"maxBroadcastBytes=$maxBytes — the gate screens each micro-batch on the " +
+        "driver, so its work must stay bounded by the batch. Cap the source's " +
+        "per-trigger limit (maxFilesPerTrigger, maxBytesPerTrigger or " +
+        "maxOffsetsPerTrigger), or raise the dials if the batch is intended.")
+  }
+
+  /** [[graft.Core.broadcastStats]]' byte model on a collected value: 16 B
+    * per row or array, 8 B per scalar or element, a string's length.
+    */
+  private def approxBytes(v: Any): Long = v match {
+    case r: Row                     => 16L + r.toSeq.iterator.map(approxBytes).sum
+    case a: scala.collection.Seq[_] => 16L + a.iterator.map(approxBytes).sum
+    case t: String                  => math.max(8L, t.length.toLong)
+    case b: Array[Byte]             => math.max(8L, b.length.toLong)
+    case _                          => 8L
+  }
+
+  private def local(s: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    s.createDataFrame(rows.asJava, schema)
+
+  /** The schema a parquet read-back gives `fields` of `df`: every field
+    * nullable, as the index tables were always appended.
+    */
+  private def appendSchema(df: DataFrame, fields: String*): StructType =
+    StructType(fields.map(f => df.schema(f).copy(nullable = true)))
+
+  /** Screen one micro-batch (doc_id, text, …) against the sim index at
+    * `path` and within itself — the documents the gate ADMITS:
     *
     *  - vs the INDEX: docs with a ≥0.9 match among indexed sets are
     *    dropped — except self-matches (`ids` containing the doc's own
@@ -697,44 +773,109 @@ object IndexOps {
     *    though its kept partner was itself dropped — over-rejection is
     *    the safe direction for an admission gate, and no two ADMITTED
     *    docs are ever ≥0.9-similar.
+    *
+    * Token-less docs have no signature: admitted, never indexed.
+    *
+    * Bounded by the batch, in three jobs: the batch is read and signed
+    * ONCE and collected; the bands table is scanned for the batch's own
+    * bucket hashes (one In on `bh`, pushed into the (band, bh)-sorted
+    * scan; the band is matched here); the sets rows of the candidate
+    * sids only are fetched. Both verifies — against the index and within
+    * the batch — are one filter over a driver-local relation of
+    * candidate pairs, which Spark evaluates without a job. Every collect
+    * is refused past the broadcast dials (`requireFits`), and no plan
+    * broadcasts or shuffles a scan of an index table.
     */
-  private[graft] def novelDocs(s: SparkSession, dir: String,
-                               batch: DataFrame, ns: String = ""): DataFrame = {
-    val path = ensureIndex(s, dir, ns)
-    val signed = signDocs(s, batch)
-    val dupVsIndex = probeMatches(s, path, signed)
-      .filter(!array_contains(col("ids"), col("b_doc")))
-      .select(col("b_doc").as("doc_id")).distinct()
-    val sb = signed.select(col("b_doc"), col("btids"),
-      posexplode(col("bands")).as(Seq("band", "bh")))
-    // single-evaluation integer threshold + size guard, the probeMatches
-    // rewrite (19·inter ≥ 9·(|A|+|B|) ⟺ jac ≥ 0.9); verify-then-dedup:
-    // k-band collisions re-verify k times map-side rather than shuffling
-    // signature-carrying pair rows just to dedup candidates
-    val wa = size(col("btids")); val wb = size(col("otids"))
-    val winter = call_function("sorted_long_intersect_size",
-      col("btids"), col("otids"))
-    val dupInBatch = sb.as("x").join(sb.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-        col("x.b_doc") > col("y.b_doc"))
-      .select(col("x.b_doc").as("b_doc"), col("x.btids").as("btids"),
-        col("y.btids").as("otids"))
-      .filter(lit(19) * least(wa, wb) >= lit(9) * (wa + wb) &&
-              lit(19) * winter >= lit(9) * (wa + wb))
-      .select(col("b_doc").as("doc_id")).distinct()
-    batch.join(dupVsIndex.unionByName(dupInBatch), Seq("doc_id"), "left_anti")
+  private[graft] def screenDocs(s: SparkSession, path: String, batch: DataFrame): Screened = {
+    val sig = withDocSig(s, batch.select(struct(col("*")).as("row"),
+        col("doc_id").cast("long").as("b_doc"), col("text")))
+      .select(col("row"), col("b_doc"), col("btids"), col("bands"))
+    val rows = collectBounded(s, "micro-batch", sig)
+    val id = rows.map(_.getLong(1))
+    val tids = rows.map(_.getSeq[Long](2))
+    val signedIx = rows.indices.filterNot(rows(_).isNullAt(3))
+    // (band, bh) → the signed batch rows carrying it
+    val byKey = signedIx
+      .flatMap(i => rows(i).getSeq[Long](3).zipWithIndex.map { case (h, b) => (b, h) -> i })
+      .groupMap(_._1)(_._2)
+    val cand =
+      if (byKey.isEmpty) Array.empty[Row]
+      else collectBounded(s, "band candidates", simIndex.read(s, path, "bands")
+        .filter(col("bh").isInCollection(byKey.keys.map(_._2).toSeq.distinct))
+        .select(col("sid"), col("band"), col("bh")))
+    val pairs = cand.toSeq.flatMap(r =>
+      byKey.getOrElse((r.getInt(1), r.getLong(2)), Nil).map(_ -> r.getLong(0))).distinct
+    val sets =
+      if (pairs.isEmpty) Array.empty[Row]
+      else collectBounded(s, "candidate sets", simIndex.read(s, path, "sets")
+        .filter(col("sid").isInCollection(pairs.map(_._2).distinct))
+        .select(col("sid"), col("ids"), col("tids")))
+    val setsBySid = sets.toSeq.groupBy(_.getLong(0))
+    // one verify row per (batch doc, indexed set row) and per (batch
+    // doc, smaller-id batch partner) sharing a bucket: (b_doc, btids,
+    // otids, oids) — a doc is a duplicate when a row of it verifies and
+    // the other side is not the doc itself
+    val vsIndex = for ((i, sid) <- pairs; r <- setsBySid.getOrElse(sid, Nil))
+      yield Row(id(i), tids(i), r.getSeq[Long](2), r.getSeq[Long](1))
+    val inBatch = byKey.values.toSeq
+      .flatMap(g => for (i <- g; j <- g if id(i) > id(j)) yield (i, j)).distinct
+      .map { case (i, j) => Row(id(i), tids(i), tids(j), Seq(id(j))) }
+    val longs = ArrayType(LongType, containsNull = false)
+    val verify = StructType(Seq(StructField("b_doc", LongType), StructField("btids", longs),
+      StructField("otids", longs), StructField("oids", longs)))
+    val dup = local(s, vsIndex ++ inBatch, verify)
+      .filter(nearDupSets(col("otids"), col("btids")) && !array_contains(col("oids"), col("b_doc")))
+      .select(col("b_doc")).collect().map(_.getLong(0)).toSet
+    val kept = rows.indices.filterNot(i => dup(id(i)))
+    Screened(
+      local(s, kept.map(rows(_).getStruct(0)), batch.schema).coalesce(1),
+      local(s, kept.filterNot(rows(_).isNullAt(3)).map(i => Row(id(i), tids(i), rows(i).get(3))),
+        appendSchema(sig, "b_doc", "btids", "bands")).coalesce(1),
+      kept.map(id))
   }
 
+  /** Batch-mode novelty filter against the persisted index AND within
+    * the batch itself: the subset of `batch` (doc_id, text, …) that a
+    * streaming ingest should ADMIT, by [[screenDocs]]. Runs the screen
+    * when called and returns a driver-local frame.
+    */
+  private[graft] def novelDocs(s: SparkSession, dir: String,
+                               batch: DataFrame, ns: String = ""): DataFrame =
+    screenDocs(s, ensureIndex(s, dir, ns), batch).admitted
+
   /** Grow the persisted index with newly admitted docs (each its own
-    * 1-doc set) — the streaming gate calls this after admission so the
-    * NEXT batch sees this batch's documents. Parquet append; replayed
-    * appends add byte-identical duplicate rows, which probeMatches
-    * dedups at read time and [[compactIndex]] removes at rest.
+    * 1-doc set), signing them here — the form for direct batch callers.
+    * Parquet append; replayed appends add byte-identical duplicate rows,
+    * which the probes dedup at read time and [[compactIndex]] removes at
+    * rest.
     */
   private[graft] def appendToIndex(s: SparkSession, dir: String,
                                    admitted: DataFrame, ns: String = ""): Unit = {
-    appendToIndexAt(s, ensureIndex(s, dir, ns), admitted)
+    ensureIndex(s, dir, ns)
+    appendSignedDocs(s, dir, ns, signDocs(s, admitted))
+  }
+
+  /** Append already-signed docs (b_doc, btids, bands) to the namespace's
+    * index, which the caller has ensured — the admission gate appends
+    * [[Screened.signed]], so a batch is signed once — then run the
+    * append path's small-file backstop.
+    */
+  private[graft] def appendSignedDocs(s: SparkSession, dir: String, ns: String,
+                                      signed: DataFrame): Unit = {
+    writeSignedDocs(indexDir(dir, ns), signed)
     maybeCompact(s, dir, ns, "bands")
+  }
+
+  private def writeSignedDocs(path: String, signed: DataFrame): Unit = {
+    signed.select(col("b_doc").as("sid"), array(col("b_doc")).as("ids"),
+        col("btids").as("tids"))
+      .write.mode(SaveMode.Append).parquet(s"$path/sets.parquet")
+    // appends add small unsorted files; a probe's pushed predicates
+    // still evaluate against their row-group stats (just with weaker
+    // skipping on the fresh tail) until compaction re-sorts them
+    signed.select(col("b_doc").as("sid"),
+        posexplode(col("bands")).as(Seq("band", "bh")))
+      .write.mode(SaveMode.Append).parquet(s"$path/bands.parquet")
   }
 
   /** Small-file backstop OWNED BY THE APPEND PATH: the streaming gates
@@ -772,18 +913,8 @@ object IndexOps {
     * another rebuild).
     */
   private[graft] def appendToIndexAt(s: SparkSession, path: String,
-                                     admitted: DataFrame): Unit = {
-    val signed = signDocs(s, admitted)
-    signed.select(col("b_doc").as("sid"), array(col("b_doc")).as("ids"),
-        col("btids").as("tids"))
-      .write.mode(SaveMode.Append).parquet(s"$path/sets.parquet")
-    // appends add small unsorted files; a probe's pushed predicates
-    // still evaluate against their row-group stats (just with weaker
-    // skipping on the fresh tail) until compaction re-sorts them
-    signed.select(col("b_doc").as("sid"),
-        posexplode(col("bands")).as(Seq("band", "bh")))
-      .write.mode(SaveMode.Append).parquet(s"$path/bands.parquet")
-  }
+                                     admitted: DataFrame): Unit =
+    writeSignedDocs(path, signDocs(s, admitted))
 
   /** The LSH vector index family: `vecs` plus the probe-serving
     * `vec_bands` layout, signed at the artifact's frozen band width.
@@ -840,102 +971,151 @@ object IndexOps {
     w.get.trim.toInt
   }
 
-  /** Vector-side novelty filter against the persisted ANN index: the
-    * subset of `batch` (vec_id, embedding, …) with NO indexed vector of
-    * cosine ≥ `minCos` — the embedding twin of [[novelDocs]] for a
-    * streaming embedding feed (candidates from the persisted hyperplane
-    * bands with Hamming-≤2 multi-probe, exact-cosine verify,
-    * self-matches ignored so replays re-admit identically).
-    * Within-batch: a vector with a ≥minCos partner of smaller vec_id in
-    * the same batch is dropped (greedy, over-rejecting on chains — the
-    * safe direction for admission).
+  /** Adds the vector signature at band width `w` to an (embedding, …)
+    * frame: `emb` as doubles, its `norm`, and `bands`, its 4 band keys —
+    * null for a zero-norm vector, which has no cosine and no signature.
+    */
+  private def withVecSig(s: SparkSession, vecs: DataFrame, w: Int): DataFrame = {
+    VectorExprs.register(s)
+    vecs.withColumn("emb", col("embedding").cast("array<double>"))
+      .withColumn("norm", sqrt(call_function("dotp", col("emb"), col("emb"))))
+      .withColumn("bands", when(col("norm") > 0, VecOps.lshBandKeysW(col("emb"), w)))
+  }
+
+  /** Sign a (vec_id, embedding, …) frame at band width `w`: (vec_id,
+    * emb, norm, bands). Zero-norm vectors drop out (unsignable).
+    */
+  private def signVectors(s: SparkSession, vecs: DataFrame, w: Int): DataFrame =
+    withVecSig(s, vecs.select(col("vec_id"), col("embedding")), w)
+      .filter(col("bands").isNotNull)
+      .select(col("vec_id"), col("emb"), col("norm"), col("bands"))
+
+  /** Screen one micro-batch (vec_id, embedding, …) against the vector
+    * index at `path` and within itself — the vectors the gate ADMITS:
+    * the embedding twin of [[screenDocs]]. A vector is dropped when an
+    * indexed vector (other than itself, so replays re-admit
+    * identically) or a smaller-id vector of the same batch has cosine ≥
+    * `minCos` with it (greedy, over-rejecting on chains — the safe
+    * direction for admission). Candidates share a band key within
+    * Hamming distance 2, signed at the artifact's frozen width.
     *
     * ZERO-NORM vectors (cosine undefined — the vector twin of a
     * token-less doc) cannot be signed and are admitted unconditionally,
     * in every batch: they are never gated against the index or each
-    * other. Same trivially-novel contract as novelDocs; a feed that can
-    * produce all-zero embeddings should filter or exact-dedup them
-    * upstream of the gate.
+    * other. A feed that can produce all-zero embeddings should filter
+    * or exact-dedup them upstream of the gate.
+    *
+    * Bounded by the batch, in four jobs: the batch is read and signed
+    * ONCE and collected; its Hamming-≤2 ring rows — (band, key, batch
+    * vector), 4·(1+w+C(w,2)) per vector — are the broadcast side of a
+    * join that streams `vec_bands` (a broadcast of driver rows is a job
+    * of its own; a literal In of the ring would pass the 1024-key
+    * pushdown ceiling at w=18); the `vecs` rows of the candidate ids
+    * only are fetched. The cosines — the Spark `dotp/(norm·norm)`
+    * expression, never a driver re-implementation, so the `minCos`
+    * boundary cannot move — are one filter over a driver-local relation
+    * of candidate pairs, evaluated without a job. Every collect and the
+    * ring are refused past the broadcast dials (`requireFits`), and no
+    * plan broadcasts or shuffles a scan of an index table.
+    */
+  private[graft] def screenVectors(s: SparkSession, path: String, batch: DataFrame,
+                                   minCos: Double): Screened = {
+    val w = readVecW(s, path) // sign at the artifact's frozen width
+    val sig = withVecSig(s, batch.select(struct(col("*")).as("row"),
+        col("vec_id").cast("long").as("vec_id"), col("embedding")), w)
+      .select(col("row"), col("vec_id"), col("emb"), col("norm"), col("bands"))
+    val rows = collectBounded(s, "micro-batch", sig)
+    val id = rows.map(_.getLong(1))
+    val signedIx = rows.indices.filterNot(rows(_).isNullAt(4))
+    val keys = rows.map(_.getSeq[Long](4))
+    val masks = VecOps.probeMasksW(w)
+    val ring = for (i <- signedIx; (k, b) <- keys(i).zipWithIndex; m <- masks)
+      yield Row(b, k ^ m, id(i))
+    requireFits(s, "Hamming-2 probe ring", ring.size.toLong, 40L * ring.size)
+    val cand =
+      if (ring.isEmpty) Array.empty[Row]
+      else collectBounded(s, "band candidates", vecIndex.read(s, path, "vec_bands")
+        .join(broadcast(local(s, ring, StructType(Seq(StructField("band", IntegerType),
+          StructField("bk", LongType), StructField("b_id", LongType))))), Seq("band", "bk"))
+        .filter(col("vec_id") =!= col("b_id")) // self-guard: replayed vectors
+        .select(col("b_id"), col("vec_id")))
+    val pairs = cand.toSeq.map(r => (r.getLong(0), r.getLong(1))).distinct
+    val vecs =
+      if (pairs.isEmpty) Array.empty[Row]
+      else collectBounded(s, "candidate vectors", vecIndex.read(s, path, "vecs")
+        .filter(col("vec_id").isInCollection(pairs.map(_._2).distinct))
+        .select(col("vec_id"), col("emb"), col("norm")))
+    val vecsById = vecs.toSeq.groupBy(_.getLong(0))
+    val byId = signedIx.groupBy(id(_))
+    // one cosine row per (batch vector, indexed vector row) and per
+    // (batch vector, smaller-id batch partner) in its ring: (b_id,
+    // b_emb, b_n, emb, norm)
+    val emb = (i: Int) => rows(i).get(2)
+    val norm = (i: Int) => rows(i).getDouble(3)
+    val vsIndex = for ((bid, vid) <- pairs; i <- byId(bid); r <- vecsById.getOrElse(vid, Nil))
+      yield Row(bid, emb(i), norm(i), r.get(1), r.getDouble(2))
+    val stored = signedIx.flatMap(j => keys(j).zipWithIndex.map { case (k, b) => (b, k) -> j })
+      .groupMap(_._1)(_._2)
+    val inBatch = (for {
+      i <- signedIx; (k, b) <- keys(i).zipWithIndex; m <- masks
+      j <- stored.getOrElse((b, k ^ m), Nil) if id(i) > id(j)
+    } yield (i, j)).distinct
+      .map { case (i, j) => Row(id(i), emb(i), norm(i), emb(j), norm(j)) }
+    val doubles = ArrayType(DoubleType, containsNull = true)
+    val verify = StructType(Seq(StructField("b_id", LongType), StructField("b_emb", doubles),
+      StructField("b_n", DoubleType), StructField("emb", doubles), StructField("norm", DoubleType)))
+    val cos = call_function("dotp", col("emb"), col("b_emb")) / (col("norm") * col("b_n"))
+    val dup = local(s, vsIndex ++ inBatch, verify)
+      .filter(cos >= minCos)
+      .select(col("b_id")).collect().map(_.getLong(0)).toSet
+    val kept = rows.indices.filterNot(i => dup(id(i)))
+    Screened(
+      local(s, kept.map(rows(_).getStruct(0)), batch.schema).coalesce(1),
+      local(s, kept.filterNot(rows(_).isNullAt(4))
+          .map(i => Row(id(i), emb(i), norm(i), rows(i).get(4))),
+        appendSchema(sig, "vec_id", "emb", "norm", "bands")).coalesce(1),
+      kept.map(id))
+  }
+
+  /** Vector-side novelty filter against the persisted ANN index: the
+    * subset of `batch` (vec_id, embedding, …) with NO indexed vector of
+    * cosine ≥ `minCos` and no smaller-id batch partner that close, by
+    * [[screenVectors]] — the embedding twin of [[novelDocs]]. Runs the
+    * screen when called and returns a driver-local frame.
     */
   private[graft] def novelVectors(s: SparkSession, dir: String,
                                   batch: DataFrame, minCos: Double,
-                                  ns: String = ""): DataFrame = {
-    VectorExprs.register(s)
-    val path = ensureVecIndex(s, dir, ns)
-    val w = readVecW(s, path) // sign at the artifact's frozen width
-    // localCheckpoint: signed feeds the probe explosion, two embedding
-    // broadcasts and the within-batch side — the ingest batch is the
-    // bounded side by contract (same device as vec_index_incremental)
-    val signed = batch.select(col("vec_id").as("b_id"),
-        col("embedding").cast("array<double>").as("b_emb"))
-      .withColumn("b_n", sqrt(call_function("dotp", col("b_emb"), col("b_emb"))))
-      .filter(col("b_n") > 0)
-      .withColumn("bands", VecOps.lshBandKeysW(col("b_emb"), w))
-      .localCheckpoint()
-    val bEmb = signed.select(col("b_id"), col("b_emb"), col("b_n"))
-    // probe rows carry IDS ONLY (the r14 incremental fix, applied to
-    // the gate in r15: riding b_emb through the ×(1+w+C(w,2)) mask
-    // explosion ships a 64-double array per probe row)
-    val qb = signed.select(col("b_id"), posexplode(col("bands")).as(Seq("band", "bk")))
-    // multi-probe side: one probe row per (batch vector, band, mask)
-    val qprobe = qb.select(col("b_id"), col("band"),
-      explode(VecOps.probeKeysW(col("bk"), w)).as("bk"))
-    val cos = call_function("dotp", col("emb"), col("b_emb")) / (col("norm") * col("b_n"))
-    // candidate distinct on IDS ONLY, then the stored-vectors join with
-    // the candidates as the BROADCAST side and the batch embeddings on
-    // a second batch-sized broadcast — the vec_index_incremental
-    // restructure (r15): the old shape ran the distinct over rows
-    // carrying a 64-double b_emb each and then SMJ-shuffled the whole
-    // stored embedding table per gate batch. Bounded like there —
-    // candidates by |batch| × the width dial's ring budget, the batch
-    // by the admission contract — but the ring bound only covers
-    // RANDOM collisions (a duplicate-heavy batch vs a dense corpus
-    // cluster scales candidates with |batch|×|cluster|), so both hints
-    // are size-guarded: counts are cheap (localCheckpointed frames),
-    // and above the dial the fetch degrades to a shuffle join.
-    val candVsIndex = vecIndex.read(s, path, "vec_bands")
-      .join(qprobe, Seq("band", "bk"))
-      .filter(col("vec_id") =!= col("b_id")) // self-guard: replayed vectors
-      .select(col("b_id"), col("vec_id")).distinct()
-      .localCheckpoint()
-    // byte bounds derived from each frame's actual schema
-    // (Core.broadcastStats; the renamed o-side projection of bEmb has
-    // identical row shape, so its stats are reused, not re-measured)
-    val candVsStats = graft.Core.broadcastStats(candVsIndex)
-    val bEmbStats = graft.Core.broadcastStats(bEmb)
-    val dupVsIndex = vecIndex.read(s, path, "vecs")
-      .join(graft.Core.guardedBroadcast(s, candVsIndex)(candVsStats), "vec_id")
-      .join(graft.Core.guardedBroadcast(s, bEmb)(bEmbStats), "b_id")
-      .filter(cos >= minCos)
-      .select(col("b_id").as("vec_id")).distinct()
-    val wcos = call_function("dotp", col("b_emb"), col("o_emb")) / (col("b_n") * col("o_n"))
-    // within-batch: probe-expanded x side vs stored-key y side — same
-    // Hamming-≤2 candidate rule as the index probe; ids pair first,
-    // both embeddings re-join from the batch-sized broadcasts
-    val dupInBatch = qprobe.as("x").join(qb.as("y"),
-        col("x.band") === col("y.band") && col("x.bk") === col("y.bk") &&
-        col("x.b_id") > col("y.b_id"))
-      .select(col("x.b_id").as("b_id"), col("y.b_id").as("o_id")).distinct()
-      .join(graft.Core.guardedBroadcast(s, bEmb)(bEmbStats), "b_id")
-      .join(graft.Core.guardedBroadcast(s,
-        bEmb.select(col("b_id").as("o_id"), col("b_emb").as("o_emb"),
-          col("b_n").as("o_n")))(bEmbStats), "o_id")
-      .filter(wcos >= minCos)
-      .select(col("b_id").as("vec_id")).distinct()
-    batch.join(dupVsIndex.unionByName(dupInBatch), Seq("vec_id"), "left_anti")
-  }
+                                  ns: String = ""): DataFrame =
+    screenVectors(s, ensureVecIndex(s, dir, ns), batch, minCos).admitted
 
   /** Grow the persisted vector index with admitted vectors — the
     * embedding twin of [[appendToIndex]]; replayed appends add
     * byte-identical duplicate rows ([[compactIndex]] removes them at
     * rest; probes distinct candidate ids, so answers are unaffected).
     * Zero-norm vectors are unsignable and excluded — consistent with
-    * [[novelVectors]] never gating them.
+    * [[screenVectors]] never gating them.
     */
   private[graft] def appendToVecIndex(s: SparkSession, dir: String,
                                       admitted: DataFrame, ns: String = ""): Unit = {
-    appendToVecIndexAt(s, ensureVecIndex(s, dir, ns), admitted)
+    val path = ensureVecIndex(s, dir, ns)
+    appendSignedVectors(s, dir, ns, signVectors(s, admitted, readVecW(s, path)))
+  }
+
+  /** Append already-signed vectors (vec_id, emb, norm, bands) — the
+    * gate's [[Screened.signed]] — to the namespace's index, which the
+    * caller has ensured; then the append path's small-file backstop.
+    */
+  private[graft] def appendSignedVectors(s: SparkSession, dir: String, ns: String,
+                                         signed: DataFrame): Unit = {
+    writeSignedVectors(indexDir(dir, ns), signed)
     maybeCompact(s, dir, ns, "vec_bands")  // see maybeCompact: the append path owns its cadence
+  }
+
+  private def writeSignedVectors(path: String, signed: DataFrame): Unit = {
+    signed.select(col("vec_id"), col("emb"), col("norm"))
+      .write.mode(SaveMode.Append).parquet(s"$path/vecs.parquet")
+    signed.select(col("vec_id"), posexplode(col("bands")).as(Seq("band", "bk")))
+      .write.mode(SaveMode.Append).parquet(s"$path/vec_bands.parquet")
   }
 
   /** Known-path append, no ensure — see [[appendToIndexAt]]. Appends
@@ -944,19 +1124,8 @@ object IndexOps {
     * moves on a REBUILD (source-data restamp), never on growth.
     */
   private[graft] def appendToVecIndexAt(s: SparkSession, path: String,
-                                        admitted: DataFrame): Unit = {
-    VectorExprs.register(s)
-    val w = readVecW(s, path)
-    val signed = admitted.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("emb"))
-      .withColumn("norm", sqrt(call_function("dotp", col("emb"), col("emb"))))
-      .filter(col("norm") > 0)
-    signed.select(col("vec_id"), col("emb"), col("norm"))
-      .write.mode(SaveMode.Append).parquet(s"$path/vecs.parquet")
-    signed.select(col("vec_id"),
-        posexplode(VecOps.lshBandKeysW(col("emb"), w)).as(Seq("band", "bk")))
-      .write.mode(SaveMode.Append).parquet(s"$path/vec_bands.parquet")
-  }
+                                        admitted: DataFrame): Unit =
+    writeSignedVectors(path, signVectors(s, admitted, readVecW(s, path)))
 
   private def ensureVecIndex(s: SparkSession, dir: String, ns: String = ""): String =
     ensureVecIndexStatus(s, dir, ns)._1

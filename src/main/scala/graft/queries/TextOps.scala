@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.Core._
 import graft.functions.VectorExprs
+import scala.jdk.CollectionConverters._
 
 /** Text-analysis / LLM-training-pipeline operators over the `documents`
   * table (SURVEY.md §2.10; reference SearchIndexer engine.py:65-98 plus
@@ -569,6 +570,7 @@ object TextOps {
     * exact append of (doc_id, doc_id) rows; StreamingSpec asserts
     * equality against a from-scratch rebuild over the grown corpus.
     *
+    * `batchAdmitted` is the doc ids the gate admitted in this batch.
     * Lifecycle mirrors the gate index: on a missing/stale artifact,
     * reseed by copying the base-corpus labels and recover ALL
     * previously-admitted singletons from the lake table (replayed
@@ -576,20 +578,23 @@ object TextOps {
     * distinct, compaction removes them at rest).
     */
   private[graft] def maintainGateLabels(s: org.apache.spark.sql.SparkSession, dir: String,
-                                        ns: String, batchAdmitted: org.apache.spark.sql.DataFrame,
+                                        ns: String, batchAdmitted: Seq[Long],
                                         lakeDir: String, table: String): Unit = {
-    val singles = (d: org.apache.spark.sql.DataFrame) =>
-      d.select(col("doc_id"), col("doc_id").as("label"))
     // on a reseed the lake already holds THIS batch (committed before
     // the label update), so recovering the whole table covers it — no
     // separate batch append on that path, which would double-write
     val (path, reseeded) = gateLabelsArtifact.ensure(s, dir, ns, recover = p =>
       if (LakeFs(s, lakeDir).exists(new org.apache.hadoop.fs.Path(s"$lakeDir/$table.parquet")))
-        singles(graft.Core.load(s, lakeDir, table))
+        graft.Core.load(s, lakeDir, table).select(col("doc_id"), col("doc_id").as("label"))
           .write.mode(org.apache.spark.sql.SaveMode.Append)
           .parquet(s"$p/labels.parquet"))
+    // the batch's singletons: one local part file, nullable like the
+    // recovered rows
     if (!reseeded)
-      singles(batchAdmitted)
+      s.createDataFrame(batchAdmitted.map(d => org.apache.spark.sql.Row(d, d)).asJava,
+          org.apache.spark.sql.types.StructType(Seq("doc_id", "label").map(
+            org.apache.spark.sql.types.StructField(_, org.apache.spark.sql.types.LongType))))
+        .coalesce(1)
         .write.mode(org.apache.spark.sql.SaveMode.Append)
         .parquet(s"$path/labels.parquet")
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.queries.LakeFs
+import graft.queries.{IndexOps, LakeFs}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -304,7 +304,7 @@ object Streams {
     * corpus index or other gates (128-bit namespace keying).
     */
   def dropGate(s: SparkSession, corpusDir: String, lakeDir: String, name: String): Unit = {
-    val p = graft.queries.IndexOps.indexDir(corpusDir, gateNamespace(lakeDir, name))
+    val p = IndexOps.indexDir(corpusDir, gateNamespace(lakeDir, name))
     LakeFs(s, p).delete(new Path(p), true); ()
   }
 
@@ -320,12 +320,24 @@ object Streams {
     * NOVEL ones to the lake, then grow the index with what was admitted
     * so the NEXT batch is gated against this one too — the admission
     * gate a training-data pipeline runs on every arriving shard (batch
-    * analogue: sim_index_incremental). Per-batch cost scales with the
-    * batch, not the lake.
+    * analogue: sim_index_incremental).
+    *
+    * Per-batch work is bounded by the batch (IndexOps.screenDocs): the
+    * batch is signed once, the index is probed by the batch's own bucket
+    * keys and read for the candidate sets only, and the signed admitted
+    * rows are appended as they are — at most 8 jobs per batch outside
+    * the compaction cadence (the batch read, the candidate scan, the
+    * sets fetch, and one write each of the `batch=N` dir, `sets`,
+    * `bands` and the gate labels, one part file each), one index ensure
+    * and one labels ensure. The driver holds the signed batch and its
+    * candidates; a batch past the broadcast dials
+    * (`spark.graft.broadcast.maxRows`,
+    * `spark.graft.guard.maxBroadcastBytes`) stops the query — bound it
+    * with the source's per-trigger limit.
     *
     * At-least-once safety: the admitted rows land in a per-batchId
     * directory with Overwrite (replay rewrites the same dir, never
-    * double-appends), and novelDocs ignores a doc's own indexed copy,
+    * double-appends), and the screen ignores a doc's own indexed copy,
     * so a replayed batch admits identically even though its docs were
     * already appended to the index. Readers see `batch` as a partition
     * column of the admitted table.
@@ -349,23 +361,18 @@ object Streams {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val s = batch.sparkSession
         val tablePath = s"$lakeDir/$name.parquet"
-        graft.queries.IndexOps.ensureIndexStatus(s, corpusDir, ns, recover = p =>
+        val (path, _) = IndexOps.ensureIndexStatus(s, corpusDir, ns, recover = p =>
           if (LakeFs(s, tablePath).exists(new Path(tablePath)))
-            graft.queries.IndexOps.appendToIndexAt(s, p, graft.Core.load(s, lakeDir, name)))
-        val batchDir = s"$tablePath/batch=$batchId"
-        val novel = graft.queries.IndexOps.novelDocs(s, corpusDir, batch, ns)
-        novel.write.mode("overwrite").parquet(batchDir)
-        // index growth reads BACK the committed admission (no lineage
-        // recompute, and exactly what replay would overwrite), with the
-        // schema of the frame just written: no footer inference job
-        val admitted = s.read.schema(novel.schema).parquet(batchDir)
-        graft.queries.IndexOps.appendToIndex(s, corpusDir, admitted, ns)
+            IndexOps.appendToIndexAt(s, p, graft.Core.load(s, lakeDir, name)))
+        val screened = IndexOps.screenDocs(s, path, batch)
+        screened.admitted.write.mode("overwrite").parquet(s"$tablePath/batch=$batchId")
+        IndexOps.appendSignedDocs(s, corpusDir, ns, screened.signed)
         // incremental cluster maintenance: admitted docs are singleton
         // components by the gate invariant, so the labels artifact
         // stays exactly equal to a from-scratch rebuild (spec'd)
-        graft.queries.TextOps.maintainGateLabels(s, corpusDir, ns, admitted, lakeDir, name)
+        graft.queries.TextOps.maintainGateLabels(s, corpusDir, ns, screened.ids, lakeDir, name)
         if (batchId % compactEvery == compactEvery - 1)
-          graft.queries.IndexOps.compactIndex(s, corpusDir, ns)
+          IndexOps.compactIndex(s, corpusDir, ns)
         ()
       }
       .start()
@@ -376,7 +383,12 @@ object Streams {
     * the batch, append the novel ones to the lake (per-batchId dir,
     * replay-idempotent), and grow the index with what was admitted.
     * Same private-namespace, rebuild-recovery, and compaction lifecycle
-    * as the document gate.
+    * as the document gate, and the same batch bound
+    * (IndexOps.screenVectors): at most 8 jobs per batch outside the
+    * compaction cadence — the batch read, the ring join against
+    * `vec_bands` (two: its broadcast and its scan), the candidate
+    * vectors fetch, and one write each of the `batch=N` dir, `vecs` and
+    * `vec_bands`.
     */
   def dedupVecIngest(vecs: DataFrame, corpusDir: String, lakeDir: String,
                      name: String, minCos: Double): org.apache.spark.sql.streaming.StreamingQuery = {
@@ -386,16 +398,14 @@ object Streams {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val s = batch.sparkSession
         val tablePath = s"$lakeDir/$name.parquet"
-        graft.queries.IndexOps.ensureVecIndexStatus(s, corpusDir, ns, recover = p =>
+        val (path, _) = IndexOps.ensureVecIndexStatus(s, corpusDir, ns, recover = p =>
           if (LakeFs(s, tablePath).exists(new Path(tablePath)))
-            graft.queries.IndexOps.appendToVecIndexAt(s, p, graft.Core.load(s, lakeDir, name)))
-        val batchDir = s"$tablePath/batch=$batchId"
-        val novel = graft.queries.IndexOps.novelVectors(s, corpusDir, batch, minCos, ns)
-        novel.write.mode("overwrite").parquet(batchDir)
-        graft.queries.IndexOps.appendToVecIndex(s, corpusDir,
-          s.read.schema(novel.schema).parquet(batchDir), ns)
+            IndexOps.appendToVecIndexAt(s, p, graft.Core.load(s, lakeDir, name)))
+        val screened = IndexOps.screenVectors(s, path, batch, minCos)
+        screened.admitted.write.mode("overwrite").parquet(s"$tablePath/batch=$batchId")
+        IndexOps.appendSignedVectors(s, corpusDir, ns, screened.signed)
         if (batchId % compactEvery == compactEvery - 1)
-          graft.queries.IndexOps.compactIndex(s, corpusDir, ns)
+          IndexOps.compactIndex(s, corpusDir, ns)
         ()
       }
       .start()

@@ -19,9 +19,7 @@ class LakeReadGuardSpec extends AnyFunSuite {
     "LakeArtifact.read" -> "a read inside a build, before the stamp lands: nothing to pin by",
     "Ingest.upsertBronze" -> "bronze upsert: a caller-supplied table that every upsert rewrites",
     "Ingest.compactBronze" -> "bronze compaction: a caller-supplied table the compaction rewrites",
-    "PipelineOps.readMixState" -> "mix partials: per-batch partial dirs outside any artifact stamp",
-    "Streams.dedupIngest" -> "gate batch=N read-back, with the schema of the frame just written",
-    "Streams.dedupVecIngest" -> "gate batch=N read-back, with the schema of the frame just written")
+    "PipelineOps.readMixState" -> "mix partials: per-batch partial dirs outside any artifact stamp")
 
   /** A parquet read: `read.parquet(`, `read.schema(..).parquet(`,
     * `read.format("parquet")` or `read.load(` (parquet is the default

@@ -148,4 +148,34 @@ class PlanGuardSpec extends SparkSpecBase {
       PlanGuard.audit(df, allow = Set("bnlj")).mkString("; "))
     finally spark.conf.unset("spark.graft.guard.maxBroadcastBytes")
   }
+
+  test("batch bound: a shuffled or broadcast whole scan of an index table is flagged; filtered and streamed scans pass") {
+    val d = java.nio.file.Files.createTempDirectory("graft-pgbound").toString
+    Seq((1L, Seq(1L, 2L), Seq(3L, 4L)), (2L, Seq(2L), Seq(5L))).toDF("sid", "ids", "tids")
+      .write.parquet(s"$d/sets.parquet")
+    Seq((1L, 0, 7L), (2L, 1, 8L)).toDF("sid", "band", "bh").write.parquet(s"$d/bands.parquet")
+    val sets = spark.read.parquet(s"$d/sets.parquet")
+    val bands = spark.read.parquet(s"$d/bands.parquet")
+    val request = Seq((10L, 0, 7L)).toDF("b_doc", "band", "bh")
+    val tables = Set("sets", "bands")
+    def kinds(df: org.apache.spark.sql.DataFrame) = PlanGuard.batchBoundViolations(df, tables).map(_.kind)
+    // the join-form probe: the whole sets table broadcast, its ids
+    // column deduplicated through a shuffle
+    val joined = bands.join(request, Seq("band", "bh")).join(broadcast(sets.select($"sid", $"tids")), "sid")
+    assert(kinds(joined).contains("whole-scan-exchange"), joined.queryExecution.executedPlan.toString)
+    assert(kinds(sets.select($"sid", $"ids").distinct()) == Seq("whole-scan-exchange"))
+    intercept[IllegalStateException](PlanGuard.requireBatchBounded(sets.select($"sid").distinct(), tables))
+    // bounded: a pushed filter by the request's keys, a stream past the
+    // request's broadcast rows, and any table outside the set
+    assert(kinds(bands.filter($"bh".isin(7L, 8L)).select($"sid").distinct()).isEmpty)
+    assert(kinds(bands.join(broadcast(request), Seq("band", "bh"))).isEmpty)
+    assert(PlanGuard.batchBoundViolations(sets.select($"sid").distinct(), Set("vecs")).isEmpty)
+  }
+
+  test("batch bound: the batch entry's join-form index probe — the admission gates' former per-batch shape — is flagged") {
+    val dir = sf("sf0.001")
+    val probe = SparkEntry.queries("sim_index_incremental")(spark, dir)
+    val v = PlanGuard.batchBoundViolations(probe, Set("sets", "bands", "vecs", "vec_bands"))
+    assert(v.exists(_.detail.contains("of sets")), v.mkString("; "))
+  }
 }

@@ -391,6 +391,104 @@ class StreamingSpec extends SparkSpecBase with StreamRestartCases {
     SparkEntry.queries("vec_index_build")(spark, corpusDir).collect()
   }
 
+  /** Part files under `dir`. */
+  private def partFiles(dir: String): Int =
+    filesUnder(new java.io.File(dir)).count(_.getName.startsWith("part-"))
+
+  test("bounded gate batch: a warm docs micro-batch runs at most 8 jobs and adds one part file per table") {
+    implicit val sc = spark.sqlContext
+    val corpusDir = sf("sf0.001")
+    val lake = java.nio.file.Files.createTempDirectory("graft-sbound").toString
+    val name = "admitted"
+    val idx = graft.queries.IndexOps.indexDir(corpusDir, Streams.gateNamespace(lake, name))
+    val doc0Text = spark.read.parquet(s"$corpusDir/documents.parquet")
+      .filter($"doc_id" === 0).select($"text").as[String].head()
+    val textA = "zzqx wvut ponm lkji hgfe dcba"
+    val textB = "qqzz aabb ccdd eeff gghh iijj"
+    val in = MemoryStream[(Long, String)]
+    val q = Streams.dedupIngest(in.toDF().toDF("doc_id", "text"), corpusDir, lake, name)
+    try {
+      // batch 0 seeds the gate's namespace (cold); batch 1 is warm
+      in.addData((60000L, "warm up text with its own tokens wu1 wu2 wu3"))
+      q.processAllAvailable()
+      val tables = Seq("sets", "bands", "labels").map(t => s"$idx/$t.parquet")
+      val before = tables.map(partFiles)
+      // an exact copy of an indexed doc, a novel doc, and an intra-batch pair
+      val jobs = jobsDuring {
+        in.addData((60001L, doc0Text), (60002L, textA), (60003L, textB), (60004L, textB))
+        q.processAllAvailable()
+      }
+      assert(jobs <= 8, s"a warm docs gate batch ran $jobs jobs")
+      assert(tables.map(partFiles).zip(before).map { case (a, b) => a - b } == Seq(1, 1, 1),
+        s"one part file per index table per batch: ${tables.map(partFiles)} after $before")
+      assert(partFiles(s"$lake/$name.parquet/batch=1") == 1)
+    } finally q.stop()
+    val admitted = spark.read.parquet(s"$lake/$name.parquet")
+      .select($"doc_id").as[Long].collect().toSet
+    assert(admitted == Set(60000L, 60002L, 60003L), s"admitted $admitted")
+  }
+
+  test("bounded gate batch: a warm vecs micro-batch runs at most 8 jobs and adds one part file per table") {
+    implicit val sc = spark.sqlContext
+    val corpusDir = sf("sf0.001")
+    val lake = java.nio.file.Files.createTempDirectory("graft-vbound").toString
+    val name = "vadmitted"
+    val idx = graft.queries.IndexOps.indexDir(corpusDir, Streams.gateNamespace(lake, name))
+    val v0 = spark.read.parquet(s"$corpusDir/embeddings.parquet")
+      .filter($"vec_id" === 0).select($"embedding").as[Seq[Float]].head()
+    val rnd = new scala.util.Random(3)
+    val warm = v0.map(_ => rnd.nextFloat() - 0.5f)
+    val in = MemoryStream[(Long, Seq[Float])]
+    val q = Streams.dedupVecIngest(
+      in.toDF().toDF("vec_id", "embedding"), corpusDir, lake, name, 0.99)
+    try {
+      in.addData((61000L, warm))
+      q.processAllAvailable()
+      val tables = Seq("vecs", "vec_bands").map(t => s"$idx/$t.parquet")
+      val before = tables.map(partFiles)
+      // an exact copy of an indexed vector, a novel one, and an intra-batch pair
+      val jobs = jobsDuring {
+        in.addData((61001L, v0), (61002L, v0.map(-_)), (61003L, v0.reverse), (61004L, v0.reverse))
+        q.processAllAvailable()
+      }
+      assert(jobs <= 8, s"a warm vecs gate batch ran $jobs jobs")
+      assert(tables.map(partFiles).zip(before).map { case (a, b) => a - b } == Seq(1, 1),
+        s"one part file per index table per batch: ${tables.map(partFiles)} after $before")
+      assert(partFiles(s"$lake/$name.parquet/batch=1") == 1)
+    } finally q.stop()
+    val admitted = spark.read.parquet(s"$lake/$name.parquet")
+      .select($"vec_id").as[Long].collect().toSet
+    assert(admitted == Set(61000L, 61002L, 61003L), s"admitted $admitted")
+  }
+
+  test("bounded gate batch: a micro-batch past spark.graft.broadcast.maxRows stops the query, naming the dials") {
+    implicit val sc = spark.sqlContext
+    val corpusDir = sf("sf0.001")
+    val lake = java.nio.file.Files.createTempDirectory("graft-sdial").toString
+    val name = "admitted"
+    // seed the gate's namespace under the default dials
+    val seed = MemoryStream[(Long, String)]
+    val q0 = Streams.dedupIngest(seed.toDF().toDF("doc_id", "text"), corpusDir, lake, name)
+    try { seed.addData((62000L, "seed doc sd1 sd2 sd3")); q0.processAllAvailable() }
+    finally q0.stop()
+    // a query's session takes its conf when the query starts
+    spark.conf.set("spark.graft.broadcast.maxRows", "2")
+    val in = MemoryStream[(Long, String)]
+    val q = try Streams.dedupIngest(in.toDF().toDF("doc_id", "text"), corpusDir, lake, name)
+      finally spark.conf.unset("spark.graft.broadcast.maxRows")
+    try {
+      in.addData((62001L, "one o1 o2"), (62002L, "two t1 t2"), (62003L, "three h1 h2"))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+      val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString("\n")
+      for (key <- Seq("spark.graft.broadcast.maxRows=2", "spark.graft.guard.maxBroadcastBytes",
+             "per-trigger limit", "3 rows"))
+        assert(msg.contains(key), s"the refusal must name $key: $msg")
+    } finally q.stop()
+    assert(spark.read.parquet(s"$lake/$name.parquet").count() == 1,
+      "a refused batch admits nothing")
+  }
+
   test("stream_late_data: row older than watermark never reopens a closed window") {
     implicit val sc = spark.sqlContext
     val in = MemoryStream[Ev]

@@ -29,6 +29,19 @@ class ProfilerSpec extends SparkSpecBase {
     assert(a.jobs.map(_.id).intersect(b.jobs.map(_.id)).isEmpty)
   }
 
+  test("every job of an AQE write with a shuffle is named by the engine code that ran it") {
+    val out = java.nio.file.Files.createTempDirectory("graft-prof").toString
+    val r = Profiler.measure(spark)(
+      spark.range(0, 10000, 1, 8).repartition(4).write.parquet(s"$out/t"))
+    assert(r.failure.isEmpty)
+    assert(r.jobs.size >= 2, s"a shuffle stage and a write: ${r.jobs.map(_.site)}")
+    // AQE runs the shuffle stage as its own job with no description; its
+    // row used to read `$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java`
+    assert(r.jobs.forall(_.site.startsWith("graft.obs.ProfilerSpec")),
+      s"job rows must name this call site: ${r.jobs.map(_.site).mkString(" | ")}")
+    assert(r.jobs.forall(_.site.contains("ProfilerSpec.scala:")))
+  }
+
   test("a NonFatal failure is carried in the record as class: message") {
     val r = Profiler.measure(spark)(throw new IllegalStateException("x"))
     assert(r.failure.contains("java.lang.IllegalStateException: x"))
