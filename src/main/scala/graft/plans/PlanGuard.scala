@@ -235,14 +235,7 @@ object PlanGuard {
     */
   def batchBoundViolations(df: DataFrame, tables: Set[String]): Seq[Violation] = {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
-    def nodes(p: SparkPlan): Iterator[SparkPlan] = Iterator.single(p) ++ (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec        => nodes(q.plan)
-      case r: ReusedExchangeExec    => nodes(r.child)
-      case other                    => (other.children ++ other.subqueries).iterator.flatMap(nodes)
-    })
+    import org.apache.spark.sql.execution.exchange.Exchange
     // the null checks the optimizer infers from join keys bound nothing
     def wholeScans(p: SparkPlan): Iterator[String] = nodes(p).flatMap {
       case f: FileSourceScanExec if f.partitionFilters.isEmpty &&
@@ -257,6 +250,22 @@ object PlanGuard {
           "request's rows and stream the table past them"))
       case _ => Nil
     }.toSeq.distinct
+  }
+
+  /** Every node of a physical plan and of its subqueries, walking into
+    * the adaptive plan's current physical plan, its query stages and
+    * reused exchanges.
+    */
+  private[graft] def nodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Iterator[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    Iterator.single(p) ++ (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec        => nodes(q.plan)
+      case r: ReusedExchangeExec    => nodes(r.child)
+      case other                    => (other.children ++ other.subqueries).iterator.flatMap(nodes)
+    })
   }
 
   /** Gate form of [[batchBoundViolations]]. */

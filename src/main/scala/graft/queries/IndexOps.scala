@@ -18,35 +18,36 @@ import graft.functions.VectorExprs
   *   bands(sid, band, bh)   — 16 LSH band hashes per set (16 bands × 4
   *                            minhash rows; TextOps.bandHashes)
   *
-  * and the probe entry answers a query by (1) signing ONLY the 1-row
-  * query side, (2) turning its 16 (band, bh) pairs into LITERAL point
-  * predicates on the persisted bands table — the probe plan contains a
-  * pruned parquet scan of the index and NO corpus-wide signature
-  * recompute — and (3) exact Jaccard re-rank of the bucket-bounded
-  * candidates via the persisted tids.
+  * and every probe — the single-query and batch entries and the
+  * streaming admission gate alike — answers through ONE function
+  * ([[simMatches]]; [[vecMatches]] for the vector twin): (1) sign ONLY
+  * the queries, on the driver, (2) read the persisted bands by the
+  * queries' own (band, bh) keys as one pushed predicate — the probe plan
+  * contains a pruned parquet scan of the index and NO corpus-wide
+  * signature recompute — and (3) verify exact Jaccard of the
+  * bucket-bounded candidates against the persisted tids. Callers only
+  * pick their queries and shape the verified matches.
   *
   * Scale notes (100 TB): the build is the same one-pass signature
   * pipeline as dedup (bounded by distinct sets); the bands table is
-  * written range-partitioned and sorted by (band, bh), so the
-  * single-query probe's literal (band, bh) point predicates push into
-  * the parquet scan in full and row-group stats skip everything
-  * outside the 16 probed buckets — O(row groups hit), independent of
-  * index size. `band` is deliberately a DATA column, not a partition
-  * dir: every probe touches all 16 bands, so band-dir pruning can
-  * never eliminate anything, while dir-partitioning makes Spark bolt a
-  * dynamic-partition-pruning subquery onto the batch-join paths (a
-  * duplicated probe-side scan for a filter that prunes nothing) and
-  * splits the mixed (band, bh) predicate so neither half reaches the
-  * scan. On a cluster, registering this same sorted layout with a
-  * table format adds file-level min/max skipping on top — the layout
-  * already supports it. The batch entries (sim_index_incremental,
-  * vec_index_incremental) keep the equi-join form: their probe side
-  * covers many buckets, so a bounded shuffle join is the right shape.
-  * The streaming admission gates probe like the single query, by the
-  * micro-batch's own keys ([[screenDocs]], [[screenVectors]]): a gate
-  * batch is a handful of rows against a lake-sized index. Index
-  * location is keyed by the source dir, so sf0.01 and sf0.1 never
-  * share an index.
+  * written range-partitioned and sorted by (band, bh), so a probe's
+  * literal (band, bh) predicates push into the parquet scan in full and
+  * row-group stats skip everything outside the probed buckets —
+  * O(row groups hit), independent of index size. `band` is deliberately
+  * a DATA column, not a partition dir: every probe touches all 16
+  * bands, so band-dir pruning can never eliminate anything, while
+  * dir-partitioning makes Spark bolt a dynamic-partition-pruning
+  * subquery onto the key-row joins (a duplicated probe-side scan for a
+  * filter that prunes nothing) and splits the mixed (band, bh)
+  * predicate so neither half reaches the scan. On a cluster,
+  * registering this same sorted layout with a table format adds
+  * file-level min/max skipping on top — the layout already supports it.
+  * A query set whose keys pass the parquet In-pushdown ceiling streams
+  * the bands past a broadcast of its key rows instead
+  * ([[probeBands]]). Every probe's driver-held work is refused past
+  * the broadcast dials, and no probe plan shuffles or broadcasts an
+  * index scan (PlanGuard.batchBoundViolations). Index location is keyed
+  * by the source dir, so sf0.01 and sf0.1 never share an index.
   */
 object IndexOps {
 
@@ -295,62 +296,17 @@ object IndexOps {
         |WHERE jac >= 0.9 ORDER BY jaccard DESC, doc_id""".stripMargin
     ) { (s, dir) =>
       import s.implicits._
-      VectorExprs.register(s)
-      val path = ensureIndex(s, dir)
-      // Sign the 1-row query CLIENT-SIDE (a bounded 1-row collect — the
-      // serving shape: a query's signature is computed by the client,
-      // like the reference computing the query embedding before asking
-      // the index, engine.py:95-98). The payoff is the scan below: the
-      // 16 (band, bh) pairs become LITERAL point predicates, so the
-      // band-partitioned, bh-sorted index scan prunes to 16 dirs and
-      // row-group-skips inside them — a join form cannot push these and
-      // would scan the whole bands table at every probe.
-      val qrows = load(s, dir, "documents")
-        .filter($"doc_id" === 0)
-        .select(array_sort(transform(array_distinct(tokens(lower($"text"))),
-          t => xxhash64(t))).as("qtids"))
-        // a token-less query doc has no signature and jaccard 0/0 —
-        // declared empty, mirroring the incremental entry's guard
-        .filter(size($"qtids") > 0)
-        .select($"qtids",
-          TextOps.bandHashes(call_function("minhash64", $"qtids")).as("bands"))
-        .collect()
-      if (qrows.isEmpty)
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("doc_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("jaccard",
-              org.apache.spark.sql.types.DoubleType))))
-      else {
-        val qtids = qrows.head.getSeq[Long](0)
-        val qbands = qrows.head.getSeq[Long](1)
-        // one OR-of-16 point predicate over two DATA columns — pushed
-        // into the parquet scan in full, where (band, bh)-sorted row
-        // groups stat-skip everything outside the 16 probed buckets:
-        // the probe reads O(row groups hit), not O(index)
-        val probePred = qbands.zipWithIndex
-          .map { case (h, b) => $"band" === b && $"bh" === h }
-          .reduce(_ || _)
-        val cand = simIndex.read(s, path, "bands")
-          .filter(probePred)
-          // skinny distinct: sid only — replay-duplicated band rows and
-          // multi-band collisions collapse before the sets join
-          .select($"sid").distinct()
-        val sets = simIndex.read(s, path, "sets")
-        val qt = typedlit(qtids)
-        val inter = call_function("sorted_long_intersect_size", $"tids", qt).cast("double")
-        val jac   = inter / (size($"tids") + lit(qtids.length) - inter)
-        cand.join(sets, "sid")
-          .filter(jac >= 0.9)
-          .select(explode($"ids").as("doc_id"), round(jac, 4).as("jaccard"))
-          // a replay-duplicated index row (k copies of a sid in
-          // sets.parquet) would otherwise multiply its matches k× — the
-          // duplicates are byte-identical and each doc_id belongs to
-          // exactly one set, so distinct() restores exactly-once rows
-          .distinct()
-          .orderBy($"jaccard".desc, $"doc_id")
-      }
+      // Doc 0 is the query, signed CLIENT-SIDE like any request (the
+      // serving shape: the reference computes the query embedding before
+      // asking the index, engine.py:95-98); a token-less doc has no
+      // signature and a declared-empty answer. Its 16 (band, bh) pairs
+      // become literal point predicates on the index scan (simMatches).
+      val q = collectBounded(s, "queries",
+        signDocs(s, load(s, dir, "documents").filter($"doc_id" === 0)))
+      simMatches(s, ensureIndex(s, dir), q)
+        .select(explode($"ids").as("doc_id"), $"jaccard")
+        .distinct()
+        .orderBy($"jaccard".desc, $"doc_id")
     },
 
     // ORACLED (round 5): exact batch-vs-corpus Jaccard pairs — sound for
@@ -376,20 +332,20 @@ object IndexOps {
     ) { (s, dir) =>
       import s.implicits._
       // Incremental dedup — the production daily-ingest shape: sign ONLY
-      // the new batch (here: doc_id % 10 == 7 — a codegen'd filter over
-      // the scan; pmod is not a parquet-pushable predicate, and in
-      // production the batch is its own table, for which the split
-      // stands in), probe the persisted index, emit (batch doc → indexed
-      // near-dup) pairs. Corpus signatures are never recomputed; cost
-      // scales with the batch, not the lake. Shares the signature and
-      // the ≥0.9 test (nearDupSets) with the streaming admission gate so
-      // the two can never disagree about what counts as a duplicate.
-      val path = ensureIndex(s, dir)
-      val signed = signDocs(s,
-        load(s, dir, "documents").filter(pmod($"doc_id", lit(10)) === 7))
-      probeMatches(s, path, signed)
+      // the new batch (here: doc_id % 10 == 7; in production the batch
+      // is its own table, for which the split stands in), probe the
+      // persisted index by the batch's own bucket keys, emit (batch doc
+      // → indexed near-dup) pairs. Corpus signatures are never
+      // recomputed; cost scales with the batch, not the lake. The same
+      // probe and ≥0.9 test (simMatches) as the streaming admission
+      // gate, so the two can never disagree about what counts as a
+      // duplicate.
+      val q = collectBounded(s, "queries",
+        signDocs(s, load(s, dir, "documents").filter(pmod($"doc_id", lit(10)) === 7)))
+      simMatches(s, ensureIndex(s, dir), q)
         .select($"b_doc", explode($"ids").as("match_doc"), $"jaccard")
         .filter($"match_doc" =!= $"b_doc")
+        .distinct()
         .orderBy($"b_doc", $"match_doc")
     },
 
@@ -435,76 +391,21 @@ object IndexOps {
          |ORDER BY score DESC, c.vec_id LIMIT 5""".stripMargin
     ) { (s, dir) =>
       import s.implicits._
-      VectorExprs.register(s)
+      // Vector 0 is the query, signed CLIENT-SIDE (the sim_index_probe
+      // pattern) at the artifact's FROZEN width — probes must sign
+      // exactly like the build did (r14 verdict ask #1). A zero-norm
+      // query has no cosine and a declared-empty answer. Its Hamming-≤3
+      // rings become per-band literal In(bk, …) predicates on the index
+      // scan while they fit the pushdown ceiling (vecMatches).
       val path = ensureVecIndex(s, dir)
-      // the artifact's FROZEN width — probes must sign exactly like the
-      // build did (r14 verdict ask #1), so w comes from the vec_w file,
-      // never re-derived from the (possibly grown) corpus
-      val w = readVecW(s, path)
-      // Sign the 1-row query CLIENT-SIDE (bounded 1-row collect — the
-      // sim_index_probe pattern): the Hamming-≤3 multi-probe ring is
-      // expanded driver-side into 4 × (1+w+C(w,2)+C(w,3)) literal
-      // bucket keys (697 at w=16), pushed as band-dir pruning + an
-      // In(bk, …) filter on the bk-sorted index. The stored index keeps
-      // one row per (vector, band); a join form would scan all of it
-      // per probe.
-      val qrows = load(s, dir, "embeddings")
-        .filter($"vec_id" === 0)
-        .select($"embedding".cast("array<double>").as("qemb"))
-        .withColumn("qnorm", sqrt(call_function("dotp", $"qemb", $"qemb")))
-        // a zero-norm query (cosine undefined) must yield an empty
-        // result, not NaN scores that sort above every real neighbor
-        .filter($"qnorm" > 0)
-        .withColumn("bands", VecOps.lshBandKeysW($"qemb", w))
-        .collect()
-      if (qrows.isEmpty)
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("vec_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("score",
-              org.apache.spark.sql.types.DoubleType))))
-      else {
-        val qemb  = qrows.head.getSeq[Double](0)
-        val qnorm = qrows.head.getDouble(1)
-        val qkeys = qrows.head.getSeq[Long](2)
-        // NOTE the serving session should set
-        // spark.sql.parquet.pushdown.inFilterThreshold=1024 (Bench/
-        // Verify/test sessions do, at build time): the default (10)
-        // rewrites the ring's In-sets into near-vacuous [min,max]
-        // range checks before they reach the row-group filter. 1024 is
-        // also a CEILING: below the threshold Spark expands the In to
-        // an OR-chain of parquet eq's whose RECURSIVE evaluation is
-        // one stack frame per key — a dialed w=26 ring (2,952 keys per
-        // band) overflows the executor stack (StackOverflowError,
-        // measured at the 25× fixture when this was briefly raised to
-        // 4096). So In-pushdown covers rings up to w=18 (988 keys);
-        // wider dialed artifacts deliberately degrade to the range
-        // fallback, where the probe is a 24-byte-row band-table scan +
-        // residual filter — and true lake-scale single-query ANN
-        // serving is the IVF/PQ family (partition-pruned), per the
-        // documented contract. Not set HERE: a query entry mutating
-        // session conf would make every other query's pushdown
-        // behavior depend on whether this entry ran first. Correctness
-        // is unaffected either way — only row-group skipping changes.
-        // OR-of-4 band predicates, each carrying its Hamming-≤3 ring as
-        // a literal In(bk, ring keys) — all data columns, pushed whole
-        // (see sim_index_probe / the object doc for the layout story)
-        val probePred = qkeys.zipWithIndex.map { case (k, b) =>
-          $"band" === b &&
-            $"bk".isInCollection(VecOps.probeMasksWideW(w).map(_ ^ k))
-        }.reduce(_ || _)
-        val cand = vecIndex.read(s, path, "vec_bands")
-          .filter(probePred)
-          .filter($"vec_id" =!= 0)
-          .select($"vec_id").distinct()
-        val qe = typedlit(qemb)
-        cand.join(vecIndex.read(s, path, "vecs"), "vec_id")
-          .select($"vec_id",
-            round(call_function("dotp", $"emb", qe) / ($"norm" * qnorm), 6).as("score"))
-          .orderBy($"score".desc, $"vec_id")
-          .limit(5)
-      }
+      val q = collectBounded(s, "queries", signVectors(s,
+        load(s, dir, "embeddings").filter($"vec_id" === 0), readVecW(s, path)))
+      vecMatches(s, path, q, 3)
+        .filter($"vec_id" =!= $"b_id")
+        .select($"vec_id", round($"cos", 6).as("score"))
+        .distinct()
+        .orderBy($"score".desc, $"vec_id")
+        .limit(5)
     },
 
     entry(
@@ -528,91 +429,28 @@ object IndexOps {
          |ORDER BY b_id, rnk""".stripMargin
     ) { (s, dir) =>
       import s.implicits._
-      VectorExprs.register(s)
       // HARD-ORACLED (round 12, literal-planes device): DuckDB replays
       // batch signing, the Hamming-≤3 ring (as bit_count(xor) ≤ 3 —
-      // equivalent to the stored probeKeysWide mask expansion), and the
-      // 6dp cosine row_number ranking.
-      val path = ensureVecIndex(s, dir)
-      // batch signing at the artifact's FROZEN width (see
-      // vec_index_probe) — the cure for the r14-documented cliff where
-      // a frozen w=16 pulled ~17% of a 50k corpus into each batch
-      // vector's Hamming-≤3 ring: the BUILD now widens w with corpus
-      // size, and this path follows the stored width
-      val w = readVecW(s, path)
+      // equivalent to the probeMasks(w, 3) expansion), and the 6dp
+      // cosine row_number ranking.
       // Incremental ANN lookup for a NEW embedding batch (vec_id % 10
-      // == 7 stands in for today's ingest): sign only the batch, band-
-      // join the persisted index, exact-cosine top-3 per batch vector.
-      // Corpus signatures come from the lake; cost scales with the
-      // batch. The near-duplicate filter a training pipeline runs
-      // before adding embeddings to the store.
-      val batch = load(s, dir, "embeddings")
-        .filter(pmod($"vec_id", lit(10)) === 7)
-        .select($"vec_id".as("b_id"), $"embedding".cast("array<double>").as("b_emb"))
-        .withColumn("b_n", sqrt(call_function("dotp", $"b_emb", $"b_emb")))
-        // zero-norm batch vectors have no defined cosine: excluded from
-        // the declared output (NaN scores would rank FIRST under desc),
-        // matching the novelVectors/append zero-norm contract
-        .filter($"b_n" > 0)
-        .withColumn("bands", VecOps.lshBandKeysW($"b_emb", w))
-        // the batch feeds the probe explosion AND the post-candidate
-        // embedding join-back — localCheckpoint so the corpus table is
-        // scanned once for the batch read (the ingest batch is the
-        // bounded side by contract)
-        .localCheckpoint()
-      // wide (Hamming-≤3) multi-probe on the batch (query) side: ×697
-      // narrow key rows, joined against the one-row-per-(vector, band)
-      // persisted index — the batch is the bounded side, so the extra
-      // Hamming ring costs key rows, not candidate blowup. The probe
-      // rows carry IDS ONLY: riding b_emb through the ×2,788 explosion
-      // shipped a 64-double array on every probe row (measured 2.4 GB
-      // of exchange at the 25× fixture, where the stand-in batch is
-      // corpus-proportional) — the batch embeddings re-join AFTER the
-      // candidate distinct, on the |candidates|-sized stream.
-      val qb = batch.select($"b_id", posexplode($"bands").as(Seq("band", "bk")))
-        .select($"b_id", $"band", explode(VecOps.probeKeysWideW($"bk", w)).as("bk"))
-      val cand = vecIndex.read(s, path, "vec_bands")
-        .join(qb, Seq("band", "bk"))
-        .filter($"vec_id" =!= $"b_id")
-        .select($"b_id", $"vec_id").distinct()
-        // localCheckpoint so the size guard's count below reuses the
-        // materialized candidate set instead of re-running the band join
-        .localCheckpoint()
+      // == 7 stands in for today's ingest): sign only the batch at the
+      // artifact's frozen width, probe the persisted index by the
+      // batch's own rings, exact-cosine top-3 per batch vector. Corpus
+      // signatures come from the lake; cost scales with the batch. The
+      // near-duplicate filter a training pipeline runs before adding
+      // embeddings to the store. Zero-norm batch vectors have no cosine
+      // and drop out (NaN scores would rank FIRST under desc), matching
+      // the novelVectors/append zero-norm contract.
+      val path = ensureVecIndex(s, dir)
+      val q = collectBounded(s, "queries", signVectors(s,
+        load(s, dir, "embeddings").filter(pmod($"vec_id", lit(10)) === 7), readVecW(s, path)))
       import org.apache.spark.sql.expressions.Window
       val wRank = Window.partitionBy($"b_id").orderBy($"score".desc, $"vec_id")
-      // Embedding fetch WITHOUT shuffling the corpus (r15): cand is the
-      // BROADCAST side of the vecs join, so the stored embedding table
-      // streams map-side — at lake scale an SMJ here would re-shuffle
-      // the whole corpus (embeddings included) once per ingest batch
-      // (measured 67 MB of exchange even at the 25× fixture, where the
-      // left side carried a 64-double b_emb per candidate row into the
-      // corpus join). cand is bounded by |batch| × the width dial's
-      // ring budget (~3 random collisions per band × 4 bands + true
-      // neighbors — a since-retired candidate-mass count measured
-      // ~18-25/vector at every fixture; the recorded result stands), and
-      // the batch is admission-bounded by contract, so
-      // both broadcasts are id/score-slim. That bound only covers
-      // RANDOM collisions, though — a duplicate-heavy batch against a
-      // dense corpus cluster makes candidates scale with
-      // |batch|×|cluster| — so BOTH hints are size-guarded
-      // (Core.guardedBroadcast): the counts are cheap (both frames are
-      // localCheckpointed), and above the dial the hint drops and the
-      // fetch degrades to a shuffle join instead of a driver OOM. The
-      // b_emb arrays ride the SECOND broadcast (batch-sized), never an
-      // exchange; the only shuffles left are the candidate distinct
-      // and the b_id-partitioned rank window over (b_id, vec_id,
-      // score) rows.
-      // byte bounds derived from each frame's actual schema
-      // (Core.broadcastStats — id-pair rows fixed-width, the b_emb
-      // array measured; r16 ADVICE retired the 32 B/600 B literals)
-      val bSel = batch.select($"b_id", $"b_emb", $"b_n")
-      val candStats = graft.Core.broadcastStats(cand)
-      val batchStats = graft.Core.broadcastStats(bSel)
-      vecIndex.read(s, path, "vecs")
-        .join(graft.Core.guardedBroadcast(s, cand)(candStats), "vec_id")
-        .join(graft.Core.guardedBroadcast(s, bSel)(batchStats), "b_id")
-        .select($"b_id", $"vec_id",
-          round(call_function("dotp", $"emb", $"b_emb") / ($"norm" * $"b_n"), 6).as("score"))
+      vecMatches(s, path, q, 3)
+        .filter($"vec_id" =!= $"b_id")
+        .select($"b_id", $"vec_id", round($"cos", 6).as("score"))
+        .distinct()
         .withColumn("rnk", row_number().over(wRank))
         .filter($"rnk" <= 3)
         .select($"b_id", $"rnk", $"vec_id", $"score")
@@ -637,7 +475,7 @@ object IndexOps {
     * docs drop out (no signature — and downstream they pass any novelty
     * gate as trivially novel).
     */
-  private def signDocs(s: SparkSession, docs: DataFrame): DataFrame =
+  private[graft] def signDocs(s: SparkSession, docs: DataFrame): DataFrame =
     withDocSig(s, docs.select(col("doc_id").as("b_doc"), col("text")))
       .filter(col("bands").isNotNull)
       .select(col("b_doc"), col("btids"), col("bands"))
@@ -660,43 +498,99 @@ object IndexOps {
       lit(19) * call_function("sorted_long_intersect_size", a, b) >= lit(9) * (na + nb)
   }
 
-  /** Probe the persisted index with a signed batch: verified matches
-    * (b_doc, sid, ids, jaccard) at ≥ 0.9 — the batch entry's join form,
-    * for a probe side that covers many buckets.
+  /** The one probe path of the MinHash/LSH index: the verified matches
+    * (b_doc, sid, ids, jaccard) of the driver-held signed docs `q`
+    * (b_doc, btids, bands — [[signDocs]] rows) against the index at
+    * `path`: every indexed set at Jaccard ≥ 0.9 ([[nearDupSets]]) that
+    * shares a band bucket with a query doc. A lazy frame over the index
+    * scans ([[probeBands]]): `sets` streams past the `bands` rows in the
+    * queries' buckets and the queries' key rows (band, bh, b_doc,
+    * btids). A pair colliding in k bands flows through k times — the
+    * verify is map-side and cheap, where deduping first would shuffle
+    * candidate rows carrying their ~100-long btids — and a set row
+    * replayed into the index repeats its match, so callers dedup what
+    * they keep.
     */
-  private def probeMatches(s: SparkSession, path: String, signed: DataFrame): DataFrame = {
-    val qb = signed.select(col("b_doc"), col("btids"),
-      posexplode(col("bands")).as(Seq("band", "bh")))
-    // NO distinct between the band join and the verify: a pair that
-    // collides in k bands flows through k times and computes its exact
-    // jaccard k times. That redundant compute is map-side and cheap
-    // (both join sides here are broadcast-sized); deduping the pairs
-    // FIRST — the previous shape — forced a shuffle of every candidate
-    // row still carrying its ~100-long btids signature array (measured
-    // 1.4M fat rows ≈ 1 GB shuffled at sf0.1, 3× the whole query's
-    // runtime). Verify-then-dedup shuffles only the matched skinny rows.
-    val cand = simIndex.read(s, path, "bands")
-      .join(qb, Seq("band", "bh"))
-      .select(col("b_doc"), col("btids"), col("sid"))
-    val sets = simIndex.read(s, path, "sets")
+  private[graft] def simMatches(s: SparkSession, path: String, q: Seq[Row]): DataFrame = {
+    VectorExprs.register(s)
+    val keys = for (r <- q; (h, b) <- r.getSeq[Long](2).zipWithIndex)
+      yield Row(b, h, r.getLong(0), r.getSeq[Long](1))
     // the reported jaccard is computed for SURVIVORS of the test only
     val a = size(col("tids")); val b = size(col("btids"))
     val inter = call_function("sorted_long_intersect_size", col("tids"), col("btids"))
-    val jac = inter.cast("double") / (a + b - inter)
-    // dedup on the three SKINNY columns only — the `ids` family array
-    // (hundreds of doc ids for a big duplicate family) must not ride
-    // through the distinct's shuffle; it is re-attached afterwards from
-    // the same small sets table (an index read, not a corpus read).
-    // The distinct collapses k-band collision copies AND replayed-append
-    // duplicate set rows (compaction removes those at rest; this guards
-    // the window before it runs); the .distinct() on the ids projection
-    // keeps replayed duplicates from re-multiplying at the re-attach.
-    val verified = cand.join(sets.select(col("sid"), col("tids")), "sid")
+    probeBands(s, simIndex.read(s, path, "sets"), "sid", simIndex.read(s, path, "bands"), "bh",
+        Seq(0L), keys, StructField("b_doc", LongType), StructField("btids", longs))
       .filter(nearDupSets(col("tids"), col("btids")))
-      .select(col("b_doc"), col("sid"), round(jac, 4).as("jaccard"))
-      .distinct()
-    verified.join(sets.select(col("sid"), col("ids")).distinct(), "sid")
-      .select(col("b_doc"), col("sid"), col("ids"), col("jaccard"))
+      .select(col("b_doc"), col("sid"), col("ids"),
+        round(inter.cast("double") / (a + b - inter), 4).as("jaccard"))
+  }
+
+  /** The one probe path of the LSH vector index: the cosine `cos` of
+    * every indexed vector (vec_id) whose key in some band is within
+    * Hamming distance `radius` of a driver-held signed vector of `q`
+    * (b_id, emb, norm, bands — [[signVectors]] rows) against the index
+    * at `path`, by the Spark `dotp/(norm·norm)` expression, so a
+    * caller's threshold or ranking never moves. A lazy frame like
+    * [[simMatches]], probing the Hamming rings of the artifact's frozen
+    * width ([[VecOps.probeMasks]]); a key row carries its vector's
+    * embedding once per band, not once per ring key. A pair sharing
+    * several bands repeats: callers dedup what they keep.
+    */
+  private[graft] def vecMatches(s: SparkSession, path: String, q: Seq[Row],
+                                radius: Int): DataFrame = {
+    VectorExprs.register(s)
+    val keys = for (r <- q; (k, b) <- r.getSeq[Long](3).zipWithIndex)
+      yield Row(b, k, r.getLong(0), r.get(1), r.getDouble(2))
+    probeBands(s, vecIndex.read(s, path, "vecs"), "vec_id", vecIndex.read(s, path, "vec_bands"), "bk",
+        VecOps.probeMasks(readVecW(s, path), radius), keys, StructField("b_id", LongType),
+        StructField("b_emb", ArrayType(DoubleType, containsNull = true)), StructField("b_n", DoubleType))
+      .select(col("b_id"), col("vec_id"),
+        (call_function("dotp", col("emb"), col("b_emb")) / (col("norm") * col("b_n"))).as("cos"))
+  }
+
+  /** `items` (`id`, …) of an index family, streamed past a probe's
+    * candidates: its rows whose `id` has a row in `bands` (`id`, band,
+    * `key`) within one of the `masks` (the Hamming ring; `Seq(0L)` for
+    * exact buckets) of a driver-held key row — one per query and band:
+    * (band, query key, then `payload`, the query id and what the verify
+    * needs) — each joined to the key rows whose ring holds it. While
+    * every band's ring keys (its distinct query keys times the ring)
+    * fit the parquet In-pushdown ceiling
+    * (`spark.sql.parquet.pushdown.inFilterThreshold`, 1024 in
+    * Core.localSession), the candidates are a lazy read of `bands`
+    * through ONE pushed predicate OR_b (band = b AND key IN ring_b),
+    * expanded here: the (band, key)-sorted row groups stat-skip
+    * everything outside the probed buckets (see the object doc). Past
+    * the ceiling Spark would push only a [min, max] range per band, and
+    * an In at the ceiling already evaluates one stack frame per key, so
+    * `bands` instead streams whole past the broadcast key rows and the
+    * rows found are collected: an exchange over that unfiltered scan
+    * would move the whole table for one request. Both joins to the key
+    * rows match by band and Hamming distance, so no ring is ever
+    * materialized as rows. The key rows are refused past the broadcast
+    * dials, like every collect here.
+    */
+  private def probeBands(s: SparkSession, items: DataFrame, id: String, bands: DataFrame,
+                         key: String, masks: Seq[Long], keys: Seq[Row],
+                         payload: StructField*): DataFrame = {
+    requireFits(s, "probe keys", keys.size.toLong, keys.iterator.map(approxBytes).sum)
+    val keyRows = broadcast(local(s, keys,
+      StructType(StructField("q_band", IntegerType) +: StructField("q_key", LongType) +: payload)))
+    val radius = masks.map(java.lang.Long.bitCount).max
+    val inRing = col("band") === col("q_band") &&
+      (if (radius == 0) col(key) === col("q_key")
+       else bit_count(col(key).bitwiseXOR(col("q_key"))) <= radius)
+    val byBand = keys.groupMap(_.getInt(0))(_.getLong(1)).toSeq.sortBy(_._1)
+      .map { case (b, ks) => b -> ks.distinct }
+    val cand =
+      if (byBand.forall(_._2.size * masks.size <=
+            s.sessionState.conf.parquetFilterPushDownInFilterThreshold))
+        bands.filter(byBand.map { case (b, ks) =>
+            col("band") === b && col(key).isInCollection(ks.flatMap(k => masks.map(k ^ _)).distinct)
+          }.reduceOption(_ || _).getOrElse(lit(false)))
+      else local(s, collectBounded(s, "band candidates",
+        bands.join(keyRows, inRing, "left_semi")).toSeq, bands.schema)
+    items.join(broadcast(cand), id).join(keyRows, inRing)
   }
 
   /** One screened admission micro-batch: the `admitted` rows in the
@@ -707,36 +601,40 @@ object IndexOps {
     */
   private[graft] final case class Screened(admitted: DataFrame, signed: DataFrame, ids: Seq[Long])
 
-  /** The index tables a per-batch gate plan may read only through a
-    * filtered scan or as the streamed side of a join against batch rows
-    * — never shuffled or broadcast whole (PlanGuard.requireBatchBounded).
+  /** The index tables a per-request probe plan may read only through a
+    * filtered scan or as the streamed side of a join against request
+    * rows — never shuffled or broadcast whole
+    * (PlanGuard.requireBatchBounded).
     */
-  private val gateIndexTables = Set("sets", "bands", "vecs", "vec_bands")
+  private val probeIndexTables = Set("sets", "bands", "vecs", "vec_bands")
 
-  /** Collect one per-micro-batch frame to the driver: its plan must pass
-    * the batch-bounded plan guard, and what it returns must fit the two
-    * broadcast dials — the same bounds as any driver-built broadcast side.
+  /** Collect one per-request frame to the driver — a probe's signed
+    * queries, an admission micro-batch, its candidates or matches: its
+    * plan must pass the batch-bounded plan guard, and what it returns
+    * must fit the two broadcast dials — the same bounds as any
+    * driver-built broadcast side.
     */
   private def collectBounded(s: SparkSession, what: String, df: DataFrame): Array[Row] = {
-    graft.plans.PlanGuard.requireBatchBounded(df, gateIndexTables)
+    graft.plans.PlanGuard.requireBatchBounded(df, probeIndexTables)
     val rows = df.collect()
     requireFits(s, what, rows.length.toLong, rows.iterator.map(approxBytes).sum)
     rows
   }
 
-  /** Refuse a micro-batch whose driver-side work is past the broadcast
-    * dials, naming them and the source-side bound that keeps a batch
-    * under them.
+  /** Refuse a probe whose driver-side work is past the broadcast dials,
+    * naming them and the source-side bound that keeps an admission
+    * micro-batch under them.
     */
   private def requireFits(s: SparkSession, what: String, rows: Long, bytes: Long): Unit = {
     val (maxRows, maxBytes) = graft.Core.broadcastDials(s)
     require(graft.Core.fitsBroadcast(s)((rows, bytes)),
-      s"admission gate bound: the micro-batch's $what is $rows rows / $bytes bytes, " +
-        s"past spark.graft.broadcast.maxRows=$maxRows or spark.graft.guard." +
-        s"maxBroadcastBytes=$maxBytes — the gate screens each micro-batch on the " +
-        "driver, so its work must stay bounded by the batch. Cap the source's " +
-        "per-trigger limit (maxFilesPerTrigger, maxBytesPerTrigger or " +
-        "maxOffsetsPerTrigger), or raise the dials if the batch is intended.")
+      s"probe bound: the request's $what is $rows rows / $bytes bytes, past " +
+        s"spark.graft.broadcast.maxRows=$maxRows or spark.graft.guard." +
+        s"maxBroadcastBytes=$maxBytes — a probe holds its queries and candidates on " +
+        "the driver, so its work must stay bounded by the request. For an admission " +
+        "gate, cap the source's per-trigger limit (maxFilesPerTrigger, " +
+        "maxBytesPerTrigger or maxOffsetsPerTrigger); otherwise probe a smaller " +
+        "query set, or raise the dials if the request is intended.")
   }
 
   /** [[graft.Core.broadcastStats]]' byte model on a collected value: 16 B
@@ -753,6 +651,8 @@ object IndexOps {
   private def local(s: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
     s.createDataFrame(rows.asJava, schema)
 
+  private val longs = ArrayType(LongType, containsNull = false)
+
   /** The schema a parquet read-back gives `fields` of `df`: every field
     * nullable, as the index tables were always appended.
     */
@@ -762,11 +662,12 @@ object IndexOps {
   /** Screen one micro-batch (doc_id, text, …) against the sim index at
     * `path` and within itself — the documents the gate ADMITS:
     *
-    *  - vs the INDEX: docs with a ≥0.9 match among indexed sets are
-    *    dropped — except self-matches (`ids` containing the doc's own
-    *    id), so a REPLAYED batch whose docs were already appended to
-    *    the index re-admits identically instead of rejecting itself
-    *    (the idempotence foreachBatch's at-least-once delivery needs);
+    *  - vs the INDEX: docs with a ≥0.9 match among indexed sets
+    *    ([[simMatches]]) are dropped — except self-matches (`ids`
+    *    containing the doc's own id), so a REPLAYED batch whose docs were
+    *    already appended to the index re-admits identically instead of
+    *    rejecting itself (the idempotence foreachBatch's at-least-once
+    *    delivery needs);
     *  - WITHIN the batch: a doc with a ≥0.9 partner of smaller doc_id
     *    in the same batch is dropped (covers exact copies, jaccard 1).
     *    Greedy, not transitive: over chains A~B~C it can drop C even
@@ -776,15 +677,17 @@ object IndexOps {
     *
     * Token-less docs have no signature: admitted, never indexed.
     *
-    * Bounded by the batch, in three jobs: the batch is read and signed
-    * ONCE and collected; the bands table is scanned for the batch's own
-    * bucket hashes (one In on `bh`, pushed into the (band, bh)-sorted
-    * scan; the band is matched here); the sets rows of the candidate
-    * sids only are fetched. Both verifies — against the index and within
-    * the batch — are one filter over a driver-local relation of
-    * candidate pairs, which Spark evaluates without a job. Every collect
-    * is refused past the broadcast dials (`requireFits`), and no plan
-    * broadcasts or shuffles a scan of an index table.
+    * Bounded by the batch, in four jobs while the batch's bucket keys fit
+    * the pushdown ceiling: the batch is read and signed ONCE and
+    * collected; the matches frame ([[simMatches]]) is collected in three
+    * (the broadcasts of the key rows and of the `bands` candidates read
+    * by their pushed keys, side by side, and the `sets` scan streamed
+    * past them; two more past the ceiling, where the candidates are
+    * collected first). The in-batch verify is one filter over a
+    * driver-local relation of bucket-sharing pairs, which Spark
+    * evaluates without a job. Every collect is refused past the
+    * broadcast dials (`requireFits`), and no plan broadcasts or shuffles
+    * a scan of an index table.
     */
   private[graft] def screenDocs(s: SparkSession, path: String, batch: DataFrame): Screened = {
     val sig = withDocSig(s, batch.select(struct(col("*")).as("row"),
@@ -794,38 +697,21 @@ object IndexOps {
     val id = rows.map(_.getLong(1))
     val tids = rows.map(_.getSeq[Long](2))
     val signedIx = rows.indices.filterNot(rows(_).isNullAt(3))
-    // (band, bh) → the signed batch rows carrying it
-    val byKey = signedIx
+    val vsIndex = collectBounded(s, "index matches",
+      simMatches(s, path, signedIx.map(i => Row(id(i), tids(i), rows(i).get(3))))
+        .filter(!array_contains(col("ids"), col("b_doc"))).select(col("b_doc")))
+    // one verify row per (batch doc, smaller-id batch partner) sharing a
+    // (band, bh) bucket
+    val inBatch = signedIx
       .flatMap(i => rows(i).getSeq[Long](3).zipWithIndex.map { case (h, b) => (b, h) -> i })
-      .groupMap(_._1)(_._2)
-    val cand =
-      if (byKey.isEmpty) Array.empty[Row]
-      else collectBounded(s, "band candidates", simIndex.read(s, path, "bands")
-        .filter(col("bh").isInCollection(byKey.keys.map(_._2).toSeq.distinct))
-        .select(col("sid"), col("band"), col("bh")))
-    val pairs = cand.toSeq.flatMap(r =>
-      byKey.getOrElse((r.getInt(1), r.getLong(2)), Nil).map(_ -> r.getLong(0))).distinct
-    val sets =
-      if (pairs.isEmpty) Array.empty[Row]
-      else collectBounded(s, "candidate sets", simIndex.read(s, path, "sets")
-        .filter(col("sid").isInCollection(pairs.map(_._2).distinct))
-        .select(col("sid"), col("ids"), col("tids")))
-    val setsBySid = sets.toSeq.groupBy(_.getLong(0))
-    // one verify row per (batch doc, indexed set row) and per (batch
-    // doc, smaller-id batch partner) sharing a bucket: (b_doc, btids,
-    // otids, oids) — a doc is a duplicate when a row of it verifies and
-    // the other side is not the doc itself
-    val vsIndex = for ((i, sid) <- pairs; r <- setsBySid.getOrElse(sid, Nil))
-      yield Row(id(i), tids(i), r.getSeq[Long](2), r.getSeq[Long](1))
-    val inBatch = byKey.values.toSeq
+      .groupMap(_._1)(_._2).values.toSeq
       .flatMap(g => for (i <- g; j <- g if id(i) > id(j)) yield (i, j)).distinct
-      .map { case (i, j) => Row(id(i), tids(i), tids(j), Seq(id(j))) }
-    val longs = ArrayType(LongType, containsNull = false)
+      .map { case (i, j) => Row(id(i), tids(i), tids(j)) }
     val verify = StructType(Seq(StructField("b_doc", LongType), StructField("btids", longs),
-      StructField("otids", longs), StructField("oids", longs)))
-    val dup = local(s, vsIndex ++ inBatch, verify)
-      .filter(nearDupSets(col("otids"), col("btids")) && !array_contains(col("oids"), col("b_doc")))
-      .select(col("b_doc")).collect().map(_.getLong(0)).toSet
+      StructField("otids", longs)))
+    val dup = (vsIndex ++ local(s, inBatch, verify)
+      .filter(nearDupSets(col("otids"), col("btids")))
+      .select(col("b_doc")).collect()).map(_.getLong(0)).toSet
     val kept = rows.indices.filterNot(i => dup(id(i)))
     Screened(
       local(s, kept.map(rows(_).getStruct(0)), batch.schema).coalesce(1),
@@ -985,7 +871,7 @@ object IndexOps {
   /** Sign a (vec_id, embedding, …) frame at band width `w`: (vec_id,
     * emb, norm, bands). Zero-norm vectors drop out (unsignable).
     */
-  private def signVectors(s: SparkSession, vecs: DataFrame, w: Int): DataFrame =
+  private[graft] def signVectors(s: SparkSession, vecs: DataFrame, w: Int): DataFrame =
     withVecSig(s, vecs.select(col("vec_id"), col("embedding")), w)
       .filter(col("bands").isNotNull)
       .select(col("vec_id"), col("emb"), col("norm"), col("bands"))
@@ -1005,18 +891,19 @@ object IndexOps {
     * other. A feed that can produce all-zero embeddings should filter
     * or exact-dedup them upstream of the gate.
     *
-    * Bounded by the batch, in four jobs: the batch is read and signed
-    * ONCE and collected; its Hamming-≤2 ring rows — (band, key, batch
-    * vector), 4·(1+w+C(w,2)) per vector — are the broadcast side of a
-    * join that streams `vec_bands` (a broadcast of driver rows is a job
-    * of its own; a literal In of the ring would pass the 1024-key
-    * pushdown ceiling at w=18); the `vecs` rows of the candidate ids
-    * only are fetched. The cosines — the Spark `dotp/(norm·norm)`
-    * expression, never a driver re-implementation, so the `minCos`
-    * boundary cannot move — are one filter over a driver-local relation
-    * of candidate pairs, evaluated without a job. Every collect and the
-    * ring are refused past the broadcast dials (`requireFits`), and no
-    * plan broadcasts or shuffles a scan of an index table.
+    * Bounded by the batch: the batch is read and signed ONCE and
+    * collected; the matches frame ([[vecMatches]]) is collected in three
+    * jobs while the batch's rings fit the pushdown ceiling — the
+    * broadcasts of the key rows and of the `vec_bands` candidates read
+    * by their pushed rings, side by side, and the `vecs` scan streamed
+    * past them — and in five past it, where the candidates are found by
+    * streaming `vec_bands` past the key rows and collected first. The
+    * in-batch cosines — the same Spark `dotp/(norm·norm)` expression,
+    * never a driver re-implementation, so the `minCos` boundary cannot
+    * move — are one filter over a driver-local relation of ring-sharing
+    * pairs, evaluated without a job. Every collect and the key rows are
+    * refused past the broadcast dials (`requireFits`), and no plan
+    * broadcasts or shuffles a scan of an index table.
     */
   private[graft] def screenVectors(s: SparkSession, path: String, batch: DataFrame,
                                    minCos: Double): Screened = {
@@ -1028,32 +915,14 @@ object IndexOps {
     val id = rows.map(_.getLong(1))
     val signedIx = rows.indices.filterNot(rows(_).isNullAt(4))
     val keys = rows.map(_.getSeq[Long](4))
-    val masks = VecOps.probeMasksW(w)
-    val ring = for (i <- signedIx; (k, b) <- keys(i).zipWithIndex; m <- masks)
-      yield Row(b, k ^ m, id(i))
-    requireFits(s, "Hamming-2 probe ring", ring.size.toLong, 40L * ring.size)
-    val cand =
-      if (ring.isEmpty) Array.empty[Row]
-      else collectBounded(s, "band candidates", vecIndex.read(s, path, "vec_bands")
-        .join(broadcast(local(s, ring, StructType(Seq(StructField("band", IntegerType),
-          StructField("bk", LongType), StructField("b_id", LongType))))), Seq("band", "bk"))
-        .filter(col("vec_id") =!= col("b_id")) // self-guard: replayed vectors
-        .select(col("b_id"), col("vec_id")))
-    val pairs = cand.toSeq.map(r => (r.getLong(0), r.getLong(1))).distinct
-    val vecs =
-      if (pairs.isEmpty) Array.empty[Row]
-      else collectBounded(s, "candidate vectors", vecIndex.read(s, path, "vecs")
-        .filter(col("vec_id").isInCollection(pairs.map(_._2).distinct))
-        .select(col("vec_id"), col("emb"), col("norm")))
-    val vecsById = vecs.toSeq.groupBy(_.getLong(0))
-    val byId = signedIx.groupBy(id(_))
-    // one cosine row per (batch vector, indexed vector row) and per
-    // (batch vector, smaller-id batch partner) in its ring: (b_id,
-    // b_emb, b_n, emb, norm)
     val emb = (i: Int) => rows(i).get(2)
     val norm = (i: Int) => rows(i).getDouble(3)
-    val vsIndex = for ((bid, vid) <- pairs; i <- byId(bid); r <- vecsById.getOrElse(vid, Nil))
-      yield Row(bid, emb(i), norm(i), r.get(1), r.getDouble(2))
+    val vsIndex = collectBounded(s, "index matches",
+      vecMatches(s, path, signedIx.map(i => Row(id(i), emb(i), norm(i), keys(i))), 2)
+        .filter(col("vec_id") =!= col("b_id") && col("cos") >= minCos).select(col("b_id")))
+    // one cosine row per (batch vector, smaller-id batch partner) in its
+    // ring: (b_id, b_emb, b_n, emb, norm)
+    val masks = VecOps.probeMasks(w, 2)
     val stored = signedIx.flatMap(j => keys(j).zipWithIndex.map { case (k, b) => (b, k) -> j })
       .groupMap(_._1)(_._2)
     val inBatch = (for {
@@ -1065,9 +934,9 @@ object IndexOps {
     val verify = StructType(Seq(StructField("b_id", LongType), StructField("b_emb", doubles),
       StructField("b_n", DoubleType), StructField("emb", doubles), StructField("norm", DoubleType)))
     val cos = call_function("dotp", col("emb"), col("b_emb")) / (col("norm") * col("b_n"))
-    val dup = local(s, vsIndex ++ inBatch, verify)
+    val dup = (vsIndex ++ local(s, inBatch, verify)
       .filter(cos >= minCos)
-      .select(col("b_id")).collect().map(_.getLong(0)).toSet
+      .select(col("b_id")).collect()).map(_.getLong(0)).toSet
     val kept = rows.indices.filterNot(i => dup(id(i)))
     Screened(
       local(s, kept.map(rows(_).getStruct(0)), batch.schema).coalesce(1),

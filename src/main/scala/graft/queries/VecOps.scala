@@ -197,7 +197,7 @@ object VecOps {
   }
 
   private def lshKnnOracle: String = {
-    val masks = probeMasksW(16).mkString("[", ",", "]")
+    val masks = probeMasks(16, 2).mkString("[", ",", "]")
     s"""WITH $lshBandsCteSql,
        |masks AS (SELECT unnest($masks) AS m),
        |cand AS (SELECT DISTINCT x.vec_id AS a_id, y.vec_id AS b_id
@@ -215,57 +215,31 @@ object VecOps {
        |ORDER BY a_id, rnk""".stripMargin
   }
 
-  /** Multi-probe masks: every w-bit pattern with ≤2 bits set (1 + w +
-    * C(w,2); 137 at w=16). Wide bands buy selectivity at the cost of
+  /** Multi-probe masks: every w-bit pattern with at most `radius` bits
+    * set — 1 + w + C(w,2) at radius 2 (137 at w=16), C(w,3) more at
+    * radius 3 (697 at w=16). Wide bands buy selectivity at the cost of
     * per-band recall (pʷ per pair); multi-probe LSH (Lv et al.,
     * VLDB'07) buys the recall back by ALSO looking in the buckets whose
-    * key differs from the query's in ≤2 bits — per-band hit probability
-    * becomes P(Hamming(sig_a, sig_b) ≤ 2 over the band's w planes),
-    * e.g. ~97% at w=16 / cosine 0.9 over 4 bands — while the candidate
-    * set stays bounded by (1+w+C(w,2))/2ʷ of each band's pair mass. The
-    * probe side expands per-mask; the stored index keeps ONE row per
-    * (vector, band).
+    * key differs from the query's in ≤ radius bits — at radius 2 the
+    * per-band hit probability becomes P(Hamming(sig_a, sig_b) ≤ 2 over
+    * the band's w planes), e.g. ~97% at w=16 / cosine 0.9 over 4 bands —
+    * while the candidate set stays bounded by the ring's share of each
+    * band's pair mass. The probe side expands per mask; the stored index
+    * keeps ONE row per (vector, band). Radius 3 is the query-bounded
+    * entries' ring (vec_index_probe, vec_index_incremental): their probe
+    * side is one row or one batch, and the extra ring roughly triples
+    * the per-band hit probability for mid-cosine neighbors. The
+    * admission gates stay at radius 2 (they screen at cosine ≥0.9, where
+    * radius 2 already recalls ~97%), and the all-pairs join meets two
+    * radius-1 rings on a shared key (Hamming ≤ 2 in total).
     */
-  private[graft] def probeMasksW(w: Int): Seq[Long] = {
-    val one = (0 until w).map(i => 1L << i)
-    Seq(0L) ++ one ++
-      (for { i <- 0 until w; j <- (i + 1) until w } yield (1L << i) | (1L << j))
-  }
+  private[graft] def probeMasks(w: Int, radius: Int): Seq[Long] =
+    (0 to radius).flatMap(k =>
+      (0 until w).combinations(k).map(_.foldLeft(0L)((m, i) => m | (1L << i))))
 
-
-  /** The 1+w+C(w,2) bucket keys within Hamming distance 2 of a w-bit
-    * band key. */
-  private[graft] def probeKeysW(bk: Column, w: Int): Column =
-    transform(typedlit(probeMasksW(w)), m => bk.bitwiseXOR(lit(m)))
-
-  /** The 137 bucket keys within Hamming distance 2 of a band key. */
-
-  /** The 1+w bucket keys within Hamming distance 1 of a w-bit band key
-    * — the per-side expansion of the midpoint-join device (two ≤1
-    * rings meeting on a shared key cover exactly Hamming ≤ 2).
-    */
-  private[graft] def probeKeys1W(bk: Column, w: Int): Column =
-    transform(typedlit(Seq(0L) ++ (0 until w).map(i => 1L << i)),
-      m => bk.bitwiseXOR(m))
-
-  /** Wide multi-probe: ≤3 bits (1+w+C(w,2)+C(w,3) masks — 697 at
-    * w=16, 3,683 at w=28). The recall/cost
-    * dial one notch further — used by the QUERY-BOUNDED probe paths
-    * (vec_index_probe / vec_index_incremental), where the probe side is
-    * one row or one batch and 697 narrow key rows per (vector, band)
-    * cost nothing, but the extra Hamming ring roughly triples the
-    * per-band hit probability for mid-cosine neighbors. The all-PAIRS
-    * paths (vec_knn_join_lsh, the admission gates) stay at ≤2: their
-    * probe side is the whole corpus, so each extra ring multiplies the
-    * candidate mass, and the gates operate at cosine ≥0.9 where ≤2
-    * already recalls ~97%.
-    */
-  private[graft] def probeMasksWideW(w: Int): Seq[Long] = probeMasksW(w) ++
-    (for { i <- 0 until w; j <- (i + 1) until w; k <- (j + 1) until w }
-      yield (1L << i) | (1L << j) | (1L << k))
-
-  private[graft] def probeKeysWideW(bk: Column, w: Int): Column =
-    transform(typedlit(probeMasksWideW(w)), m => bk.bitwiseXOR(lit(m)))
+  /** The bucket keys within Hamming distance `radius` of a w-bit band key. */
+  private[graft] def probeKeys(bk: Column, w: Int, radius: Int): Column =
+    transform(typedlit(probeMasks(w, radius)), m => bk.bitwiseXOR(m))
 
   /** Embeddings with per-vector norm precomputed (single scan). */
   private[graft] def emb(s: SparkSession, dir: String): DataFrame = {
@@ -1016,7 +990,7 @@ object VecOps {
       val repBands = groups.select($"rep_id", explode($"sig").as("sg"))
         .select($"rep_id", $"sg.band".as("band"), $"sg.bk".as("bk"))
       val probe1 = repBands.select($"rep_id", $"band",
-        explode(probeKeys1W($"bk", wBits)).as("bk"))
+        explode(probeKeys($"bk", wBits, 1)).as("bk"))
       val candRep = probe1.as("x").join(probe1.as("y"),
           $"x.band" === $"y.band" && $"x.bk" === $"y.bk" && $"x.rep_id" =!= $"y.rep_id")
         .select($"x.rep_id".as("ra"), $"y.rep_id".as("rb"))

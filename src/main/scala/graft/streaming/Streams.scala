@@ -323,14 +323,18 @@ object Streams {
     * analogue: sim_index_incremental).
     *
     * Per-batch work is bounded by the batch (IndexOps.screenDocs): the
-    * batch is signed once, the index is probed by the batch's own bucket
-    * keys and read for the candidate sets only, and the signed admitted
-    * rows are appended as they are — at most 8 jobs per batch outside
-    * the compaction cadence (the batch read, the candidate scan, the
-    * sets fetch, and one write each of the `batch=N` dir, `sets`,
-    * `bands` and the gate labels, one part file each), one index ensure
-    * and one labels ensure. The driver holds the signed batch and its
-    * candidates; a batch past the broadcast dials
+    * batch is signed once, the index is probed through the one sim probe
+    * path (IndexOps.simMatches) by the batch's own bucket keys, with
+    * `sets` streamed past the candidates, and the signed admitted rows
+    * are appended as they are — 8 jobs per batch outside the compaction
+    * cadence (the batch read; the matches: the broadcasts of the key
+    * rows and of the candidates, side by side, and the `sets` scan; one
+    * write each of the `batch=N` dir, `sets`, `bands` and the gate
+    * labels, one part file each), one index ensure and one labels
+    * ensure. A batch whose keys pass the 1024-key pushdown ceiling
+    * (over 1024 docs) collects its candidates first: two more jobs. The
+    * driver holds the signed batch and its key rows; a batch past the
+    * broadcast dials
     * (`spark.graft.broadcast.maxRows`,
     * `spark.graft.guard.maxBroadcastBytes`) stops the query — bound it
     * with the source's per-trigger limit.
@@ -384,11 +388,14 @@ object Streams {
     * replay-idempotent), and grow the index with what was admitted.
     * Same private-namespace, rebuild-recovery, and compaction lifecycle
     * as the document gate, and the same batch bound
-    * (IndexOps.screenVectors): at most 8 jobs per batch outside the
-    * compaction cadence — the batch read, the ring join against
-    * `vec_bands` (two: its broadcast and its scan), the candidate
-    * vectors fetch, and one write each of the `batch=N` dir, `vecs` and
-    * `vec_bands`.
+    * (IndexOps.screenVectors, through IndexOps.vecMatches): 7 jobs per
+    * batch outside the compaction cadence while the batch's Hamming-≤2
+    * rings fit the 1024-key pushdown ceiling — the batch read; the
+    * matches: the broadcasts of the key rows and of the `vec_bands`
+    * candidates, side by side, and the `vecs` scan; one write each of
+    * the `batch=N` dir, `vecs` and `vec_bands` — and 9 past it (from 6
+    * vectors at w=18), where the candidates are found by streaming
+    * `vec_bands` past the key rows and collected first.
     */
   def dedupVecIngest(vecs: DataFrame, corpusDir: String, lakeDir: String,
                      name: String, minCos: Double): org.apache.spark.sql.streaming.StreamingQuery = {

@@ -67,22 +67,20 @@ class IvfSpec extends SparkSpecBase {
   test("ivf_index_probe prunes: no quantizer recompute, cells scan partition-pruned") {
     SparkEntry.queries("ivf_index_build")(spark, dir).collect()
     val probe = SparkEntry.queries("ivf_index_probe")(spark, dir)
-    val plan = probe.queryExecution.executedPlan.toString
-    assert(plan.contains("simindex"), "probe must scan the persisted index")
+    val scans = scannedRoots(probe)
+    assert(scans.exists(_._1 == "ivf_cells"), "probe must scan the persisted index")
     // Every corpus access must be the pushed-down 1-row query read — a
     // quantizer recompute (k-means over all embeddings) would appear as
     // an UNFILTERED embeddings scan. (DPP's duplicating subquery may
     // legitimately repeat the filtered 1-row scan; broadcast-exchange
     // reuse elides it at execution.)
-    val corpusScans = plan.linesIterator
-      .filter(_.contains("embeddings.parquet")).toSeq
+    val corpusScans = scans.collect { case ("embeddings", f) => f.toString }
     assert(corpusScans.nonEmpty && corpusScans.forall(_.contains("EqualTo(vec_id,0)")),
       s"probe plan contains a non-query-row corpus scan:\n${corpusScans.mkString("\n")}")
     // the cells scan must carry a dynamic partition filter on c_id
     // (pruned by the broadcast nprobe-row probe side): the literal form
     // of "a probe scans ~nprobe/K of the corpus"
-    val cellsScan = plan.linesIterator
-      .filter(_.contains("ivf_cells.parquet")).mkString("\n")
+    val cellsScan = scans.collect { case ("ivf_cells", f) => f.toString }.mkString("\n")
     assert(cellsScan.contains("dynamicpruning"),
       s"cells scan is not partition-pruned:\n$cellsScan")
     probe.collect()
@@ -91,17 +89,15 @@ class IvfSpec extends SparkSpecBase {
   test("ivf_index_incremental: batch top-3, exact re-rank scores, quantizer from the lake") {
     SparkEntry.queries("ivf_index_build")(spark, dir).collect()
     val inc = SparkEntry.queries("ivf_index_incremental")(spark, dir)
-    val plan = inc.queryExecution.executedPlan.toString
-    assert(plan.contains("simindex"), "must scan the persisted index")
+    val scans = scannedRoots(inc)
+    assert(scans.exists(_._1 == "ivf_cells"), "must scan the persisted index")
     // every corpus access must be the pushed-down batch read (vec_id %
     // 10 == 7) — an unfiltered scan would mean quantizer recompute
-    val corpusScans = plan.linesIterator
-      .filter(_.contains("embeddings.parquet")).toSeq
+    val corpusScans = scans.collect { case ("embeddings", f) => f.toString }
     assert(corpusScans.nonEmpty && corpusScans.forall(_.contains("pmod(vec_id")),
       s"plan contains a non-batch corpus scan:\n${corpusScans.mkString("\n")}")
     // the cells scan is dynamically pruned to the batch's probed cells
-    val cellsScan = plan.linesIterator
-      .filter(_.contains("ivf_cells.parquet")).mkString("\n")
+    val cellsScan = scans.collect { case ("ivf_cells", f) => f.toString }.mkString("\n")
     assert(cellsScan.contains("dynamicpruning"),
       s"cells scan is not partition-pruned:\n$cellsScan")
     val got = inc.as[(Long, Int, Long, Double)].collect()

@@ -135,11 +135,19 @@ class LineageSpec extends SparkSpecBase {
   test("artifact seam: vec index probes trace to embeddings (vecs + vec_bands sidecars)") {
     val dir = sf("sf0.001")
     SparkEntry.queries("vec_index_build")(spark, dir).collect()
-    val lin = Lineage.columnLineage(
-      SparkEntry.queries("vec_index_probe")(spark, dir))
-    assert(lin("score").contains("embeddings.embedding"),
-      s"probe score must trace through vecs/vec_bands to the corpus: $lin")
-    assert(lin("vec_id").contains("embeddings.vec_id"), lin)
+    // the single query and the batch entry answer through one probe path
+    for (e <- Seq("vec_index_probe", "vec_index_incremental")) {
+      val lin = Lineage.columnLineage(SparkEntry.queries(e)(spark, dir))
+      assert(lin("score").contains("embeddings.embedding"),
+        s"$e score must trace through vecs/vec_bands to the corpus: $lin")
+      assert(lin("vec_id").contains("embeddings.vec_id"), s"$e: $lin")
+    }
+    // and so does the sim family: a probe's doc ids are the matched
+    // families of the `sets` sidecar
+    SparkEntry.queries("sim_index_build")(spark, dir).collect()
+    val lin = Lineage.columnLineage(SparkEntry.queries("sim_index_probe")(spark, dir))
+    assert(lin("doc_id").contains("documents.doc_id"),
+      s"sim probe doc_id must trace through the sets sidecar to the corpus: $lin")
   }
 
   test("artifact seam: ivfpq probe resolves through ivfpq_codes → pq/ivf layers") {

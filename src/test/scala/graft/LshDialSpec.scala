@@ -28,11 +28,15 @@ class LshDialSpec extends SparkSpecBase {
     // fixed-width persisted indexes signed with
     assert(queries.VecOps.lshPlanesN(112).take(64) == queries.VecOps.lshPlanes)
     for (w <- Seq(16, 19, 23, 28)) {
-      val masks = queries.VecOps.probeMasksW(w)
+      val masks = queries.VecOps.probeMasks(w, 2)
       assert(masks.length == 1 + w + w * (w - 1) / 2)
       assert(masks.distinct.length == masks.length)
       assert(masks.forall(m => m >= 0 && m < (1L << w)))
       assert(masks.forall(m => java.lang.Long.bitCount(m) <= 2))
+      // the query-bounded entries' ring adds exactly the C(w,3) triples
+      val wide = queries.VecOps.probeMasks(w, 3)
+      assert(wide.length == masks.length + w * (w - 1) * (w - 2) / 6)
+      assert(wide.distinct.length == wide.length && wide.startsWith(masks))
     }
   }
 
@@ -71,7 +75,7 @@ class LshDialSpec extends SparkSpecBase {
         .select($"vec_id", $"embedding".cast("array<double>").as("emb"))
         .select($"vec_id", posexplode(queries.VecOps.lshBandKeysW($"emb", 19)).as(Seq("band", "bk")))
       val probes = sigd.select($"vec_id", $"band",
-        explode(queries.VecOps.probeKeysW($"bk", 19)).as("bk"))
+        explode(queries.VecOps.probeKeys($"bk", 19, 2)).as("bk"))
       val candidates = probes.as("x").join(sigd.as("y"),
           $"x.band" === $"y.band" && $"x.bk" === $"y.bk" && $"x.vec_id" =!= $"y.vec_id")
         .select($"x.vec_id", $"y.vec_id").distinct().count()

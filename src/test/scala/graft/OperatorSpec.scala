@@ -120,7 +120,7 @@ class OperatorSpec extends SparkSpecBase {
     val sigd = e.select($"vec_id",
       posexplode(graft.queries.VecOps.lshBandKeysW($"emb", 16)).as(Seq("band", "bk")))
     val probes = sigd.select($"vec_id", $"band",
-      explode(graft.queries.VecOps.probeKeysW($"bk", 16)).as("bk"))
+      explode(graft.queries.VecOps.probeKeys($"bk", 16, 2)).as("bk"))
     val candidates = probes.as("x").join(sigd.as("y"),
         $"x.band" === $"y.band" && $"x.bk" === $"y.bk" && $"x.vec_id" =!= $"y.vec_id")
       .select($"x.vec_id", $"y.vec_id").distinct().count()

@@ -740,26 +740,4 @@ class PlanAuditSpec extends SparkSpecBase {
     val (_, b3) = graft.Core.broadcastStats(wide)
     assert(b3 >= 256 * 8, s"a 4x wider row must grow the bound 4x: $b3")
   }
-
-  test("vec_index_incremental candidate/batch broadcasts are size-guarded") {
-    // ADVICE r15 (medium): the candidate set derives from a join
-    // against the corpus-sized vec_bands table — a duplicate-heavy
-    // batch scales it with |batch|x|cluster|, and an unguarded hint
-    // would collect that to the driver. Above the dial both hints drop.
-    val thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.unset("spark.graft.broadcast.maxRows")
-      val hinted = formatted("vec_index_incremental")
-      assert(hinted.contains("BroadcastHashJoin"),
-        "gate SF: candidate + batch sides should broadcast (hints present)")
-      spark.conf.set("spark.graft.broadcast.maxRows", "0")
-      val smj = formatted("vec_index_incremental")
-      assert(smj.contains("SortMergeJoin"),
-        "above the dial the embedding fetch must degrade to a shuffle join")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-      spark.conf.unset("spark.graft.broadcast.maxRows")
-    }
-  }
 }

@@ -173,9 +173,48 @@ class PlanGuardSpec extends SparkSpecBase {
   }
 
   test("batch bound: the batch entry's join-form index probe — the admission gates' former per-batch shape — is flagged") {
+    // the former join-form probe, built from the index tables: the
+    // signed batch's band rows joined to `bands`, verified against
+    // `sets`, then the matched families re-attached through a distinct
+    // of the whole `sets` table
     val dir = sf("sf0.001")
-    val probe = SparkEntry.queries("sim_index_incremental")(spark, dir)
+    val ix = graft.queries.IndexOps
+    val path = ix.ensureIndexStatus(spark, dir)._1
+    val bands = ix.simIndex.read(spark, path, "bands")
+    val sets = ix.simIndex.read(spark, path, "sets")
+    val batch = ix.signDocs(spark, docs.filter(pmod($"doc_id", lit(10)) === 7))
+      .select($"b_doc", $"btids", posexplode($"bands").as(Seq("band", "bh")))
+    val probe = bands.join(batch, Seq("band", "bh"))
+      .join(sets.select($"sid", $"tids"), "sid")
+      .filter(call_function("sorted_long_intersect_size", $"tids", $"btids") > 0)
+      .select($"b_doc", $"sid").distinct()
+      .join(sets.select($"sid", $"ids").distinct(), "sid")
     val v = PlanGuard.batchBoundViolations(probe, Set("sets", "bands", "vecs", "vec_bands"))
     assert(v.exists(_.detail.contains("of sets")), v.mkString("; "))
+  }
+
+  test("batch bound: the six sim/vec probe plans read every index table by the request's keys") {
+    // one matches frame per caller shape: a single query, an entry's
+    // batch and a gate micro-batch per family — the vec batch's rings
+    // pass the pushdown ceiling, so the key-row join form is covered too
+    val dir = sf("sf0.001")
+    val ix = graft.queries.IndexOps
+    val simPath = ix.ensureIndexStatus(spark, dir)._1
+    val vecPath = ix.ensureVecIndexStatus(spark, dir)._1
+    val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
+    def simQ(p: org.apache.spark.sql.Column) = ix.signDocs(spark, docs.filter(p)).collect().toSeq
+    def vecQ(p: org.apache.spark.sql.Column) =
+      ix.signVectors(spark, vecs.filter(p), ix.readVecW(spark, vecPath)).collect().toSeq
+    val probes = Seq(
+      "sim_index_probe" -> ix.simMatches(spark, simPath, simQ($"doc_id" === 0)),
+      "sim_index_incremental" -> ix.simMatches(spark, simPath, simQ(pmod($"doc_id", lit(10)) === 7)),
+      "screenDocs" -> ix.simMatches(spark, simPath, simQ($"doc_id" < 4)),
+      "vec_index_probe" -> ix.vecMatches(spark, vecPath, vecQ($"vec_id" === 0), 3),
+      "vec_index_incremental" -> ix.vecMatches(spark, vecPath, vecQ(pmod($"vec_id", lit(10)) === 7), 3),
+      "screenVectors" -> ix.vecMatches(spark, vecPath, vecQ($"vec_id" < 4), 2))
+    for ((caller, m) <- probes) {
+      val v = PlanGuard.batchBoundViolations(m, Set("sets", "bands", "vecs", "vec_bands"))
+      assert(v.isEmpty, s"$caller: ${v.mkString("; ")}")
+    }
   }
 }

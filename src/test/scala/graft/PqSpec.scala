@@ -123,15 +123,14 @@ class PqSpec extends SparkSpecBase {
     val path = graft.queries.PqIndex.ensureIvfPqIndex(spark, dir)
     graft.functions.VectorExprs.register(spark)
     val df = SparkEntry.queries("ivfpq_index_probe")(spark, dir)
-    val plan = df.queryExecution.executedPlan.toString
+    val scans = scannedRoots(df)
     // every corpus access is the pushed query-row read; the code table
     // scan carries the dynamic partition filter (the composed topology:
     // nprobe/K of the rows × 1/32 of the bytes)
-    val corpusScans = plan.linesIterator.filter(_.contains("embeddings.parquet")).toSeq
+    val corpusScans = scans.collect { case ("embeddings", f) => f.toString }
     assert(corpusScans.nonEmpty && corpusScans.forall(_.contains("EqualTo(vec_id,0)")),
       s"probe plan contains a non-query-row corpus scan:\n${corpusScans.mkString("\n")}")
-    val codeScan = plan.linesIterator
-      .filter(_.contains("ivfpq_codes.parquet")).mkString("\n")
+    val codeScan = scans.collect { case ("ivfpq_codes", f) => f.toString }.mkString("\n")
     assert(codeScan.contains("dynamicpruning"),
       s"ivfpq codes scan is not partition-pruned:\n$codeScan")
     val got = df.as[(Long, Double)].collect().toSeq

@@ -43,6 +43,20 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     f.delete(); ()
   }
 
+  /** (table, scan) for every file scan in `df`'s executed plan — the
+    * adaptive plan's stages and subqueries included — named by its
+    * relation's root path (`<table>.parquet` → table), as
+    * PlanGuard.batchBoundViolations names them. The plan string cuts a
+    * scan's Location at spark.sql.maxMetadataStringLength, so a file
+    * name read from it depends on how long the checkout path is.
+    */
+  def scannedRoots(df: org.apache.spark.sql.DataFrame)
+      : Seq[(String, org.apache.spark.sql.execution.FileSourceScanExec)] =
+    graft.plans.PlanGuard.nodes(df.queryExecution.executedPlan).collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.relation.location.rootPaths.map(_.getName.stripSuffix(".parquet") -> f)
+    }.flatten.toSeq
+
   /** Spark jobs launched while `f` runs, by the profiler's barriers. */
   def jobsDuring(f: => Any): Int = {
     val r = graft.obs.Profiler.measure(spark)(f)
