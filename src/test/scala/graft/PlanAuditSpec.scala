@@ -740,4 +740,30 @@ class PlanAuditSpec extends SparkSpecBase {
     val (_, b3) = graft.Core.broadcastStats(wide)
     assert(b3 >= 256 * 8, s"a 4x wider row must grow the bound 4x: $b3")
   }
+
+  test("vec_index_incremental candidate/batch broadcasts are size-guarded") {
+    // The candidate rows and the batch's key rows are broadcast by hint
+    // (the plan broadcasts them with autoBroadcastJoinThreshold off);
+    // the key rows are driver-held, so past the broadcast dials the
+    // batch entries refuse, naming both dials, instead of collecting an
+    // unbounded batch.
+    val thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      spark.conf.unset("spark.graft.broadcast.maxRows")
+      val hinted = formatted("vec_index_incremental")
+      assert(hinted.contains("BroadcastHashJoin"),
+        "candidate + key-row sides should broadcast (hints present)")
+      assert(!hinted.contains("SortMergeJoin"), hinted)
+      spark.conf.set("spark.graft.broadcast.maxRows", "2")
+      for (e <- Seq("sim_index_incremental", "vec_index_incremental")) {
+        val msg = intercept[IllegalArgumentException](formatted(e)).getMessage
+        for (key <- Seq("spark.graft.broadcast.maxRows=2", "spark.graft.guard.maxBroadcastBytes"))
+          assert(msg.contains(key), s"$e: the refusal must name $key: $msg")
+      }
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+      spark.conf.unset("spark.graft.broadcast.maxRows")
+    }
+  }
 }

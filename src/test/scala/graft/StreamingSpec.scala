@@ -487,14 +487,6 @@ class StreamingSpec extends SparkSpecBase with StreamRestartCases {
     } finally q.stop()
     assert(spark.read.parquet(s"$lake/$name.parquet").count() == 1,
       "a refused batch admits nothing")
-    // the batch entries hold their signed batch on the driver through
-    // the same bound: past the dial they refuse, naming both dials
-    spark.conf.set("spark.graft.broadcast.maxRows", "2")
-    try for (e <- Seq("sim_index_incremental", "vec_index_incremental")) {
-      val msg = intercept[IllegalArgumentException](SparkEntry.queries(e)(spark, corpusDir)).getMessage
-      for (key <- Seq("spark.graft.broadcast.maxRows=2", "spark.graft.guard.maxBroadcastBytes"))
-        assert(msg.contains(key), s"$e: the refusal must name $key: $msg")
-    } finally spark.conf.unset("spark.graft.broadcast.maxRows")
   }
 
   test("stream_late_data: row older than watermark never reopens a closed window") {

@@ -78,16 +78,23 @@ class FramesSpec extends graft.SparkSpecBase {
     val verifiedCount = TextOps.coldPhases(spark, live).toMap.apply("verifiedPairs")
     val key = "spark.graft.broadcast.maxRows"
     val prev = spark.conf.getOption(key)
+    // RDD ids, not a count: the ContextCleaner drops an unreferenced
+    // persisted RDD an earlier test left whenever a GC happens to run,
+    // so the session's persisted count can fall mid-test
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
     try {
       verifiedCount()
-      val n = spark.sparkContext.getPersistentRDDs.size
       spark.conf.set(key, "0")
+      val before = persisted
       verifiedCount()
-      assert(spark.sparkContext.getPersistentRDDs.size == n,
-        "a dial move must unpersist the superseded verified frame, not pin a second")
+      val rebuilt = persisted -- before
+      assert(rebuilt.size == 1, s"a dial move pins one rebuilt verified frame: $rebuilt")
       spark.conf.set(key, "1000000")
       verifiedCount()
-      assert(spark.sparkContext.getPersistentRDDs.size == n)
+      val after = persisted
+      assert(!after.contains(rebuilt.head),
+        "a dial move must unpersist the superseded verified frame, not pin a second")
+      assert((after -- before -- rebuilt).size == 1)
     } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
