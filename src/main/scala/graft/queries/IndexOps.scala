@@ -21,12 +21,12 @@ import graft.functions.VectorExprs
   * and every probe — the single-query and batch entries and the
   * streaming admission gate alike — answers through ONE function
   * ([[simMatches]]; [[vecMatches]] for the vector twin): (1) sign ONLY
-  * the queries, on the driver, (2) read the persisted bands by the
-  * queries' own (band, bh) keys as one pushed predicate — the probe plan
-  * contains a pruned parquet scan of the index and NO corpus-wide
-  * signature recompute — and (3) verify exact Jaccard of the
-  * bucket-bounded candidates against the persisted tids. Callers only
-  * pick their queries and shape the verified matches.
+  * the queries, on the driver, (2) find the persisted bands rows in the
+  * queries' own (band, bh) buckets — a single query as one pushed
+  * predicate, so the probe plan contains a pruned parquet scan of the
+  * index and NO corpus-wide signature recompute — and (3) verify exact
+  * Jaccard of the bucket-bounded candidates against the persisted tids.
+  * Callers only pick their queries and shape the verified matches.
   *
   * Scale notes (100 TB): the build is the same one-pass signature
   * pipeline as dedup (bounded by distinct sets); the bands table is
@@ -42,9 +42,8 @@ import graft.functions.VectorExprs
   * predicate so neither half reaches the scan. On a cluster,
   * registering this same sorted layout with a table format adds
   * file-level min/max skipping on top — the layout already supports it.
-  * A query set whose keys pass the parquet In-pushdown ceiling streams
-  * the bands past a broadcast of its key rows instead
-  * ([[probeBands]]). Every probe's driver-held work is refused past
+  * A query set instead streams the bands past a broadcast of its key
+  * rows ([[probeBands]]). Every probe's driver-held work is refused past
   * the broadcast dials, and no probe plan shuffles or broadcasts an
   * index scan (PlanGuard.batchBoundViolations). Index location is keyed
   * by the source dir, so sf0.01 and sf0.1 never share an index.
@@ -396,7 +395,7 @@ object IndexOps {
       // exactly like the build did (r14 verdict ask #1). A zero-norm
       // query has no cosine and a declared-empty answer. Its Hamming-≤3
       // rings become per-band literal In(bk, …) predicates on the index
-      // scan while they fit the pushdown ceiling (vecMatches).
+      // scan (vecMatches).
       val path = ensureVecIndex(s, dir)
       val q = collectBounded(s, "queries", signVectors(s,
         load(s, dir, "embeddings").filter($"vec_id" === 0), readVecW(s, path)))
@@ -502,24 +501,22 @@ object IndexOps {
     * (b_doc, sid, ids, jaccard) of the driver-held signed docs `q`
     * (b_doc, btids, bands — [[signDocs]] rows) against the index at
     * `path`: every indexed set at Jaccard ≥ 0.9 ([[nearDupSets]]) that
-    * shares a band bucket with a query doc. A lazy frame over the index
-    * scans ([[probeBands]]): `sets` streams past the `bands` rows in the
-    * queries' buckets and the queries' key rows (band, bh, b_doc,
-    * btids). A pair colliding in k bands flows through k times — the
-    * verify is map-side and cheap, where deduping first would shuffle
-    * candidate rows carrying their ~100-long btids — and a set row
-    * replayed into the index repeats its match, so callers dedup what
+    * shares a band bucket with a query doc. A frame over the `sets`
+    * scan ([[probeBands]]); a pair sharing k buckets, and a set row
+    * replayed into the index, repeat their match, so callers dedup what
     * they keep.
     */
   private[graft] def simMatches(s: SparkSession, path: String, q: Seq[Row]): DataFrame = {
     VectorExprs.register(s)
-    val keys = for (r <- q; (h, b) <- r.getSeq[Long](2).zipWithIndex)
-      yield Row(b, h, r.getLong(0), r.getSeq[Long](1))
+    val keys = for ((r, i) <- q.zipWithIndex; (h, b) <- r.getSeq[Long](2).zipWithIndex) yield (b, h, i)
+    val of = (xs: Column) => element_at(xs, col("q") + 1)
     // the reported jaccard is computed for SURVIVORS of the test only
     val a = size(col("tids")); val b = size(col("btids"))
     val inter = call_function("sorted_long_intersect_size", col("tids"), col("btids"))
     probeBands(s, simIndex.read(s, path, "sets"), "sid", simIndex.read(s, path, "bands"), "bh",
-        Seq(0L), keys, StructField("b_doc", LongType), StructField("btids", longs))
+        Seq(0L), keys)
+      .select(of(typedlit(q.map(_.getLong(0)))).as("b_doc"), col("sid"), col("ids"), col("tids"),
+        of(typedlit(q.map(_.getSeq[Long](1)))).as("btids"))
       .filter(nearDupSets(col("tids"), col("btids")))
       .select(col("b_doc"), col("sid"), col("ids"),
         round(inter.cast("double") / (a + b - inter), 4).as("jaccard"))
@@ -530,67 +527,87 @@ object IndexOps {
     * Hamming distance `radius` of a driver-held signed vector of `q`
     * (b_id, emb, norm, bands — [[signVectors]] rows) against the index
     * at `path`, by the Spark `dotp/(norm·norm)` expression, so a
-    * caller's threshold or ranking never moves. A lazy frame like
+    * caller's threshold or ranking never moves. A frame like
     * [[simMatches]], probing the Hamming rings of the artifact's frozen
-    * width ([[VecOps.probeMasks]]); a key row carries its vector's
-    * embedding once per band, not once per ring key. A pair sharing
-    * several bands repeats: callers dedup what they keep.
+    * width ([[VecOps.probeMasks]]); callers dedup what they keep.
     */
   private[graft] def vecMatches(s: SparkSession, path: String, q: Seq[Row],
                                 radius: Int): DataFrame = {
     VectorExprs.register(s)
-    val keys = for (r <- q; (k, b) <- r.getSeq[Long](3).zipWithIndex)
-      yield Row(b, k, r.getLong(0), r.get(1), r.getDouble(2))
+    val keys = for ((r, i) <- q.zipWithIndex; (k, b) <- r.getSeq[Long](3).zipWithIndex) yield (b, k, i)
+    val of = (xs: Column) => element_at(xs, col("q") + 1)
     probeBands(s, vecIndex.read(s, path, "vecs"), "vec_id", vecIndex.read(s, path, "vec_bands"), "bk",
-        VecOps.probeMasks(readVecW(s, path), radius), keys, StructField("b_id", LongType),
-        StructField("b_emb", ArrayType(DoubleType, containsNull = true)), StructField("b_n", DoubleType))
-      .select(col("b_id"), col("vec_id"),
-        (call_function("dotp", col("emb"), col("b_emb")) / (col("norm") * col("b_n"))).as("cos"))
+        VecOps.probeMasks(readVecW(s, path), radius), keys)
+      .select(of(typedlit(q.map(_.getLong(0)))).as("b_id"), col("vec_id"),
+        (call_function("dotp", col("emb"), of(typedlit(q.map(_.getSeq[Double](1))))) /
+          (col("norm") * of(typedlit(q.map(_.getDouble(2)))))).as("cos"))
   }
 
-  /** `items` (`id`, …) of an index family, streamed past a probe's
-    * candidates: its rows whose `id` has a row in `bands` (`id`, band,
-    * `key`) within one of the `masks` (the Hamming ring; `Seq(0L)` for
-    * exact buckets) of a driver-held key row — one per query and band:
-    * (band, query key, then `payload`, the query id and what the verify
-    * needs) — each joined to the key rows whose ring holds it. While
-    * every band's ring keys (its distinct query keys times the ring)
-    * fit the parquet In-pushdown ceiling
-    * (`spark.sql.parquet.pushdown.inFilterThreshold`, 1024 in
-    * Core.localSession), the candidates are a lazy read of `bands`
-    * through ONE pushed predicate OR_b (band = b AND key IN ring_b),
-    * expanded here: the (band, key)-sorted row groups stat-skip
-    * everything outside the probed buckets (see the object doc). Past
-    * the ceiling Spark would push only a [min, max] range per band, and
-    * an In at the ceiling already evaluates one stack frame per key, so
-    * `bands` instead streams whole past the broadcast key rows and the
-    * rows found are collected: an exchange over that unfiltered scan
-    * would move the whole table for one request. Both joins to the key
-    * rows match by band and Hamming distance, so no ring is ever
-    * materialized as rows. The key rows are refused past the broadcast
-    * dials, like every collect here.
+  /** `items` (`id`, …) of an index family, each with `q`, the index of a
+    * driver-held query whose probe keys reach it; the caller reads the
+    * query's fields out of literal arrays by `q`. A query's keys are
+    * (band, key, q), one per band; it probes every `bands` (`id`, band,
+    * `key`) row whose key is within one of the `masks` of its own (the
+    * Hamming ring; `Seq(0L)` for exact buckets). A "bucket" below is one
+    * distinct (band, query key), with the queries holding it.
+    *
+    * The `bands` rows in the rings are collected first, by one of two
+    * reads. While every band's ring keys fit the parquet In-pushdown
+    * ceiling (`spark.sql.parquet.pushdown.inFilterThreshold`, 1024 in
+    * Core.localSession), ONE pushed literal predicate OR_b (band = b AND
+    * key IN ring_b) reads only the row groups of the probed buckets (the
+    * (band, key)-sorted layout, see the object doc) in one job, and the
+    * driver maps each row to the buckets whose ring holds it. Past the
+    * ceiling Spark would push only a [min, max] range per band, so
+    * `bands` streams whole past a broadcast of the ring rows (band, key ^
+    * mask, bucket), expanded by Spark from the buckets, in one equi-join
+    * on (band, key). Then `items` streams past a broadcast of the
+    * (item id, bucket) rows found, and each row fans out to the bucket's
+    * queries by literal-array lookups — so a hot bucket costs one row per
+    * indexed row in it, not one per query, on the driver. A SINGLE
+    * query's frame keeps its `bands` read instead (its rows are collected
+    * only to bound them), so the serving entries' plans show the pruned
+    * scan. The ring and the rows found are refused past the broadcast
+    * dials before anything is broadcast, and no index scan is ever
+    * shuffled or broadcast.
     */
   private def probeBands(s: SparkSession, items: DataFrame, id: String, bands: DataFrame,
-                         key: String, masks: Seq[Long], keys: Seq[Row],
-                         payload: StructField*): DataFrame = {
-    requireFits(s, "probe keys", keys.size.toLong, keys.iterator.map(approxBytes).sum)
-    val keyRows = broadcast(local(s, keys,
-      StructType(StructField("q_band", IntegerType) +: StructField("q_key", LongType) +: payload)))
-    val radius = masks.map(java.lang.Long.bitCount).max
-    val inRing = col("band") === col("q_band") &&
-      (if (radius == 0) col(key) === col("q_key")
-       else bit_count(col(key).bitwiseXOR(col("q_key"))) <= radius)
-    val byBand = keys.groupMap(_.getInt(0))(_.getLong(1)).toSeq.sortBy(_._1)
-      .map { case (b, ks) => b -> ks.distinct }
-    val cand =
-      if (byBand.forall(_._2.size * masks.size <=
-            s.sessionState.conf.parquetFilterPushDownInFilterThreshold))
-        bands.filter(byBand.map { case (b, ks) =>
-            col("band") === b && col(key).isInCollection(ks.flatMap(k => masks.map(k ^ _)).distinct)
-          }.reduceOption(_ || _).getOrElse(lit(false)))
-      else local(s, collectBounded(s, "band candidates",
-        bands.join(keyRows, inRing, "left_semi")).toSeq, bands.schema)
-    items.join(broadcast(cand), id).join(keyRows, inRing)
+                         key: String, masks: Seq[Long], keys: Seq[(Int, Long, Int)]): DataFrame = {
+    val buckets = keys.groupMap { case (b, k, _) => (b, k) }(_._3).toSeq
+    val bucket = buckets.map(_._1).zipWithIndex.toMap
+    val byBand = bucket.keys.toSeq.groupMap(_._1)(_._2)
+    val pushed = byBand.values.forall(_.size.toLong * masks.size <=
+      s.sessionState.conf.parquetFilterPushDownInFilterThreshold)
+    val found =
+      if (pushed) bands.filter(byBand.map { case (b, ks) =>
+          col("band") === b && col(key).isInCollection(ks.flatMap(k => masks.map(k ^ _)).distinct)
+        }.reduceOption(_ || _).getOrElse(lit(false)))
+      else {
+        val n = bucket.size.toLong * masks.size
+        requireFits(s, "probe ring", n, 40L * n)
+        val ring = local(s, bucket.toSeq.map { case ((b, k), g) => Row(b, k, g) }, StructType(Seq(
+          StructField("band", IntegerType), StructField("q_key", LongType), StructField("g", IntegerType))))
+        bands.join(broadcast(ring.select(col("band"),
+            explode(transform(typedlit(masks), col("q_key").bitwiseXOR(_))).as(key), col("g"))),
+          Seq("band", key))
+      }
+    if (keys.map(_._3).distinct.size == 1) {
+      collectBounded(s, "band candidates", found.select(col(id)))
+      items.join(broadcast(found.select(col(id))), id).withColumn("q", lit(0))
+    } else {
+      val hits =
+        if (keys.isEmpty) Seq.empty
+        else if (pushed)
+          collectBounded(s, "band candidates", found.select(col("band"), col(key), col(id))).toSeq
+            .flatMap(h => masks.flatMap(m => bucket.get((h.getInt(0), h.getLong(1) ^ m)))
+              .map(g => Row(h.getLong(2), g)))
+        else collectBounded(s, "band candidates", found.select(col(id), col("g"))).toSeq
+      val rows = hits.distinct
+      requireFits(s, "candidate buckets", rows.size.toLong, rows.iterator.map(approxBytes).sum)
+      items.join(broadcast(local(s, rows, StructType(Seq(StructField(id, LongType),
+          StructField("g", IntegerType))))), id)
+        .withColumn("q", explode(element_at(typedlit(buckets.map(_._2)), col("g") + 1)))
+    }
   }
 
   /** One screened admission micro-batch: the `admitted` rows in the
@@ -679,15 +696,15 @@ object IndexOps {
     *
     * Bounded by the batch, in four jobs while the batch's bucket keys fit
     * the pushdown ceiling: the batch is read and signed ONCE and
-    * collected; the matches frame ([[simMatches]]) is collected in three
-    * (the broadcasts of the key rows and of the `bands` candidates read
-    * by their pushed keys, side by side, and the `sets` scan streamed
-    * past them; two more past the ceiling, where the candidates are
-    * collected first). The in-batch verify is one filter over a
-    * driver-local relation of bucket-sharing pairs, which Spark
-    * evaluates without a job. Every collect is refused past the
-    * broadcast dials (`requireFits`), and no plan broadcasts or shuffles
-    * a scan of an index table.
+    * collected; [[simMatches]] collects the `bands` rows in the batch's
+    * buckets through one pushed predicate, then the matches in two (the
+    * broadcast of the candidate rows and the `sets` scan streamed past
+    * it); one more past the ceiling, where the candidates are found by
+    * streaming `bands` past the broadcast ring rows. The in-batch verify
+    * is one filter over a driver-local relation of bucket-sharing pairs,
+    * which Spark evaluates without a job. Every collect is refused past
+    * the broadcast dials (`requireFits`), and no plan broadcasts or
+    * shuffles a scan of an index table.
     */
   private[graft] def screenDocs(s: SparkSession, path: String, batch: DataFrame): Screened = {
     val sig = withDocSig(s, batch.select(struct(col("*")).as("row"),
@@ -892,18 +909,18 @@ object IndexOps {
     * or exact-dedup them upstream of the gate.
     *
     * Bounded by the batch: the batch is read and signed ONCE and
-    * collected; the matches frame ([[vecMatches]]) is collected in three
-    * jobs while the batch's rings fit the pushdown ceiling — the
-    * broadcasts of the key rows and of the `vec_bands` candidates read
-    * by their pushed rings, side by side, and the `vecs` scan streamed
-    * past them — and in five past it, where the candidates are found by
-    * streaming `vec_bands` past the key rows and collected first. The
-    * in-batch cosines — the same Spark `dotp/(norm·norm)` expression,
-    * never a driver re-implementation, so the `minCos` boundary cannot
-    * move — are one filter over a driver-local relation of ring-sharing
-    * pairs, evaluated without a job. Every collect and the key rows are
-    * refused past the broadcast dials (`requireFits`), and no plan
-    * broadcasts or shuffles a scan of an index table.
+    * collected; [[vecMatches]] collects the candidates in one job while
+    * the batch's rings fit the pushdown ceiling (the `vec_bands` rows
+    * read by one pushed predicate) and in two past it (the broadcast of
+    * the ring rows, expanded by Spark, and `vec_bands` streamed past it),
+    * then the matches in two (the broadcast of the candidate rows and
+    * the `vecs` scan streamed past it). The in-batch cosines — the same
+    * Spark `dotp/(norm·norm)` expression, never a driver
+    * re-implementation, so the `minCos` boundary cannot move — are one
+    * filter over a driver-local relation of ring-sharing pairs, evaluated
+    * without a job. Every collect and the ring are refused past the
+    * broadcast dials (`requireFits`), and no plan broadcasts or shuffles
+    * a scan of an index table.
     */
   private[graft] def screenVectors(s: SparkSession, path: String, batch: DataFrame,
                                    minCos: Double): Screened = {

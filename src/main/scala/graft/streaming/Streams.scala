@@ -327,13 +327,14 @@ object Streams {
     * path (IndexOps.simMatches) by the batch's own bucket keys, with
     * `sets` streamed past the candidates, and the signed admitted rows
     * are appended as they are — 8 jobs per batch outside the compaction
-    * cadence (the batch read; the matches: the broadcasts of the key
-    * rows and of the candidates, side by side, and the `sets` scan; one
-    * write each of the `batch=N` dir, `sets`, `bands` and the gate
-    * labels, one part file each), one index ensure and one labels
-    * ensure. A batch whose keys pass the 1024-key pushdown ceiling
-    * (over 1024 docs) collects its candidates first: two more jobs. The
-    * driver holds the signed batch and its key rows; a batch past the
+    * cadence (the batch read; the candidate read by one pushed
+    * predicate; the matches: the broadcast of the candidates and the
+    * `sets` scan; one write each of the `batch=N` dir, `sets`, `bands`
+    * and the gate labels, one part file each), one index ensure and one
+    * labels ensure. A batch whose keys pass the 1024-key pushdown
+    * ceiling (over 1024 docs) finds its candidates by streaming `bands`
+    * past a broadcast of its keys instead: one more job. The driver
+    * holds the signed batch and its candidates; a batch past the
     * broadcast dials
     * (`spark.graft.broadcast.maxRows`,
     * `spark.graft.guard.maxBroadcastBytes`) stops the query — bound it
@@ -391,11 +392,11 @@ object Streams {
     * (IndexOps.screenVectors, through IndexOps.vecMatches): 7 jobs per
     * batch outside the compaction cadence while the batch's Hamming-≤2
     * rings fit the 1024-key pushdown ceiling — the batch read; the
-    * matches: the broadcasts of the key rows and of the `vec_bands`
-    * candidates, side by side, and the `vecs` scan; one write each of
-    * the `batch=N` dir, `vecs` and `vec_bands` — and 9 past it (from 6
+    * candidate read by one pushed predicate; the matches: the broadcast
+    * of the candidates and the `vecs` scan; one write each of the
+    * `batch=N` dir, `vecs` and `vec_bands` — and 8 past it (from 6
     * vectors at w=18), where the candidates are found by streaming
-    * `vec_bands` past the key rows and collected first.
+    * `vec_bands` past a broadcast of the batch's ring rows.
     */
   def dedupVecIngest(vecs: DataFrame, corpusDir: String, lakeDir: String,
                      name: String, minCos: Double): org.apache.spark.sql.streaming.StreamingQuery = {

@@ -742,11 +742,14 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("vec_index_incremental candidate/batch broadcasts are size-guarded") {
-    // The candidate rows and the batch's key rows are broadcast by hint
-    // (the plan broadcasts them with autoBroadcastJoinThreshold off);
-    // the key rows are driver-held, so past the broadcast dials the
-    // batch entries refuse, naming both dials, instead of collecting an
-    // unbounded batch.
+    // The candidate pairs and the batch's query rows are broadcast by
+    // hint (the plan broadcasts them with autoBroadcastJoinThreshold
+    // off); both are driver-held, so past the broadcast dials the batch
+    // entries refuse, naming both dials, instead of collecting an
+    // unbounded batch. A single query's keys fit any dial, but its
+    // candidates (16 band rows of doc 0's own set; vector 0 in its 4
+    // bands plus its ring) do not fit 2 rows: the serving entries refuse
+    // at the candidate bound before anything is broadcast.
     val thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -756,10 +759,13 @@ class PlanAuditSpec extends SparkSpecBase {
         "candidate + key-row sides should broadcast (hints present)")
       assert(!hinted.contains("SortMergeJoin"), hinted)
       spark.conf.set("spark.graft.broadcast.maxRows", "2")
-      for (e <- Seq("sim_index_incremental", "vec_index_incremental")) {
+      for (e <- Seq("sim_index_incremental", "vec_index_incremental",
+                    "sim_index_probe", "vec_index_probe")) {
         val msg = intercept[IllegalArgumentException](formatted(e)).getMessage
         for (key <- Seq("spark.graft.broadcast.maxRows=2", "spark.graft.guard.maxBroadcastBytes"))
           assert(msg.contains(key), s"$e: the refusal must name $key: $msg")
+        if (e.endsWith("_probe"))
+          assert(msg.contains("band candidates"), s"$e: the candidates must be refused: $msg")
       }
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)

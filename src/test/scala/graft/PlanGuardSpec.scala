@@ -194,9 +194,9 @@ class PlanGuardSpec extends SparkSpecBase {
   }
 
   test("batch bound: the six sim/vec probe plans read every index table by the request's keys") {
-    // one matches frame per caller shape: a single query, an entry's
-    // batch and a gate micro-batch per family — the vec batch's rings
-    // pass the pushdown ceiling, so the key-row join form is covered too
+    // one matches frame per caller shape: a single query (the pushed
+    // form), an entry's batch and a gate micro-batch (the key-row form)
+    // per family; building each also runs its guarded candidate collect
     val dir = sf("sf0.001")
     val ix = graft.queries.IndexOps
     val simPath = ix.ensureIndexStatus(spark, dir)._1

@@ -84,11 +84,20 @@ class FramesSpec extends graft.SparkSpecBase {
     def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
     try {
       verifiedCount()
+      // a dial value no other call uses: this call builds the frame the
+      // first move must supersede
+      spark.conf.set(key, "999999")
+      val pre = persisted
+      verifiedCount()
+      val orig = persisted -- pre
+      assert(orig.size == 1, s"a dial move pins one rebuilt verified frame: $orig")
       spark.conf.set(key, "0")
       val before = persisted
       verifiedCount()
       val rebuilt = persisted -- before
       assert(rebuilt.size == 1, s"a dial move pins one rebuilt verified frame: $rebuilt")
+      assert(!persisted.contains(orig.head),
+        "a dial move must unpersist the superseded verified frame, not pin a second")
       spark.conf.set(key, "1000000")
       verifiedCount()
       val after = persisted
