@@ -552,16 +552,20 @@ object IndexOps {
     * distinct (band, query key), with the queries holding it.
     *
     * The `bands` rows in the rings are collected first, by one of two
-    * reads. While every band's ring keys fit the parquet In-pushdown
+    * reads. ONE pushed literal predicate OR_b (band = b AND key IN
+    * ring_b) reads only the row groups of the probed buckets (the (band,
+    * key)-sorted layout, see the object doc) in one job, and the driver
+    * maps each row to the buckets whose ring holds it. It is taken for a
+    * single query while each band's ring fits the parquet In-pushdown
     * ceiling (`spark.sql.parquet.pushdown.inFilterThreshold`, 1024 in
-    * Core.localSession), ONE pushed literal predicate OR_b (band = b AND
-    * key IN ring_b) reads only the row groups of the probed buckets (the
-    * (band, key)-sorted layout, see the object doc) in one job, and the
-    * driver maps each row to the buckets whose ring holds it. Past the
-    * ceiling Spark would push only a [min, max] range per band, so
-    * `bands` streams whole past a broadcast of the ring rows (band, key ^
-    * mask, bucket), expanded by Spark from the buckets, in one equi-join
-    * on (band, key). Then `items` streams past a broadcast of the
+    * Core.localSession; past it Spark pushes only a [min, max] range),
+    * and for a query set while the whole predicate fits one ceiling: a
+    * larger literal predicate costs more to plan and evaluate than the
+    * broadcast it saves (measured crossover in docs/SCALE.md, "One probe
+    * path per index family"). Otherwise `bands` streams whole past a
+    * broadcast of the ring rows (band, key ^ mask, bucket), expanded by
+    * Spark from the buckets, in one equi-join on (band, key). Then
+    * `items` streams past a broadcast of the
     * (item id, bucket) rows found, and each row fans out to the bucket's
     * queries by literal-array lookups — so a hot bucket costs one row per
     * indexed row in it, not one per query, on the driver. A SINGLE
@@ -576,8 +580,10 @@ object IndexOps {
     val buckets = keys.groupMap { case (b, k, _) => (b, k) }(_._3).toSeq
     val bucket = buckets.map(_._1).zipWithIndex.toMap
     val byBand = bucket.keys.toSeq.groupMap(_._1)(_._2)
-    val pushed = byBand.values.forall(_.size.toLong * masks.size <=
-      s.sessionState.conf.parquetFilterPushDownInFilterThreshold)
+    val single = keys.map(_._3).distinct.size == 1
+    val ceiling = s.sessionState.conf.parquetFilterPushDownInFilterThreshold
+    val literals = byBand.values.map(_.size.toLong * masks.size)
+    val pushed = literals.forall(_ <= ceiling) && (single || literals.sum <= ceiling)
     val found =
       if (pushed) bands.filter(byBand.map { case (b, ks) =>
           col("band") === b && col(key).isInCollection(ks.flatMap(k => masks.map(k ^ _)).distinct)
@@ -591,7 +597,7 @@ object IndexOps {
             explode(transform(typedlit(masks), col("q_key").bitwiseXOR(_))).as(key), col("g"))),
           Seq("band", key))
       }
-    if (keys.map(_._3).distinct.size == 1) {
+    if (single) {
       collectBounded(s, "band candidates", found.select(col(id)))
       items.join(broadcast(found.select(col(id))), id).withColumn("q", lit(0))
     } else {
