@@ -515,8 +515,8 @@ object IndexOps {
     val inter = call_function("sorted_long_intersect_size", col("tids"), col("btids"))
     probeBands(s, simIndex.read(s, path, "sets"), "sid", simIndex.read(s, path, "bands"), "bh",
         Seq(0L), keys)
-      .select(of(typedlit(q.map(_.getLong(0)))).as("b_doc"), col("sid"), col("ids"), col("tids"),
-        of(typedlit(q.map(_.getSeq[Long](1)))).as("btids"))
+      .select(of(lit(q.map(_.getLong(0)).toArray)).as("b_doc"), col("sid"), col("ids"), col("tids"),
+        of(lit(q.map(_.getSeq[Long](1).toArray).toArray)).as("btids"))
       .filter(nearDupSets(col("tids"), col("btids")))
       .select(col("b_doc"), col("sid"), col("ids"),
         round(inter.cast("double") / (a + b - inter), 4).as("jaccard"))
@@ -538,9 +538,9 @@ object IndexOps {
     val of = (xs: Column) => element_at(xs, col("q") + 1)
     probeBands(s, vecIndex.read(s, path, "vecs"), "vec_id", vecIndex.read(s, path, "vec_bands"), "bk",
         VecOps.probeMasks(readVecW(s, path), radius), keys)
-      .select(of(typedlit(q.map(_.getLong(0)))).as("b_id"), col("vec_id"),
-        (call_function("dotp", col("emb"), of(typedlit(q.map(_.getSeq[Double](1))))) /
-          (col("norm") * of(typedlit(q.map(_.getDouble(2)))))).as("cos"))
+      .select(of(lit(q.map(_.getLong(0)).toArray)).as("b_id"), col("vec_id"),
+        (call_function("dotp", col("emb"), of(lit(q.map(_.getSeq[Double](1).toArray).toArray))) /
+          (col("norm") * of(lit(q.map(_.getDouble(2)).toArray)))).as("cos"))
   }
 
   /** `items` (`id`, …) of an index family, each with `q`, the index of a
@@ -594,7 +594,7 @@ object IndexOps {
         val ring = local(s, bucket.toSeq.map { case ((b, k), g) => Row(b, k, g) }, StructType(Seq(
           StructField("band", IntegerType), StructField("q_key", LongType), StructField("g", IntegerType))))
         bands.join(broadcast(ring.select(col("band"),
-            explode(transform(typedlit(masks), col("q_key").bitwiseXOR(_))).as(key), col("g"))),
+            explode(transform(lit(masks.toArray), col("q_key").bitwiseXOR(_))).as(key), col("g"))),
           Seq("band", key))
       }
     if (single) {
@@ -612,7 +612,7 @@ object IndexOps {
       requireFits(s, "candidate buckets", rows.size.toLong, rows.iterator.map(approxBytes).sum)
       items.join(broadcast(local(s, rows, StructType(Seq(StructField(id, LongType),
           StructField("g", IntegerType))))), id)
-        .withColumn("q", explode(element_at(typedlit(buckets.map(_._2)), col("g") + 1)))
+        .withColumn("q", explode(element_at(lit(buckets.map(_._2.toArray).toArray), col("g") + 1)))
     }
   }
 
