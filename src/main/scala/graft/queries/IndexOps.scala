@@ -565,10 +565,10 @@ object IndexOps {
     * path per index family"). Otherwise `bands` streams whole past a
     * broadcast of the ring rows (band, key ^ mask, bucket), expanded by
     * Spark from the buckets, in one equi-join on (band, key). Then
-    * `items` streams past a broadcast of the
-    * (item id, bucket) rows found, and each row fans out to the bucket's
-    * queries by literal-array lookups — so a hot bucket costs one row per
-    * indexed row in it, not one per query, on the driver. A SINGLE
+    * `items` streams past a broadcast of the (item id, bucket) rows
+    * found, and each row fans out to the bucket's queries by
+    * literal-array lookups — so a hot bucket costs the driver one row
+    * per indexed row in it, not one per query. A SINGLE
     * query's frame keeps its `bands` read instead (its rows are collected
     * only to bound them), so the serving entries' plans show the pruned
     * scan. The ring and the rows found are refused past the broadcast
