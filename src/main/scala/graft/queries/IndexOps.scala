@@ -37,7 +37,7 @@ import graft.functions.VectorExprs
   * a DATA column, not a partition dir: every probe touches all 16
   * bands, so band-dir pruning can never eliminate anything, while
   * dir-partitioning makes Spark bolt a dynamic-partition-pruning
-  * subquery onto the key-row joins (a duplicated probe-side scan for a
+  * subquery onto the probe joins (a duplicated probe-side scan for a
   * filter that prunes nothing) and splits the mixed (band, bh)
   * predicate so neither half reaches the scan. On a cluster,
   * registering this same sorted layout with a table format adds
