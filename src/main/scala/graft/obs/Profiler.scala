@@ -9,8 +9,10 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.{SparkContext, Success, TaskKilled}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
@@ -28,7 +30,8 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkLis
   * sentinel's own stage and task events are left out of the totals.
   *
   * A job row is named by the engine code that ran it: the first `graft.`
-  * frame of its SQL execution's call site, which the execution's start
+  * frame of its SQL execution's call site, or the label a
+  * [[Profiler.step]] set in its place, which the execution's start
   * event carries and every job of the execution (AQE query stages
   * included) points back to through its execution-id property. A job
   * outside any SQL execution, or one with no `graft.` frame, falls back
@@ -147,6 +150,8 @@ final class Profiler private (sc: SparkContext) extends SparkListener {
   private def measure(body: => Any): Record = {
     val before = barrier()
     val gc0 = gcMs()
+    val compiles0 = compiles()
+    val compileNs0 = CodeGenerator.compileTime
     val startMs = System.currentTimeMillis()
     val t0 = System.nanoTime()
     val failure =
@@ -154,8 +159,10 @@ final class Profiler private (sc: SparkContext) extends SparkListener {
       catch { case NonFatal(e) => Some(s"${e.getClass.getName}: ${e.getMessage}") }
     val wallS = (System.nanoTime() - t0) / 1e9
     val gc = gcMs() - gc0
+    val compiled = compiles() - compiles0
+    val compileMs = (CodeGenerator.compileTime - compileNs0) / 1000000L
     val after = barrier()
-    Record(startMs, wallS, after.totals - before.totals, gc, after.jobs, failure)
+    Record(startMs, wallS, after.totals - before.totals, gc, compiled, compileMs, after.jobs, failure)
   }
 }
 
@@ -182,11 +189,17 @@ object Profiler {
                        tasks: Long, taskRunMs: Long, cpuMs: Long, site: String)
 
   /** What one `measure` saw: the body's wall seconds from epoch-ms
-    * `startMs`, the work deltas, the JVM GC-time delta, the jobs the
-    * body started, and `<class>: <message>` if the body failed.
+    * `startMs`, the work deltas, the JVM GC-time delta, the generated
+    * classes compiled and their compile time, the jobs the body started,
+    * and `<class>: <message>` if the body failed.
+    *
+    * Compiles are JVM-wide: a class the code cache
+    * (`spark.sql.codegen.cache.maxEntries`) still holds is not compiled
+    * again, so a repeated body that keeps compiling has outgrown it.
     */
   final case class Record(startMs: Long, wallS: Double, counters: Counters, gcMs: Long,
-                          jobs: Vector[Job], failure: Option[String]) {
+                          compiles: Long, compileMs: Long, jobs: Vector[Job],
+                          failure: Option[String]) {
     def failed: Boolean = failure.isDefined
   }
 
@@ -194,6 +207,8 @@ object Profiler {
 
   /** The local property that marks a barrier job. */
   private val BarrierKey = "graft.obs.barrier"
+  /** The local property that holds the enclosing [[scope]]'s name. */
+  private val ScopeKey = "graft.obs.scope"
   private val MaxJobRows = 10000
   private val installed = new ConcurrentHashMap[SparkContext, Profiler]()
 
@@ -210,6 +225,36 @@ object Profiler {
     */
   def measure(spark: SparkSession)(body: => Any): Record =
     install(spark.sparkContext).measure(body)
+
+  /** Runs `body` as the engine operation `name`, a `graft.` name: each
+    * [[step]] inside it names its jobs `<name> [<step>]`.
+    */
+  def scope[T](spark: SparkSession, name: String)(body: => T): T =
+    withLocal(spark.sparkContext, Seq(ScopeKey -> name))(body)
+
+  /** Runs `body` as step `name` of the enclosing [[scope]]: the jobs,
+    * stages and SQL executions it starts carry the call site
+    * `<scope> [<name>]`, then the previous call site is restored. A job
+    * row reads the SQL execution's call site first, so the steps of one
+    * `foreachBatch` body, whose jobs Spark all gives the stream's start
+    * call site, show apart. Outside a scope `body` runs as it is.
+    */
+  def step[T](spark: SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    Option(sc.getLocalProperty(ScopeKey)).fold(body) { op =>
+      val site = s"$op [$name]"
+      // Spark's CallSite.SHORT_FORM and LONG_FORM keys
+      withLocal(sc, Seq("callSite.short" -> site, "callSite.long" -> site))(body)
+    }
+  }
+
+  private def withLocal[T](sc: SparkContext, props: Seq[(String, String)])(body: => T): T = {
+    val prev = props.map { case (k, _) => k -> sc.getLocalProperty(k) }
+    props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    try body finally prev.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
+
+  private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   private def gcMs(): Long =
     ManagementFactory.getGarbageCollectorMXBeans.asScala

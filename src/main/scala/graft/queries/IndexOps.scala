@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
 import scala.jdk.CollectionConverters._
 import graft.Core._
 import graft.functions.VectorExprs
+import graft.obs.Profiler
 
 /** Persisted similarity index (reference SearchIndexer lifecycle,
   * engine.py:72-98: build a reusable index ONCE, then serve many
@@ -598,16 +599,17 @@ object IndexOps {
           Seq("band", key))
       }
     if (single) {
-      collectBounded(s, "band candidates", found.select(col(id)))
+      Profiler.step(s, "candidates")(collectBounded(s, "band candidates", found.select(col(id))))
       items.join(broadcast(found.select(col(id))), id).withColumn("q", lit(0))
     } else {
-      val hits =
+      val hits = Profiler.step(s, "candidates") {
         if (keys.isEmpty) Seq.empty
         else if (pushed)
           collectBounded(s, "band candidates", found.select(col("band"), col(key), col(id))).toSeq
             .flatMap(h => masks.flatMap(m => bucket.get((h.getInt(0), h.getLong(1) ^ m)))
               .map(g => Row(h.getLong(2), g)))
         else collectBounded(s, "band candidates", found.select(col(id), col("g"))).toSeq
+      }
       val rows = hits.distinct
       requireFits(s, "candidate buckets", rows.size.toLong, rows.iterator.map(approxBytes).sum)
       items.join(broadcast(local(s, rows, StructType(Seq(StructField(id, LongType),
@@ -716,13 +718,13 @@ object IndexOps {
     val sig = withDocSig(s, batch.select(struct(col("*")).as("row"),
         col("doc_id").cast("long").as("b_doc"), col("text")))
       .select(col("row"), col("b_doc"), col("btids"), col("bands"))
-    val rows = collectBounded(s, "micro-batch", sig)
+    val rows = Profiler.step(s, "sign")(collectBounded(s, "micro-batch", sig))
     val id = rows.map(_.getLong(1))
     val tids = rows.map(_.getSeq[Long](2))
     val signedIx = rows.indices.filterNot(rows(_).isNullAt(3))
-    val vsIndex = collectBounded(s, "index matches",
-      simMatches(s, path, signedIx.map(i => Row(id(i), tids(i), rows(i).get(3))))
-        .filter(!array_contains(col("ids"), col("b_doc"))).select(col("b_doc")))
+    val matches = simMatches(s, path, signedIx.map(i => Row(id(i), tids(i), rows(i).get(3))))
+    val vsIndex = Profiler.step(s, "matches")(collectBounded(s, "index matches",
+      matches.filter(!array_contains(col("ids"), col("b_doc"))).select(col("b_doc"))))
     // one verify row per (batch doc, smaller-id batch partner) sharing a
     // (band, bh) bucket
     val inBatch = signedIx
@@ -772,19 +774,20 @@ object IndexOps {
   private[graft] def appendSignedDocs(s: SparkSession, dir: String, ns: String,
                                       signed: DataFrame): Unit = {
     writeSignedDocs(indexDir(dir, ns), signed)
-    maybeCompact(s, dir, ns, "bands")
+    Profiler.step(s, "compact")(maybeCompact(s, dir, ns, "bands"))
   }
 
   private def writeSignedDocs(path: String, signed: DataFrame): Unit = {
-    signed.select(col("b_doc").as("sid"), array(col("b_doc")).as("ids"),
-        col("btids").as("tids"))
-      .write.mode(SaveMode.Append).parquet(s"$path/sets.parquet")
+    val s = signed.sparkSession
+    Profiler.step(s, "write sets")(signed.select(col("b_doc").as("sid"),
+        array(col("b_doc")).as("ids"), col("btids").as("tids"))
+      .write.mode(SaveMode.Append).parquet(s"$path/sets.parquet"))
     // appends add small unsorted files; a probe's pushed predicates
     // still evaluate against their row-group stats (just with weaker
     // skipping on the fresh tail) until compaction re-sorts them
-    signed.select(col("b_doc").as("sid"),
+    Profiler.step(s, "write bands")(signed.select(col("b_doc").as("sid"),
         posexplode(col("bands")).as(Seq("band", "bh")))
-      .write.mode(SaveMode.Append).parquet(s"$path/bands.parquet")
+      .write.mode(SaveMode.Append).parquet(s"$path/bands.parquet"))
   }
 
   /** Small-file backstop OWNED BY THE APPEND PATH: the streaming gates
@@ -934,15 +937,15 @@ object IndexOps {
     val sig = withVecSig(s, batch.select(struct(col("*")).as("row"),
         col("vec_id").cast("long").as("vec_id"), col("embedding")), w)
       .select(col("row"), col("vec_id"), col("emb"), col("norm"), col("bands"))
-    val rows = collectBounded(s, "micro-batch", sig)
+    val rows = Profiler.step(s, "sign")(collectBounded(s, "micro-batch", sig))
     val id = rows.map(_.getLong(1))
     val signedIx = rows.indices.filterNot(rows(_).isNullAt(4))
     val keys = rows.map(_.getSeq[Long](4))
     val emb = (i: Int) => rows(i).get(2)
     val norm = (i: Int) => rows(i).getDouble(3)
-    val vsIndex = collectBounded(s, "index matches",
-      vecMatches(s, path, signedIx.map(i => Row(id(i), emb(i), norm(i), keys(i))), 2)
-        .filter(col("vec_id") =!= col("b_id") && col("cos") >= minCos).select(col("b_id")))
+    val matches = vecMatches(s, path, signedIx.map(i => Row(id(i), emb(i), norm(i), keys(i))), 2)
+    val vsIndex = Profiler.step(s, "matches")(collectBounded(s, "index matches",
+      matches.filter(col("vec_id") =!= col("b_id") && col("cos") >= minCos).select(col("b_id"))))
     // one cosine row per (batch vector, smaller-id batch partner) in its
     // ring: (b_id, b_emb, b_n, emb, norm)
     val masks = VecOps.probeMasks(w, 2)
@@ -1000,14 +1003,17 @@ object IndexOps {
   private[graft] def appendSignedVectors(s: SparkSession, dir: String, ns: String,
                                          signed: DataFrame): Unit = {
     writeSignedVectors(indexDir(dir, ns), signed)
-    maybeCompact(s, dir, ns, "vec_bands")  // see maybeCompact: the append path owns its cadence
+    // see maybeCompact: the append path owns its cadence
+    Profiler.step(s, "compact")(maybeCompact(s, dir, ns, "vec_bands"))
   }
 
   private def writeSignedVectors(path: String, signed: DataFrame): Unit = {
-    signed.select(col("vec_id"), col("emb"), col("norm"))
-      .write.mode(SaveMode.Append).parquet(s"$path/vecs.parquet")
-    signed.select(col("vec_id"), posexplode(col("bands")).as(Seq("band", "bk")))
-      .write.mode(SaveMode.Append).parquet(s"$path/vec_bands.parquet")
+    val s = signed.sparkSession
+    Profiler.step(s, "write vecs")(signed.select(col("vec_id"), col("emb"), col("norm"))
+      .write.mode(SaveMode.Append).parquet(s"$path/vecs.parquet"))
+    Profiler.step(s, "write vec_bands")(signed.select(col("vec_id"),
+        posexplode(col("bands")).as(Seq("band", "bk")))
+      .write.mode(SaveMode.Append).parquet(s"$path/vec_bands.parquet"))
   }
 
   /** Known-path append, no ensure — see [[appendToIndexAt]]. Appends

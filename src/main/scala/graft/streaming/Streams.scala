@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.obs.Profiler
 import graft.queries.{IndexOps, LakeFs}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -366,19 +367,23 @@ object Streams {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val s = batch.sparkSession
         val tablePath = s"$lakeDir/$name.parquet"
-        val (path, _) = IndexOps.ensureIndexStatus(s, corpusDir, ns, recover = p =>
-          if (LakeFs(s, tablePath).exists(new Path(tablePath)))
-            IndexOps.appendToIndexAt(s, p, graft.Core.load(s, lakeDir, name)))
-        val screened = IndexOps.screenDocs(s, path, batch)
-        screened.admitted.write.mode("overwrite").parquet(s"$tablePath/batch=$batchId")
-        IndexOps.appendSignedDocs(s, corpusDir, ns, screened.signed)
-        // incremental cluster maintenance: admitted docs are singleton
-        // components by the gate invariant, so the labels artifact
-        // stays exactly equal to a from-scratch rebuild (spec'd)
-        graft.queries.TextOps.maintainGateLabels(s, corpusDir, ns, screened.ids, lakeDir, name)
-        if (batchId % compactEvery == compactEvery - 1)
-          IndexOps.compactIndex(s, corpusDir, ns)
-        ()
+        Profiler.scope(s, "graft.streaming.Streams.dedupIngest") {
+          val (path, _) = Profiler.step(s, "ensure")(
+            IndexOps.ensureIndexStatus(s, corpusDir, ns, recover = p =>
+              if (LakeFs(s, tablePath).exists(new Path(tablePath)))
+                IndexOps.appendToIndexAt(s, p, graft.Core.load(s, lakeDir, name))))
+          val screened = IndexOps.screenDocs(s, path, batch)
+          Profiler.step(s, "write batch")(
+            screened.admitted.write.mode("overwrite").parquet(s"$tablePath/batch=$batchId"))
+          IndexOps.appendSignedDocs(s, corpusDir, ns, screened.signed)
+          // incremental cluster maintenance: admitted docs are singleton
+          // components by the gate invariant, so the labels artifact
+          // stays exactly equal to a from-scratch rebuild (spec'd)
+          Profiler.step(s, "labels")(graft.queries.TextOps.maintainGateLabels(
+            s, corpusDir, ns, screened.ids, lakeDir, name))
+          if (batchId % compactEvery == compactEvery - 1)
+            Profiler.step(s, "compact")(IndexOps.compactIndex(s, corpusDir, ns))
+        }
       }
       .start()
   }
@@ -406,15 +411,18 @@ object Streams {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val s = batch.sparkSession
         val tablePath = s"$lakeDir/$name.parquet"
-        val (path, _) = IndexOps.ensureVecIndexStatus(s, corpusDir, ns, recover = p =>
-          if (LakeFs(s, tablePath).exists(new Path(tablePath)))
-            IndexOps.appendToVecIndexAt(s, p, graft.Core.load(s, lakeDir, name)))
-        val screened = IndexOps.screenVectors(s, path, batch, minCos)
-        screened.admitted.write.mode("overwrite").parquet(s"$tablePath/batch=$batchId")
-        IndexOps.appendSignedVectors(s, corpusDir, ns, screened.signed)
-        if (batchId % compactEvery == compactEvery - 1)
-          IndexOps.compactIndex(s, corpusDir, ns)
-        ()
+        Profiler.scope(s, "graft.streaming.Streams.dedupVecIngest") {
+          val (path, _) = Profiler.step(s, "ensure")(
+            IndexOps.ensureVecIndexStatus(s, corpusDir, ns, recover = p =>
+              if (LakeFs(s, tablePath).exists(new Path(tablePath)))
+                IndexOps.appendToVecIndexAt(s, p, graft.Core.load(s, lakeDir, name))))
+          val screened = IndexOps.screenVectors(s, path, batch, minCos)
+          Profiler.step(s, "write batch")(
+            screened.admitted.write.mode("overwrite").parquet(s"$tablePath/batch=$batchId"))
+          IndexOps.appendSignedVectors(s, corpusDir, ns, screened.signed)
+          if (batchId % compactEvery == compactEvery - 1)
+            Profiler.step(s, "compact")(IndexOps.compactIndex(s, corpusDir, ns))
+        }
       }
       .start()
   }

@@ -17,7 +17,8 @@ import graft.obs.Profiler
   * Per sfDir it runs Bench's setup steps, one line each, then times each
   * entry min-of-two as Bench does and prints one line from the second
   * run's record: wall, jobs, stages, tasks, input, shuffle records and
-  * bytes, spill, task run, CPU and GC time, and the failure's
+  * bytes, spill, task run, CPU and GC time, the generated classes
+  * compiled and their compile time, and the failure's
   * `<class>: <message>` if the entry failed. A last line counts the
   * entries that ran and failed.
   *  - `all`: every declared entry, by name.
@@ -102,7 +103,8 @@ object Profile {
       f"tasks=${c.tasks}%6d input=${c.inputBytes / 1e6}%9.1f MB " +
       f"shufRecs=${c.shuffleRecords}%10d shufMB=${c.shuffleBytes / 1e6}%9.2f " +
       f"spillMB=${c.spillBytes / 1e6}%.1f taskRun=${c.taskRunMs}%7d ms " +
-      f"cpu=${c.cpuMs}%7d ms gc=${r.gcMs}%5d ms failedTasks=${c.failedTasks} " +
+      f"cpu=${c.cpuMs}%7d ms gc=${r.gcMs}%5d ms compiles=${r.compiles}%4d " +
+      f"compile=${r.compileMs}%6d ms failedTasks=${c.failedTasks} " +
       f"retries=${c.stageRetries}" + r.failure.fold("")(f => s" FAILED $f")
   }
 

@@ -395,6 +395,15 @@ class StreamingSpec extends SparkSpecBase with StreamRestartCases {
   private def partFiles(dir: String): Int =
     filesUnder(new java.io.File(dir)).count(_.getName.startsWith("part-"))
 
+  /** Every job row of a gate batch names one of the gate's `steps`, not
+    * the stream's start call site that Spark gives all of its jobs.
+    */
+  private def assertGateSteps(r: graft.obs.Profiler.Record, gate: String, steps: Set[String]): Unit = {
+    val sites = r.jobs.map(_.site)
+    assert(sites.nonEmpty && sites.forall(steps.map(st => s"graft.streaming.Streams.$gate [$st]")),
+      s"every job row must name a $gate step: ${sites.mkString(" | ")}")
+  }
+
   test("bounded gate batch: a warm docs micro-batch runs at most 8 jobs and adds one part file per table") {
     implicit val sc = spark.sqlContext
     val corpusDir = sf("sf0.001")
@@ -414,11 +423,16 @@ class StreamingSpec extends SparkSpecBase with StreamRestartCases {
       val tables = Seq("sets", "bands", "labels").map(t => s"$idx/$t.parquet")
       val before = tables.map(partFiles)
       // an exact copy of an indexed doc, a novel doc, and an intra-batch pair
-      val jobs = jobsDuring {
+      val r = graft.obs.Profiler.measure(spark) {
         in.addData((60001L, doc0Text), (60002L, textA), (60003L, textB), (60004L, textB))
         q.processAllAvailable()
       }
+      assert(r.failure.isEmpty, r.failure.getOrElse(""))
+      val jobs = r.counters.jobs
       assert(jobs <= 8, s"a warm docs gate batch ran $jobs jobs")
+      assertGateSteps(r, "dedupIngest",
+        Set("ensure", "sign", "candidates", "matches", "write batch", "write sets", "write bands",
+          "labels"))
       assert(tables.map(partFiles).zip(before).map { case (a, b) => a - b } == Seq(1, 1, 1),
         s"one part file per index table per batch: ${tables.map(partFiles)} after $before")
       assert(partFiles(s"$lake/$name.parquet/batch=1") == 1)
@@ -447,11 +461,16 @@ class StreamingSpec extends SparkSpecBase with StreamRestartCases {
       val tables = Seq("vecs", "vec_bands").map(t => s"$idx/$t.parquet")
       val before = tables.map(partFiles)
       // an exact copy of an indexed vector, a novel one, and an intra-batch pair
-      val jobs = jobsDuring {
+      val r = graft.obs.Profiler.measure(spark) {
         in.addData((61001L, v0), (61002L, v0.map(-_)), (61003L, v0.reverse), (61004L, v0.reverse))
         q.processAllAvailable()
       }
+      assert(r.failure.isEmpty, r.failure.getOrElse(""))
+      val jobs = r.counters.jobs
       assert(jobs <= 8, s"a warm vecs gate batch ran $jobs jobs")
+      assertGateSteps(r, "dedupVecIngest",
+        Set("ensure", "sign", "candidates", "matches", "write batch", "write vecs",
+          "write vec_bands"))
       assert(tables.map(partFiles).zip(before).map { case (a, b) => a - b } == Seq(1, 1),
         s"one part file per index table per batch: ${tables.map(partFiles)} after $before")
       assert(partFiles(s"$lake/$name.parquet/batch=1") == 1)

@@ -42,6 +42,23 @@ class ProfilerSpec extends SparkSpecBase {
     assert(r.jobs.forall(_.site.contains("ProfilerSpec.scala:")))
   }
 
+  test("a repeated query compiles no class after 100+ others: the codegen cache holds a serving loop") {
+    def query() = spark.range(0, 1000, 1, 4).selectExpr("id % 13 as k", "id * 7 as v")
+      .groupBy("k").sum("v").collect().toSet
+    val answer = query()
+    // ~60 projections with distinct literals: each compiles its own
+    // whole-stage class, cached once for the driver and once for the
+    // task threads, which in local mode have another context classloader
+    val others = Profiler.measure(spark)((1 to 60).foreach(i =>
+      spark.range(0, 10, 1, 1).selectExpr(s"id * $i + ${i * 31} as x").collect()))
+    assert(others.compiles > 100, s"the filler compiled only ${others.compiles} classes")
+    val r = Profiler.measure(spark)(assert(query() == answer))
+    assert(r.failure.isEmpty, r.failure.getOrElse(""))
+    assert(r.compiles == 0,
+      s"the re-run compiled ${r.compiles} classes in ${r.compileMs} ms: " +
+        "spark.sql.codegen.cache.maxEntries no longer holds it")
+  }
+
   test("a NonFatal failure is carried in the record as class: message") {
     val r = Profiler.measure(spark)(throw new IllegalStateException("x"))
     assert(r.failure.contains("java.lang.IllegalStateException: x"))
