@@ -160,7 +160,7 @@ object IndexOps {
     // IVF cells rewrite below; the flat tables round-robin to nFiles
     val sortKey = Map("bands" -> "bh", "vec_bands" -> "bk")
     for {
-      a <- Seq(simIndex, vecIndex, TextOps.labels)
+      a <- Seq(simIndex, vecIndex)
       if a.current(s, dir, ns)
       t <- a.tables
     } graft.sources.Ingest.stageAndSwap(
@@ -619,12 +619,12 @@ object IndexOps {
   }
 
   /** One screened admission micro-batch: the `admitted` rows in the
-    * batch's own schema, the same rows `signed` in the form the index
-    * appends write ([[appendSignedDocs]], [[appendSignedVectors]]), and
-    * their `ids`. Both frames are driver-local relations on one
-    * partition, so each write of them is one task and one part file.
+    * batch's own schema, and the same rows `signed` in the form the index
+    * appends write ([[appendSignedDocs]], [[appendSignedVectors]]). Both
+    * frames are driver-local relations on one partition, so each write of
+    * them is one task and one part file.
     */
-  private[graft] final case class Screened(admitted: DataFrame, signed: DataFrame, ids: Seq[Long])
+  private[graft] final case class Screened(admitted: DataFrame, signed: DataFrame)
 
   /** The index tables a per-request probe plan may read only through a
     * filtered scan or as the streamed side of a join against request
@@ -741,8 +741,7 @@ object IndexOps {
     Screened(
       local(s, kept.map(rows(_).getStruct(0)), batch.schema).coalesce(1),
       local(s, kept.filterNot(rows(_).isNullAt(3)).map(i => Row(id(i), tids(i), rows(i).get(3))),
-        appendSchema(sig, "b_doc", "btids", "bands")).coalesce(1),
-      kept.map(id))
+        appendSchema(sig, "b_doc", "btids", "bands")).coalesce(1))
   }
 
   /** Batch-mode novelty filter against the persisted index AND within
@@ -968,8 +967,7 @@ object IndexOps {
       local(s, kept.map(rows(_).getStruct(0)), batch.schema).coalesce(1),
       local(s, kept.filterNot(rows(_).isNullAt(4))
           .map(i => Row(id(i), emb(i), norm(i), rows(i).get(4))),
-        appendSchema(sig, "vec_id", "emb", "norm", "bands")).coalesce(1),
-      kept.map(id))
+        appendSchema(sig, "vec_id", "emb", "norm", "bands")).coalesce(1))
   }
 
   /** Vector-side novelty filter against the persisted ANN index: the

@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.Core._
 import graft.functions.VectorExprs
-import scala.jdk.CollectionConverters._
 
 /** Text-analysis / LLM-training-pipeline operators over the `documents`
   * table (SURVEY.md §2.10; reference SearchIndexer engine.py:65-98 plus
@@ -550,61 +549,24 @@ object TextOps {
   private[queries] def clusterLabels(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     labels.read(s, labels.ensure(s, dir)._1, "labels")
 
-  /** A gate namespace's labels: same stamp as [[labels]], reseeded by
-    * copying the base-corpus labels (no declared sidecar — the gate
-    * copy is a private serving table, never a lineage source).
-    */
-  private[graft] val gateLabelsArtifact: LakeArtifact =
-    labels.copy(lineage = Map.empty)((s, dir, path) =>
-      clusterLabels(s, dir)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/labels.parquet"))
-
-  /** Incremental cluster maintenance for a streaming admission gate:
-    * keep the gate namespace's labels artifact in step with its grown
-    * index WITHOUT re-running propagation. Correctness rests on the
-    * gate invariant — an ADMITTED doc has no ≥0.9 partner in the index
-    * or its batch (novelDocs), so in a from-scratch rebuild over
+  /** A streaming admission gate's cluster labels, served as a view: the
+    * corpus labels plus one (doc_id, doc_id) singleton per doc in the
+    * gate's admitted table `$lakeDir/$table.parquet`. The gate invariant
+    * makes this exact — an ADMITTED doc has no ≥0.9 partner in the index
+    * or its batch (screenDocs), so in a from-scratch rebuild over
     * (corpus + admitted) every admitted doc is a singleton component
-    * whose min-label is itself. The incremental update is therefore an
-    * exact append of (doc_id, doc_id) rows; StreamingSpec asserts
-    * equality against a from-scratch rebuild over the grown corpus.
-    *
-    * `batchAdmitted` is the doc ids the gate admitted in this batch.
-    * Lifecycle mirrors the gate index: on a missing/stale artifact,
-    * reseed by copying the base-corpus labels and recover ALL
-    * previously-admitted singletons from the lake table (replayed
-    * appends add byte-identical duplicate rows — [[gateLabels]] serves
-    * distinct, compaction removes them at rest).
-    */
-  private[graft] def maintainGateLabels(s: org.apache.spark.sql.SparkSession, dir: String,
-                                        ns: String, batchAdmitted: Seq[Long],
-                                        lakeDir: String, table: String): Unit = {
-    // on a reseed the lake already holds THIS batch (committed before
-    // the label update), so recovering the whole table covers it — no
-    // separate batch append on that path, which would double-write
-    val (path, reseeded) = gateLabelsArtifact.ensure(s, dir, ns, recover = p =>
-      if (LakeFs(s, lakeDir).exists(new org.apache.hadoop.fs.Path(s"$lakeDir/$table.parquet")))
-        graft.Core.load(s, lakeDir, table).select(col("doc_id"), col("doc_id").as("label"))
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(s"$p/labels.parquet"))
-    // the batch's singletons: one local part file, nullable like the
-    // recovered rows
-    if (!reseeded)
-      s.createDataFrame(batchAdmitted.map(d => org.apache.spark.sql.Row(d, d)).asJava,
-          org.apache.spark.sql.types.StructType(Seq("doc_id", "label").map(
-            org.apache.spark.sql.types.StructField(_, org.apache.spark.sql.types.LongType))))
-        .coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .parquet(s"$path/labels.parquet")
-  }
-
-  /** Serve a gate namespace's maintained labels (distinct: replayed
-    * appends leave byte-identical duplicate rows until compaction).
+    * whose min-label is itself; StreamingSpec asserts equality against
+    * that rebuild. Nothing is stored or maintained per batch.
     */
   private[graft] def gateLabels(s: org.apache.spark.sql.SparkSession, dir: String,
-                                ns: String): org.apache.spark.sql.DataFrame =
-    labels.read(s, IndexOps.indexDir(dir, ns), "labels").distinct()
+                                lakeDir: String, table: String): org.apache.spark.sql.DataFrame = {
+    val base = clusterLabels(s, dir)
+    val tablePath = s"$lakeDir/$table.parquet"
+    if (!LakeFs(s, tablePath).exists(new org.apache.hadoop.fs.Path(tablePath))) base
+    else base.unionByName(load(s, lakeDir, table)
+        .select(col("doc_id"), col("doc_id").as("label")))
+      .distinct()
+  }
 
   /** The label propagation itself — runs only when the lake artifact is
     * missing or stale (see [[clusterLabels]]).

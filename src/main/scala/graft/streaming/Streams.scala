@@ -321,25 +321,28 @@ object Streams {
     * NOVEL ones to the lake, then grow the index with what was admitted
     * so the NEXT batch is gated against this one too — the admission
     * gate a training-data pipeline runs on every arriving shard (batch
-    * analogue: sim_index_incremental).
+    * analogue: sim_index_incremental). The gate's cluster labels are a
+    * view over the corpus labels and this table (TextOps.gateLabels).
     *
     * Per-batch work is bounded by the batch (IndexOps.screenDocs): the
     * batch is signed once, the index is probed through the one sim probe
     * path (IndexOps.simMatches) by the batch's own bucket keys, with
     * `sets` streamed past the candidates, and the signed admitted rows
-    * are appended as they are — 8 jobs per batch outside the compaction
+    * are appended as they are — 7 jobs per batch outside the compaction
     * cadence (the batch read; the candidate read by one pushed
     * predicate; the matches: the broadcast of the candidates and the
-    * `sets` scan; one write each of the `batch=N` dir, `sets`, `bands`
-    * and the gate labels, one part file each), one index ensure and one
-    * labels ensure. A batch whose keys pass the 1024-key pushdown
-    * ceiling (over 1024 docs) finds its candidates by streaming `bands`
-    * past a broadcast of its keys instead: one more job. The driver
-    * holds the signed batch and its candidates; a batch past the
-    * broadcast dials
+    * `sets` scan; one write each of the `batch=N` dir, `sets` and
+    * `bands`, one part file each) and one index ensure. A batch whose
+    * keys pass the 1024-key pushdown ceiling (over 1024 docs) finds its
+    * candidates by streaming `bands` past a broadcast of its keys
+    * instead: one more job. The driver holds the signed batch and its
+    * candidates; a batch past the broadcast dials
     * (`spark.graft.broadcast.maxRows`,
     * `spark.graft.guard.maxBroadcastBytes`) stops the query — bound it
     * with the source's per-trigger limit.
+    *
+    * The lifecycle below is shared with [[dedupVecIngest]] through
+    * [[gate]].
     *
     * At-least-once safety: the admitted rows land in a per-batchId
     * directory with Overwrite (replay rewrites the same dir, never
@@ -357,43 +360,19 @@ object Streams {
     * stamp ordering a crash BETWEEN stamping and re-appending would do
     * the same (stamp already current → recovery never retried). The
     * re-append is idempotent, which is what lets a crashed recovery
-    * simply run again.
+    * simply run again. The `batch=N` dir commits before the index
+    * append, so an index append never holds a doc the lake table lacks.
     */
   def dedupIngest(docs: DataFrame, corpusDir: String, lakeDir: String,
-                  name: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val ns = gateNamespace(lakeDir, name)
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val tablePath = s"$lakeDir/$name.parquet"
-        Profiler.scope(s, "graft.streaming.Streams.dedupIngest") {
-          val (path, _) = Profiler.step(s, "ensure")(
-            IndexOps.ensureIndexStatus(s, corpusDir, ns, recover = p =>
-              if (LakeFs(s, tablePath).exists(new Path(tablePath)))
-                IndexOps.appendToIndexAt(s, p, graft.Core.load(s, lakeDir, name))))
-          val screened = IndexOps.screenDocs(s, path, batch)
-          Profiler.step(s, "write batch")(
-            screened.admitted.write.mode("overwrite").parquet(s"$tablePath/batch=$batchId"))
-          IndexOps.appendSignedDocs(s, corpusDir, ns, screened.signed)
-          // incremental cluster maintenance: admitted docs are singleton
-          // components by the gate invariant, so the labels artifact
-          // stays exactly equal to a from-scratch rebuild (spec'd)
-          Profiler.step(s, "labels")(graft.queries.TextOps.maintainGateLabels(
-            s, corpusDir, ns, screened.ids, lakeDir, name))
-          if (batchId % compactEvery == compactEvery - 1)
-            Profiler.step(s, "compact")(IndexOps.compactIndex(s, corpusDir, ns))
-        }
-      }
-      .start()
-  }
+                  name: String): org.apache.spark.sql.streaming.StreamingQuery =
+    gate(docs, corpusDir, lakeDir, name, "graft.streaming.Streams.dedupIngest",
+      IndexOps.ensureIndexStatus, IndexOps.appendToIndexAt,
+      IndexOps.screenDocs, IndexOps.appendSignedDocs)
 
   /** Embedding twin of [[dedupIngest]]: per micro-batch, drop vectors
     * with a ≥`minCos` neighbor in the persisted ANN index or earlier in
-    * the batch, append the novel ones to the lake (per-batchId dir,
-    * replay-idempotent), and grow the index with what was admitted.
-    * Same private-namespace, rebuild-recovery, and compaction lifecycle
-    * as the document gate, and the same batch bound
+    * the batch, append the novel ones to the lake, and grow the index
+    * with what was admitted. Bounded by the batch
     * (IndexOps.screenVectors, through IndexOps.vecMatches): 7 jobs per
     * batch outside the compaction cadence while the batch's Hamming-≤2
     * rings fit the 1024-key pushdown ceiling — the batch read; the
@@ -404,22 +383,39 @@ object Streams {
     * `vec_bands` past a broadcast of the batch's ring rows.
     */
   def dedupVecIngest(vecs: DataFrame, corpusDir: String, lakeDir: String,
-                     name: String, minCos: Double): org.apache.spark.sql.streaming.StreamingQuery = {
+                     name: String, minCos: Double): org.apache.spark.sql.streaming.StreamingQuery =
+    gate(vecs, corpusDir, lakeDir, name, "graft.streaming.Streams.dedupVecIngest",
+      IndexOps.ensureVecIndexStatus, IndexOps.appendToVecIndexAt,
+      IndexOps.screenVectors(_, _, _, minCos), IndexOps.appendSignedVectors)
+
+  /** The admission gates' one micro-batch body, over an index family's
+    * `ensure` (with the rebuild `recover` hook), known-path `recoverAt`
+    * append, `screen` and signed `append`: ensure the gate's namespace,
+    * screen the batch, write `batch=N`, append the signed admitted rows
+    * to the index, then the compaction cadence — every step named under
+    * `scope` (see [[dedupIngest]] for the lifecycle).
+    */
+  private def gate(rows: DataFrame, corpusDir: String, lakeDir: String, name: String,
+                   scope: String,
+                   ensure: (SparkSession, String, String, String => Unit) => (String, Boolean),
+                   recoverAt: (SparkSession, String, DataFrame) => Unit,
+                   screen: (SparkSession, String, DataFrame) => IndexOps.Screened,
+                   append: (SparkSession, String, String, DataFrame) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
     val ns = gateNamespace(lakeDir, name)
-    vecs.writeStream
+    val tablePath = s"$lakeDir/$name.parquet"
+    rows.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val s = batch.sparkSession
-        val tablePath = s"$lakeDir/$name.parquet"
-        Profiler.scope(s, "graft.streaming.Streams.dedupVecIngest") {
-          val (path, _) = Profiler.step(s, "ensure")(
-            IndexOps.ensureVecIndexStatus(s, corpusDir, ns, recover = p =>
-              if (LakeFs(s, tablePath).exists(new Path(tablePath)))
-                IndexOps.appendToVecIndexAt(s, p, graft.Core.load(s, lakeDir, name))))
-          val screened = IndexOps.screenVectors(s, path, batch, minCos)
+        Profiler.scope(s, scope) {
+          val (path, _) = Profiler.step(s, "ensure")(ensure(s, corpusDir, ns, p =>
+            if (LakeFs(s, tablePath).exists(new Path(tablePath)))
+              recoverAt(s, p, graft.Core.load(s, lakeDir, name))))
+          val screened = screen(s, path, batch)
           Profiler.step(s, "write batch")(
             screened.admitted.write.mode("overwrite").parquet(s"$tablePath/batch=$batchId"))
-          IndexOps.appendSignedVectors(s, corpusDir, ns, screened.signed)
+          append(s, corpusDir, ns, screened.signed)
           if (batchId % compactEvery == compactEvery - 1)
             Profiler.step(s, "compact")(IndexOps.compactIndex(s, corpusDir, ns))
         }

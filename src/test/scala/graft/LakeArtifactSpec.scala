@@ -32,8 +32,8 @@ class LakeArtifactSpec extends SparkSpecBase {
     Seq((sentinel, "faultspec recovery sentinel tokens wholly unlike corpus text"))
       .toDF("doc_id", "text")
 
-  // parents before dependants: the gate labels copy the base labels and
-  // the namespaced mix state copies the base state
+  // parents before dependants: the namespaced mix state copies the base
+  // state
   private val cases = Seq(
     Case("sim", IndexOps.simIndex, ns,
       recover = p => IndexOps.appendToIndexAt(spark, p, admitted),
@@ -42,7 +42,6 @@ class LakeArtifactSpec extends SparkSpecBase {
         "the recovery append must be visible in the rebuilt index")),
     Case("vec", IndexOps.vecIndex, ns),
     Case("cluster labels", TextOps.labels),
-    Case("gate labels", TextOps.gateLabelsArtifact, ns),
     Case("ivf", IvfIndex.ivfIndex),
     Case("pq", PqIndex.pqIndex),
     Case("ivfpq", PqIndex.ivfPqIndex),

@@ -298,7 +298,6 @@ class StreamingSpec extends SparkSpecBase with StreamRestartCases {
     val corpusDir = sf("sf0.001")
     val lake = java.nio.file.Files.createTempDirectory("graft-slabels").toString
     val name = "admitted"
-    val ns = Streams.gateNamespace(lake, name)
     val doc0Text = spark.read.parquet(s"$corpusDir/documents.parquet")
       .filter($"doc_id" === 0).select($"text").as[String].head()
     val textA = "zzqx wvut ponm lkji hgfe dcba"
@@ -313,7 +312,7 @@ class StreamingSpec extends SparkSpecBase with StreamRestartCases {
     in.addData((50005L, textA), (50003L, textB), (50004L, textB))
     q.processAllAvailable()
     q.stop()
-    val gate = graft.queries.TextOps.gateLabels(spark, corpusDir, ns)
+    val gate = graft.queries.TextOps.gateLabels(spark, corpusDir, lake, name)
       .as[(Long, Long)].collect().toSet
     // from-scratch rebuild: CC over (corpus ∪ admitted) via the declared
     // entry on a synthetic lake dir — the ground truth the incremental
@@ -404,7 +403,7 @@ class StreamingSpec extends SparkSpecBase with StreamRestartCases {
       s"every job row must name a $gate step: ${sites.mkString(" | ")}")
   }
 
-  test("bounded gate batch: a warm docs micro-batch runs at most 8 jobs and adds one part file per table") {
+  test("bounded gate batch: a warm docs micro-batch runs at most 7 jobs and adds one part file per table") {
     implicit val sc = spark.sqlContext
     val corpusDir = sf("sf0.001")
     val lake = java.nio.file.Files.createTempDirectory("graft-sbound").toString
@@ -420,7 +419,7 @@ class StreamingSpec extends SparkSpecBase with StreamRestartCases {
       // batch 0 seeds the gate's namespace (cold); batch 1 is warm
       in.addData((60000L, "warm up text with its own tokens wu1 wu2 wu3"))
       q.processAllAvailable()
-      val tables = Seq("sets", "bands", "labels").map(t => s"$idx/$t.parquet")
+      val tables = Seq("sets", "bands").map(t => s"$idx/$t.parquet")
       val before = tables.map(partFiles)
       // an exact copy of an indexed doc, a novel doc, and an intra-batch pair
       val r = graft.obs.Profiler.measure(spark) {
@@ -429,12 +428,14 @@ class StreamingSpec extends SparkSpecBase with StreamRestartCases {
       }
       assert(r.failure.isEmpty, r.failure.getOrElse(""))
       val jobs = r.counters.jobs
-      assert(jobs <= 8, s"a warm docs gate batch ran $jobs jobs")
+      assert(jobs <= 7, s"a warm docs gate batch ran $jobs jobs")
       assertGateSteps(r, "dedupIngest",
-        Set("ensure", "sign", "candidates", "matches", "write batch", "write sets", "write bands",
-          "labels"))
-      assert(tables.map(partFiles).zip(before).map { case (a, b) => a - b } == Seq(1, 1, 1),
+        Set("ensure", "sign", "candidates", "matches", "write batch", "write sets", "write bands"))
+      assert(tables.map(partFiles).zip(before).map { case (a, b) => a - b } == Seq(1, 1),
         s"one part file per index table per batch: ${tables.map(partFiles)} after $before")
+      // the gate's cluster labels are a view (TextOps.gateLabels): no table, no stamp
+      for (f <- Seq("labels.parquet", "labels.version"))
+        assert(!new java.io.File(s"$idx/$f").exists(), s"the gate namespace holds $f")
       assert(partFiles(s"$lake/$name.parquet/batch=1") == 1)
     } finally q.stop()
     val admitted = spark.read.parquet(s"$lake/$name.parquet")
